@@ -34,24 +34,28 @@ final class GraftFileIndex(spark: SparkSession, table: String,
     asOf: Option[Long] = None, only: Option[Set[String]] = None,
     allowDvs: Boolean = false) extends FileIndex {
 
+  // ONE state read pins the whole index — files, schema, sizes, DVs,
+  // column mapping, generated columns and protocol all come from the
+  // same version
+  private val state = GraftLog.stateAt(spark, table, asOf)
   // the table-features reader gate applies to EVERY scan path — a
   // format("graft") read must refuse a future-feature table exactly
   // like GraftLog.read does (this constructor is the shared choke:
   // batch relations, readSubset, and the streaming source all build
   // one)
-  GraftLog.checkReaderFeatures(spark, table, asOf)
-  private val (allLive, tableSchema) = GraftLog.snapshot(spark, table, asOf)
+  GraftLog.checkReaderFeatures(table, state.props)
+  private val (allLive, tableSchema) = (state.files, state.schema)
   // a plain file scan cannot apply deletion-vector masks — reading a
   // DV-bearing snapshot through the index would resurrect deleted rows.
   // allowDvs is the DV machinery's OWN escape hatch (GraftLog.readWithDvs
   // masks the positions after this scan) — never a public read path.
-  require(allowDvs || GraftLog.deletionVectors(spark, table, asOf).isEmpty,
+  require(allowDvs || state.dvs.isEmpty,
     s"$table has active deletion vectors; read via GraftLog.read " +
       "(merge-on-read) or compact() to materialize them first")
   // same loud-over-wrong stance for column mapping: a plain file scan
   // serves PHYSICAL column names — a renamed/dropped schema read through
   // the index would silently expose pre-rename names (or nulls)
-  require(GraftLog.columnMapping(spark, table, asOf).isEmpty,
+  require(state.colMap.isEmpty,
     s"$table has an active column mapping (renamed/dropped columns); " +
       "read via GraftLog.read or compact() to materialize the mapping")
   private val liveFiles = only match {
@@ -62,10 +66,15 @@ final class GraftFileIndex(spark: SparkSession, table: String,
   // path (see listFiles) never touches these, so a large table planned
   // distributedly never materializes per-file stats/bloom maps on the
   // driver (the round-9 verdict's last 100x metadata item)
-  private lazy val stats = GraftLog.fileStats(spark, table, asOf)
+  // A state that started from a light checkpoint decode is re-read with
+  // stats, at the same version.
+  private lazy val statsState =
+    if (state.withStats) state
+    else GraftLog.stateAt(spark, table, Some(state.version), withStats = true)
+  private lazy val stats = statsState.stats
   // commit-logged Bloom bitmaps, decoded once per index instance
   private lazy val blooms: Map[String, Map[String, java.util.BitSet]] =
-    GraftLog.fileBlooms(spark, table, asOf).map { case (f, cols) =>
+    statsState.blooms.map { case (f, cols) =>
       f -> cols.map { case (c, b64) =>
         c -> java.util.BitSet.valueOf(
           java.util.Base64.getDecoder.decode(b64))
@@ -78,7 +87,7 @@ final class GraftFileIndex(spark: SparkSession, table: String,
   // only the legacy fallback. At 100 TB this is the difference between
   // O(1) metadata reads and one namenode round-trip per live file on
   // every query (Delta likewise carries sizes in its log).
-  private val knownSizes = GraftLog.fileSizes(spark, table, asOf)
+  private val knownSizes = state.sizes
 
   /** The snapshot version this index is anchored at, when TIME-TRAVELED
     * (`versionAsOf`/`timestampAsOf`). Planner rules that substitute a
@@ -154,7 +163,7 @@ final class GraftFileIndex(spark: SparkSession, table: String,
   // file's stats: `WHERE ts >= X` hits only `event_date >= to_date(X)`
   // dirs without the query ever naming event_date.
   private val genShapes: Map[String, GenShape] =
-    GraftLog.generatedColumns(spark, table, asOf).flatMap {
+    state.generated.flatMap {
       case (c, sql) => GenShape.parse(spark, sql).map(c.toLowerCase -> _)
     }
 
@@ -271,7 +280,7 @@ final class GraftFileIndex(spark: SparkSession, table: String,
     * checkpoint → caller falls back to the driver maps. */
   private def distributedKeep(dataFilters: Seq[Expression],
       keptDirs: Option[Set[String]]): Option[Set[String]] =
-    GraftLog.liveAddsFrame(spark, table, asOf).map { frame =>
+    GraftLog.liveAddsFrame(spark, table, Some(state.version)).map { frame =>
       import org.apache.spark.sql.functions.{col, udf}
       val filters = dataFilters.toList
       val dirs = keptDirs

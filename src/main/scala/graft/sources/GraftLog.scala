@@ -10,6 +10,24 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StringType, StructType}
 
+/** Process-wide counters of the log layer's own reads: listings of
+  * `_graft_log`, commit files read, checkpoints decoded (a parquet or
+  * JSON checkpoint parsed, not served from the decode cache), and state
+  * reads the memo answered without reading any commit. Cheap enough to
+  * stay on; specs and profilers read deltas around an operation. */
+private[graft] object LogCounters {
+  import java.util.concurrent.atomic.AtomicLong
+  val listings = new AtomicLong
+  val commitReads = new AtomicLong
+  val checkpointDecodes = new AtomicLong
+  val memoHits = new AtomicLong
+
+  def read(): Map[String, Long] = Map(
+    "listings" -> listings.get, "commitReads" -> commitReads.get,
+    "checkpointDecodes" -> checkpointDecodes.get,
+    "memoHits" -> memoHits.get)
+}
+
 /** Minimal log-backed transactional table format on parquet — the working
   * analog of the reference's Delta Lake layer (the environment ships no
   * Delta jars, SURVEY.md §7.4), closing the one capability the parquet
@@ -245,9 +263,11 @@ object GraftLog {
       s""""timestampMs":${c.timestampMs}$txnPart$statsPart$sizesPart$dvPart$bloomsPart$colMapPart$checksPart$tagsPart$generatedPart$propsPart$copiedPart$txnsPart}"""
   }
 
+  /** Shared parser: `readTree` on a configured mapper is thread-safe. */
+  private val JsonMapper = new com.fasterxml.jackson.databind.ObjectMapper
+
   private def fromJson(s: String): Commit = {
-    val m = new com.fasterxml.jackson.databind.ObjectMapper
-    val n = m.readTree(s)
+    val n = JsonMapper.readTree(s)
     def arr(f: String): Seq[String] = {
       val a = n.get(f)
       (0 until a.size()).map(a.get(_).asText())
@@ -370,18 +390,54 @@ object GraftLog {
 
   // ------------------------------------------------------------- protocol
 
-  /** All committed versions, ascending (missing dir → empty). */
-  def versions(spark: SparkSession, table: String): Seq[Long] = {
-    val dir = new HPath(table, LogDirName)
-    val f = fs(spark, table)
-    if (!f.exists(dir)) Seq.empty
-    else f.listStatus(dir).toSeq.map(_.getPath.getName)
-      .filter(_.matches("\\d{20}\\.json"))
-      .map(_.stripSuffix(".json").toLong).sorted
+  private val CommitFileRe = """(\d{20})\.json""".r
+  private val CkptJsonRe = """(\d{20})\.checkpoint\.json""".r
+  private val CkptParquetRe = """(\d{20})\.checkpoint\.parquet""".r
+
+  /** One `listStatus` of `_graft_log`: the committed versions, ascending,
+    * each with its commit file's (modification time, length) stamp —
+    * what the state memo validates against — plus the JSON checkpoint
+    * sidecars (version, mtime) and the versions whose columnar
+    * checkpoint directory exists. */
+  private[sources] final case class LogListing(
+      commits: Vector[(Long, (Long, Long))],
+      checkpoints: Vector[(Long, Long)],
+      parquetCheckpoints: Set[Long]) {
+    def versions: Seq[Long] = commits.map(_._1)
+    def latest: Option[Long] = commits.lastOption.map(_._1)
+    lazy val stamps: Map[Long, (Long, Long)] = commits.toMap
+    def checkpointVersions: Seq[Long] = checkpoints.map(_._1)
   }
 
+  /** List the log once. A missing directory surfaces from `listStatus`
+    * as FileNotFoundException and reads as an empty log. */
+  private def listLog(spark: SparkSession, table: String): LogListing = {
+    LogCounters.listings.incrementAndGet()
+    val entries =
+      try fs(spark, table).listStatus(new HPath(table, LogDirName)).toSeq
+      catch { case _: java.io.FileNotFoundException => Seq.empty }
+    val commits = Vector.newBuilder[(Long, (Long, Long))]
+    val ckpts = Vector.newBuilder[(Long, Long)]
+    val parquet = Set.newBuilder[Long]
+    entries.foreach { st =>
+      st.getPath.getName match {
+        case CommitFileRe(v) =>
+          commits += v.toLong -> ((st.getModificationTime, st.getLen))
+        case CkptJsonRe(v) => ckpts += v.toLong -> st.getModificationTime
+        case CkptParquetRe(v) => parquet += v.toLong
+        case _ => ()
+      }
+    }
+    LogListing(commits.result().sortBy(_._1), ckpts.result().sortBy(_._1),
+      parquet.result())
+  }
+
+  /** All committed versions, ascending (missing dir → empty). */
+  def versions(spark: SparkSession, table: String): Seq[Long] =
+    listLog(spark, table).versions
+
   def latestVersion(spark: SparkSession, table: String): Option[Long] =
-    versions(spark, table).lastOption
+    listLog(spark, table).latest
 
   /** Start of the CONTIGUOUS TAIL suffix of an ascending version list —
     * the post-vacuum keep window. Tag-pinned vacuum retains pinned
@@ -413,8 +469,14 @@ object GraftLog {
 
   private def readCommit(spark: SparkSession, table: String,
       v: Long): Commit = {
-    val p = new HPath(new HPath(table, LogDirName), logName(v))
-    val in = fs(spark, table).open(p)
+    LogCounters.commitReads.incrementAndGet()
+    readJson(spark, table, logName(v))
+  }
+
+  private def readJson(spark: SparkSession, table: String,
+      name: String): Commit = {
+    val in = fs(spark, table).open(
+      new HPath(new HPath(table, LogDirName), name))
     try {
       val bytes = new java.io.ByteArrayOutputStream()
       val buf = new Array[Byte](8192)
@@ -460,13 +522,24 @@ object GraftLog {
     }
   }
 
+  /** Write commit `c`; returns the table state at `c.version` (also
+    * memoized). `read` is the state the caller's operation read: when it
+    * sits at `c.version - 1` it is the state this commit lands on,
+    * otherwise one listing finds it. */
   private[graft] def writeCommit(spark: SparkSession, table: String,
-      c: Commit): Unit = {
+      c: Commit, read: Option[TableState] = None): Option[TableState] = {
+    val prior =
+      if (c.version == 0) None
+      else read.filter(_.version == c.version - 1)
+        .orElse(logState(spark, table))
+    // a state at or past this version: another writer already took it
+    if (prior.exists(_.version >= c.version))
+      throw new CommitConflictException(c.version, table)
     // keep the invariants "column mapping = latest commit's colMap" and
     // "constraints = latest commit's checks": ordinary commits
     // (append/merge/delete/…) inherit the state in force just before
-    // them; authoritative ops set (or clear) it themselves. One
-    // small-JSON read of the previous commit, only for v > 0.
+    // them (the prior state's newest commit); authoritative ops set (or
+    // clear) it themselves.
     val inheritMap = c.colMap.isEmpty && c.version > 0 &&
       !ColMapAuthoritative(c.operation)
     val inheritChecks = c.checks.isEmpty && c.version > 0 &&
@@ -480,21 +553,12 @@ object GraftLog {
     val inheritProps = c.props.isEmpty && c.version > 0 &&
       !PropsAuthoritative(c.operation)
     // the previous commit feeds BOTH metadata inheritance and the ICT
-    // clamp below; fetch it at most once per commit (an extra GET per
-    // commit is real money on an object store's hot write path)
-    var prevFetched: Option[Option[Commit]] = None
-    def prevOnce: Option[Commit] = prevFetched match {
-      case Some(p) => p
-      case None =>
-        val p = previousCommit(spark, table, c.version)
-        prevFetched = Some(p)
-        p
-    }
+    // clamp below
+    val prev: Option[Commit] = prior.map(_.last)
     val withMeta =
       if (!inheritMap && !inheritChecks && !inheritTags && !inheritGen &&
           !inheritProps) c
-      else {
-        val prev = prevOnce
+      else
         c.copy(
           colMap = if (inheritMap) prev.map(_.colMap)
             .getOrElse(c.colMap) else c.colMap,
@@ -506,7 +570,6 @@ object GraftLog {
             .getOrElse(c.generated) else c.generated,
           props = if (inheritProps) prev.map(_.props)
             .getOrElse(c.props) else c.props)
-      }
     checkWriterFeatures(table, withMeta.props)
     // In-commit timestamp monotonicity (Delta `enableInCommitTimestamps`,
     // the ICT table feature): with many WRITERS (1000-executor clusters
@@ -515,12 +578,12 @@ object GraftLog {
     // `table_changes` resolution, which binary-searches the commit
     // timeline assuming order. Opt-in per table: clamp each commit's
     // timestamp to strictly after its predecessor's (`prev + 1` on ties
-    // or regression). One extra small-JSON read, only when enabled.
+    // or regression); the predecessor comes from the prior state.
     val stamped =
       if (withMeta.version > 0 && withMeta.props
           .get("graft.enableInCommitTimestamps")
           .exists(_.equalsIgnoreCase("true")))
-        prevOnce match {
+        prev match {
           case Some(p) if withMeta.timestampMs <= p.timestampMs =>
             withMeta.copy(timestampMs = p.timestampMs + 1)
           case _ => withMeta
@@ -529,6 +592,23 @@ object GraftLog {
     if (!putIfAbsent(spark, table, logName(stamped.version),
         toJson(stamped)))
       throw new CommitConflictException(c.version, table)
+    // this writer won version v, so the state at v is the state below
+    // it plus this commit — memoized with the new file's stamp, so the
+    // next operation on the table reads no commit file (a commit past
+    // an empty log leaves a gap and no state)
+    val after =
+      if (stamped.version > 0 && prior.isEmpty) None
+      else {
+        val st = fs(spark, table).getFileStatus(new HPath(
+          new HPath(table, LogDirName), logName(stamped.version)))
+        val b = new StateBuilder(prior)
+        b.fold(stamped)
+        val next = b.result(stamped.version, prior.fold(
+          Map.empty[Long, (Long, Long)])(_.stamps) +
+          (stamped.version -> ((st.getModificationTime, st.getLen))))
+        remember(table, next)
+        Some(next)
+      }
     // Auto-checkpoint every CheckpointInterval commits (Delta writes one
     // each 10th commit for the same reason): replay cost stays bounded
     // by the interval instead of growing with table age — at 100 TB a
@@ -544,8 +624,10 @@ object GraftLog {
       .flatMap(s => scala.util.Try(s.toLong).toOption).filter(_ > 0)
       .getOrElse(CheckpointInterval)
     if (withMeta.version > 0 && withMeta.version % interval == 0)
-      try { checkpoint(spark, table, Some(withMeta.version)); () }
-      catch { case scala.util.control.NonFatal(_) => () }
+      try after.filter(_.withStats) match {
+        case Some(st) => writeCheckpoint(spark, table, st)
+        case None => checkpoint(spark, table, Some(withMeta.version)); ()
+      } catch { case scala.util.control.NonFatal(_) => () }
     maybeUpdateManifest(spark, table, withMeta)
     // catalog-table freshness: a CATALOG table backed by this path
     // caches its resolved relation in the session's V1 relation cache
@@ -577,6 +659,7 @@ object GraftLog {
     // the scoped V1 relation-cache invalidation below.
     try invalidateCachedRelationsAt(spark, table)
     catch { case scala.util.control.NonFatal(_) => () }
+    after
   }
 
   /** Drop V1 relation-cache pins for catalog tables backed by `table`
@@ -628,17 +711,6 @@ object GraftLog {
   /** Commits between automatic checkpoints (Delta's own cadence). */
   private val CheckpointInterval = 10L
 
-  /** The commit just before version `v` (None for a table whose log
-    * starts at v — then there is nothing to inherit). Falls back to the
-    * newest retained commit if `v-1` was vacuumed away. */
-  private def previousCommit(spark: SparkSession, table: String,
-      v: Long): Option[Commit] =
-    try Some(readCommit(spark, table, v - 1))
-    catch {
-      case _: java.io.IOException | _: RuntimeException =>
-        latestVersion(spark, table).map(readCommit(spark, table, _))
-    }
-
   // ----------------------------------------------------------- checkpoints
   // A checkpoint is a sidecar file <v>.checkpoint.json whose Commit holds
   // the COMPLETE table state at version v: live files in add (with their
@@ -687,6 +759,25 @@ object GraftLog {
       generated: Option[Map[String, String]],
       props: Option[Map[String, String]])
 
+  /** The schema `Encoders.product[CkptRow]` derives, spelled out so a
+    * checkpoint write pays no Scala reflection (equality pinned by
+    * LogStateSpec). */
+  private[graft] val CkptSchema: StructType = {
+    import org.apache.spark.sql.types.{DoubleType, LongType, StructField}
+    val strMap = MapType(StringType, StringType)
+    def opt(name: String, t: DataType) = StructField(name, t)
+    StructType(Seq(
+      opt("kind", StringType),
+      StructField("ord", LongType, nullable = false),
+      opt("path", StringType), opt("size", LongType),
+      opt("stats", MapType(StringType, ArrayType(DoubleType, false))),
+      opt("blooms", strMap), opt("appId", StringType),
+      opt("batchId", LongType), opt("version", LongType),
+      opt("schemaDdl", StringType), opt("colMap", strMap),
+      opt("checks", strMap), opt("timestampMs", LongType),
+      opt("generated", strMap), opt("props", strMap)))
+  }
+
   private def writeCheckpointParquet(spark: SparkSession, table: String,
       c: Commit): Unit = {
     val none = CkptRow("", 0L, None, None, None, None, None, None,
@@ -719,14 +810,19 @@ object GraftLog {
     // (and a future selective read) executor-sized at any file count;
     // sandbox tables produce one part, a 100 TB table tens — the
     // multi-part form Delta moved to for exactly this reason.
-    val rows = adds ++ dvs ++ txns ++ copies :+ meta
+    val rows = (adds ++ dvs ++ txns ++ copies :+ meta).map(r =>
+      Row.fromSeq(r.productIterator.map {
+        case o: Option[_] => o.getOrElse(null)
+        case x => x
+      }.toSeq))
     val parts = math.max(1, math.min(200, rows.size / 100000 + 1))
     val logDir = new HPath(table, LogDirName)
     val f = fs(spark, table)
     val tmp = new HPath(logDir, s".ckpt-${UUID.randomUUID()}.tmp")
-    spark.createDataset(rows)(
-        org.apache.spark.sql.Encoders.product[CkptRow])
-      .repartition(parts)
+    import scala.jdk.CollectionConverters._
+    val frame = spark.createDataFrame(rows.asJava, CkptSchema)
+    // one part needs no shuffle: a local frame coalesces into it
+    (if (parts == 1) frame.coalesce(1) else frame.repartition(parts))
       .write.mode("overwrite").parquet(tmp.toString)
     val target = new HPath(logDir, ckptParquetName(c.version))
     // rename-if-absent: a concurrent checkpointer of the same version
@@ -736,14 +832,13 @@ object GraftLog {
 
   /** Distributed decode of the columnar checkpoint: a parquet scan (the
     * heavy add-set decodes on executors, columnar) folded into the same
-    * [[Commit]] the JSON sidecar carries; None when only the JSON
+    * [[Commit]] the JSON sidecar carries; the caller's listing shows it
     * exists. The driver still materializes the file LIST — the same
     * driver-resident metadata footprint Delta accepts — but no longer
     * parses one monolithic JSON string for it. */
   private def readCheckpointParquet(spark: SparkSession, table: String,
-      v: Long, withStats: Boolean = true): Option[Commit] = {
+      v: Long, withStats: Boolean): Commit = {
     val dir = new HPath(new HPath(table, LogDirName), ckptParquetName(v))
-    if (!fs(spark, table).exists(dir)) return None
     val raw = spark.read.parquet(dir.toString)
     // reader compat: checkpoints written before a meta field existed
     // lack its column — surface it as null rather than failing the scan
@@ -769,7 +864,7 @@ object GraftLog {
       throw new IllegalStateException(
         s"columnar checkpoint $dir has no meta row"))
     val adds = rows.filter(_.kind == "add").sortBy(_.ord)
-    Some(Commit(meta.version.get, "checkpoint",
+    Commit(meta.version.get, "checkpoint",
       add = adds.map(_.path.get).toSeq,
       remove = Seq.empty, schemaDdl = meta.schemaDdl.get,
       timestampMs = meta.timestampMs.get,
@@ -787,7 +882,7 @@ object GraftLog {
       colMap = meta.colMap.getOrElse(Map.empty),
       checks = meta.checks.getOrElse(Map.empty),
       generated = meta.generated.getOrElse(Map.empty),
-      props = meta.props.getOrElse(Map.empty)))
+      props = meta.props.getOrElse(Map.empty))
   }
 
   /** The live add-set at `asOf` as a DISTRIBUTED DataFrame
@@ -802,18 +897,17 @@ object GraftLog {
     * driver-map path. */
   private[sources] def liveAddsFrame(spark: SparkSession, table: String,
       asOf: Option[Long]): Option[DataFrame] = {
-    val all = versions(spark, table)
-    if (all.isEmpty) return None
+    val listing = listLog(spark, table)
     val upTo = asOf match {
-      case Some(v) => all.filter(_ <= v)
-      case None => all
+      case Some(v) => listing.versions.filter(_ <= v)
+      case None => listing.versions
     }
     if (upTo.isEmpty) return None
-    val cks = checkpointVersions(spark, table).filter(_ <= upTo.last)
+    val cks = listing.checkpointVersions.filter(_ <= upTo.last)
     if (cks.isEmpty) return None
     val cv = cks.last
+    if (!listing.parquetCheckpoints(cv)) return None
     val dir = new HPath(new HPath(table, LogDirName), ckptParquetName(cv))
-    if (!fs(spark, table).exists(dir)) return None
     // tail fold (driver, checkpoint-cadence-bounded): net adds and the
     // set of checkpoint files removed since
     val removed = mutable.LinkedHashSet.empty[String]
@@ -860,14 +954,8 @@ object GraftLog {
   }
 
   /** Versions with a checkpoint file, ascending. */
-  def checkpointVersions(spark: SparkSession, table: String): Seq[Long] = {
-    val dir = new HPath(table, LogDirName)
-    val f = fs(spark, table)
-    if (!f.exists(dir)) Seq.empty
-    else f.listStatus(dir).toSeq.map(_.getPath.getName)
-      .filter(_.matches("\\d{20}\\.checkpoint\\.json"))
-      .map(_.stripSuffix(".checkpoint.json").toLong).sorted
-  }
+  def checkpointVersions(spark: SparkSession, table: String): Seq[Long] =
+    listLog(spark, table).checkpointVersions
 
   /** Decoded-checkpoint cache. Sound because a checkpoint at (table, v)
     * is immutable once written (put-if-absent arbiter); the JSON
@@ -876,7 +964,9 @@ object GraftLog {
     * parquet dir appearing/vanishing (vacuum, compat tables), can never
     * serve a stale decode. Bounds the per-snapshot cost of the columnar
     * decode to one Spark job per checkpoint LIFETIME instead of one per
-    * replay — the same reason Delta caches Snapshot objects. */
+    * replay — the same reason Delta caches Snapshot objects. The writer
+    * seeds it with the checkpoint it just wrote, so a checkpoint written
+    * in this process is never decoded in it. */
   private val ckptCache = new java.util.concurrent.ConcurrentHashMap[
     (String, Long, Long, Boolean), Commit]()
 
@@ -887,56 +977,49 @@ object GraftLog {
   private val ckptLightCache = new java.util.concurrent.ConcurrentHashMap[
     (String, Long, Long, Boolean), Commit]()
 
+  private def cachePut[K, V](cache: java.util.concurrent.ConcurrentHashMap[
+      K, V], k: K, v: V): Unit = {
+    if (cache.size > 256) cache.clear()
+    cache.put(k, v)
+    ()
+  }
+
+  /** The checkpoint at `v` as the listing found it, and whether the
+    * decode carries per-file stats and blooms (false only for a LIGHT
+    * decode of a columnar checkpoint). */
   private def readCheckpoint(spark: SparkSession, table: String,
-      v: Long, withStats: Boolean = true): Commit = {
-    val logDir = new HPath(table, LogDirName)
-    val f = fs(spark, table)
-    val mod =
-      try f.getFileStatus(new HPath(logDir, ckptName(v)))
-        .getModificationTime
-      catch { case _: java.io.IOException => -1L }
-    val hasParquet = f.exists(new HPath(logDir, ckptParquetName(v)))
+      listing: LogListing, v: Long, withStats: Boolean): (Commit, Boolean) = {
+    val mod = listing.checkpoints.collectFirst { case (`v`, m) => m }
+      .getOrElse(-1L)
+    val hasParquet = listing.parquetCheckpoints(v)
     // the FULL decode (stats + blooms folded into the driver Commit)
     // answers any request; a LIGHT request (membership/schema/sizes
     // only — the snapshot/planning path) decodes without the two
     // per-file map columns, keeping scan PLANNING metadata off the
     // driver until something (fileStats, the driver-side pruning
     // fallback) actually demands it
-    val fullKey = (table, v, mod, hasParquet)
-    val lightKey = fullKey
-    val cachedFull = Option(ckptCache.get(fullKey))
-    if (cachedFull.isDefined) return cachedFull.get
+    val key = (table, v, mod, hasParquet)
+    Option(ckptCache.get(key)) match {
+      case Some(c) => return (c, true)
+      case None => ()
+    }
     if (!withStats && hasParquet) {
-      return Option(ckptLightCache.get(lightKey)).getOrElse {
-        val c = readCheckpointParquet(spark, table, v,
-          withStats = false).get
-        if (ckptLightCache.size > 256) ckptLightCache.clear()
-        ckptLightCache.put(lightKey, c)
+      val c = Option(ckptLightCache.get(key)).getOrElse {
+        LogCounters.checkpointDecodes.incrementAndGet()
+        val c = readCheckpointParquet(spark, table, v, withStats = false)
+        cachePut(ckptLightCache, key, c)
         c
       }
+      return (c, false)
     }
-    val key = fullKey
-    Option(ckptCache.get(key)).getOrElse {
-      val c =
-        if (hasParquet) readCheckpointParquet(spark, table, v).get
-        else {
-          // reader-compat fallback: checkpoints written before the
-          // columnar form existed (or whose parquet write raced a
-          // crash) keep working
-          val p = new HPath(logDir, ckptName(v))
-          val in = f.open(p)
-          try {
-            val bytes = new java.io.ByteArrayOutputStream()
-            val buf = new Array[Byte](8192)
-            var n = in.read(buf)
-            while (n >= 0) { bytes.write(buf, 0, n); n = in.read(buf) }
-            fromJson(new String(bytes.toByteArray, "UTF-8"))
-          } finally in.close()
-        }
-      if (ckptCache.size > 256) ckptCache.clear()
-      ckptCache.put(key, c)
-      c
-    }
+    LogCounters.checkpointDecodes.incrementAndGet()
+    val c =
+      if (hasParquet) readCheckpointParquet(spark, table, v, withStats = true)
+      // reader-compat fallback: checkpoints written before the columnar
+      // form existed (or whose parquet write raced a crash) keep working
+      else readJson(spark, table, ckptName(v))
+    cachePut(ckptCache, key, c)
+    (c, true)
   }
 
   /** Write a checkpoint at `asOf` (default: latest version). Idempotent —
@@ -945,105 +1028,263 @@ object GraftLog {
     * checkpointed version. */
   def checkpoint(spark: SparkSession, table: String,
       asOf: Option[Long] = None): Long = {
-    val all = versions(spark, table)
-    require(all.nonEmpty, s"$table is not a GraftLog table (no $LogDirName)")
-    val v = asOf.getOrElse(all.last)
-    require(all.contains(v),
-      s"version $v of $table does not exist (have ${all.mkString(",")})")
-    val (live, schema, sizes, dvs, blooms, cmap) =
-      replay(spark, table, Some(v))
-    // fold the idempotence ledger over everything the checkpoint subsumes
-    val prior = checkpointVersions(spark, table).filter(_ < v).lastOption
-    val base = prior.map(readCheckpoint(spark, table, _).txns)
-      .getOrElse(Map.empty[String, Long])
-    val tail = all.filter(x => x <= v && prior.forall(x > _))
-      .flatMap(x => readCommit(spark, table, x).txn)
-    val ledger = (base.toSeq ++ tail).groupMapReduce(_._1)(_._2)(math.max)
-    // the COPY INTO ingest ledger folds the same way: prior checkpoint's
-    // set plus every subsumed commit's entries (append-only union)
-    val copiedAll = (prior.map(readCheckpoint(spark, table, _).copied)
-      .getOrElse(Seq.empty) ++
-      all.filter(x => x <= v && prior.forall(x > _))
-        .flatMap(x => readCommit(spark, table, x).copied)).distinct
-    val c = Commit(v, "checkpoint", live.keys.toSeq, Seq.empty,
-      schema.toDDL, System.currentTimeMillis(),
-      stats = live.toMap.filter(_._2.nonEmpty), txns = ledger,
-      sizes = sizes.toMap, dvAdd = dvs.toSeq, blooms = blooms.toMap,
-      colMap = cmap, checks = checkConstraints(spark, table, Some(v)),
-      generated = generatedColumns(spark, table, Some(v)),
-      props = properties(spark, table, Some(v)), copied = copiedAll)
-    // JSON first — it is the put-if-absent existence arbiter (and the
-    // compat fallback); the columnar form is written only by the writer
-    // that won the race, so exactly one parquet job runs per version
-    if (putIfAbsent(spark, table, ckptName(v), toJson(c)))
-      writeCheckpointParquet(spark, table, c)
+    val listing = listLog(spark, table)
+    require(listing.commits.nonEmpty,
+      s"$table is not a GraftLog table (no $LogDirName)")
+    val v = asOf.getOrElse(listing.latest.get)
+    writeCheckpoint(spark, table,
+      stateIn(spark, table, listing, Some(v), withStats = true))
     v
   }
 
-  /** Core replay: state (live files with stats, in add order) + schema at
-    * `asOf` (or latest), starting from the newest checkpoint at or below
-    * the target and walking only the commits after it.
-    *
-    * `asOf` must name an EXISTING version: probing a version vacuum has
-    * truncated raises IllegalArgumentException by design (vacuumed
-    * versions are documented as not time-travelable — see [[vacuum]]);
-    * silently answering from the surviving state would misattribute a
-    * later snapshot to the requested version. */
-  private def replay(spark: SparkSession, table: String, asOf: Option[Long],
-      withStats: Boolean = true)
-      : (mutable.LinkedHashMap[String, Map[String, (Double, Double)]],
-         StructType, mutable.Map[String, Long],
-         mutable.LinkedHashSet[String],
-         mutable.Map[String, Map[String, String]],
-         Map[String, String]) = {
-    val all = versions(spark, table)
-    val upTo = asOf match {
-      case Some(v) =>
-        require(all.contains(v),
-          s"version $v of $table does not exist (have ${all.mkString(",")})")
-        all.filter(_ <= v)
-      case None => all
+  /** Write the checkpoint of `st` (a full-stats state): its live files
+    * with stats, sizes and blooms, the schema and metadata in force, and
+    * the folded txn and COPY INTO ledgers. */
+  private def writeCheckpoint(spark: SparkSession, table: String,
+      st: TableState): Unit = {
+    val c = Commit(st.version, "checkpoint", st.files, Seq.empty,
+      st.schema.toDDL, System.currentTimeMillis(),
+      stats = st.stats.filter(_._2.nonEmpty), txns = st.txns,
+      sizes = st.sizes, dvAdd = st.dvs, blooms = st.blooms,
+      colMap = st.colMap, checks = st.checks, generated = st.generated,
+      props = st.props, copied = st.copied)
+    // JSON first — it is the put-if-absent existence arbiter (and the
+    // compat fallback); the columnar form is written only by the writer
+    // that won the race, so exactly one parquet job runs per version
+    if (putIfAbsent(spark, table, ckptName(st.version), toJson(c))) {
+      writeCheckpointParquet(spark, table, c)
+      val mod = fs(spark, table).getFileStatus(new HPath(
+        new HPath(table, LogDirName), ckptName(st.version)))
+        .getModificationTime
+      cachePut(ckptCache, (table, st.version, mod, true), c)
     }
-    val live = mutable.LinkedHashMap.empty[String, Map[String, (Double, Double)]]
-    val sizes = mutable.Map.empty[String, Long]
-    val dvs = mutable.LinkedHashSet.empty[String]
-    val blooms = mutable.Map.empty[String, Map[String, String]]
-    var schema: StructType = null
-    var cmap: Map[String, String] = Map.empty
+  }
+
+  // ---------------------------------------------------------- table state
+  // One immutable TableState per version read: the replay of commits
+  // from the newest checkpoint at or below it. The state of each
+  // table's LATEST version is memoized by table root; an operation
+  // lists the log once, checks the memo against the listed commit
+  // files' (mtime, length) stamps, and folds only the commits newer
+  // than it — the snapshot + checkpoint + tail-replay design of the
+  // Delta Lake paper. A writer folds its own commit into the state it
+  // read, so a run of commits to one table reads no commit file back.
+
+  /** The table at `version`. `files` are table-root-relative, in add
+    * order; `stats` has an entry (possibly empty) per live file. `last`
+    * is the commit at `version`, whose colMap / checks / generated /
+    * props / tags are the table's by the writeCommit inheritance
+    * invariant. `withStats` is false when the state started from a
+    * LIGHT checkpoint decode (no per-file stats or blooms for the files
+    * it carried). `stamps` are the commit-file stamps the state was
+    * built from, for memo validation. */
+  private[graft] final case class TableState(version: Long,
+      files: Vector[String],
+      stats: Map[String, Map[String, (Double, Double)]],
+      sizes: Map[String, Long],
+      blooms: Map[String, Map[String, String]],
+      dvs: Vector[String],
+      schema: StructType,
+      last: Commit,
+      txns: Map[String, Long],
+      copied: Vector[String],
+      withStats: Boolean,
+      stamps: Map[Long, (Long, Long)]) {
+    def colMap: Map[String, String] = last.colMap
+    def checks: Map[String, String] = last.checks
+    def generated: Map[String, String] = last.generated
+    def props: Map[String, String] = last.props
+    /** Live files with their stats, in add order. */
+    def live: Seq[(String, Map[String, (Double, Double)])] =
+      files.map(f => f -> stats.getOrElse(f, Map.empty))
+    def liveMap: scala.collection.immutable.VectorMap[String,
+        Map[String, (Double, Double)]] =
+      scala.collection.immutable.VectorMap.from(live)
+  }
+
+  /** Folds commits (a checkpoint first, if any) onto a state. */
+  private final class StateBuilder(base: Option[TableState]) {
+    private var files = base.fold(Vector.empty[String])(_.files)
+    private var stats = base.fold(
+      Map.empty[String, Map[String, (Double, Double)]])(_.stats)
+    private var sizes = base.fold(Map.empty[String, Long])(_.sizes)
+    private var blooms = base.fold(
+      Map.empty[String, Map[String, String]])(_.blooms)
+    private var dvs = base.fold(Vector.empty[String])(_.dvs)
+    private var txns = base.fold(Map.empty[String, Long])(_.txns)
+    private var copied = base.fold(Vector.empty[String])(_.copied)
+    private var schemaDdl = base.map(_.last.schemaDdl).orNull
+    var last: Commit = base.map(_.last).orNull
+    var withStats: Boolean = base.forall(_.withStats)
+
     def fold(c: Commit): Unit = {
-      c.remove.foreach { f => live -= f; sizes -= f; blooms -= f }
-      c.add.foreach { f =>
-        live += f -> c.stats.getOrElse(f, Map.empty)
-        c.sizes.get(f).foreach(sizes += f -> _)
-        c.blooms.get(f).foreach(blooms += f -> _)
+      if (c.remove.nonEmpty) {
+        val gone = c.remove.toSet
+        files = files.filterNot(gone)
+        stats --= c.remove; sizes --= c.remove; blooms --= c.remove
       }
-      c.dvRemove.foreach(dvs -= _)
-      c.dvAdd.foreach(dvs += _)
-      schema = StructType.fromDDL(c.schemaDdl)
-      // plain replacement: every commit carries the mapping in force
-      // after it (see writeCommit), so no merge logic is needed
-      cmap = c.colMap
+      c.add.foreach { f =>
+        if (!stats.contains(f)) files :+= f
+        stats += f -> c.stats.getOrElse(f, Map.empty)
+        c.sizes.get(f).foreach(n => sizes += f -> n)
+        c.blooms.get(f).foreach(b => blooms += f -> b)
+      }
+      if (c.dvRemove.nonEmpty) dvs = dvs.filterNot(c.dvRemove.toSet)
+      c.dvAdd.foreach(d => if (!dvs.contains(d)) dvs :+= d)
+      // the txn ledger: a checkpoint carries the folded map, a commit
+      // its own (appId, batchId)
+      (c.txns.toSeq ++ c.txn).foreach { case (app, b) =>
+        txns += app -> txns.get(app).fold(b)(math.max(_, b)) }
+      if (c.copied.nonEmpty) {
+        val seen = copied.toSet
+        copied ++= c.copied.distinct.filterNot(seen)
+      }
+      schemaDdl = c.schemaDdl
+      last = c
     }
-    val start: Long = checkpointVersions(spark, table)
-      .filter(cv => upTo.nonEmpty && cv <= upTo.last) match {
-      case cks if cks.nonEmpty =>
-        fold(readCheckpoint(spark, table, cks.last, withStats))
-        cks.last
-      case _ => -1L
+
+    def result(version: Long, stamps: Map[Long, (Long, Long)]): TableState = {
+      val schema = base match {
+        case Some(b) if b.last.schemaDdl == schemaDdl => b.schema
+        case _ => StructType.fromDDL(schemaDdl)
+      }
+      TableState(version, files, stats, sizes, blooms, dvs, schema, last,
+        txns, copied, withStats, stamps)
     }
-    upTo.filter(_ > start).foreach(v => fold(readCommit(spark, table, v)))
-    (live, schema, sizes, dvs, blooms, cmap)
+  }
+
+  /** Replay the state at `target` (a listed version) from the newest
+    * checkpoint at or below it. */
+  private def buildState(spark: SparkSession, table: String,
+      listing: LogListing, target: Long, withStats: Boolean): TableState = {
+    val b = new StateBuilder(None)
+    val cv = listing.checkpointVersions.filter(_ <= target).lastOption
+    cv.foreach { v =>
+      val (c, full) = readCheckpoint(spark, table, listing, v, withStats)
+      b.fold(c)
+      b.withStats = full
+    }
+    val tail = listing.versions.filter(v => v <= target && cv.forall(v > _))
+    tail.foreach(v => b.fold(readCommit(spark, table, v)))
+    // a state that IS a checkpoint still carries its own commit (tags,
+    // timestamp and operation are not in the checkpoint)
+    if (tail.isEmpty) b.last = readCommit(spark, table, target)
+    b.result(target, listing.stamps.filter(_._1 <= target))
+  }
+
+  /** Latest-version state per table root; bounded like [[ckptCache]]. */
+  private val stateMemo =
+    new java.util.concurrent.ConcurrentHashMap[String, TableState]()
+
+  private def remember(table: String, st: TableState): Unit =
+    cachePut(stateMemo, table, st)
+
+  /** Forget every memoized state and decoded checkpoint, so the next
+    * read of any table replays from its files. */
+  private[graft] def resetStateMemo(): Unit = {
+    stateMemo.clear(); ckptCache.clear(); ckptLightCache.clear()
+  }
+
+  /** The memo for `table`, when every commit file it was built from
+    * that the listing still shows carries the same stamp, and its own
+    * version is still listed. A table dropped and recreated at the same
+    * path, or a commit file rewritten in place, fails this. */
+  private def validMemo(table: String, listing: LogListing)
+      : Option[TableState] =
+    Option(stateMemo.get(table)).filter { m =>
+      listing.stamps.get(m.version).exists(m.stamps.get(m.version).contains) &&
+        listing.commits.forall { case (v, s) =>
+          v > m.version || m.stamps.get(v).contains(s) }
+    }
+
+  /** The latest state for a listing: the memo as is, the memo advanced
+    * by the commits listed after it, or a replay. */
+  private def latestState(spark: SparkSession, table: String,
+      listing: LogListing, withStats: Boolean): Option[TableState] =
+    listing.latest match {
+      case None =>
+        stateMemo.remove(table)
+        None
+      case Some(latest) =>
+        val memo = validMemo(table, listing)
+          .filter(m => m.withStats || !withStats)
+        val st = memo match {
+          case Some(m) if m.version == latest =>
+            LogCounters.memoHits.incrementAndGet()
+            m
+          case Some(m) if listing.commits.count(_._1 > m.version) ==
+              latest - m.version =>
+            val b = new StateBuilder(Some(m))
+            listing.versions.filter(_ > m.version)
+              .foreach(v => b.fold(readCommit(spark, table, v)))
+            b.result(latest, listing.stamps)
+          case _ => buildState(spark, table, listing, latest, withStats)
+        }
+        if (!memo.exists(_ eq st)) remember(table, st)
+        Some(st)
+    }
+
+  /** The state at `asOf` for a listing: the latest through the memo, an
+    * older version by a replay that bypasses it. `asOf` must name an
+    * EXISTING version: probing a version vacuum has truncated raises
+    * IllegalArgumentException by design (vacuumed versions are
+    * documented as not time-travelable — see [[vacuum]]); silently
+    * answering from the surviving state would misattribute a later
+    * snapshot to the requested version. */
+  private def stateIn(spark: SparkSession, table: String,
+      listing: LogListing, asOf: Option[Long], withStats: Boolean)
+      : TableState = asOf.filterNot(listing.latest.contains) match {
+    case Some(v) =>
+      require(listing.stamps.contains(v), s"version $v of $table does " +
+        s"not exist (have ${listing.versions.mkString(",")})")
+      buildState(spark, table, listing, v, withStats)
+    case None =>
+      val st = latestState(spark, table, listing, withStats)
+      require(st.nonEmpty, s"$table is not a GraftLog table (no $LogDirName)")
+      st.get
+  }
+
+  /** The latest state of `table` (None for an empty or missing log):
+    * one listing, then the memo. */
+  private[graft] def logState(spark: SparkSession, table: String,
+      withStats: Boolean = false): Option[TableState] =
+    latestState(spark, table, listLog(spark, table), withStats)
+
+  /** The state at `asOf` (default latest) of a table that must exist. */
+  private[graft] def stateAt(spark: SparkSession, table: String,
+      asOf: Option[Long] = None, withStats: Boolean = false): TableState =
+    stateIn(spark, table, listLog(spark, table), asOf, withStats)
+
+  /** `f` of the state at `asOf`, or `empty` when the table has no log. */
+  private def ofState[A](spark: SparkSession, table: String,
+      asOf: Option[Long], withStats: Boolean, empty: => A)(
+      f: TableState => A): A = {
+    val listing = listLog(spark, table)
+    if (listing.commits.isEmpty) empty
+    else f(stateIn(spark, table, listing, asOf, withStats))
+  }
+
+  /** The commit at `asOf` (default latest): the latest state's, or one
+    * commit read below it. None for an empty log. */
+  private def commitAt(spark: SparkSession, table: String,
+      asOf: Option[Long]): Option[Commit] = {
+    val listing = listLog(spark, table)
+    listing.latest.map { latest =>
+      val v = asOf.getOrElse(latest)
+      require(listing.stamps.contains(v),
+        s"version $v of $table does not exist")
+      if (v == latest)
+        latestState(spark, table, listing, withStats = false).get.last
+      else readCommit(spark, table, v)
+    }
   }
 
   /** Live file set (table-root-relative) + schema after replaying
     * commits (from the newest subsumed checkpoint) up to asOf. */
   def snapshot(spark: SparkSession, table: String,
       asOf: Option[Long] = None): (Seq[String], StructType) = {
-    require(versions(spark, table).nonEmpty,
-      s"$table is not a GraftLog table (no $LogDirName)")
-    val (live, schema, _, _, _, _) = replay(spark, table, asOf,
-      withStats = false)
-    (live.keys.toSeq, schema)
+    val st = stateAt(spark, table, asOf)
+    (st.files, st.schema)
   }
 
   /** Active column mapping: PHYSICAL column name (what the parquet files
@@ -1055,8 +1296,8 @@ object GraftLog {
     * the empty string. */
   def columnMapping(spark: SparkSession, table: String,
       asOf: Option[Long] = None): Map[String, String] =
-    if (versions(spark, table).isEmpty) Map.empty
-    else replay(spark, table, asOf, withStats = false)._6
+    ofState(spark, table, asOf, withStats = false,
+      Map.empty[String, String])(_.colMap)
 
   /** The user-visible schema: physical fields renamed through the
     * mapping, retired markers excluded. */
@@ -1097,27 +1338,23 @@ object GraftLog {
     * without one namenode RPC per live file, the way Delta carries sizes
     * in its log. */
   def fileSizes(spark: SparkSession, table: String,
-      asOf: Option[Long] = None): Map[String, Long] = {
-    if (versions(spark, table).isEmpty) Map.empty
-    else replay(spark, table, asOf, withStats = false)._3.toMap
-  }
+      asOf: Option[Long] = None): Map[String, Long] =
+    ofState(spark, table, asOf, withStats = false,
+      Map.empty[String, Long])(_.sizes)
 
   /** Deletion-vector sidecar files active in the snapshot (relative
     * paths, add order) — empty when every delete was materialized. */
   def deletionVectors(spark: SparkSession, table: String,
-      asOf: Option[Long] = None): Seq[String] = {
-    if (versions(spark, table).isEmpty) Seq.empty
-    else replay(spark, table, asOf, withStats = false)._4.toSeq
-  }
+      asOf: Option[Long] = None): Seq[String] =
+    ofState(spark, table, asOf, withStats = false, Seq.empty[String])(_.dvs)
 
   /** Per-file Bloom bitmaps (column → base64 bitset) of the live files —
     * the string-column point-lookup complement of the numeric min/max
     * stats, commit-log metadata like everything else. */
   def fileBlooms(spark: SparkSession, table: String,
-      asOf: Option[Long] = None): Map[String, Map[String, String]] = {
-    if (versions(spark, table).isEmpty) Map.empty
-    else replay(spark, table, asOf)._5.toMap
-  }
+      asOf: Option[Long] = None): Map[String, Map[String, String]] =
+    ofState(spark, table, asOf, withStats = true,
+      Map.empty[String, Map[String, String]])(_.blooms)
 
   /** Is `path` a graft table (has a log with at least one commit)? */
   def isGraftTable(spark: SparkSession, table: String): Boolean =
@@ -1128,15 +1365,15 @@ object GraftLog {
     * zero data files opened, zero filesystem listings. */
   def liveFilesSized(spark: SparkSession, table: String,
       asOf: Option[Long] = None): (Seq[(String, Long)], StructType) = {
-    val (live, schema, sizes, _, _, _) = replay(spark, table, asOf)
+    val st = stateAt(spark, table, asOf)
     // a zero length would make the V2 parquet read silently EMPTY, so a
     // file some pre-size-logging commit added falls back to one status
     // RPC — the exception, never the per-file rule
     lazy val hfs = fs(spark, table)
-    (live.keys.toSeq.map { f =>
-      f -> (sizes.get(f).filter(_ > 0L).getOrElse(
-        hfs.getFileStatus(new HPath(absPath(table, f))).getLen))
-    }, schema)
+    (st.files.map { f =>
+      f -> st.sizes.get(f).filter(_ > 0L).getOrElse(
+        hfs.getFileStatus(new HPath(absPath(table, f))).getLen)
+    }, st.schema)
   }
 
   /** The SPJ catalog's soundness gate (the t41/d25 rule): it reads data
@@ -1145,16 +1382,16 @@ object GraftLog {
     * column mapping refuse loudly and point at `format("graft")`. */
   private[sources] def requireSpjReadable(spark: SparkSession,
       table: String, asOf: Option[Long] = None): Unit = {
-    checkReaderFeatures(spark, table, asOf) // the protocol gate first
-    require(deletionVectors(spark, table, asOf).isEmpty,
+    val st = stateAt(spark, table, asOf)
+    checkReaderFeatures(table, st.props) // the protocol gate first
+    require(st.dvs.isEmpty,
       s"$table has active deletion vectors - the SPJ catalog reads " +
         "files verbatim; read via format(\"graft\") or REORG APPLY " +
         "(PURGE) first")
-    require(columnMapping(spark, table, asOf).isEmpty,
+    require(st.colMap.isEmpty,
       s"$table uses column mapping - the SPJ catalog exposes physical " +
         "names; read via format(\"graft\")")
-    val (files, _) = snapshot(spark, table, asOf)
-    val visible = files.flatMap(_.split('/').dropRight(1).toSeq)
+    val visible = st.files.flatMap(_.split('/').dropRight(1).toSeq)
       .filter(_.contains('=')) // col=val dirs only, never _data/<uuid>
       .map(_.takeWhile(_ != '=')).distinct
       .filterNot(HiddenBucketDir.matches)
@@ -1178,10 +1415,9 @@ object GraftLog {
     * empty live set still yields a correctly-typed empty frame. */
   def read(spark: SparkSession, table: String,
       asOf: Option[Long] = None): DataFrame = {
-    checkReaderFeatures(spark, table, asOf)
-    val (files, schema) = snapshot(spark, table, asOf)
-    val dvs = deletionVectors(spark, table, asOf)
-    val cmap = columnMapping(spark, table, asOf)
+    val st = stateAt(spark, table, asOf)
+    checkReaderFeatures(table, st.props)
+    val (files, schema, dvs) = (st.files, st.schema, st.dvs)
     val base =
       if (files.isEmpty)
         spark.createDataFrame(
@@ -1199,7 +1435,7 @@ object GraftLog {
       else spark.read.schema(schema)
         .parquet(files.map(f => absPath(table, f)): _*)
     // column mapping: files carry physical names; users see logical ones
-    toLogicalDf(base, schema, cmap)
+    toLogicalDf(base, schema, st.colMap)
   }
 
   /** `VERSION AS OF n` — the time-travel read. */
@@ -1264,9 +1500,6 @@ object GraftLog {
       .sortBy(_._1)
     (entries.map(_._1), entries.toMap)
   }
-
-  private def nextVersion(spark: SparkSession, table: String): Long =
-    latestVersion(spark, table).map(_ + 1).getOrElse(0L)
 
   // -------------------------------------------------------- data skipping
 
@@ -1610,11 +1843,17 @@ object GraftLog {
     * txnAppend / COPY INTO families): rewrite paths (compact / merge /
     * autocompact / reorg) choose their own distribution deliberately. */
   private[graft] def optimizedWrite(df: DataFrame, table: String,
-      partCols: Seq[String]): DataFrame = {
+      partCols: Seq[String]): DataFrame =
+    optimizedWrite(df, partCols, properties(df.sparkSession, table))
+
+  /** [[optimizedWrite]] under the table properties of a state already
+    * read. */
+  private def optimizedWrite(df: DataFrame, partCols: Seq[String],
+      props: Map[String, String]): DataFrame = {
     val on = df.sparkSession.conf
       .getOption("spark.graft.optimizeWrite.enabled")
       .map(_.equalsIgnoreCase("true"))
-      .getOrElse(properties(df.sparkSession, table)
+      .getOrElse(props
         .get("graft.optimizeWrite").exists(_.equalsIgnoreCase("true")))
     if (!on) df
     else if (partCols.isEmpty) df.hint("rebalance")
@@ -1632,22 +1871,17 @@ object GraftLog {
   /** Stats of the LIVE file set (same replay as [[snapshot]]). */
   def fileStats(spark: SparkSession, table: String,
       asOf: Option[Long] = None)
-      : Map[String, Map[String, (Double, Double)]] = {
-    if (versions(spark, table).isEmpty) Map.empty
-    else {
-      val (live, _, _, _, _, _) = replay(spark, table, asOf)
-      live.toMap
-    }
-  }
+      : Map[String, Map[String, (Double, Double)]] =
+    ofState(spark, table, asOf, withStats = true,
+      Map.empty[String, Map[String, (Double, Double)]])(_.stats)
 
   /** Files of the current snapshot whose [min, max] stats for `column`
     * intersect [lo, hi] (files without stats are conservatively kept). */
   private[graft] def prunedFiles(spark: SparkSession, table: String,
       column: String, lo: Double, hi: Double): Seq[String] = {
-    val (files, _) = snapshot(spark, table)
-    val stats = fileStats(spark, table)
-    files.filter { f =>
-      stats.get(f).flatMap(_.get(column)) match {
+    val st = stateAt(spark, table, withStats = true)
+    st.files.filter { f =>
+      st.stats.get(f).flatMap(_.get(column)) match {
         case Some((mn, mx)) => mx >= lo && mn <= hi
         case None => true
       }
@@ -2041,10 +2275,12 @@ object GraftLog {
   def appendPartitioned(df: DataFrame, table: String,
       partCols: Seq[String]): Long = {
     val spark = df.sparkSession
-    val seen0 = latestVersion(spark, table)
-    val (aligned, ddl, gens2) = seen0 match {
-      case Some(_) =>
-        val (files, cur) = snapshot(spark, table)
+    val st0 = logState(spark, table)
+    val props0 = st0.fold(Map.empty[String, String])(_.props)
+    val gens0 = st0.fold(Map.empty[String, String])(_.generated)
+    val (aligned, ddl, gens2) = st0 match {
+      case Some(st) =>
+        val (files, cur) = (st.files, st.schema)
         val existing = layoutPartCols(files)
         require(files.isEmpty ||
           existing.map(_.toLowerCase) == partCols.map(_.toLowerCase),
@@ -2053,27 +2289,22 @@ object GraftLog {
             "layouts would break path-derived partition reconstruction")
         // generated columns compute BEFORE schema enforcement: the
         // table schema carries them, the batch usually does not
-        val dfG0 = applyGenerated(df, generatedColumns(spark, table),
-          "appendPartitioned")
-        val (dfG, g2) = allocateIdentity(spark, dfG0,
-          generatedColumns(spark, table))
+        val dfG0 = applyGenerated(df, gens0, "appendPartitioned")
+        val (dfG, g2) = allocateIdentity(spark, dfG0, gens0)
         val ok = enforceSchema(dfG, cur, "appendPartitioned")
-        enforceChecks(ok, checkConstraints(spark, table),
-          "appendPartitioned")
+        enforceChecks(ok, st.checks, "appendPartitioned")
         (ok, cur.toDDL, g2)
       case None => (df, df.schema.toDDL, Map.empty[String, String])
     }
     val s = stagePartitionedWithStats(
-      optimizedWrite(aligned, table, partCols), table, partCols)
-    val gens0 = if (seen0.isEmpty) Map.empty[String, String]
-      else generatedColumns(spark, table)
+      optimizedWrite(aligned, partCols, props0), table, partCols)
     val hasId = gens0.values.exists(identityDef(_).isDefined)
     commitStagedAppend(spark, table, "appendPartitioned", "append", s,
-      ddl, seen0,
-      () => {
-        if (hasId) requireIdentityUnmoved(spark, table, gens0,
+      ddl, st0,
+      st => {
+        if (hasId) requireIdentityUnmoved(table, st, gens0,
           "appendPartitioned")
-        revalidateBlindAppend(spark, table, aligned.schema,
+        revalidateBlindAppend(table, st, aligned.schema,
           "appendPartitioned", partCols)
       },
       generated = if (hasId) gens2 else Map.empty)
@@ -2171,14 +2402,8 @@ object GraftLog {
     * checkpoint's carried set plus the commit tail after it — the same
     * fold shape as the txn ledger, and like it metadata-sized (one URI
     * per ingested file, never per row). */
-  def copiedFiles(spark: SparkSession, table: String): Set[String] = {
-    val ckpt = checkpointVersions(spark, table).lastOption
-    val base = ckpt.map(readCheckpoint(spark, table, _, withStats = false)
-      .copied).getOrElse(Seq.empty)
-    val tail = versions(spark, table).filter(v => ckpt.forall(v > _))
-      .flatMap(v => readCommit(spark, table, v).copied)
-    (base ++ tail).toSet
-  }
+  def copiedFiles(spark: SparkSession, table: String): Set[String] =
+    logState(spark, table).fold(Set.empty[String])(_.copied.toSet)
 
   /** `COPY INTO` — idempotent directory ingest (Delta's contract): load
     * the data files under `source` into `table`, skipping every file a
@@ -2222,19 +2447,19 @@ object GraftLog {
           "point COPY INTO at each leaf directory instead")
       val listed = entries.filter(_.isFile)
         .map(st => srcFs.makeQualified(st.getPath).toString).sorted
-      val ledgerBefore = copiedFiles(spark, table)
+      val state = stateAt(spark, table)
+      val ledgerBefore = state.copied.toSet
       val already = if (force) Set.empty[String] else ledgerBefore
       val fresh = listed.filterNot(already)
       if (fresh.isEmpty) return (-1L, 0L, 0L)
-      val schema = logicalSchema(snapshot(spark, table)._2,
-        columnMapping(spark, table))
+      val schema = logicalSchema(state.schema, state.colMap)
       // Declared DEFAULTs apply to COPY INTO like every insert surface —
       // but the explicit read schema would materialize omitted source
       // columns as NULLs before append()'s fillDefaults can see them as
       // omitted. When defaults exist, restrict the read schema to the
       // columns the source files actually carry (one footer-sized
       // inference pass); append() then fills the truly-absent ones.
-      val defaults = columnDefaults(spark, table)
+      val defaults = defaultsOf(state.props)
       // the presence probe is BY-NAME: parquet/json carry field names,
       // and csv only with header=true. Headerless CSV infers _c0.._cN
       // — a name probe would drop every default-bearing column and the
@@ -2295,27 +2520,27 @@ object GraftLog {
       copied: Seq[String] = Seq.empty,
       copiedBaseline: Set[String] = Set.empty): Long = {
     val spark = df.sparkSession
-    val seen0 = latestVersion(spark, table)
-    val gens0 = if (seen0.isEmpty) Map.empty[String, String]
-      else generatedColumns(spark, table)
+    // ONE state read serves the whole append: gates, staging options,
+    // the claim's version and the commit's metadata inheritance
+    val st0 = logState(spark, table)
+    val props0 = st0.fold(Map.empty[String, String])(_.props)
+    val gens0 = st0.fold(Map.empty[String, String])(_.generated)
     // partition-spec evolution: a declared current spec re-routes this
     // blind append's STAGING under the spec's hidden dirs — everything
     // else (schema gate, OCC, ledger) is the flat path verbatim
-    val spec0 = if (seen0.isEmpty) None
-      else bucketSpecOf(properties(spark, table))
-    val (aligned, ddl, gens2) = seen0 match {
-      case Some(_) =>
-        val (files, cur) = snapshot(spark, table)
+    val spec0 = bucketSpecOf(props0)
+    val (aligned, ddl, gens2) = st0 match {
+      case Some(st) =>
+        val (files, cur, cmap) = (st.files, st.schema, st.colMap)
         if (spec0.isEmpty) requireUnpartitioned(files, "append")
         else {
           require(hiddenOnlyLayout(files),
             "append under a declared partition spec: the table carries " +
               "a VISIBLE hive layout; use appendPartitioned")
-          require(columnMapping(spark, table).isEmpty,
+          require(cmap.isEmpty,
             "append under a declared partition spec: column mapping is " +
               "active; unsupported together")
         }
-        val cmap = columnMapping(spark, table)
         // the batch carries LOGICAL names; enforce against the logical
         // schema, then stage under the table's PHYSICAL names so every
         // data file stays uniformly physical under column mapping
@@ -2323,12 +2548,12 @@ object GraftLog {
         // (standard SQL / Delta `defaults`); a missing column with no
         // default still refuses in enforceSchema below
         val dfD = fillDefaults(df,
-          logicalSchema(cur, cmap), columnDefaults(spark, table))
+          logicalSchema(cur, cmap), defaultsOf(props0))
         val dfG0 = applyGenerated(dfD, gens0, "append")
         val (dfG, g2) = allocateIdentity(spark, dfG0, gens0)
         val logicalOk =
           enforceSchema(dfG, logicalSchema(cur, cmap), "append")
-        enforceChecks(logicalOk, checkConstraints(spark, table), "append")
+        enforceChecks(logicalOk, st.checks, "append")
         (toPhysicalDf(logicalOk, cur, cmap), cur.toDDL, g2)
       case None => (df, df.schema.toDDL, Map.empty[String, String])
     }
@@ -2336,16 +2561,16 @@ object GraftLog {
       case Some((sc, n)) =>
         val syn = s"gfb${n}_$sc"
         stagePartitionedWithStats(optimizedWrite(aligned.withColumn(syn,
-          pmod(xxhash64(col(sc)), lit(n.toLong))), table, Seq(syn)),
+          pmod(xxhash64(col(sc)), lit(n.toLong))), Seq(syn), props0),
           table, Seq(syn))
       case None =>
-        stageWithStats(optimizedWrite(aligned, table, Nil), table)
+        stageWithStats(optimizedWrite(aligned, Nil, props0), table)
     }
     val hasId = gens0.values.exists(identityDef(_).isDefined)
-    commitStagedAppend(spark, table, "append", "append", s, ddl, seen0,
-      () => {
-        if (hasId) requireIdentityUnmoved(spark, table, gens0, "append")
-        revalidateBlindAppend(spark, table, aligned.schema, "append",
+    commitStagedAppend(spark, table, "append", "append", s, ddl, st0,
+      st => {
+        if (hasId) requireIdentityUnmoved(table, st, gens0, "append")
+        revalidateBlindAppend(table, st, aligned.schema, "append",
           spec0.map { case (sc, n) => s"gfb${n}_$sc" }.toSeq)
       },
       // COPY INTO idempotence: when a competing commit lands between
@@ -2354,9 +2579,8 @@ object GraftLog {
       // caller's baseline read, abandon (-1) so the caller recomputes
       // the fresh set instead of double-loading (baseline-relative, so
       // FORCE re-ingest never aborts on its own prior history)
-      abandonIf = () => copied.nonEmpty &&
-        (copiedFiles(spark, table) -- copiedBaseline)
-          .exists(copied.contains),
+      abandonIf = st => copied.nonEmpty && st.exists(s =>
+        (s.copied.toSet -- copiedBaseline).exists(copied.contains)),
       generated = if (hasId) gens2 else Map.empty,
       copied = copied)
   }
@@ -2368,9 +2592,10 @@ object GraftLog {
     * above the new mark — Delta's identity writes conflict the same
     * way. Non-identity concurrent commits leave the marks unchanged
     * and the staged batch stays valid (the blind-append fast path). */
-  private def requireIdentityUnmoved(spark: SparkSession, table: String,
-      gens0: Map[String, String], op: String): Unit = {
-    val now = generatedColumns(spark, table)
+  private def requireIdentityUnmoved(table: String,
+      st: Option[TableState], gens0: Map[String, String],
+      op: String): Unit = {
+    val now = st.fold(Map.empty[String, String])(_.generated)
     val moved = gens0.exists { case (c, ex) =>
       identityDef(ex).isDefined && !now.get(c).contains(ex) }
     if (moved) throw new java.util.ConcurrentModificationException(
@@ -2386,12 +2611,13 @@ object GraftLog {
     * the same way. Type CHANGES on a shared column are rejected. */
   def appendMergeSchema(df: DataFrame, table: String): Long = {
     val spark = df.sparkSession
+    val st0 = logState(spark, table)
     // Under column mapping the batch's LOGICAL names re-key to physical
     // ones for shared columns; genuinely new columns keep their names
     // (logical == physical for them) but must not collide with any
     // physical or retired name, or old files would leak foreign bytes
     // into them.
-    val cmap0 = columnMapping(spark, table)
+    val cmap0 = st0.fold(Map.empty[String, String])(_.colMap)
     val dfPhys =
       if (cmap0.isEmpty) df
       else {
@@ -2407,22 +2633,21 @@ object GraftLog {
     // CHECK validation sees the batch as the table will read it back:
     // legacy columns the batch lacks become typed NULLs (which pass a
     // CHECK per SQL unless it explicitly tests IS NOT NULL)
-    latestVersion(spark, table).foreach { _ =>
-      val logical = logicalSchema(snapshot(spark, table)._2, cmap0)
+    st0.foreach { st =>
+      val logical = logicalSchema(st.schema, cmap0)
       val withMissing = logical.fields
         .filterNot(f => df.columns.exists(_.equalsIgnoreCase(f.name)))
         .foldLeft(df)((d, f) =>
           d.withColumn(f.name, lit(null).cast(f.dataType)))
-      enforceChecks(withMissing, checkConstraints(spark, table),
-        "appendMergeSchema")
+      enforceChecks(withMissing, st.checks, "appendMergeSchema")
     }
-    // The union schema is a function of the CURRENT table state, so the
-    // claim loop recomputes it whenever the table moves — a widening
-    // that raced another widening asserts the union of both.
-    def merged(): String = (latestVersion(spark, table) match {
+    // The union schema is a function of the table state the claim sits
+    // on, so the claim loop recomputes it whenever the table moves — a
+    // widening that raced another widening asserts the union of both.
+    def merged(st: Option[TableState]): String = (st match {
       case None => dfPhys.schema
-      case Some(_) =>
-        val cur = snapshot(spark, table)._2
+      case Some(s) =>
+        val cur = s.schema
         val byName = dfPhys.schema.map(f => f.name.toLowerCase -> f).toMap
         cur.foreach { f =>
           byName.get(f.name.toLowerCase).foreach { g =>
@@ -2435,11 +2660,10 @@ object GraftLog {
         StructType(cur.fields ++
           dfPhys.schema.fields.filterNot(f => curNames(f.name.toLowerCase)))
     }).toDDL
-    val seen0 = latestVersion(spark, table)
-    val ddl0 = merged()
+    val ddl0 = merged(st0)
     val s = stageWithStats(dfPhys, table)
     commitStagedAppend(spark, table, "appendMergeSchema",
-      "appendMergeSchema", s, ddl0, seen0, () => merged())
+      "appendMergeSchema", s, ddl0, st0, merged)
   }
 
   /** `ALTER TABLE … ADD COLUMNS` — metadata-only schema widening: one
@@ -2482,19 +2706,10 @@ object GraftLog {
   /** CHECK constraints in force at `asOf` (or latest): name → SQL
     * boolean expression over LOGICAL column names. By the writeCommit
     * inheritance invariant this is simply the commit's `checks` field —
-    * one small-JSON read, no replay. */
+    * the memoized state's, or one small-JSON read, never a replay. */
   def checkConstraints(spark: SparkSession, table: String,
-      asOf: Option[Long] = None): Map[String, String] = {
-    val all = versions(spark, table)
-    if (all.isEmpty) Map.empty
-    else asOf match {
-      case Some(v) =>
-        require(all.contains(v),
-          s"version $v of $table does not exist")
-        readCommit(spark, table, v).checks
-      case None => readCommit(spark, table, all.last).checks
-    }
-  }
+      asOf: Option[Long] = None): Map[String, String] =
+    commitAt(spark, table, asOf).fold(Map.empty[String, String])(_.checks)
 
   /** Generated-column definitions in force at `asOf` (or latest):
     * column name → generation expression SQL over the table's other
@@ -2503,17 +2718,8 @@ object GraftLog {
     * one small-JSON read, no replay. Definitions are immutable after
     * [[createGenerated]] (Delta likewise fixes them at creation). */
   def generatedColumns(spark: SparkSession, table: String,
-      asOf: Option[Long] = None): Map[String, String] = {
-    val all = versions(spark, table)
-    if (all.isEmpty) Map.empty
-    else asOf match {
-      case Some(v) =>
-        require(all.contains(v),
-          s"version $v of $table does not exist")
-        readCommit(spark, table, v).generated
-      case None => readCommit(spark, table, all.last).generated
-    }
-  }
+      asOf: Option[Long] = None): Map[String, String] =
+    commitAt(spark, table, asOf).fold(Map.empty[String, String])(_.generated)
 
   /** Table properties in force at `asOf` (or latest): the analog of
     * Delta's `metaData.configuration` map. Same invariant as
@@ -2534,17 +2740,8 @@ object GraftLog {
     *
     * Everything else is opaque user metadata carried verbatim. */
   def properties(spark: SparkSession, table: String,
-      asOf: Option[Long] = None): Map[String, String] = {
-    val all = versions(spark, table)
-    if (all.isEmpty) Map.empty
-    else asOf match {
-      case Some(v) =>
-        require(all.contains(v),
-          s"version $v of $table does not exist")
-        readCommit(spark, table, v).props
-      case None => readCommit(spark, table, all.last).props
-    }
-  }
+      asOf: Option[Long] = None): Map[String, String] =
+    commitAt(spark, table, asOf).fold(Map.empty[String, String])(_.props)
 
   /** Declared column DEFAULTs (Delta's `defaults` writer feature /
     * standard SQL `DEFAULT` clauses): LOWERCASE logical column name →
@@ -2554,7 +2751,10 @@ object GraftLog {
     * with NO default still refuses loudly. */
   def columnDefaults(spark: SparkSession, table: String,
       asOf: Option[Long] = None): Map[String, String] =
-    properties(spark, table, asOf).collect {
+    defaultsOf(properties(spark, table, asOf))
+
+  private def defaultsOf(props: Map[String, String]): Map[String, String] =
+    props.collect {
       case (k, v) if k.startsWith("graft.default.") =>
         k.stripPrefix("graft.default.").toLowerCase -> v
     }
@@ -2724,8 +2924,13 @@ object GraftLog {
     * version, so pre-feature versions stay readable — which is exactly
     * the escape hatch the error message advises. */
   private[sources] def checkReaderFeatures(spark: SparkSession,
-      table: String, asOf: Option[Long] = None): Unit = {
-    val unknown = parseFeatures(properties(spark, table, asOf),
+      table: String, asOf: Option[Long] = None): Unit =
+    checkReaderFeatures(table, properties(spark, table, asOf))
+
+  /** [[checkReaderFeatures]] against the props of a state already read. */
+  private[sources] def checkReaderFeatures(table: String,
+      props: Map[String, String]): Unit = {
+    val unknown = parseFeatures(props,
       ReaderFeaturesKey) -- SupportedReaderFeatures
     if (unknown.nonEmpty)
       throw new UnsupportedOperationException(
@@ -2783,9 +2988,10 @@ object GraftLog {
   private val RowHwKey = "graft.rowTracking.highWaterMark"
 
   private def rowTrackingEnabled(spark: SparkSession,
-      table: String): Boolean =
-    properties(spark, table).get("graft.enableRowTracking")
-      .exists(_.equalsIgnoreCase("true"))
+      table: String): Boolean = tracksRows(properties(spark, table))
+
+  private def tracksRows(props: Map[String, String]): Boolean =
+    props.get("graft.enableRowTracking").exists(_.equalsIgnoreCase("true"))
 
   /** numRecords of a staged file, read from its `#nulls` pseudo stats
     * (every column carries one; any is authoritative). */
@@ -2798,16 +3004,13 @@ object GraftLog {
     * table tracks rows: returns (stats + `#rowbase` entries, props with
     * the advanced high water) — or (stats, empty) when tracking is off,
     * which writeCommit treats as plain inheritance. Called INSIDE the
-    * commit claim loops so a lost race re-reads the fresh high water. */
-  private def allocRowIds(spark: SparkSession, table: String, s: Staged)
+    * commit claim loops so a lost race re-reads the fresh high water
+    * (`st` is the state the claim commits on top of). */
+  private def allocRowIds(st: Option[TableState], s: Staged)
       : (Map[String, Map[String, (Double, Double)]],
          Map[String, String]) = {
-    val cur =
-      if (versions(spark, table).isEmpty) Map.empty[String, String]
-      else properties(spark, table)
-    if (!cur.get("graft.enableRowTracking")
-        .exists(_.equalsIgnoreCase("true")))
-      return (s.stats, Map.empty)
+    val cur = st.fold(Map.empty[String, String])(_.props)
+    if (!tracksRows(cur)) return (s.stats, Map.empty)
     var hw = cur.get(RowHwKey).map(_.toLong).getOrElse(0L)
     val augmented = s.files.map { f =>
       val st = s.stats.getOrElse(f, Map.empty[String, (Double, Double)])
@@ -2961,7 +3164,8 @@ object GraftLog {
       deletionVectors(spark, table).nonEmpty) return None
     val k = props.get("graft.stats.kmvK").map(_.toInt).getOrElse(256)
     val latest = latestVersion(spark, table).get
-    val (live, schema, _, _, _, _) = replay(spark, table, None)
+    val st = stateAt(spark, table, withStats = true)
+    val (live, schema) = (st.liveMap, st.schema)
     val (curRows, curBytes) = metadataRowCount(spark, table)
     val sinceAnalyze = versions(spark, table)
       .filter(_ > analyzedAt.get)
@@ -3075,7 +3279,8 @@ object GraftLog {
     require(rowTrackingEnabled(spark, table),
       s"$table does not track rows (set graft.enableRowTracking=true)")
     val vRead = latestVersion(spark, table)
-    val (live, schema, _, _, _, _) = replay(spark, table, None)
+    val st = stateAt(spark, table, withStats = true)
+    val (live, schema) = (st.liveMap, st.schema)
     val missing = live.toSeq.collect {
       case (f, st) if !st.contains(RowBaseKey) &&
           !st.get(RowIdCol + NullStatsSuffix).exists(_._1 == 0.0) => f
@@ -3207,8 +3412,10 @@ object GraftLog {
     * [[analyzeTable]] (which persists the numbers) and the DML-time
     * staleness guard (which only compares them). */
   def metadataRowCount(spark: SparkSession, table: String)
-      : (Long, Long) = {
-    val (live, schema, sizes, dvs, _, _) = replay(spark, table, None)
+      : (Long, Long) =
+      ofState(spark, table, None, withStats = true, (0L, 0L)) { state =>
+    val (live, schema, sizes, dvs) =
+      (state.liveMap, state.schema, state.sizes, state.dvs)
     val fromStats = live.toSeq.map { case (f, st) =>
       f -> numRecordsOf(st) }
     val unknown = fromStats.filter(_._2 == 0L).map(_._1)
@@ -3677,16 +3884,22 @@ object GraftLog {
     // MV rewrite reads the view's high-water at the same version its
     // file scan is pinned to, so a maintenance commit racing the gate
     // can never pair one version's ledger with another's files
-    val ckpt = checkpointVersions(spark, table)
-      .filter(cv => asOf.forall(cv <= _)).lastOption
-    val base = ckpt.flatMap(cv =>
-      readCheckpoint(spark, table, cv).txns.get(appId))
-    val tail = versions(spark, table)
-      .filter(v => ckpt.forall(v > _) && asOf.forall(v <= _))
-      .map(readCommit(spark, table, _))
-      .flatMap(_.txn)
-      .collect { case (app, batch) if app == appId => batch }
-    (base.toSeq ++ tail).maxOption
+    val listing = listLog(spark, table)
+    if (asOf.forall(listing.latest.contains))
+      latestState(spark, table, listing, withStats = false)
+        .flatMap(_.txns.get(appId))
+    else {
+      val ckpt = listing.checkpointVersions
+        .filter(cv => asOf.forall(cv <= _)).lastOption
+      val base = ckpt.flatMap(cv => readCheckpoint(spark, table, listing,
+        cv, withStats = false)._1.txns.get(appId))
+      val tail = listing.versions
+        .filter(v => ckpt.forall(v > _) && asOf.forall(v <= _))
+        .map(readCommit(spark, table, _))
+        .flatMap(_.txn)
+        .collect { case (app, batch) if app == appId => batch }
+      (base.toSeq ++ tail).maxOption
+    }
   }
 
   /** Idempotent transactional append for streaming sinks: commits `df`
@@ -3700,26 +3913,27 @@ object GraftLog {
   def txnAppend(df: DataFrame, table: String, appId: String,
       batchId: Long): Boolean = {
     val spark = df.sparkSession
-    if (lastCommittedBatch(spark, table, appId).exists(_ >= batchId)) false
+    val st0 = logState(spark, table)
+    def landed(st: Option[TableState]): Boolean =
+      st.exists(_.txns.get(appId).exists(_ >= batchId))
+    if (landed(st0)) false
     else {
-      val seen0 = latestVersion(spark, table)
-      val (aligned, ddl) = tW("txnAlign")(seen0 match {
-        case Some(_) => // same gate as append(), incl. column mapping
-          val (files, cur) = snapshot(spark, table)
-          requireUnpartitioned(files, "streaming append")
-          val cmap = columnMapping(spark, table)
+      val (aligned, ddl) = tW("txnAlign")(st0 match {
+        case Some(st) => // same gate as append(), incl. column mapping
+          val (cur, cmap) = (st.schema, st.colMap)
+          requireUnpartitioned(st.files, "streaming append")
           // declared DEFAULTs fill omitted columns on EVERY insert
           // surface (Delta semantics), not only plain append
           val dfD = fillDefaults(df, logicalSchema(cur, cmap),
-            columnDefaults(spark, table))
+            defaultsOf(st.props))
           val logicalOk = enforceSchema(dfD, logicalSchema(cur, cmap),
             "streaming append")
-          enforceChecks(logicalOk, checkConstraints(spark, table),
-            "streaming append")
+          enforceChecks(logicalOk, st.checks, "streaming append")
           (toPhysicalDf(logicalOk, cur, cmap), cur.toDDL)
         case None => (df, df.schema.toDDL)
       })
-      val s = stageWithStats(optimizedWrite(aligned, table, Nil), table)
+      val s = stageWithStats(optimizedWrite(aligned, Nil,
+        st0.fold(Map.empty[String, String])(_.props)), table)
       // The ledger check and the version claim are not one atomic step,
       // so two concurrent deliveries of the same (appId, batchId) can
       // both pass the check. The claim loop serializes them: `abandonIf`
@@ -3729,13 +3943,11 @@ object GraftLog {
       // otherwise an unrelated commit moved the table and the claim
       // re-validates + retries one higher.
       tW("txnCommit")(commitStagedAppend(spark, table, "txnAppend",
-        "streamingAppend", s,
-        ddl, seen0,
-        () => revalidateBlindAppend(spark, table, aligned.schema,
+        "streamingAppend", s, ddl, st0,
+        st => revalidateBlindAppend(table, st, aligned.schema,
           "txnAppend", Seq.empty),
         txn = Some((appId, batchId)),
-        abandonIf = () =>
-          lastCommittedBatch(spark, table, appId).exists(_ >= batchId)
+        abandonIf = landed
       ) >= 0L)
     }
   }
@@ -3752,12 +3964,14 @@ object GraftLog {
   def txnAppendPartitioned(df: DataFrame, table: String, appId: String,
       batchId: Long, partCols: Seq[String]): Boolean = {
     val spark = df.sparkSession
-    if (lastCommittedBatch(spark, table, appId).exists(_ >= batchId)) false
+    val st0 = logState(spark, table)
+    def landed(st: Option[TableState]): Boolean =
+      st.exists(_.txns.get(appId).exists(_ >= batchId))
+    if (landed(st0)) false
     else {
-      val seen0 = latestVersion(spark, table)
-      val (aligned, ddl) = seen0 match {
-        case Some(_) =>
-          val (files, cur) = snapshot(spark, table)
+      val (aligned, ddl) = st0 match {
+        case Some(st) =>
+          val (files, cur) = (st.files, st.schema)
           val existing = layoutPartCols(files)
           require(files.isEmpty ||
             existing.map(_.toLowerCase) == partCols.map(_.toLowerCase),
@@ -3765,22 +3979,20 @@ object GraftLog {
               s"does not match the table's layout " +
               s"(${existing.mkString(",")})")
           val ok = enforceSchema(
-            fillDefaults(df, cur, columnDefaults(spark, table)), cur,
+            fillDefaults(df, cur, defaultsOf(st.props)), cur,
             "streaming append (partitioned)")
-          enforceChecks(ok, checkConstraints(spark, table),
-            "streaming append (partitioned)")
+          enforceChecks(ok, st.checks, "streaming append (partitioned)")
           (ok, cur.toDDL)
         case None => (df, df.schema.toDDL)
       }
-      val s = stagePartitionedWithStats(
-        optimizedWrite(aligned, table, partCols), table, partCols)
+      val s = stagePartitionedWithStats(optimizedWrite(aligned, partCols,
+        st0.fold(Map.empty[String, String])(_.props)), table, partCols)
       commitStagedAppend(spark, table, "txnAppendPartitioned",
-        "streamingAppend", s, ddl, seen0,
-        () => revalidateBlindAppend(spark, table, aligned.schema,
+        "streamingAppend", s, ddl, st0,
+        st => revalidateBlindAppend(table, st, aligned.schema,
           "txnAppendPartitioned", partCols),
         txn = Some((appId, batchId)),
-        abandonIf = () =>
-          lastCommittedBatch(spark, table, appId).exists(_ >= batchId)
+        abandonIf = landed
       ) >= 0L
     }
   }
@@ -3845,12 +4057,12 @@ object GraftLog {
     * reads are schema-directed BY NAME, so column order is immaterial
     * and the staged files stay valid. Returns the ddl to re-assert;
     * throws the MetadataChangedException analog otherwise. */
-  private def revalidateBlindAppend(spark: SparkSession, table: String,
+  private def revalidateBlindAppend(table: String, st: Option[TableState],
       batch: StructType, op: String, partCols: Seq[String]): String =
-    latestVersion(spark, table) match {
+    st match {
       case None => batch.toDDL // still an empty log: the batch sets it
-      case Some(_) =>
-        val (files, cur) = snapshot(spark, table)
+      case Some(s) =>
+        val (files, cur) = (s.files, s.schema)
         val layout = layoutPartCols(files)
         // hidden-only layouts are mutually compatible by construction
         // (partition-spec evolution: every hidden dir prunes per FILE,
@@ -3877,63 +4089,51 @@ object GraftLog {
     }
 
   /** Claim loop shared by the blind-append writers: files are staged
-    * exactly once (by the caller); each claim re-validates iff the
-    * table moved since `seen0` (see the OCC note above). `reval`
-    * recomputes the ddl to assert against the fresh state; `abandonIf`
-    * (the txn-ledger duplicate check) short-circuits to -1 — it runs on
-    * every table movement, closing the window where a concurrent
-    * delivery of the same batch lands WITHOUT a version collision. */
+    * exactly once (by the caller), and each claim takes the version
+    * after the state `st0` the operation read, so any commit that
+    * landed since collides. After a lost race the loop re-reads the
+    * state: `abandonIf` (the txn-ledger duplicate check) short-circuits
+    * to -1, and `reval` recomputes the ddl to assert against it (see
+    * the OCC note above). */
   private def commitStagedAppend(spark: SparkSession, table: String,
       op: String, commitOp: String, s: Staged, ddl0: String,
-      seen0: Option[Long], reval: () => String,
+      st0: Option[TableState], reval: Option[TableState] => String,
       txn: Option[(String, Long)] = None,
-      abandonIf: () => Boolean = () => false,
+      abandonIf: Option[TableState] => Boolean = _ => false,
       generated: Map[String, String] = Map.empty,
       copied: Seq[String] = Seq.empty): Long = {
-    val v = commitStagedAppendLoop(spark, table, op, commitOp, s, ddl0,
-      seen0, reval, txn, abandonIf, generated, copied)
-    // post-commit hook: the landed append may have tipped a partition
-    // over the small-file threshold — one best-effort extra commit
-    // ([[maybeAutoCompact]] gates on the table property, one small-JSON
-    // read when disabled; its own commit goes through writeCommit
-    // directly, so it can never re-trigger itself)
-    if (v >= 0) maybeAutoCompact(spark, table)
-    v
-  }
-
-  private def commitStagedAppendLoop(spark: SparkSession, table: String,
-      op: String, commitOp: String, s: Staged, ddl0: String,
-      seen0: Option[Long], reval: () => String,
-      txn: Option[(String, Long)],
-      abandonIf: () => Boolean,
-      generated: Map[String, String],
-      copied: Seq[String]): Long = {
     var ddl = ddl0
-    var seen = seen0
+    var st = st0
     var attempts = 0
     while (true) {
-      val v = nextVersion(spark, table)
-      val latest = if (v == 0) None else Some(v - 1)
-      if (latest != seen) {
-        if (abandonIf()) return -1L
-        ddl = reval()
-        seen = latest
-      }
-      try {
-        // row tracking: allocate bases inside the claim loop so a lost
-        // race re-reads the advanced high water before retrying
-        val (st2, pr2) = allocRowIds(spark, table, s)
-        writeCommit(spark, table, Commit(v, commitOp, s.files, Seq.empty,
-          ddl, System.currentTimeMillis(), txn, stats = st2,
+      val v = st.fold(0L)(_.version + 1)
+      // row tracking: allocate bases inside the claim loop so a lost
+      // race re-reads the advanced high water before retrying
+      val (st2, pr2) = allocRowIds(st, s)
+      val won =
+        try Some(writeCommit(spark, table, Commit(v, commitOp, s.files,
+          Seq.empty, ddl, System.currentTimeMillis(), txn, stats = st2,
           sizes = s.sizes, generated = generated, props = pr2,
-          copied = copied))
-        return v
-      } catch {
-        case _: CommitConflictException =>
-          if (abandonIf()) return -1L
+          copied = copied), st))
+        catch { case _: CommitConflictException => None }
+      won match {
+        case Some(after) =>
+          // post-commit hook: the landed append may have tipped a
+          // partition over the small-file threshold — one best-effort
+          // extra commit ([[maybeAutoCompact]] gates on the table
+          // property of the state this commit produced; its own commit
+          // goes through writeCommit directly, so it can never
+          // re-trigger itself)
+          maybeAutoCompact(spark, table,
+            if (after.isDefined) after else logState(spark, table))
+          return v
+        case None =>
+          st = logState(spark, table)
+          if (abandonIf(st)) return -1L
           backoffOrGiveUp(attempts, table, op)
+          ddl = reval(st)
+          attempts += 1
       }
-      attempts += 1
     }
     throw new IllegalStateException("unreachable")
   }
@@ -3955,25 +4155,23 @@ object GraftLog {
       // read and the claim then always collides — claiming "latest + 1
       // at claim time" instead would let a stale remove set land
       // cleanly past it.
-      val vRead = latestVersion(spark, table)
-      val prior =
-        if (vRead.isEmpty) Seq.empty[String]
-        else snapshot(spark, table)._1
-      val v = vRead.map(_ + 1).getOrElse(0L)
+      val st = logState(spark, table)
+      val prior = st.fold(Seq.empty[String])(_.files)
+      val v = st.fold(0L)(_.version + 1)
       try {
-        val (st2, pr2) = allocRowIds(spark, table, s)
+        val (st2, pr2) = allocRowIds(st, s)
         // extraProps (e.g. a feature declaration) must merge over the
         // FULL current map — a partial props commit would clobber the
         // rest under the "props = latest commit's props" invariant
         val pr =
           if (extraProps.isEmpty) pr2
           else (if (pr2.nonEmpty) pr2
-                else if (vRead.isEmpty) Map.empty[String, String]
-                else properties(spark, table)) ++ extraProps
+                else st.fold(Map.empty[String, String])(_.props)) ++
+            extraProps
         writeCommit(spark, table, Commit(v, "overwrite", s.files, prior,
           ddl, System.currentTimeMillis(), stats = st2,
           sizes = s.sizes, blooms = blooms, generated = generated,
-          props = pr))
+          props = pr), st)
         return v
       } catch {
         case _: CommitConflictException =>
@@ -4411,10 +4609,11 @@ object GraftLog {
     val v = vRead.map(_ + 1).getOrElse(0L)
     // bases for inserted rows (NULL physical id → base + row_index);
     // no-op when tracking is off
-    val (st2c, pr2c) = allocRowIds(spark, table, s)
+    val pre = logState(spark, table)
+    val (st2c, pr2c) = allocRowIds(pre, s)
     writeCommit(spark, table, Commit(v, "merge", s.files, touched,
       schema.toDDL, System.currentTimeMillis(), stats = st2c,
-      sizes = s.sizes, props = pr2c))
+      sizes = s.sizes, props = pr2c), pre)
     v
   }
 
@@ -4624,10 +4823,11 @@ object GraftLog {
     // bases for the staged files: inserted rows (NULL physical id)
     // resolve to base + row_index; materialized ids win by coalesce.
     // No-op map when tracking is off (plain props inheritance).
-    val (st2, pr2) = allocRowIds(spark, table, s)
+    val pre = logState(spark, table)
+    val (st2, pr2) = allocRowIds(pre, s)
     writeCommit(spark, table, Commit(v, "merge", s.files, touched,
       schema.toDDL, System.currentTimeMillis(), txn, stats = st2,
-      sizes = s.sizes, props = pr2))
+      sizes = s.sizes, props = pr2), pre)
     v
   }
 
@@ -5321,7 +5521,12 @@ object GraftLog {
           s"$table failed after v${c.version}: ${e.getMessage}") }
 
   def maybeAutoCompact(spark: SparkSession, table: String)
-      : Option[Long] = {
+      : Option[Long] = maybeAutoCompact(spark, table, logState(spark, table))
+
+  /** [[maybeAutoCompact]] on the state `st` the caller's commit left
+    * (read lazily, inside the best-effort guard). */
+  private def maybeAutoCompact(spark: SparkSession, table: String,
+      st: => Option[TableState]): Option[Long] = {
     // BEST-EFFORT end to end: the caller's data commit is already
     // durable when this hook runs, so ANY failure here (conflict,
     // transient FS error, a malformed property value) must not
@@ -5330,8 +5535,8 @@ object GraftLog {
     // by policy (maintenance never contends with ingest); everything
     // else abandons with a warning. Same contract as
     // maybeUpdateManifest.
-    try {
-      val props = properties(spark, table)
+    try st.flatMap { s =>
+      val props = s.props
       if (!props.get("graft.autoCompact")
           .exists(_.equalsIgnoreCase("true"))) None
       else {
@@ -5339,7 +5544,7 @@ object GraftLog {
           .map(_.trim.toInt).getOrElse(16)
         val maxSmall = props.get("graft.autoCompact.maxFileSize")
           .map(_.trim.toLong).getOrElse(128L << 20)
-        autoCompactOnce(spark, table, minN, maxSmall)
+        autoCompactOnce(spark, table, s, minN, maxSmall)
       }
     } catch {
       case _: CommitConflictException => None // abandon, never retry
@@ -5351,16 +5556,12 @@ object GraftLog {
   }
 
   private def autoCompactOnce(spark: SparkSession, table: String,
-      minN: Int, maxSmall: Long): Option[Long] = {
-    val vRead = latestVersion(spark, table)
-    if (vRead.isEmpty) return None
-    if (deletionVectors(spark, table).nonEmpty) return None
-    val (files, schema) = snapshot(spark, table)
+      st: TableState, minN: Int, maxSmall: Long): Option[Long] = {
+    if (st.dvs.nonEmpty) return None
+    val (files, schema, sizes) = (st.files, st.schema, st.sizes)
     val partCols = layoutPartCols(files)
-    val cmap = columnMapping(spark, table)
-    val tracked = rowTrackingEnabled(spark, table)
-    if (tracked && (partCols.nonEmpty || cmap.nonEmpty)) return None
-    val sizes = fileSizes(spark, table)
+    val tracked = tracksRows(st.props)
+    if (tracked && (partCols.nonEmpty || st.colMap.nonEmpty)) return None
     val smalls = files.filter(f => sizes.get(f).exists(_ < maxSmall))
     def partOf(f: String): Seq[String] =
       f.split('/').dropRight(1).filter(_.contains('=')).toSeq
@@ -5387,10 +5588,10 @@ object GraftLog {
         stagePartitionedWithStats(
           base.repartition(partCols.map(col): _*), table, partCols)
       }
-    val v = vRead.get + 1
+    val v = st.version + 1
     writeCommit(spark, table, Commit(v, "autocompact", s.files, selected,
       schema.toDDL, System.currentTimeMillis(), stats = s.stats,
-      sizes = s.sizes))
+      sizes = s.sizes), Some(st))
     Some(v)
   }
 
@@ -5462,7 +5663,9 @@ object GraftLog {
       s"$src is not a GraftLog table (no $LogDirName)")
     require(versions(spark, dst).isEmpty,
       s"clone target $dst is already a GraftLog table")
-    val (live, schema, sizes, dvs, blooms, cmap) = replay(spark, src, asOf)
+    val st = stateAt(spark, src, asOf, withStats = true)
+    val (live, schema, sizes, dvs, blooms, cmap) =
+      (st.liveMap, st.schema, st.sizes, st.dvs, st.blooms, st.colMap)
     def abs(f: String) = absPath(src, f) // chained clones pass through
     writeCommit(spark, dst, Commit(0L, "clone",
       live.keys.toSeq.map(abs), Seq.empty, schema.toDDL,
@@ -5502,7 +5705,9 @@ object GraftLog {
       s"$src is not a GraftLog table (no $LogDirName)")
     require(versions(spark, dst).isEmpty,
       s"clone target $dst is already a GraftLog table")
-    val (live, schema, sizes, dvs, blooms, cmap) = replay(spark, src, asOf)
+    val st = stateAt(spark, src, asOf, withStats = true)
+    val (live, schema, sizes, dvs, blooms, cmap) =
+      (st.liveMap, st.schema, st.sizes, st.dvs, st.blooms, st.colMap)
     // dest rel path = the source's `_data/`-suffix (identity for plain
     // tables; for a shallow-clone source the absolute ref's suffix)
     def destRel(f: String): String =
@@ -5782,8 +5987,8 @@ object GraftLog {
   /** Live files already inside some [[clusterIncremental]] zcube. One
     * metadata replay (checkpoint-bounded), zero commit re-reads. */
   def clusteredFiles(spark: SparkSession, table: String): Set[String] = {
-    val (live, _, _, _, _, _) = replay(spark, table, None)
-    live.collect { case (f, st) if st.contains(ZcubeKey) => f }.toSet
+    ofState(spark, table, None, withStats = true, Set.empty[String])(
+      _.live.collect { case (f, st) if st.contains(ZcubeKey) => f }.toSet)
   }
 
   /** INCREMENTAL clustering — the Delta liquid-clustering analog
@@ -6241,10 +6446,8 @@ object GraftLog {
   /** Named refs in force (Iceberg tag analog): name → version. The
     * writeCommit inheritance invariant makes this the latest commit's
     * `tags` field — one small-JSON read, no replay. */
-  def tags(spark: SparkSession, table: String): Map[String, Long] = {
-    val all = versions(spark, table)
-    if (all.isEmpty) Map.empty else readCommit(spark, table, all.last).tags
-  }
+  def tags(spark: SparkSession, table: String): Map[String, Long] =
+    commitAt(spark, table, None).fold(Map.empty[String, Long])(_.tags)
 
   /** Create (or re-point, only idempotently) a tag naming `version` (or
     * the latest when None) — Iceberg's `ALTER TABLE … CREATE TAG`. A
@@ -6412,7 +6615,9 @@ object GraftLog {
     * is (stats spread), what a vacuum would reclaim. */
   def filesMetadata(spark: SparkSession, table: String,
       asOf: Option[Long] = None): DataFrame = {
-    val (live, _, sizes, _, _, _) = replay(spark, table, asOf)
+    val (live, sizes) = ofState(spark, table, asOf, withStats = true,
+      (Seq.empty[(String, Map[String, (Double, Double)])],
+        Map.empty[String, Long]))(st => (st.live, st.sizes))
     import org.apache.spark.sql.types.{LongType, StringType, StructField}
     val schema = StructType(Seq(
       StructField("path", StringType),

@@ -1146,8 +1146,13 @@ class GraftLogSpec extends AnyFunSuite {
       .find(_.getName.endsWith(".checkpoint.parquet"))
     assert(pq.exists(_.isDirectory), "columnar checkpoint dir missing")
     assert(pq.get.listFiles().count(_.getName.endsWith(".parquet")) >= 1)
-    // state decoded THROUGH the parquet checkpoint
+    // state decoded THROUGH the parquet checkpoint: forget the state
+    // and checkpoint this process memoized while writing it
+    GraftLog.resetStateMemo()
+    val decodes0 = graft.sources.LogCounters.checkpointDecodes.get
     val rowsPq = GraftLog.read(spark, t).collect().map(_.toSeq).toSet
+    assert(graft.sources.LogCounters.checkpointDecodes.get > decodes0,
+      "the read must decode the columnar checkpoint")
     val statsPq = GraftLog.fileStats(spark, t)
     val sizesPq = GraftLog.fileSizes(spark, t)
     assert(statsPq.nonEmpty && sizesPq.nonEmpty)
@@ -1159,6 +1164,7 @@ class GraftLogSpec extends AnyFunSuite {
       f.delete(); ()
     }
     rmrf(pq.get)
+    GraftLog.resetStateMemo()
     assert(GraftLog.read(spark, t).collect().map(_.toSeq).toSet == rowsPq)
     assert(GraftLog.fileStats(spark, t) == statsPq)
     assert(GraftLog.fileSizes(spark, t) == sizesPq)

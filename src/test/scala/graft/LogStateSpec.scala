@@ -1,0 +1,180 @@
+package graft
+
+import java.nio.file.{Files, Paths}
+
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, EqualTo, Literal}
+import org.apache.spark.sql.types.LongType
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.sources.{GraftFileIndex, GraftLog, LogCounters}
+
+/** The memoized table state behind the log accessors: what one
+  * operation reads from `_graft_log` (pinned by the log counters), and
+  * that the memo never serves a state the files on disk no longer
+  * back. */
+class LogStateSpec extends AnyFunSuite {
+  lazy val spark = TestSpark.spark
+  import spark.implicits._
+
+  private def tmp(): String =
+    graft.sources.Staging.tempDir("graft_state_spec_") + "/t"
+
+  private def df(ids: Range, tag: String) =
+    ids.map(i => (i.toLong, tag)).toDF("id", "tag").coalesce(1)
+
+  /** Log-counter deltas over `f`. */
+  private def counted[A](f: => A): (A, Map[String, Long]) = {
+    val before = LogCounters.read()
+    val r = f
+    val after = LogCounters.read()
+    (r, after.map { case (k, v) => k -> (v - before(k)) })
+  }
+
+  /** A table of `n` versions: one overwrite, then appends of 5 rows. */
+  private def table(n: Int): String = {
+    val t = tmp()
+    GraftLog.overwrite(df(0 until 5, "v0"), t)
+    (1 until n).foreach(i => GraftLog.append(df(i * 5 until i * 5 + 5,
+      s"v$i"), t))
+    t
+  }
+
+  private def rmrf(f: java.io.File): Unit = {
+    if (f.isDirectory) f.listFiles().foreach(rmrf)
+    f.delete(); ()
+  }
+
+  test("a steady append lists the log once and reads no commit file") {
+    val t = table(13) // v0..v12, the auto-checkpoint at v10 among them
+    assert(GraftLog.checkpointVersions(spark, t) == Seq(10L))
+    val (v, c) = counted(GraftLog.append(df(100 until 105, "s"), t))
+    assert(v == 13L)
+    assert(c("listings") == 1, c)
+    assert(c("commitReads") == 0, c)
+    assert(c("checkpointDecodes") == 0, c)
+    assert(c("memoHits") == 1, c)
+    assert(GraftLog.read(spark, t).count() == 70)
+  }
+
+  test("a checkpoint commit writes from the folded state") {
+    val t = table(10) // v0..v9
+    val (_, c) = counted(GraftLog.append(df(100 until 105, "ck"), t))
+    assert(GraftLog.checkpointVersions(spark, t) == Seq(10L))
+    assert(c("listings") == 1 && c("commitReads") == 0 &&
+      c("checkpointDecodes") == 0, c)
+    // the checkpoint this process wrote is never decoded in it, and
+    // the next commit and read start from the memo, not the checkpoint
+    val (n, r) = counted {
+      GraftLog.append(df(105 until 110, "after"), t)
+      GraftLog.read(spark, t).count()
+    }
+    assert(n == 60)
+    assert(r("commitReads") == 0 && r("checkpointDecodes") == 0, r)
+  }
+
+  test("the columnar checkpoint keeps the case-class row schema") {
+    assert(GraftLog.CkptSchema ==
+      org.apache.spark.sql.Encoders.product[GraftLog.CkptRow].schema)
+    val t = table(10)
+    GraftLog.append(df(100 until 105, "ck"), t) // v10 checkpoints
+    val pq = spark.read.parquet(f"$t/_graft_log/${10}%020d.checkpoint.parquet")
+    assert(pq.columns.toSeq == GraftLog.CkptSchema.fieldNames.toSeq)
+    assert(pq.inputFiles.length == 1)
+    assert(pq.filter($"kind" === "add").count() == 11)
+  }
+
+  test("building a GraftFileIndex lists the log once") {
+    val t = table(12)
+    val probe = EqualTo(AttributeReference("id", LongType)(), Literal(7L))
+    val (kept, c) = counted {
+      val idx = new GraftFileIndex(spark, t)
+      idx.countAfterPruning(Seq(probe))
+    }
+    assert(kept == 1, "stats pruning keeps the one file holding id 7")
+    assert(c("listings") == 1 && c("commitReads") == 0 &&
+      c("checkpointDecodes") == 0, c)
+  }
+
+  test("a table dropped and recreated at the same path is re-read") {
+    val t = table(3)
+    assert(GraftLog.read(spark, t).count() == 15) // memo at v2
+    // the recreated table never passes through this process's log API
+    // at `t`: it is built elsewhere and moved into place
+    val other = table(6)
+    GraftLog.append(df(900 until 903, "other"), other)
+    rmrf(new java.io.File(t))
+    Files.move(Paths.get(other), Paths.get(t))
+    assert(GraftLog.versions(spark, t) == (0L to 6L))
+    val ids = GraftLog.read(spark, t).select("id").as[Long].collect().toSet
+    assert(ids == ((0L until 30L) ++ (900L until 903L)).toSet)
+    assert(GraftLog.append(df(950 until 952, "next"), t) == 7L)
+    assert(GraftLog.read(spark, t).count() == 35)
+  }
+
+  test("a hand-written commit is seen by the next read and write") {
+    val t = table(4)
+    assert(GraftLog.properties(spark, t).isEmpty) // memo at v3
+    val schemaDdl = GraftLog.snapshot(spark, t)._2.toDDL
+      .replace("\"", "\\\"")
+    Files.writeString(Paths.get(f"$t/_graft_log/${4}%020d.json"),
+      s"""{"version":4,"operation":"set_properties",""" +
+        s""""add":[],"remove":[],"schemaDdl":"$schemaDdl",""" +
+        s""""timestampMs":${System.currentTimeMillis()},""" +
+        s""""props":{"graft.note":"by hand"}}""")
+    assert(GraftLog.properties(spark, t) == Map("graft.note" -> "by hand"))
+    assert(GraftLog.append(df(100 until 102, "w"), t) == 5L)
+    assert(GraftLog.properties(spark, t) == Map("graft.note" -> "by hand"),
+      "the append inherits the hand-written commit's properties")
+    assert(GraftLog.read(spark, t).count() == 22)
+  }
+
+  test("vacuum below the memo version and time travel past it") {
+    val t = table(6)
+    assert(GraftLog.read(spark, t).count() == 30) // memo at v5
+    GraftLog.vacuum(spark, t, retainVersions = 2)
+    assert(GraftLog.versions(spark, t) == Seq(4L, 5L))
+    assert(GraftLog.read(spark, t).count() == 30)
+    intercept[IllegalArgumentException] { GraftLog.readVersion(spark, t, 2L) }
+    assert(GraftLog.readVersion(spark, t, 4L).count() == 25)
+    assert(GraftLog.append(df(100 until 105, "x"), t) == 6L)
+    assert(GraftLog.read(spark, t).count() == 35)
+
+    val u = table(5)
+    assert(GraftLog.read(spark, u).count() == 25) // memo at v4
+    assert(GraftLog.readVersion(spark, u, 1L).count() == 10)
+    assert(GraftLog.snapshot(spark, u, Some(2L))._1.size == 3)
+    // the older reads left the memo at the latest version
+    val (n, c) = counted(GraftLog.read(spark, u).count())
+    assert(n == 25 && c("memoHits") == 1 && c("commitReads") == 0, c)
+  }
+
+  test("a lost OCC race still conflicts, and racing writers all land") {
+    val t = table(2)
+    // a claim on top of a state another writer has since moved past
+    val st = GraftLog.logState(spark, t).get
+    GraftLog.append(df(100 until 105, "winner"), t)
+    intercept[GraftLog.CommitConflictException] {
+      GraftLog.writeCommit(spark, t, GraftLog.Commit(st.version + 1,
+        "append", Seq.empty, Seq.empty, st.schema.toDDL, 0L), Some(st))
+    }
+    // blind appends racing a property change: every writer lands once,
+    // and every commit after the change still carries it
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(5)
+    try {
+      val start = new java.util.concurrent.CountDownLatch(1)
+      val jobs = (0 until 4).map(i => () => {
+        GraftLog.append(df(200 + 10 * i until 205 + 10 * i, s"r$i"), t)
+        ()
+      }) :+ (() => {
+        GraftLog.setProperties(spark, t, Map("graft.note" -> "raced")); ()
+      })
+      val fs = jobs.map(j => pool.submit(new java.util.concurrent
+        .Callable[Unit] { def call(): Unit = { start.await(); j() } }))
+      start.countDown()
+      fs.foreach(_.get(180, java.util.concurrent.TimeUnit.SECONDS))
+    } finally pool.shutdown()
+    assert(GraftLog.versions(spark, t) == (0L to 7L))
+    assert(GraftLog.read(spark, t).count() == 10 + 5 + 20)
+    assert(GraftLog.properties(spark, t).get("graft.note").contains("raced"))
+  }
+}
