@@ -15,7 +15,7 @@ import graft.sources.GraftLog
   * and each batch probes + advances it in O(batch):
   *
   *   - **State rows** `(bk, band, doc_id, sig)` hive-partitioned by
-  *     `bp = pmod(xxhash64(bk), 64)`: `bk` is the raw band slice
+  *     `bp = pmod(xxhash64(bk), B)`: `bk` is the raw band slice
   *     rendered as text (the e3 discipline — reproducible verbatim in
   *     the DuckDB oracle), `sig` is the doc's full MinHash signature
   *     carried ON the band row, so verification reads ONLY the pruned
@@ -24,7 +24,10 @@ import graft.sources.GraftLog
   *     (64-perm sig × 16 bands ≈ 8 KB/doc) buys per-batch IO bounded
   *     by the CANDIDATE set; the alternative (one sig row per doc in a
   *     flat side table) pays an O(corpus) scan per batch — e18's exact
-  *     mistake, transposed.
+  *     mistake, transposed. B, the state's bucket count, is a power
+  *     of two in [1, 64] sized once from the count of the first band
+  *     rows (see [[bucketsFor]]) and recorded in the state's first
+  *     commit; a state created before B was recorded keeps 64.
   *   - **Bloom sidecar over band keys** (the e19 mechanism, key =
   *     `bk`): per-batch membership gating is O(bloom bytes) + O(batch)
   *     hashing, zero state-file reads. Steady-state advance folds only
@@ -44,14 +47,6 @@ import graft.sources.GraftLog
   * idempotent ledger-stamped commit per batch — replay is a no-op. */
 object NearDupState {
 
-  /** Env-gated sub-step timer (GRAFT_E23_T — the shared profiling
-    * switch): prints phase seconds for the state/stream queries. */
-  private def tN[T](l: String)(f: => T): T =
-    if (sys.env.contains("GRAFT_E23_T")) {
-      val t0 = System.nanoTime(); val r = f
-      println(f"  [nds] $l: ${(System.nanoTime() - t0) / 1e9}%.2f s"); r
-    } else f
-
   private val AppId = "graft-neardup-state"
   private val NumPerm = 64
   private val Bands = 16
@@ -65,9 +60,17 @@ object NearDupState {
   private def fsOf(spark: SparkSession, state: String): FileSystem =
     new HPath(state).getFileSystem(spark.sessionState.newHadoopConf())
 
+  /** Bucket count of a state created before [[BucketsProp]] existed,
+    * and the most any state gets. */
+  private val MaxBuckets = 64
+
+  /** Bytes of one band row for sizing B: the 64-long signature plus
+    * the band key text, doc id and band. */
+  private val BandRowBytes = NumPerm * 8 + 64L
+
   /** `doc_id`, `sig` (full MinHash), exploded to one row per band with
-    * the reproducible text band key and its hash-partition column. */
-  private def banded(docs: DataFrame, n: Int): DataFrame = {
+    * the reproducible text band key: `(bk, band, doc_id, sig)`. */
+  private def bandRows(docs: DataFrame, n: Int): DataFrame = {
     val base = docs
       .select(col("doc_id"), Dedup.tokens(col("text")).as("toks"))
       .filter(size(col("toks")) >= n)
@@ -82,14 +85,26 @@ object NearDupState {
               .as("bk"))
         }: _*)).as("x"))
       .select(col("x.bk").as("bk"), col("x.band").as("band"),
-        col("doc_id"), col("sig"),
-        pmod(xxhash64(col("x.bk")), lit(64L)).cast("int").as("bp"))
+        col("doc_id"), col("sig"))
   }
 
-  /** The banding projection, exposed for specs that simulate an
+  /** `rows` (carrying `bk`) plus the hash-partition column
+    * `bp = pmod(xxhash64(bk), buckets)`. Every writer and prober of a
+    * state derives `bp` here, from the state's one bucket count. */
+  private def withBucket(rows: DataFrame, buckets: Int): DataFrame =
+    rows.withColumn("bp",
+      pmod(xxhash64(col("bk")), lit(buckets.toLong)).cast("int"))
+
+  private def banded(docs: DataFrame, n: Int, buckets: Int): DataFrame =
+    withBucket(bandRows(docs, n), buckets)
+
+  /** The banding projection at the bucket count of `state` (64 when no
+    * state exists there yet), exposed for specs that simulate an
     * out-of-band writer landing state rows directly. */
-  private[graft] def bandedForTest(docs: DataFrame): DataFrame =
-    banded(docs, 3)
+  private[graft] def bandedForTest(docs: DataFrame, state: String)
+      : DataFrame =
+    banded(docs, 3,
+      bucketsOf(docs.sparkSession, state).getOrElse(MaxBuckets))
 
   /** Table property recording the shingle width the state's band keys
     * were built with: [[erase]] derives its partition prune by
@@ -99,37 +114,83 @@ object NearDupState {
     * of truth (the [[DedupState]] prefixLen discipline). */
   private[graft] val ShingleWidthProp = "graft.neardup.shingleWidth"
 
-  /** The persisted shingle width, falling back to `dflt` for states
-    * created before the property existed. */
-  private def shingleWidthOf(spark: SparkSession, state: String,
-      dflt: Int): Int =
-    scala.util.Try(GraftLog.properties(spark, state)
-      .get(ShingleWidthProp).map(_.toInt)).toOption.flatten
-      .getOrElse(dflt)
+  /** Table property recording the state's bucket count B, the modulus
+    * of `bp`. Fixed at creation: a prune or probe computed with another
+    * B would read the wrong partitions. */
+  private[graft] val BucketsProp = "graft.neardup.buckets"
+
+  /** Integer property `key` of `state`: None only when absent; any
+    * other value that fails `valid` throws, naming both. */
+  private def intProp(props: Map[String, String], key: String,
+      state: String)(valid: Int => Boolean): Option[Int] =
+    props.get(key).map { s =>
+      s.trim.toIntOption.filter(valid).getOrElse(
+        throw new IllegalStateException(
+          s"near-dup state $state: invalid table property $key = '$s'"))
+    }
+
+  /** The persisted shingle width, None for a state created before the
+    * property existed. */
+  private def shingleWidthIn(props: Map[String, String], state: String)
+      : Option[Int] =
+    intProp(props, ShingleWidthProp, state)(_ > 0)
+
+  /** The persisted bucket count; 64 for a state created before the
+    * property existed. */
+  private def bucketsIn(props: Map[String, String], state: String): Int =
+    intProp(props, BucketsProp, state)(b =>
+      b >= 1 && b <= MaxBuckets && Integer.bitCount(b) == 1)
+      .getOrElse(MaxBuckets)
+
+  /** B of the state at `state`; None when no state exists there. */
+  private[graft] def bucketsOf(spark: SparkSession, state: String)
+      : Option[Int] =
+    GraftLog.logState(spark, state).map(st => bucketsIn(st.props, state))
+
+  /** B for a new state of `rows` band rows: their size at
+    * [[BandRowBytes]] each over
+    * `spark.sql.adaptive.advisoryPartitionSizeInBytes`, rounded up to a
+    * power of two in [1, 64]. A state that outgrows its B keeps it (no
+    * re-bucketing). */
+  private[graft] def bucketsFor(spark: SparkSession, rows: Long): Int = {
+    val advisory = spark.sessionState.conf.getConf(
+      org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
+    val want = ((rows * BandRowBytes + advisory - 1) / advisory)
+      .min(MaxBuckets.toLong).toInt
+    Iterator.iterate(1)(_ * 2).dropWhile(_ < want).next()
+  }
+
+  /** Properties a state carries from its first commit: the band layout
+    * ([[erase]] prunes by it) and write-path compaction, which bounds
+    * the per-dir file count of this rolling-ingest table (see
+    * [[DedupState.init]]; compaction commits diff empty in CDF, so the
+    * sidecar machinery is unaffected). */
+  private def createProps(width: Int, buckets: Int): Map[String, String] =
+    Map("graft.autoCompact" -> "true",
+      "graft.autoCompact.minNumFiles" -> "8",
+      ShingleWidthProp -> width.toString,
+      BucketsProp -> buckets.toString)
 
   /** Seed the state from a corpus frame (`doc_id`, `text`) and persist
     * the v0 band-key Bloom sized 4x for growth headroom. */
   def init(spark: SparkSession, docs: DataFrame, state: String,
-      n: Int = 3, fpp: Double = 0.01): Unit = tN("init") {
+      n: Int = 3, fpp: Double = 0.01): Unit = {
+    val rows = bandRows(docs, n)
+    // sized from the doc count, an upper bound on the docs that band
+    // (texts shorter than n shingles drop out)
+    val buckets = bucketsFor(spark, docs.count() * Bands)
     // co-locate each bp dir's rows in one task before the hive write —
     // without this every task slivers a file into every dir (the t40
-    // lesson, applied at the call site because the property cannot
-    // predate the table's first commit)
-    GraftLog.overwritePartitioned(
-      banded(docs, n).repartition(col("bp")), state, Seq("bp"))
-    // rolling-ingest table: bound the per-dir file count (see
-    // [[DedupState.init]] — compaction commits diff empty in CDF, so
-    // the sidecar machinery is unaffected)
-    GraftLog.setProperties(spark, state, Map(
-      "graft.autoCompact" -> "true",
-      "graft.autoCompact.minNumFiles" -> "8",
-      ShingleWidthProp -> n.toString)): Unit
+    // lesson)
+    val v = GraftLog.overwritePartitioned(
+      withBucket(rows, buckets).repartition(col("bp")), state, Seq("bp"),
+      props = createProps(n, buckets))
     val keys = GraftLog.read(spark, state).select("bk")
     // row count from ledger stats (one band key per row, no DVs): one
     // key scan for the bloom, zero count scans
     val cnt = GraftLog.metadataRowCount(spark, state)._1
     val expected = math.max(cnt * 4, 1024L)
-    saveSidecar(spark, state, GraftLog.latestVersion(spark, state).get,
+    saveSidecar(spark, state, v,
       keys.stat.bloomFilter("bk", expected, fpp), expected, fpp, cnt)
   }
 
@@ -145,9 +206,11 @@ object NearDupState {
     SidecarIO.pruneSuperseded(f, sidecarDir(state), "band-bloom-v")
   }
 
+  /** The band-key Bloom at `version`, with the state's bucket count
+    * `buckets` read from the same log state. */
   private[graft] final case class Sidecar(bloom: BloomFilter,
       version: Long, expected: Long, fpp: Double, inserted: Long,
-      catchupVersions: Int, rebuilt: Boolean)
+      catchupVersions: Int, rebuilt: Boolean, buckets: Int)
 
   /** Newest sidecar at-or-below the table version, reconciled: a
     * sidecar left behind the table (external writer, crashed save)
@@ -158,8 +221,9 @@ object NearDupState {
     * key-only rebuild at 4x headroom. */
   private[graft] def loadSidecar(spark: SparkSession, state: String)
       : Sidecar = {
-    val latest = GraftLog.latestVersion(spark, state).getOrElse(
+    val st = GraftLog.logState(spark, state).getOrElse(
       throw new IllegalStateException(s"$state is not a graft table"))
+    val (latest, buckets) = (st.version, bucketsIn(st.props, state))
     val f = fsOf(spark, state)
     val dir = new HPath(sidecarDir(state))
     val found: Option[Long] =
@@ -195,7 +259,7 @@ object NearDupState {
             .select("bk").distinct()
           val nNew = catchup.count()
           if (inserted + nNew > expected)
-            return rebuild(spark, state, latest)
+            return rebuild(spark, state, latest, buckets)
           if (nNew > 0)
             bloom.mergeInPlace(
               catchup.stat.bloomFilter("bk", expected, fpp))
@@ -204,22 +268,23 @@ object NearDupState {
             inserted)
         }
         Sidecar(bloom, latest, expected, fpp, inserted,
-          missing, rebuilt = false)
-      case None => rebuild(spark, state, latest)
+          missing, rebuilt = false, buckets)
+      case None => rebuild(spark, state, latest, buckets)
     }
   }
 
   /** One key-only corpus scan, 4x headroom — the bootstrap/overflow
     * path, never the steady state. */
-  private def rebuild(spark: SparkSession, state: String, latest: Long)
-      : Sidecar = {
+  private def rebuild(spark: SparkSession, state: String, latest: Long,
+      buckets: Int): Sidecar = {
     val keys = GraftLog.read(spark, state).select("bk")
     // ledger-stats row count: the re-mint pays one key scan, not two
     val cnt = GraftLog.metadataRowCount(spark, state)._1
     val expected = math.max(cnt * 4, 1024L)
     val bloom = keys.stat.bloomFilter("bk", expected, 0.01)
     saveSidecar(spark, state, latest, bloom, expected, 0.01, cnt)
-    Sidecar(bloom, latest, expected, 0.01, cnt, 0, rebuilt = true)
+    Sidecar(bloom, latest, expected, 0.01, cnt, 0, rebuilt = true,
+      buckets)
   }
 
   private def readAll(f: FileSystem, p: HPath): Array[Byte] = {
@@ -243,7 +308,8 @@ object NearDupState {
     * batch frame against the persisted band index: one row per
     * state×batch band-key match, `(bk, doc_a, sig_a, doc_b, sig_b)`
     * with the `_a` side from STATE. `b` needs columns
-    * (bk, bp, doc_id, sig). The pair set is IDENTICAL to the unpruned,
+    * (bk, doc_id, sig); its `bp` is derived here at the state's B
+    * (`sc.buckets`). The pair set is IDENTICAL to the unpruned,
     * unsalted join: the Bloom admits every present key (reconciled
     * sidecars have no false negatives; a false positive costs one
     * pruned lookup), `bp` pruning keeps every partition a matching key
@@ -258,7 +324,7 @@ object NearDupState {
       udf((k: String) => bBloom.value.mightContainString(k))
     // Bloom gate: only band keys the state MIGHT contain become
     // candidates (exact band equality is re-checked by the join below)
-    val cand = b.filter(mightContain(col("bk")))
+    val cand = withBucket(b, sc.buckets).filter(mightContain(col("bk")))
       .select(col("bk"), col("bp"), col("doc_id").as("doc_b"),
         col("sig").as("sig_b"))
       .transform(graft.CacheScope.tracked)
@@ -313,12 +379,15 @@ object NearDupState {
   }
 
   /** Ledger-stamped state advance: append `kept` band rows (any frame
-    * carrying `bk` and the `bp` partition column) under
-    * (appId, batchId) and roll the band-key Bloom sidecar forward.
-    * `sc = None` means a fresh state (first wave): the commit creates
-    * the bp-partitioned layout, opts into write-path compaction, and
-    * the sidecar bootstraps from the (batch-sized) state scan. A
-    * ledger-rejected commit leaves the sidecar untouched. */
+    * carrying `bk`; `bp` is derived here) under (appId, batchId) and
+    * roll the band-key Bloom sidecar forward. `sc = None` means a fresh
+    * state (first wave): B is sized from the kept row count, and the
+    * commit creates the bp-partitioned layout with its properties (B,
+    * `shingleWidth`, write-path compaction) in that same first commit
+    * — a state another writer created first must record the same ones,
+    * or the append throws — and the sidecar bootstraps from the
+    * (batch-sized) key frame. A ledger-rejected commit leaves the
+    * sidecar untouched. */
   private[graft] def advance(spark: SparkSession, state: String,
       sc: Option[Sidecar], kept: DataFrame, appId: String,
       batchId: Long, fpp: Double = 0.01,
@@ -340,23 +409,21 @@ object NearDupState {
     val keptKeys = kept.select("bk")
       .transform(graft.CacheScope.tracked)
     val nKept = keptKeys.count()
+    val buckets = sc.fold(bucketsFor(spark, nKept))(_.buckets)
     val committed = GraftLog.txnAppendPartitioned(
-      kept.repartition(col("bp")), // one writer per dir
-      state, appId, batchId, Seq("bp"))
+      withBucket(kept, buckets).repartition(col("bp")), // one writer per dir
+      state, appId, batchId, Seq("bp"),
+      createProps = if (sc.isEmpty) createProps(shingleWidth, buckets)
+        else Map.empty)
     if (!committed) return
     val v = GraftLog.latestVersion(spark, state).get
     sc match {
       case None =>
-        GraftLog.setProperties(spark, state, Map(
-          "graft.autoCompact" -> "true",
-          "graft.autoCompact.minNumFiles" -> "8",
-          ShingleWidthProp -> shingleWidth.toString)): Unit
         // fresh state: the just-committed kept frame IS the state —
         // build the v0 sidecar from the (cached) key frame instead of
         // a read-back rebuild scan
         val expected = math.max(nKept * 4, 1024L)
-        saveSidecar(spark, state,
-          GraftLog.latestVersion(spark, state).get,
+        saveSidecar(spark, state, v,
           keptKeys.stat.bloomFilter("bk", expected, fpp), expected,
           fpp, nKept)
       case Some(s) =>
@@ -415,8 +482,8 @@ object NearDupState {
       threshold: Double = 0.5, appId: String = AppId,
       verdictTable: Option[String] = None,
       hotBandThreshold: Int = 256, saltBuckets: Int = 16): DataFrame = {
-    val sc = tN("loadSidecar")(loadSidecar(spark, state))
-    val b = banded(batch, n).transform(graft.CacheScope.tracked)
+    val sc = loadSidecar(spark, state)
+    val b = bandRows(batch, n).transform(graft.CacheScope.tracked)
     val replayed = verdictTable.exists(t =>
       GraftLog.lastCommittedBatch(spark, t, appId).exists(_ >= batchId))
     val verdicts = (if (replayed)
@@ -440,16 +507,16 @@ object NearDupState {
           col("best_sim"),
           coalesce(col("__hit"), lit(false)).as("is_near_dup"))
     }).transform(graft.CacheScope.tracked)
-    tN("verdicts")(verdicts.count()) // must outlive the advance below
+    verdicts.count() // must outlive the advance below
     if (!replayed) verdictTable.foreach { t =>
-      tN("verdictCommit")(GraftLog.txnAppend(verdicts, t, appId, batchId)): Unit
+      GraftLog.txnAppend(verdicts, t, appId, batchId): Unit
     }
     val kept = b.join(
         verdicts.filter(col("is_near_dup")).select("doc_id"),
         Seq("doc_id"), "left_anti")
-      .select("bk", "band", "doc_id", "sig", "bp")
-    tN("advance")(advance(spark, state, Some(sc), kept, appId, batchId,
-      sc.fpp, likelyReplay = replayed))
+      .select("bk", "band", "doc_id", "sig")
+    advance(spark, state, Some(sc), kept, appId, batchId,
+      sc.fpp, likelyReplay = replayed)
     verdicts
   }
 
@@ -468,12 +535,13 @@ object NearDupState {
     * banding the texts yields a static partition prune for the
     * touched-file probe — without it the probe is one key-semi-joined
     * scan (file rewrite stays bounded to touched files either way).
-    * The prune is applied at the SHINGLE WIDTH the state persisted at
-    * init/advance (never a caller-supplied width — a mismatched width
-    * computes the wrong partitions and would silently retain band
-    * rows), and only when `texts` covers every erased doc id: an
-    * uncovered id's partitions are unknown, so the probe falls back to
-    * the unpruned key semi-join rather than miss its rows. The
+    * The prune is applied at the SHINGLE WIDTH and bucket count the
+    * state persisted in its first commit (never a caller-supplied
+    * width — a mismatched width or B computes the wrong partitions and
+    * would silently retain band rows), and only when `texts` covers
+    * every erased doc id: an uncovered id's partitions are unknown, so
+    * the probe falls back to the unpruned key semi-join rather than
+    * miss its rows. The
     * sidecar re-mint is a key-only state scan — the compliance path
     * pays O(state) once per erasure batch, never per ingest batch.
     * Re-erasing already-erased docs rewrites nothing. Returns the
@@ -482,7 +550,10 @@ object NearDupState {
       texts: Option[DataFrame] = None, n: Int = 3): Long = {
     val keys = docIds.select(col("doc_id")).distinct()
       .transform(graft.CacheScope.tracked)
-    val width = shingleWidthOf(spark, state, dflt = n)
+    val props = GraftLog.logState(spark, state)
+      .fold(Map.empty[String, String])(_.props)
+    val width = shingleWidthIn(props, state).getOrElse(n)
+    val buckets = bucketsIn(props, state)
     val prune = texts.filter { t =>
       // coverage gate: every erased id must appear in texts, or the
       // texts-derived partition set may omit partitions holding the
@@ -491,22 +562,22 @@ object NearDupState {
       keys.join(t.select(col("doc_id")), Seq("doc_id"), "left_anti")
         .limit(1).count() == 0
     }.map { t =>
-      // bp is a pure function of bk, which is a pure function of the
-      // text (at the state's persisted shingle width) — the banding
-      // projection reproduces exactly the partitions the doc's state
-      // rows landed in. Metadata-sized collect (≤ 64).
-      val bps = banded(t, width).select("bp").distinct()
+      // bp is a pure function of bk (at the state's B), which is a pure
+      // function of the text (at the state's persisted shingle width) —
+      // the banding projection reproduces exactly the partitions the
+      // doc's state rows landed in. Metadata-sized collect (≤ B).
+      val bps = banded(t, width, buckets).select("bp").distinct()
         .collect().map(_.getInt(0)).toSeq
       col("bp").isin(bps: _*)
     }
-    val v = tN("eraseDelete")(GraftLog.deleteMatching(spark, state,
-      keys, Seq("doc_id"), prune = prune))
+    val v = GraftLog.deleteMatching(spark, state,
+      keys, Seq("doc_id"), prune = prune)
     // no-op delete (re-erase of already-erased docs): the state is
     // bit-identical, skip the O(state) sidecar re-mint — the next
     // loadSidecar catch-up folds the empty delete diff for free
     if (GraftLog.removedFilesAt(spark, state, v) > 0)
-      tN("eraseRemint")(rebuild(spark, state,
-        GraftLog.latestVersion(spark, state).getOrElse(v))): Unit
+      rebuild(spark, state,
+        GraftLog.latestVersion(spark, state).getOrElse(v), buckets): Unit
     v
   }
 
@@ -582,7 +653,7 @@ object NearDupState {
         .option("checkpointLocation", ckpt)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
-      tN("drain")(q.awaitTermination())
+      q.awaitTermination()
     }
     land(b1); drain() // wave 1 = micro-batch 0, then "kill"
     drain()           // restart with nothing new: must be a no-op
@@ -653,7 +724,7 @@ object NearDupState {
         .option("checkpointLocation", ckpt)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
-      tN("drain")(q.awaitTermination())
+      q.awaitTermination()
     }
     land(b1); drain() // wave 1 = micro-batch 0
     // the GDPR request lands BETWEEN micro-batches: every %9==1 seed

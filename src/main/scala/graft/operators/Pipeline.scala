@@ -93,13 +93,12 @@ object Pipeline {
     .filter(col("est") >= 0.5)
     .select(col("doc_b").as("doc_id")).distinct()
 
-  /** [[bandFrame]] carrying the signature and the
-    * [[NearDupState]]-convention partition key `bp = hash(bk) mod 64` —
-    * the shape the persisted e23 band index stores and probes. */
+  /** [[bandFrame]] carrying the signature — the rows the persisted
+    * band index `stBand` stores and probes. [[NearDupState]] derives
+    * their partition key `bp = pmod(xxhash64(bk), B)` from the state's
+    * one bucket count B, sized when the first advance creates it. */
   private def bandFrameSig(sigs: DataFrame): DataFrame =
     sigs.select(col("doc_id"), col("sig"), bkCol)
-      .withColumn("bp",
-        pmod(xxhash64(col("bk")), lit(64L)).cast("int"))
 
   /** The g20 quality score as one codegen'd projection: keeps
     * (doc_id, lang, text, n_tokens, quality_score) plus any `keep`
@@ -495,7 +494,7 @@ object Pipeline {
       exactKept.select("content_hash", "h2"), appId, target,
       DigestPrefixLen))
     tT("advanceBand")(NearDupState.advance(spark, stBand, scB,
-      banded.select("bk", "doc_id", "sig", "bp"), appId, target))
+      banded.select("bk", "doc_id", "sig"), appId, target))
     // the audit sentinel: one row per wave under the reserved language
     // key, its per-stage counts in the audit columns (NULL on doc and
     // watermark rows) plus the ingest high-water — a wave with an
@@ -864,7 +863,7 @@ object Pipeline {
       exactKept.select("content_hash", "h2"), appId, target,
       DigestPrefixLen))
     tT("c.advanceBand")(NearDupState.advance(spark, stBand, scB,
-      banded.select("bk", "doc_id", "sig", "bp"), appId, target))
+      banded.select("bk", "doc_id", "sig"), appId, target))
     tT("c.src")(GraftLog.txnAppend(capped.groupBy(col("source"))
       .agg(count(lit(1)).as("d_admits")), stSrc, appId, target)): Unit
     val nullL = lit(null).cast("long")

@@ -2139,9 +2139,11 @@ object GraftLog {
     * ref `financial_dl_bronze.py:26`): files land under `col=val` dirs,
     * the commit stores the FULL schema, and reads reconstruct partition
     * columns from the paths via [[GraftFileIndex]] — which also gives
-    * planner partition pruning on top of the min/max data skipping. */
+    * planner partition pruning on top of the min/max data skipping.
+    * `props` are set in the same commit. */
   def overwritePartitioned(df: DataFrame, table: String,
-      partCols: Seq[String]): Long = {
+      partCols: Seq[String],
+      props: Map[String, String] = Map.empty): Long = {
     requireAppendable(df.sparkSession, table, "overwrite")
     val full = applyGenerated(df,
       generatedColumns(df.sparkSession, table), "overwritePartitioned")
@@ -2149,7 +2151,7 @@ object GraftLog {
       "overwritePartitioned")
     commitOverwrite(df.sparkSession, table,
       stagePartitionedWithStats(optimizedWrite(full, table, partCols),
-        table, partCols), full.schema.toDDL)
+        table, partCols), full.schema.toDDL, extraProps = props)
   }
 
   /** Hidden bucket-transform dir name: `gfb<n>_<col>` (Iceberg's
@@ -3960,9 +3962,14 @@ object GraftLog {
     * (and partition-scoped OPTIMIZE WHERE) see the streamed data
     * exactly like batch-written data. Layout must match the table's
     * existing partition columns — mixed layouts would break
-    * path-derived reconstruction (same gate as [[appendPartitioned]]). */
+    * path-derived reconstruction (same gate as [[appendPartitioned]]).
+    * A table this append creates carries `createProps` from its first
+    * version; an existing table must already record them (else
+    * ConcurrentModificationException: the staged files follow that
+    * layout). */
   def txnAppendPartitioned(df: DataFrame, table: String, appId: String,
-      batchId: Long, partCols: Seq[String]): Boolean = {
+      batchId: Long, partCols: Seq[String],
+      createProps: Map[String, String] = Map.empty): Boolean = {
     val spark = df.sparkSession
     val st0 = logState(spark, table)
     def landed(st: Option[TableState]): Boolean =
@@ -3992,7 +3999,8 @@ object GraftLog {
         st => revalidateBlindAppend(table, st, aligned.schema,
           "txnAppendPartitioned", partCols),
         txn = Some((appId, batchId)),
-        abandonIf = landed
+        abandonIf = landed,
+        createProps = createProps
       ) >= 0L
     }
   }
@@ -4094,18 +4102,22 @@ object GraftLog {
     * landed since collides. After a lost race the loop re-reads the
     * state: `abandonIf` (the txn-ledger duplicate check) short-circuits
     * to -1, and `reval` recomputes the ddl to assert against it (see
-    * the OCC note above). */
+    * the OCC note above). `createProps` are set only by a claim that
+    * creates the table; a claim onto an existing table requires them
+    * there ([[requireCreateProps]]). */
   private def commitStagedAppend(spark: SparkSession, table: String,
       op: String, commitOp: String, s: Staged, ddl0: String,
       st0: Option[TableState], reval: Option[TableState] => String,
       txn: Option[(String, Long)] = None,
       abandonIf: Option[TableState] => Boolean = _ => false,
       generated: Map[String, String] = Map.empty,
-      copied: Seq[String] = Seq.empty): Long = {
+      copied: Seq[String] = Seq.empty,
+      createProps: Map[String, String] = Map.empty): Long = {
     var ddl = ddl0
     var st = st0
     var attempts = 0
     while (true) {
+      st.foreach(requireCreateProps(table, op, _, createProps))
       val v = st.fold(0L)(_.version + 1)
       // row tracking: allocate bases inside the claim loop so a lost
       // race re-reads the advanced high water before retrying
@@ -4113,7 +4125,8 @@ object GraftLog {
       val won =
         try Some(writeCommit(spark, table, Commit(v, commitOp, s.files,
           Seq.empty, ddl, System.currentTimeMillis(), txn, stats = st2,
-          sizes = s.sizes, generated = generated, props = pr2,
+          sizes = s.sizes, generated = generated,
+          props = if (st.isEmpty) pr2 ++ createProps else pr2,
           copied = copied), st))
         catch { case _: CommitConflictException => None }
       won match {
@@ -4137,6 +4150,20 @@ object GraftLog {
     }
     throw new IllegalStateException("unreachable")
   }
+
+  /** An append staged for a table created with `createProps` (a layout
+    * its files follow) may land on an existing table only if that table
+    * records the same values: a table another writer created first
+    * with a different layout would read the staged files wrongly. */
+  private def requireCreateProps(table: String, op: String,
+      st: TableState, createProps: Map[String, String]): Unit =
+    createProps.foreach { case (k, v) =>
+      if (!st.props.get(k).contains(v))
+        throw new java.util.ConcurrentModificationException(
+          s"$op on $table: the table exists with $k = " +
+            s"${st.props.getOrElse(k, "<unset>")}, but this append was " +
+            s"staged for a new table with $k = $v")
+    }
 
   /** Claim loop for the overwrite-class writers: the staged ADD set
     * stays valid across a lost race (files are immutable); only the

@@ -11,6 +11,25 @@ import graft.sources.{GraftLog, Sources, Staging}
 class NearDupStateSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
+  private def withConfs[T](cs: (String, String)*)(f: => T): T = {
+    val olds = cs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    cs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try f finally olds.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  private val Advisory = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+
+  private def verdictMap(v: org.apache.spark.sql.DataFrame) =
+    v.collect().map(r =>
+      r.getLong(1) -> ((r.getBoolean(4), r.getLong(2), r.get(3)))).toMap
+
+  private def bandRowSet(state: String) =
+    GraftLog.read(spark, state).select("bk", "doc_id").collect()
+      .map(r => (r.getString(0), r.getLong(1))).toSet
+
   test("rolling probe: twins flag, kept-only advance, idempotent replay") {
     val docs = Sources.testTable(spark, TestSpark.sf, "documents")
     val state = Staging.tempDir("graft_ndspec_") + "/bands"
@@ -94,7 +113,7 @@ class NearDupStateSpec extends AnyFunSuite {
     NearDupState.init(spark, docs.filter(col("doc_id") < 80), state)
     // an external writer lands banded rows WITHOUT touching the sidecar
     val oob = NearDupState.bandedForTest(
-      docs.filter(col("doc_id") >= 80 && col("doc_id") < 90))
+      docs.filter(col("doc_id") >= 80 && col("doc_id") < 90), state)
     GraftLog.appendPartitioned(oob.repartition(col("bp")), state,
       Seq("bp"))
     val sc = NearDupState.loadSidecar(spark, state)
@@ -130,7 +149,11 @@ class NearDupStateSpec extends AnyFunSuite {
     import spark.implicits._
     val docs = Sources.testTable(spark, TestSpark.sf, "documents")
     val state = Staging.tempDir("graft_ndspec_") + "/bands"
-    NearDupState.init(spark, docs.filter(col("doc_id") < 100), state)
+    // 64 buckets (a 1-byte advisory size), so (2) below has bp dirs
+    // the erase must leave alone
+    withConfs(Advisory -> "1")(
+      NearDupState.init(spark, docs.filter(col("doc_id") < 100), state))
+    assert(NearDupState.bucketsOf(spark, state).contains(64))
     val subject = docs.filter(col("doc_id") === 3L)
       .select(col("doc_id"), col("text"))
     // pre-erase: a twin of doc 3 flags near-dup
@@ -152,7 +175,7 @@ class NearDupStateSpec extends AnyFunSuite {
     // in one of the subject's band-key partitions
     val files1 = GraftLog.snapshot(spark, state)._1.toSet
     val touched = (files0 -- files1) ++ (files1 -- files0)
-    val bps = NearDupState.bandedForTest(subject)
+    val bps = NearDupState.bandedForTest(subject, state)
       .select("bp").distinct().as[Int].collect().toSet
     assert(touched.nonEmpty && touched.forall(f =>
       bps.exists(bp => f.contains(s"bp=$bp/"))),
@@ -187,8 +210,12 @@ class NearDupStateSpec extends AnyFunSuite {
     // caller's width (3) would derive the wrong bp partitions and
     // silently retain the erased doc's band rows
     val state = Staging.tempDir("graft_ndwidth_") + "/bands"
-    NearDupState.init(spark, docs.filter(col("doc_id") < 100), state,
-      n = 4)
+    // 64 buckets (a 1-byte advisory size): with one bucket every prune
+    // covers the whole state and a wrong one could not retain rows
+    withConfs(Advisory -> "1")(
+      NearDupState.init(spark, docs.filter(col("doc_id") < 100), state,
+        n = 4))
+    assert(NearDupState.bucketsOf(spark, state).contains(64))
     val subject = docs.filter(col("doc_id") === 3L)
       .select(col("doc_id"), col("text"))
     NearDupState.erase(spark, state, subject.select("doc_id"),
@@ -259,5 +286,177 @@ class NearDupStateSpec extends AnyFunSuite {
     assert(perKey >= 400L, s"adversarial corpus lost its hot band: $perKey")
     assert(perSalt <= 80L,
       s"salted group must be ~400/16, got $perSalt (unsalted $perKey)")
+  }
+
+  test("band index sized to its data: B and the layout properties in " +
+      "version 0, a batch adds at most B files") {
+    val docs = Sources.testTable(spark, TestSpark.sf, "documents")
+    val state = Staging.tempDir("graft_ndsize_") + "/bands"
+    NearDupState.init(spark, docs.filter(col("doc_id") < 100), state)
+    assert(GraftLog.versions(spark, state) == Seq(0L),
+      "init must create the state in ONE commit")
+    val props0 = GraftLog.properties(spark, state, asOf = Some(0L))
+    assert(props0.get(NearDupState.BucketsProp).contains("1") &&
+      props0.get(NearDupState.ShingleWidthProp).contains("3") &&
+      props0.get("graft.autoCompact").contains("true"),
+      s"version 0 must carry the layout properties: $props0")
+    assert(NearDupState.bucketsOf(spark, state).contains(1))
+    val files0 = GraftLog.snapshot(spark, state)._1.toSet
+    assert(files0.nonEmpty && files0.forall(_.contains("bp=0/")),
+      s"a one-bucket state lives in bp=0: $files0")
+    val v = NearDupState.probeAndAdvance(spark, state,
+      docs.filter(col("doc_id") >= 100 && col("doc_id") < 150)
+        .select(col("doc_id"), col("text")), 0L)
+    assert(v.count() == 50)
+    val added = GraftLog.snapshot(spark, state)._1.toSet -- files0
+    assert(added.size == 1 && added.forall(_.contains("bp=0/")),
+      s"a batch must add at most B = 1 files: $added")
+  }
+
+  test("bucketsFor: band rows at 576 bytes each over the advisory " +
+      "size, rounded up to a power of two in [1, 64]") {
+    def b(rows: Long, advisory: String = "64MB") =
+      withConfs(Advisory -> advisory)(NearDupState.bucketsFor(spark, rows))
+    assert(b(0) == 1 && b(1) == 1)
+    assert(b(4000) == 1, "a 250-doc state (2.3 MB) fits one bucket")
+    assert(b(116508) == 1 && b(116509) == 2, "64 MB per bucket")
+    assert(b(1000, "72000") == 8)
+    assert(b(1000, "96000") == 8, "6 buckets round up to 8")
+    assert(b(1000, "7200") == 64, "80 buckets cap at 64")
+    assert(b(Long.MaxValue / 1024) == 64)
+  }
+
+  test("sized and 64-bucket states give identical verdicts and " +
+      "erasures") {
+    val docs = Sources.testTable(spark, TestSpark.sf, "documents")
+    val seed = docs.filter(col("doc_id") < 100)
+    val subjects = docs.filter(col("doc_id").isin(3L, 12L, 40L))
+      .select(col("doc_id"), col("text"))
+    val b1 = docs.filter(col("doc_id") >= 100 && col("doc_id") < 140)
+      .select(col("doc_id"), col("text"))
+      .unionByName(docs.filter(col("doc_id") % 11 === 0 &&
+        col("doc_id") < 100)
+        .select((col("doc_id") + 9000).as("doc_id"), col("text")))
+    // after the erase: twins of the erased docs, of kept seed docs and
+    // of batch-1 docs
+    val b2 = docs.filter(col("doc_id").isin(3L, 12L, 40L, 7L, 120L))
+      .select((col("doc_id") + 20000).as("doc_id"), col("text"))
+    def run(advisory: String) = {
+      val state = Staging.tempDir("graft_ndsize_") + "/bands"
+      withConfs(Advisory -> advisory)(
+        NearDupState.init(spark, seed, state))
+      val v1 = verdictMap(NearDupState.probeAndAdvance(spark, state, b1, 0L))
+      NearDupState.erase(spark, state, subjects.select("doc_id"),
+        texts = Some(subjects))
+      val v2 = verdictMap(NearDupState.probeAndAdvance(spark, state, b2, 1L))
+      (NearDupState.bucketsOf(spark, state), v1, v2, bandRowSet(state))
+    }
+    val (bSized, v1s, v2s, rowsS) = run("64MB")
+    val (bWide, v1w, v2w, rowsW) = run("1")
+    assert(bSized.contains(1) && bWide.contains(64),
+      s"expected B = 1 and 64, got $bSized and $bWide")
+    assert(v1s == v1w && v2s == v2w,
+      s"verdicts differ: ${v1s.toSeq.diff(v1w.toSeq).take(3)} " +
+        s"${v2s.toSeq.diff(v2w.toSeq).take(3)}")
+    assert(rowsS == rowsW, "band rows after the erase differ")
+    assert(v1s.values.exists(_._1) && v2s(20007L)._1 &&
+      v2s(20120L)._1 && !v2s(20003L)._1,
+      s"twins of kept docs flag, twins of erased docs are admitted: $v2s")
+    assert(!rowsS.exists(r => Set(3L, 12L, 40L)(r._2)))
+  }
+
+  test("legacy 64-bucket state without the bucket property flags " +
+      "near-dups and erases every band row") {
+    import spark.implicits._
+    val docs = Sources.testTable(spark, TestSpark.sf, "documents")
+    val state = Staging.tempDir("graft_ndlegacy_") + "/bands"
+    // rows landed the way states were written before B was recorded:
+    // 64 buckets, no band-layout properties
+    val rows = NearDupState.bandedForTest(
+      docs.filter(col("doc_id") < 100), state)
+    GraftLog.overwritePartitioned(rows.repartition(col("bp")), state,
+      Seq("bp"))
+    assert(!GraftLog.properties(spark, state)
+      .contains(NearDupState.BucketsProp))
+    assert(NearDupState.bucketsOf(spark, state).contains(64))
+    val twins = docs.filter(col("doc_id").isin(3L, 7L))
+      .select((col("doc_id") + 9000).as("doc_id"), col("text"))
+    val v = verdictMap(NearDupState.probeAndAdvance(spark, state, twins, 0L))
+    assert(v(9003L)._1 && v(9007L)._1, s"legacy twins must flag: $v")
+    val subject = docs.filter(col("doc_id") === 3L)
+      .select(col("doc_id"), col("text"))
+    val files0 = GraftLog.snapshot(spark, state)._1.toSet
+    NearDupState.erase(spark, state, subject.select("doc_id"),
+      texts = Some(subject))
+    val left = GraftLog.read(spark, state)
+    assert(left.filter(col("doc_id") === 3L).count() == 0,
+      "every band row of the erased doc must be purged")
+    assert(left.filter(col("doc_id") === 4L).count() > 0,
+      "neighbors' band rows must survive")
+    // the prune ran at 64 buckets: only the subject's bp dirs moved
+    val files1 = GraftLog.snapshot(spark, state)._1.toSet
+    val touched = (files0 -- files1) ++ (files1 -- files0)
+    val bps = NearDupState.bandedForTest(subject, state)
+      .select("bp").distinct().as[Int].collect().toSet
+    assert(bps.size > 1 && touched.nonEmpty && touched.forall(f =>
+      bps.exists(bp => f.contains(s"bp=$bp/"))),
+      s"erase must rewrite only the subject's bp dirs: $touched")
+    val post = verdictMap(NearDupState.probeAndAdvance(spark, state,
+      subject.select((col("doc_id") + 9500).as("doc_id"), col("text")), 1L))
+    assert(!post(9503L)._1, "the erased doc's twin must be admitted")
+  }
+
+  test("a fresh-state advance onto a state created with another B " +
+      "throws and lands nothing") {
+    val docs = Sources.testTable(spark, TestSpark.sf, "documents")
+    val state = Staging.tempDir("graft_ndrace_") + "/bands"
+    // the other writer created the state first, with 64 buckets
+    withConfs(Advisory -> "1")(
+      NearDupState.init(spark, docs.filter(col("doc_id") < 40), state))
+    val v0 = GraftLog.latestVersion(spark, state)
+    // this writer saw no state (sc = None) and sizes its rows to B = 1
+    val kept = NearDupState.bandedForTest(
+      docs.filter(col("doc_id") >= 40 && col("doc_id") < 50), state)
+      .drop("bp")
+    val e = intercept[java.util.ConcurrentModificationException](
+      NearDupState.advance(spark, state, None, kept, "graft-ndrace", 0L))
+    assert(e.getMessage.contains(NearDupState.BucketsProp) &&
+      e.getMessage.contains(state), e.getMessage)
+    assert(GraftLog.latestVersion(spark, state) == v0 &&
+      NearDupState.bucketsOf(spark, state).contains(64),
+      "the state's commits and B must be untouched")
+  }
+
+  test("malformed band-layout properties fail loudly, naming the " +
+      "property and the state") {
+    val docs = Sources.testTable(spark, TestSpark.sf, "documents")
+    val state = Staging.tempDir("graft_ndprops_") + "/bands"
+    NearDupState.init(spark, docs.filter(col("doc_id") < 40), state)
+    val batch = docs.filter(col("doc_id") >= 40 && col("doc_id") < 50)
+      .select(col("doc_id"), col("text"))
+    val subject = docs.filter(col("doc_id") === 3L)
+      .select(col("doc_id"), col("text"))
+    def failsNaming(prop: String)(f: => Any): Unit = {
+      val e = intercept[IllegalStateException](f)
+      assert(e.getMessage.contains(prop) && e.getMessage.contains(state),
+        e.getMessage)
+    }
+    for (bad <- Seq("abc", "3", "128", "0")) {
+      GraftLog.setProperties(spark, state,
+        Map(NearDupState.BucketsProp -> bad))
+      failsNaming(NearDupState.BucketsProp)(
+        NearDupState.probeAndAdvance(spark, state, batch, 0L))
+      failsNaming(NearDupState.BucketsProp)(
+        NearDupState.erase(spark, state, subject.select("doc_id"),
+          texts = Some(subject)))
+    }
+    GraftLog.setProperties(spark, state, Map(
+      NearDupState.BucketsProp -> "1",
+      NearDupState.ShingleWidthProp -> "three"))
+    failsNaming(NearDupState.ShingleWidthProp)(
+      NearDupState.erase(spark, state, subject.select("doc_id"),
+        texts = Some(subject)))
+    assert(GraftLog.read(spark, state).filter(col("doc_id") === 3L)
+      .count() > 0, "a failed erase must not delete")
   }
 }

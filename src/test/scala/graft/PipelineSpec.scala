@@ -137,10 +137,18 @@ class PipelineSpec extends AnyFunSuite {
         .withColumn("text",
           concat(col("text"), lit(" pipeline near twin suffix")))),
       bronze)
-    CacheScope.withScope {
-      assert(Pipeline.pipelineAdvance(spark, bronze, root, 0L) == 1) }
-    CacheScope.withScope {
-      assert(Pipeline.pipelineAdvance(spark, bronze, root, 1L) == 1) }
+    // a 1-byte advisory partition size sizes the band state to B = 64
+    // buckets, so (c) below has partitions to prune (at this corpus
+    // size the default sizes it to one)
+    val advisory = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    val old = spark.conf.getOption(advisory)
+    spark.conf.set(advisory, "1")
+    try {
+      CacheScope.withScope {
+        assert(Pipeline.pipelineAdvance(spark, bronze, root, 0L) == 1) }
+      CacheScope.withScope {
+        assert(Pipeline.pipelineAdvance(spark, bronze, root, 1L) == 1) }
+    } finally old.fold(spark.conf.unset(advisory))(spark.conf.set(advisory, _))
     val (stDigest, stBand) = (s"$root/st_digest", s"$root/st_band")
     // (a) the state tables carry the pruned layouts the machinery
     // partition-prunes on — every live file sits in a digest-prefix
@@ -162,6 +170,16 @@ class PipelineSpec extends AnyFunSuite {
     assert(scB.catchupVersions == 0 && !scB.rebuilt,
       s"band sidecar not steady: catchup=${scB.catchupVersions} " +
         s"rebuilt=${scB.rebuilt}")
+    // (b2) the band state records its bucket count B in its FIRST
+    // commit, and every band row sits in the bucket that B gives it
+    val nb = GraftLog.properties(spark, stBand, asOf = Some(0L))
+      .get(NearDupState.BucketsProp).map(_.toInt)
+    assert(nb.contains(64) && NearDupState.bucketsOf(spark, stBand) == nb &&
+      scB.buckets == 64, s"st_band must record B = 64 at version 0: $nb")
+    assert(GraftLog.read(spark, stBand)
+      .filter(col("bp") =!= pmod(xxhash64(col("bk")),
+        lit(nb.get.toLong)).cast("int")).count() == 0,
+      s"every band row must sit in bucket pmod(xxhash64(bk), ${nb.get})")
     // (c) the probes pipelineAdvance routes through open only the
     // candidate partitions' files of THESE tables, never the whole
     // state (the t18 files-opened pin)
