@@ -7,6 +7,21 @@ import java.nio.file.{Files, Paths}
   * StdoutOutput`), and (b) is also written to BENCH_LOCAL.json in the
   * working directory as a driver-readable fallback. */
 object Bench {
+  /** A failed query's record: its exception class and the first line
+    * of its message. */
+  private[graft] def failure(e: Throwable): String =
+    e.getClass.getName + ": " +
+      Option(e.getMessage).flatMap(_.linesIterator.nextOption())
+        .getOrElse("")
+
+  /** `v` as a JSON string literal. */
+  private[graft] def jsonString(v: String): String = "\"" + v.flatMap {
+    case '"' => "\\\""
+    case '\\' => "\\\\"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // the driver contract is local[32]; SPARK_GRAFT_CPUS only narrows it
@@ -60,13 +75,17 @@ object Bench {
     def loadavg: Double = java.lang.management.ManagementFactory
       .getOperatingSystemMXBean.getSystemLoadAverage
     val loadStart = loadavg
-    def timed(fn: (org.apache.spark.sql.SparkSession, String)
+    // a failed query's exception class and first message line, by name
+    val errors = scala.collection.mutable.LinkedHashMap[String, String]()
+    def timed(name: String, fn: (org.apache.spark.sql.SparkSession, String)
         => org.apache.spark.sql.DataFrame): Double = {
       val t0 = System.nanoTime()
       // CacheScope releases the operator-persisted frames once the count
       // drains; clearCache stays as the belt for anything untracked
       val ok = try { CacheScope.withScope { fn(spark, sfDir).count() }; true }
-        catch { case _: Throwable => false }
+        catch {
+          case e: Throwable => errors(name) = failure(e); false
+        }
       val dt = (System.nanoTime() - t0) / 1e9
       spark.catalog.clearCache()
       // a failed query must not masquerade as a fast one
@@ -97,7 +116,7 @@ object Bench {
       scala.collection.mutable.ListBuffer[(String, Seq[Double])]()
     val results = SparkEntry.queries.map { case (name, fn) =>
       val before = graft.sources.Staging.snapshot
-      val cold = timed(fn)
+      val cold = timed(name, fn)
       // per-REP reclaim (the BenchOne pattern): reclaim the COLD rep's
       // staging BEFORE the warm rep runs — a lifecycle query's warm rep
       // must measure the query, not the cold rep's hive-dir/sidecar/
@@ -108,7 +127,7 @@ object Bench {
       graft.sources.Staging.cleanupSince(before)
       def rep(): Double = {
         val b = graft.sources.Staging.snapshot
-        val t = timed(fn)
+        val t = timed(name, fn)
         graft.sources.Staging.cleanupSince(b)
         t
       }
@@ -167,8 +186,12 @@ object Bench {
       .mkString("[", ",", "]")
     println(line(fmt(slowest),
       s""","failed_queries":$failedNames,"queries_full":"BENCH_LOCAL.json""""))
+    // the full record names each failure beside its -1 entry
+    val errorsJson = errors
+      .map { case (k, v) => "\"" + k + "\":" + jsonString(v) }
+      .mkString("{", ",", "}")
     try Files.writeString(Paths.get("BENCH_LOCAL.json"),
-      line(fmt(results), "") + "\n")
+      line(fmt(results), s""","errors":$errorsJson""") + "\n")
     catch { case _: Throwable => () } // stdout line is the primary channel
     spark.stop()
   }

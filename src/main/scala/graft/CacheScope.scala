@@ -64,10 +64,13 @@ object CacheScope {
     cp
   }
 
-  /** Free the storage behind a tracked or anchored frame. */
+  /** Free the storage a tracked or anchored frame owns: its cache, or
+    * the checkpointed RDD at the root of its plan. A LogicalRDD deeper
+    * in the plan is another frame's anchor — possibly one an enclosing
+    * scope still reads — and is left to its owner. */
   private def release(ds: Dataset[_]): Unit = {
     try ds.unpersist() catch { case _: Throwable => () }
-    try ds.queryExecution.analyzed.foreach {
+    try ds.queryExecution.analyzed match {
       case l: org.apache.spark.sql.execution.LogicalRDD =>
         l.rdd.unpersist(blocking = false): Unit
       case _ => ()

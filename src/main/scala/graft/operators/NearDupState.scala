@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.util.sketch.BloomFilter
 
 import graft.sources.GraftLog
@@ -34,7 +35,12 @@ import graft.sources.GraftLog
   *     the batch's novel keys by bitwise merge; a missing/stale
   *     sidecar rebuilds from a key-only state scan (the versioned CDF
   *     catch-up refinement applies verbatim — see
-  *     [[DedupState.loadSidecar]]).
+  *     [[DedupState.loadSidecar]]). Its meta also records
+  *     `maxBandRows`, an upper bound on any band key's row count in
+  *     the state: `init` and every rebuild set it exactly, and each
+  *     advance and CDF catch-up raises it by the added rows' largest
+  *     per-key count, in the same pass that folds their keys into the
+  *     Bloom. It gates the hot-band probe (see [[prunedBandJoin]]).
   *   - **Verification = signature-estimated Jaccard** (matching
   *     positions / numPerm ≥ τ), the standard LSH-pipeline verify:
   *     exact shingle Jaccard would need the corpus TEXTS, which a
@@ -185,32 +191,70 @@ object NearDupState {
     val v = GraftLog.overwritePartitioned(
       withBucket(rows, buckets).repartition(col("bp")), state, Seq("bp"),
       props = createProps(n, buckets))
-    val keys = GraftLog.read(spark, state).select("bk")
     // row count from ledger stats (one band key per row, no DVs): one
-    // key scan for the bloom, zero count scans
+    // key scan for the bloom and the band-row bound, zero count scans
     val cnt = GraftLog.metadataRowCount(spark, state)._1
     val expected = math.max(cnt * 4, 1024L)
-    saveSidecar(spark, state, v,
-      keys.stat.bloomFilter("bk", expected, fpp), expected, fpp, cnt)
+    val keys = foldKeys(GraftLog.read(spark, state), expected, fpp)
+    saveSidecar(spark, state, v, keys.bloom, expected, fpp, cnt,
+      Some(keys.maxRows))
+  }
+
+  /** One pass over the `bk` column of `rows`: the band-key Bloom,
+    * the number of distinct keys and the largest per-key row count. */
+  private final case class KeyFold(bloom: BloomFilter, keys: Long,
+      maxRows: Long)
+
+  /** [[KeyFold]] of `rows` in ONE Spark job (the per-key counts shuffle
+    * inside it). The Bloom is bit-identical to
+    * `rows.stat.bloomFilter("bk", expected, fpp)`: the same
+    * `bloom_filter_agg` buffer (items and bits clamped by the session's
+    * runtime-filter limits) with each key's UTF-8 bytes put once — a
+    * put is idempotent, so folding distinct keys sets the same bits. */
+  private def foldKeys(rows: DataFrame, expected: Long, fpp: Double)
+      : KeyFold = {
+    val conf = rows.sparkSession.sessionState.conf
+    val zero = BloomFilter.create(
+      math.min(expected,
+        conf.getConf(SQLConf.RUNTIME_BLOOM_FILTER_MAX_NUM_ITEMS)),
+      math.min(BloomFilter.optimalNumOfBits(expected, fpp),
+        conf.getConf(SQLConf.RUNTIME_BLOOM_FILTER_MAX_NUM_BITS)))
+    rows.select("bk").queryExecution.toRdd
+      .map(r => (r.getUTF8String(0).clone(), 1L))
+      .reduceByKey(_ + _)
+      .treeAggregate(KeyFold(zero, 0L, 0L))(
+        (a, kn) => {
+          a.bloom.putBinary(kn._1.getBytes)
+          KeyFold(a.bloom, a.keys + 1, math.max(a.maxRows, kn._2))
+        },
+        (a, b) => KeyFold(a.bloom.mergeInPlace(b.bloom), a.keys + b.keys,
+          math.max(a.maxRows, b.maxRows)))
   }
 
   private def saveSidecar(spark: SparkSession, state: String, v: Long,
       bloom: BloomFilter, expected: Long, fpp: Double,
-      inserted: Long): Unit = {
+      inserted: Long, maxBandRows: Option[Long]): Unit = {
     // atomic tmp+rename via the shared helper: a concurrent loader that
     // found the meta must never open a half-written bin
     val f = fsOf(spark, state)
     SidecarIO.write(f, sidecarDir(state),
       binPath(state, v), metaPath(state, v), bloom,
-      s"expected=$expected\nfpp=$fpp\ninserted=$inserted\n")
+      s"expected=$expected\nfpp=$fpp\ninserted=$inserted\n" +
+        maxBandRows.fold("")(m => s"$MaxBandRowsKey=$m\n"))
     SidecarIO.pruneSuperseded(f, sidecarDir(state), "band-bloom-v")
   }
 
+  /** Sidecar meta field: an upper bound on any band key's row count in
+    * the state at the sidecar's version (see [[prunedBandJoin]]). */
+  private val MaxBandRowsKey = "maxBandRows"
+
   /** The band-key Bloom at `version`, with the state's bucket count
-    * `buckets` read from the same log state. */
+    * `buckets` read from the same log state. `maxBandRows` is None for
+    * a sidecar written before the bound was recorded. */
   private[graft] final case class Sidecar(bloom: BloomFilter,
       version: Long, expected: Long, fpp: Double, inserted: Long,
-      catchupVersions: Int, rebuilt: Boolean, buckets: Int)
+      catchupVersions: Int, rebuilt: Boolean, buckets: Int,
+      maxBandRows: Option[Long])
 
   /** Newest sidecar at-or-below the table version, reconciled: a
     * sidecar left behind the table (external writer, crashed save)
@@ -218,21 +262,23 @@ object NearDupState {
     * versions — a file-bounded read of just those commits' added
     * files, never a corpus scan (the [[DedupState.loadSidecar]]
     * mechanism, key = `bk`). Missing sidecar or over-capacity → one
-    * key-only rebuild at 4x headroom. */
+    * key-only rebuild at 4x headroom. Reads the log once and lists
+    * the sidecar directory once. */
   private[graft] def loadSidecar(spark: SparkSession, state: String)
       : Sidecar = {
     val st = GraftLog.logState(spark, state).getOrElse(
       throw new IllegalStateException(s"$state is not a graft table"))
     val (latest, buckets) = (st.version, bucketsIn(st.props, state))
     val f = fsOf(spark, state)
-    val dir = new HPath(sidecarDir(state))
-    val found: Option[Long] =
-      if (!f.exists(dir)) None
-      else f.listStatus(dir).map(_.getPath.getName).collect {
+    val names: Set[String] =
+      try f.listStatus(new HPath(sidecarDir(state)))
+        .map(_.getPath.getName).toSet
+      catch { case _: java.io.FileNotFoundException => Set.empty }
+    val found: Option[Long] = names.collect {
         case nm if nm.startsWith("band-bloom-v") && nm.endsWith(".meta") =>
           nm.stripPrefix("band-bloom-v").stripSuffix(".meta").toLong
-      }.filter(v => v <= latest && f.exists(binPath(state, v)))
-        .sorted.lastOption
+      }.filter(v => v <= latest && names(binPath(state, v).getName))
+      .maxOption
     found match {
       case Some(v) =>
         val meta = new String(readAll(f, metaPath(state, v)), "UTF-8")
@@ -241,34 +287,32 @@ object NearDupState {
         val expected = meta("expected").toLong
         val fpp = meta("fpp").toDouble
         var inserted = meta("inserted").toLong
+        var maxBandRows = meta.get(MaxBandRowsKey).map(_.toLong)
         val in = f.open(binPath(state, v))
         val bloom = try BloomFilter.readFrom(in) finally in.close()
-        val missing = GraftLog.versions(spark, state)
-          .count(x => x > v && x <= latest)
+        val missing = st.stamps.keys.count(x => x > v && x <= latest)
         if (missing > 0) {
           // fold only the missing commits' inserted band keys (rows
           // are unique by (bk, doc_id); rewrite-only commits diff
-          // empty, so OPTIMIZE between sidecar saves is invisible)
-          val catchup = spark.read.format("graft")
+          // empty, so OPTIMIZE between sidecar saves is invisible);
+          // the bound rises by the inserts' largest per-key count
+          val catchup = foldKeys(spark.read.format("graft")
             .option("readChangeFeed", "true")
             .option("cdfKeys", "bk,doc_id")
             .option("startingVersion", v + 1)
             .option("endingVersion", latest)
             .load(state)
-            .filter(col("_change_type") === "insert")
-            .select("bk").distinct()
-          val nNew = catchup.count()
-          if (inserted + nNew > expected)
+            .filter(col("_change_type") === "insert"), expected, fpp)
+          if (inserted + catchup.keys > expected)
             return rebuild(spark, state, latest, buckets)
-          if (nNew > 0)
-            bloom.mergeInPlace(
-              catchup.stat.bloomFilter("bk", expected, fpp))
-          inserted += nNew
+          if (catchup.keys > 0) bloom.mergeInPlace(catchup.bloom)
+          inserted += catchup.keys
+          maxBandRows = maxBandRows.map(_ + catchup.maxRows)
           saveSidecar(spark, state, latest, bloom, expected, fpp,
-            inserted)
+            inserted, maxBandRows)
         }
         Sidecar(bloom, latest, expected, fpp, inserted,
-          missing, rebuilt = false, buckets)
+          missing, rebuilt = false, buckets, maxBandRows)
       case None => rebuild(spark, state, latest, buckets)
     }
   }
@@ -277,14 +321,15 @@ object NearDupState {
     * path, never the steady state. */
   private def rebuild(spark: SparkSession, state: String, latest: Long,
       buckets: Int): Sidecar = {
-    val keys = GraftLog.read(spark, state).select("bk")
-    // ledger-stats row count: the re-mint pays one key scan, not two
+    // ledger-stats row count: the re-mint pays one key scan, not two;
+    // the scan also resets the band-row bound to the exact maximum
     val cnt = GraftLog.metadataRowCount(spark, state)._1
     val expected = math.max(cnt * 4, 1024L)
-    val bloom = keys.stat.bloomFilter("bk", expected, 0.01)
-    saveSidecar(spark, state, latest, bloom, expected, 0.01, cnt)
-    Sidecar(bloom, latest, expected, 0.01, cnt, 0, rebuilt = true,
-      buckets)
+    val keys = foldKeys(GraftLog.read(spark, state), expected, 0.01)
+    saveSidecar(spark, state, latest, keys.bloom, expected, 0.01, cnt,
+      Some(keys.maxRows))
+    Sidecar(keys.bloom, latest, expected, 0.01, cnt, 0, rebuilt = true,
+      buckets, Some(keys.maxRows))
   }
 
   private def readAll(f: FileSystem, p: HPath): Array[Byte] = {
@@ -315,21 +360,37 @@ object NearDupState {
     * pruned lookup), `bp` pruning keeps every partition a matching key
     * lives in (bp is a function of bk), and the salted hot-band path
     * meets each state×batch pair on exactly one salt. Shared by
-    * [[probeAndAdvance]] and the e23 incremental pipeline. */
+    * [[probeAndAdvance]] and the e23 incremental pipeline.
+    *
+    * Spark actions before the join runs: the `bp` collect, only when
+    * B > 1 (at B = 1 every key lives in bp 0), and the hot-band probe,
+    * only when the sidecar's `maxBandRows` exceeds `hotBandThreshold`
+    * or is unknown. The bound is exact as a gate: a key's row count
+    * grows only through the writers that raise the bound, so a bound
+    * at or below the threshold means the probe would find no hot key.
+    * A state advanced concurrently after the sidecar loaded can hold
+    * more rows than the bound; the pair set stays identical, only the
+    * salting is skipped. */
   private[graft] def prunedBandJoin(spark: SparkSession, state: String,
       sc: Sidecar, b: DataFrame, hotBandThreshold: Int = 256,
       saltBuckets: Int = 16): DataFrame = {
     val bBloom = spark.sparkContext.broadcast(sc.bloom)
     val mightContain =
       udf((k: String) => bBloom.value.mightContainString(k))
+    val probeHot = sc.maxBandRows.forall(_ > hotBandThreshold)
     // Bloom gate: only band keys the state MIGHT contain become
-    // candidates (exact band equality is re-checked by the join below)
-    val cand = withBucket(b, sc.buckets).filter(mightContain(col("bk")))
+    // candidates (exact band equality is re-checked by the join below);
+    // cached only when a second consumer (bp collect, hot path) reads it
+    val cand0 = withBucket(b, sc.buckets).filter(mightContain(col("bk")))
       .select(col("bk"), col("bp"), col("doc_id").as("doc_b"),
         col("sig").as("sig_b"))
-      .transform(graft.CacheScope.tracked)
-    val bps = cand.select("bp").distinct()
-      .collect().map(_.getInt(0)).toSeq
+    val cand =
+      if (sc.buckets > 1 || probeHot)
+        cand0.transform(graft.CacheScope.tracked)
+      else cand0
+    val bps =
+      if (sc.buckets == 1) Seq(0)
+      else cand.select("bp").distinct().collect().map(_.getInt(0)).toSeq
     // NOT cached: the pruned state side carries the 64-long signature
     // arrays, and materializing them into the cache costs more than
     // the one extra column-pruned parquet read the (rare) hot path
@@ -350,7 +411,7 @@ object NearDupState {
     // exactly one salt), with every join group bounded by
     // ~hotBandThreshold/saltBuckets state rows. j7's skew-join
     // discipline applied to the LSH band index.
-    val hotKeys = GraftLog.read(spark, state)
+    lazy val hotKeys = GraftLog.read(spark, state)
       .filter(col("bp").isin(bps: _*))
       .select(col("bk"))
       .groupBy(col("bk"))
@@ -358,7 +419,7 @@ object NearDupState {
       .filter(col("__n") > hotBandThreshold)
       .select(col("bk"))
       .transform(graft.CacheScope.tracked)
-    if (hotKeys.limit(1).count() == 0)
+    if (!probeHot || hotKeys.limit(1).count() == 0)
       stateSide.join(broadcast(cand), Seq("bk"))
     else {
       val cold = stateSide
@@ -386,8 +447,12 @@ object NearDupState {
     * `shingleWidth`, write-path compaction) in that same first commit
     * — a state another writer created first must record the same ones,
     * or the append throws — and the sidecar bootstraps from the
-    * (batch-sized) key frame. A ledger-rejected commit leaves the
-    * sidecar untouched. */
+    * (batch-sized) key frame. In steady state the kept rows are never
+    * counted: their number comes from the row counts in the append
+    * commit's file stats, and one pass over their keys gives the Bloom
+    * merge and the rise of the sidecar's band-row bound (their largest
+    * per-key count). A ledger-rejected commit leaves the sidecar
+    * untouched. */
   private[graft] def advance(spark: SparkSession, state: String,
       sc: Option[Sidecar], kept: DataFrame, appId: String,
       batchId: Long, fpp: Double = 0.01,
@@ -401,58 +466,65 @@ object NearDupState {
     // state advance did not) still falls through to the full path.
     if (likelyReplay && GraftLog.lastCommittedBatch(spark, state, appId)
         .exists(_ >= batchId)) return
-    // the key frame caches (tiny: bk strings), but the sig-heavy kept
-    // frame does NOT round-trip the block store just to be written
-    // once — the write recomputes it from its (already cached/anchored)
-    // parent, trading one cheap anti-join/projection re-run for
-    // storing + re-reading 16 copies of every signature
-    val keptKeys = kept.select("bk")
-      .transform(graft.CacheScope.tracked)
-    val nKept = keptKeys.count()
-    val buckets = sc.fold(bucketsFor(spark, nKept))(_.buckets)
+    // the sig-heavy kept frame does NOT round-trip the block store
+    // just to be written once — the write recomputes it from its
+    // (already cached/anchored) parent, trading one cheap anti-join/
+    // projection re-run for storing + re-reading 16 copies of every
+    // signature. A fresh state caches its (tiny) key frame: the count
+    // that sizes B and the sidecar's key pass both read it.
+    val fresh = sc.isEmpty
+    val keptKeys =
+      if (fresh) kept.select("bk").transform(graft.CacheScope.tracked)
+      else kept.select("bk")
+    lazy val nFresh = keptKeys.count()
+    val buckets = sc.fold(bucketsFor(spark, nFresh))(_.buckets)
     val committed = GraftLog.txnAppendPartitioned(
       withBucket(kept, buckets).repartition(col("bp")), // one writer per dir
       state, appId, batchId, Seq("bp"),
-      createProps = if (sc.isEmpty) createProps(shingleWidth, buckets)
+      createProps = if (fresh) createProps(shingleWidth, buckets)
         else Map.empty)
     if (!committed) return
-    val v = GraftLog.latestVersion(spark, state).get
+    val st = GraftLog.logState(spark, state).get
+    val v = st.version
     sc match {
       case None =>
         // fresh state: the just-committed kept frame IS the state —
         // build the v0 sidecar from the (cached) key frame instead of
         // a read-back rebuild scan
-        val expected = math.max(nKept * 4, 1024L)
-        saveSidecar(spark, state, v,
-          keptKeys.stat.bloomFilter("bk", expected, fpp), expected,
-          fpp, nKept)
+        val expected = math.max(nFresh * 4, 1024L)
+        val keys = foldKeys(keptKeys, expected, fpp)
+        saveSidecar(spark, state, v, keys.bloom, expected, fpp, nFresh,
+          Some(keys.maxRows))
+      case Some(s) if v != s.version + 1 =>
+        // a concurrent writer interleaved between our sidecar load
+        // and our append — the local bitset misses its band keys
+        // (false negatives → missed near-dups). Reconcile via the
+        // load path: this module's lean form rebuilds key-only at
+        // the current version (the rare race, never steady state).
+        loadSidecar(spark, state): Unit
       case Some(s) =>
-        if (v != s.version + 1) {
-          // a concurrent writer interleaved between our sidecar load
-          // and our append — the local bitset misses its band keys
-          // (false negatives → missed near-dups). Reconcile via the
-          // load path: this module's lean form rebuilds key-only at
-          // the current version (the rare race, never steady state).
-          loadSidecar(spark, state): Unit
-        } else if (nKept == 0)
+        // version v is this append's commit: its file stats count the
+        // kept rows (the sidecar's `inserted` counts rows, as before)
+        val nKept = GraftLog.addedRows(st.last).getOrElse(kept.count())
+        if (nKept == 0)
           // the ledger commit advanced the table with zero new keys —
           // re-stamp the unchanged bitset at the new version so the
           // next load stays steady-state
           saveSidecar(spark, state, v, s.bloom, s.expected, s.fpp,
-            s.inserted)
+            s.inserted, s.maxBandRows)
         else if (s.inserted + nKept > s.expected) {
-          val keys = GraftLog.read(spark, state).select("bk")
-          // ledger-stats row count: one key scan (the bloom), not two
+          // ledger-stats row count: one key scan (the bloom and the
+          // exact band-row bound), not two
           val cnt = GraftLog.metadataRowCount(spark, state)._1
           val expected = math.max(cnt * 4, 1024L)
-          saveSidecar(spark, state, v,
-            keys.stat.bloomFilter("bk", expected, s.fpp), expected,
-            s.fpp, cnt)
+          val keys = foldKeys(GraftLog.read(spark, state), expected, s.fpp)
+          saveSidecar(spark, state, v, keys.bloom, expected, s.fpp, cnt,
+            Some(keys.maxRows))
         } else {
-          s.bloom.mergeInPlace(
-            keptKeys.stat.bloomFilter("bk", s.expected, s.fpp))
+          val keys = foldKeys(keptKeys, s.expected, s.fpp)
+          s.bloom.mergeInPlace(keys.bloom)
           saveSidecar(spark, state, v, s.bloom, s.expected, s.fpp,
-            s.inserted + nKept)
+            s.inserted + nKept, s.maxBandRows.map(_ + keys.maxRows))
         }
     }
   }
@@ -462,7 +534,21 @@ object NearDupState {
     * non-duplicate docs' band rows in one ledger-stamped commit and
     * the sidecar rolls forward by bitwise merge. Per-batch cost:
     * sidecar IO + batch banding + candidate-partition-pruned verify +
-    * O(kept) append.
+    * O(kept) append. The Spark actions of a steady-state batch with a
+    * verdict table, at B = 1 and a band-row bound at or below
+    * `hotBandThreshold`:
+    *   - the verdict write (its ledger-stamped commit materializes the
+    *     cached verdicts before the state advances);
+    *   - the state append: the partitioned write and its per-file stats;
+    *   - the Bloom fold: one job over the kept keys that merges the
+    *     sidecar and raises its band-row bound.
+    * A state with B > 1 adds the `bp` collect; a bound above the
+    * threshold (or a sidecar written before the bound existed) adds
+    * the hot-band probe; no verdict table, a replay or a ledger-rejected
+    * verdict write adds a count of the verdicts. The bound only grows
+    * between rebuilds: a long run with no erase can lift it past the
+    * threshold, and the probe then runs until the next rebuild
+    * ([[erase]], or a sidecar over capacity) resets it.
     *
     * Multi-writer contract: the (appId, batchId) ledger is MONOTONIC
     * per appId — concurrent writers carry their own `appId`.
@@ -476,12 +562,34 @@ object NearDupState {
     * so recomputed verdicts would flag the batch against its own band
     * rows; persisting first makes the verdict ledger the gate, and a
     * re-delivered batch REREADS its persisted verdicts (then re-attempts
-    * the state advance, which the state ledger no-ops if it landed). */
+    * the state advance, which the state ledger no-ops if it landed).
+    * With a verdict table the returned frame reads the batch's rows
+    * from it, and every frame the batch cached is released before the
+    * return; without one the returned verdicts stay cached (release
+    * them with [[graft.CacheScope.withScope]]). */
   def probeAndAdvance(spark: SparkSession, state: String,
       batch: DataFrame, batchId: Long, n: Int = 3,
       threshold: Double = 0.5, appId: String = AppId,
       verdictTable: Option[String] = None,
-      hotBandThreshold: Int = 256, saltBuckets: Int = 16): DataFrame = {
+      hotBandThreshold: Int = 256, saltBuckets: Int = 16): DataFrame =
+    verdictTable match {
+      case Some(t) =>
+        // left cached, each batch's frames and their plans would stay
+        // on the heap for the life of the session
+        graft.CacheScope.withScope(admit(spark, state, batch, batchId, n,
+          threshold, appId, verdictTable, hotBandThreshold,
+          saltBuckets)): Unit
+        GraftLog.read(spark, t).filter(col("batch_id") === batchId)
+      case None =>
+        admit(spark, state, batch, batchId, n, threshold, appId, None,
+          hotBandThreshold, saltBuckets)
+    }
+
+  /** [[probeAndAdvance]]'s work; returns the batch's cached verdicts. */
+  private def admit(spark: SparkSession, state: String,
+      batch: DataFrame, batchId: Long, n: Int, threshold: Double,
+      appId: String, verdictTable: Option[String],
+      hotBandThreshold: Int, saltBuckets: Int): DataFrame = {
     val sc = loadSidecar(spark, state)
     val b = bandRows(batch, n).transform(graft.CacheScope.tracked)
     val replayed = verdictTable.exists(t =>
@@ -507,10 +615,12 @@ object NearDupState {
           col("best_sim"),
           coalesce(col("__hit"), lit(false)).as("is_near_dup"))
     }).transform(graft.CacheScope.tracked)
-    verdicts.count() // must outlive the advance below
-    if (!replayed) verdictTable.foreach { t =>
-      GraftLog.txnAppend(verdicts, t, appId, batchId): Unit
-    }
+    // the cached verdicts must be materialized before the advance below
+    // (recomputed after it, they would flag the batch against its own
+    // band rows): the verdict write does that; otherwise a count does
+    val written = !replayed && verdictTable.exists(t =>
+      GraftLog.txnAppend(verdicts, t, appId, batchId))
+    if (!written) verdicts.count(): Unit
     val kept = b.join(
         verdicts.filter(col("is_near_dup")).select("doc_id"),
         Seq("doc_id"), "left_anti")
@@ -541,20 +651,24 @@ object NearDupState {
     * would silently retain band rows), and only when `texts` covers
     * every erased doc id: an uncovered id's partitions are unknown, so
     * the probe falls back to the unpruned key semi-join rather than
-    * miss its rows. The
+    * miss its rows. A one-bucket state (B = 1) has nothing to prune and
+    * skips both the coverage check and the partition collect. The
     * sidecar re-mint is a key-only state scan — the compliance path
-    * pays O(state) once per erasure batch, never per ingest batch.
+    * pays O(state) once per erasure batch, never per ingest batch —
+    * and resets the band-row bound to the exact maximum.
     * Re-erasing already-erased docs rewrites nothing. Returns the
     * delete commit version. */
   def erase(spark: SparkSession, state: String, docIds: DataFrame,
-      texts: Option[DataFrame] = None, n: Int = 3): Long = {
+      texts: Option[DataFrame] = None, n: Int = 3): Long =
+      graft.CacheScope.withScope { // releases the cached id frame
     val keys = docIds.select(col("doc_id")).distinct()
       .transform(graft.CacheScope.tracked)
     val props = GraftLog.logState(spark, state)
       .fold(Map.empty[String, String])(_.props)
     val width = shingleWidthIn(props, state).getOrElse(n)
     val buckets = bucketsIn(props, state)
-    val prune = texts.filter { t =>
+    // at B = 1 every band row lives in bp 0: there is nothing to prune
+    val prune = if (buckets == 1) None else texts.filter { t =>
       // coverage gate: every erased id must appear in texts, or the
       // texts-derived partition set may omit partitions holding the
       // uncovered ids' band rows — a silent retention, the one failure

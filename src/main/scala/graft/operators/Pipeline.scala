@@ -41,12 +41,6 @@ import graft.sources.{GraftLog, Sources, Staging}
   * the same way — this is that shape for LLM data curation. */
 object Pipeline {
 
-  private def tT[T](l: String)(f: => T): T =
-    if (sys.env.contains("GRAFT_E23_T")) {
-      val t0 = System.nanoTime(); val r = f
-      println(f"  [e23] $l: ${(System.nanoTime() - t0) / 1e9}%.2f s"); r
-    } else f
-
   private val Bands = 16
   private val Rows = 4
 
@@ -226,7 +220,7 @@ object Pipeline {
     val drops = verifiedDrops(cand, sigs)
     val nearKept = exactKept.join(drops, Seq("doc_id"), "left_anti")
       .transform(graft.CacheScope.anchored)
-    val nNear = tT("near")(nearKept.count())
+    val nNear = nearKept.count()
 
     // ---- stage 3: QUALITY GATE (g20 score, one codegen'd projection)
     val qualKept = scoreQuality(nearKept)
@@ -306,18 +300,18 @@ object Pipeline {
   def trainingDataPipelineIncremental(spark: SparkSession, sfDir: String)
       : DataFrame = {
     val root = Staging.scratchDir("graft_pipei_")
-    val bronze = tT("stageBronze")(stagedBronze(spark, sfDir))
+    val bronze = stagedBronze(spark, sfDir)
     // one cache scope PER WAVE: a wave's outputs are durably committed
     // to the state tables before it returns, so its cached seams
     // (full-text frames + 3.7M-row signature bands at sf0.1) must not
     // stay resident while the next wave runs — heap pressure there
     // shows up as across-the-board stage inflation, not a clean OOM
-    tT("waveA")(graft.CacheScope.withScope(
-      pipelineAdvance(spark, bronze, root, 0L))): Unit
-    tT("waveB")(graft.CacheScope.withScope(
-      pipelineAdvance(spark, bronze, root, 2L))): Unit
-    val replayNoop = tT("replay")(graft.CacheScope.withScope(
-      pipelineAdvance(spark, bronze, root, 2L)) == 0)
+    graft.CacheScope.withScope(
+      pipelineAdvance(spark, bronze, root, 0L)): Unit
+    graft.CacheScope.withScope(
+      pipelineAdvance(spark, bronze, root, 2L)): Unit
+    val replayNoop = graft.CacheScope.withScope(
+      pipelineAdvance(spark, bronze, root, 2L)) == 0
     foldResult(spark, root, replayNoop)
   }
 
@@ -359,16 +353,16 @@ object Pipeline {
     val vs = GraftLog.versions(spark, bronze)
       .filter(v => v > from && v <= target)
     if (vs.isEmpty) return 0
-    val newDocs = tT("mkNewDocs")(vs.map(v =>
+    val newDocs = vs.map(v =>
         GraftLog.changesAt(spark, bronze, Seq("doc_id"), v)
           .filter(col("_change_type") === "insert")
           .select(col("doc_id"), col("lang"), col("source"),
             col("text")))
-      .reduce(_ unionByName _))
+      .reduce(_ unionByName _)
       .transform(graft.CacheScope.anchored)
-    val nIn = tT("ingest")(newDocs.count())
-    val (waveHw, packState) = tT("guard")(
-      guardMonotoneIngest(spark, stPack, newDocs))
+    val nIn = newDocs.count()
+    val (waveHw, packState) =
+      guardMonotoneIngest(spark, stPack, newDocs)
 
     // exact dedup: min-id winner WITHIN the wave, then the digest
     // state drops anything any earlier wave kept — probed via the
@@ -382,9 +376,9 @@ object Pipeline {
       .withColumn("h2",
         substring(col("content_hash"), 1, DigestPrefixLen))
       .transform(graft.CacheScope.anchored)
-    val scD = tT("loadScD")(if (GraftLog.versions(spark, stDigest).nonEmpty)
-      Some(DedupState.loadSidecar(spark, stDigest)) else None)
-    val exactKept = tT("probeD")(scD match {
+    val scD = if (GraftLog.versions(spark, stDigest).nonEmpty)
+      Some(DedupState.loadSidecar(spark, stDigest)) else None
+    val exactKept = (scD match {
         case Some(sc) =>
           val present =
             DedupState.pruneProbe(spark, stDigest, sc, waveWinners)
@@ -395,7 +389,7 @@ object Pipeline {
       .select(col("content_hash"), col("h2"), col("doc_id"),
         col("lang"), col("text"))
       .transform(graft.CacheScope.anchored)
-    val nEx = tT("exact")(exactKept.count())
+    val nEx = exactKept.count()
 
     // near-dup: the wave's band rows probe the persisted band index
     // (Bloom gate + bp pruning + hot-band salting — identical pair
@@ -408,9 +402,9 @@ object Pipeline {
       .transform(graft.CacheScope.anchored)
     val banded = bandFrameSig(sigs)
       .transform(graft.CacheScope.anchored)
-    val scB = tT("loadScB")(if (GraftLog.versions(spark, stBand).nonEmpty)
-      Some(NearDupState.loadSidecar(spark, stBand)) else None)
-    val candState = tT("probeB")(scB match {
+    val scB = if (GraftLog.versions(spark, stBand).nonEmpty)
+      Some(NearDupState.loadSidecar(spark, stBand)) else None
+    val candState = scB match {
       case Some(sc) =>
         NearDupState.prunedBandJoin(spark, stBand, sc, banded)
           .filter(col("doc_a") < col("doc_b"))
@@ -420,7 +414,7 @@ object Pipeline {
         banded.select(col("doc_id").as("doc_a"),
           col("doc_id").as("doc_b"), col("sig").as("sig_a"),
           col("sig").as("sig_b")).limit(0)
-    })
+    }
     // state-side pairs arrive with both sigs attached (pruned probe);
     // wave-internal pairs come from a THIN (doc_id, bk) self-join —
     // shuffling 64-long signatures through the candidate join would
@@ -444,16 +438,16 @@ object Pipeline {
       .distinct()
     val nearKept = exactKept.join(drops, Seq("doc_id"), "left_anti")
       .transform(graft.CacheScope.anchored)
-    val nNear = tT("near")(nearKept.count())
+    val nNear = nearKept.count()
 
     // quality + mixture: stateless projections
     val qualKept = scoreQuality(nearKept)
       .filter(col("quality_score") >= 0.4)
       .transform(graft.CacheScope.anchored)
-    val nQ = tT("qual")(qualKept.count())
+    val nQ = qualKept.count()
     val sampled = mixtureSample(qualKept)
       .transform(graft.CacheScope.anchored)
-    val nS = tT("sample")(sampled.count())
+    val nS = sampled.count()
 
     // pack: PER-DOC sequence rows, not pre-folded bins — the fold
     // recomputes identical bins (count/sum/min/max per (lang, seq_id))
@@ -471,7 +465,7 @@ object Pipeline {
       .getOrElse(sampled.groupBy(col("lang"))
         .agg(max(lit(0L)).as("lang_start")).limit(0))
       .transform(graft.CacheScope.anchored)
-    tT("offs")(offs.count()): Unit
+    offs.count(): Unit
     val docRows = PrefixSum.runningSum(sampled, "lang",
         Seq(col("doc_id")), "n_tokens", "endt_local")
       .join(broadcast(offs), Seq("lang"), "left_outer")
@@ -490,11 +484,11 @@ object Pipeline {
     // and each landed table no-ops its replayed append. The digest/
     // band advances roll their Bloom sidecars forward in the same
     // step.
-    tT("advanceDigest")(DedupState.advance(spark, stDigest, scD,
+    DedupState.advance(spark, stDigest, scD,
       exactKept.select("content_hash", "h2"), appId, target,
-      DigestPrefixLen))
-    tT("advanceBand")(NearDupState.advance(spark, stBand, scB,
-      banded.select("bk", "doc_id", "sig"), appId, target))
+      DigestPrefixLen)
+    NearDupState.advance(spark, stBand, scB,
+      banded.select("bk", "doc_id", "sig"), appId, target)
     // the audit sentinel: one row per wave under the reserved language
     // key, its per-stage counts in the audit columns (NULL on doc and
     // watermark rows) plus the ingest high-water — a wave with an
@@ -524,8 +518,7 @@ object Pipeline {
         lit(nIn).as("n_in"), lit(nEx).as("n_ex"),
         lit(nNear).as("n_near"), lit(nQ).as("n_q"),
         lit(nS).as("n_s"), lit(waveHw).as("w_hw")))
-    tT("pack")(
-      GraftLog.txnAppend(packRows, stPack, appId, target)): Unit
+    GraftLog.txnAppend(packRows, stPack, appId, target): Unit
     1
   }
 
@@ -744,7 +737,7 @@ object Pipeline {
             col("text")))
       .reduce(_ unionByName _)
       .transform(graft.CacheScope.anchored)
-    val nIn = tT("c.ingest")(newDocs.count())
+    val nIn = newDocs.count()
     val (waveHw, packState) =
       guardMonotoneIngest(spark, stPack, newDocs)
 
@@ -770,7 +763,7 @@ object Pipeline {
       .select(col("content_hash"), col("h2"), col("doc_id"),
         col("lang"), col("source"), col("text"))
       .transform(graft.CacheScope.anchored)
-    val nEx = tT("c.exact")(exactKept.count())
+    val nEx = exactKept.count()
 
     val sigs = minhashSigs(exactKept)
       .transform(graft.CacheScope.anchored)
@@ -805,22 +798,22 @@ object Pipeline {
       .distinct()
     val nearKept = exactKept.join(drops, Seq("doc_id"), "left_anti")
       .transform(graft.CacheScope.anchored)
-    val nNear = tT("c.near")(nearKept.count())
+    val nNear = nearKept.count()
 
     // contamination: a cheap 5-contains filter over the CACHED
     // near-dup survivors — deliberately NOT cached itself (a second
     // full-text cache of the corpus thrashes the heap; consumers read
     // through the nearKept cache)
     val contamKept = decontaminate(nearKept, probes)
-    val nContam = tT("c.contam")(contamKept.count())
+    val nContam = contamKept.count()
 
     val qualKept = scoreQuality(contamKept, keep = Seq("source"))
       .filter(col("quality_score") >= 0.4)
       .transform(graft.CacheScope.anchored)
-    val nQ = tT("c.qual")(qualKept.count())
+    val nQ = qualKept.count()
     val sampled = mixtureSampleSrc(qualKept)
       .transform(graft.CacheScope.anchored)
-    val nS = tT("c.sample")(sampled.count())
+    val nS = sampled.count()
 
     // source cap: prior admits fold from st_src, materialized BEFORE
     // this wave's append
@@ -830,10 +823,10 @@ object Pipeline {
       .groupBy(col("source"))
       .agg(sum(col("d_admits")).as("n_admitted"))
       .transform(graft.CacheScope.anchored)
-    tT("c.prior")(prior.count()): Unit
+    prior.count(): Unit
     val capped = capBySource(sampled, prior)
       .transform(graft.CacheScope.anchored)
-    val nCap = tT("c.cap")(capped.count())
+    val nCap = capped.count()
 
     // per-doc sequence rows + per-language watermark rows — see
     // [[pipelineAdvance]]; the curated rows also CARRY `source`, the
@@ -859,13 +852,13 @@ object Pipeline {
         col("endt").cast("long").as("endt"),
         col("seq_id").cast("long").as("seq_id"))
 
-    tT("c.advanceDigest")(DedupState.advance(spark, stDigest, scD,
+    DedupState.advance(spark, stDigest, scD,
       exactKept.select("content_hash", "h2"), appId, target,
-      DigestPrefixLen))
-    tT("c.advanceBand")(NearDupState.advance(spark, stBand, scB,
-      banded.select("bk", "doc_id", "sig"), appId, target))
-    tT("c.src")(GraftLog.txnAppend(capped.groupBy(col("source"))
-      .agg(count(lit(1)).as("d_admits")), stSrc, appId, target)): Unit
+      DigestPrefixLen)
+    NearDupState.advance(spark, stBand, scB,
+      banded.select("bk", "doc_id", "sig"), appId, target)
+    GraftLog.txnAppend(capped.groupBy(col("source"))
+      .agg(count(lit(1)).as("d_admits")), stSrc, appId, target): Unit
     val nullL = lit(null).cast("long")
     val nullS = lit(null).cast("string")
     // watermark from the CACHED capped frame (see [[pipelineAdvance]])
@@ -891,8 +884,7 @@ object Pipeline {
         lit(nContam).as("n_ct"), lit(nQ).as("n_q"),
         lit(nS).as("n_s"), lit(nCap).as("n_cap"),
         lit(waveHw).as("w_hw")))
-    tT("c.pack")(
-      GraftLog.txnAppend(packRows, stPack, appId, target)): Unit
+    GraftLog.txnAppend(packRows, stPack, appId, target): Unit
     1
   }
 
@@ -1016,31 +1008,30 @@ object Pipeline {
     // v0 references the corpus snapshot's files (zero data bytes move)
     // and only the small twin waves + the post-erase wave stage fresh —
     // this query appends, so it can never share the siblings' bronze
-    tT("e27.clone")(GraftLog.cloneShallow(spark,
-      stagedBronze(spark, sfDir), bronze, asOf = Some(0L))): Unit
-    tT("e27.twinWaves")(stageTwinWaves(spark, sfDir, bronze))   // v1,v2
-    val probes = tT("e27.probes")(
-      TextAnalysis.contaminationProbes(spark, sfDir, 5))
-    tT("e27.advance1")(graft.CacheScope.withScope(
-      curatedAdvance(spark, bronze, root, 2L, probes))): Unit
+    GraftLog.cloneShallow(spark,
+      stagedBronze(spark, sfDir), bronze, asOf = Some(0L)): Unit
+    stageTwinWaves(spark, sfDir, bronze)   // v1,v2
+    val probes = TextAnalysis.contaminationProbes(spark, sfDir, 5)
+    graft.CacheScope.withScope(
+      curatedAdvance(spark, bronze, root, 2L, probes)): Unit
     val base = graft.sources.Sources.testTable(spark, sfDir, "documents")
       .select(col("doc_id"), col("lang"), col("source"), col("text"))
     val subjects = base.filter(col("doc_id") % 10 === 3)
       .select(col("doc_id"), col("text"))
-    val released = tT("e27.erase1")(graft.CacheScope.withScope(
-      erase(spark, root, subjects, 0L)))
-    val released2 = tT("e27.erase2")(graft.CacheScope.withScope(
-      erase(spark, root, subjects, 0L)))
-    tT("e27.append")(GraftLog.append(
+    val released = graft.CacheScope.withScope(
+      erase(spark, root, subjects, 0L))
+    val released2 = graft.CacheScope.withScope(
+      erase(spark, root, subjects, 0L))
+    GraftLog.append(
       base.filter(col("doc_id") % 10 === 3)
         .withColumn("doc_id", col("doc_id") + 40000L)
         .unionByName(base.filter(col("doc_id") % 10 === 4)
           .withColumn("doc_id", col("doc_id") + 50000L)),
-      bronze)): Unit                                               // v3
-    tT("e27.advance2")(graft.CacheScope.withScope(
-      curatedAdvance(spark, bronze, root, 3L, probes))): Unit
-    val replayNoop = tT("e27.advance3")(graft.CacheScope.withScope(
-      curatedAdvance(spark, bronze, root, 3L, probes))) == 0
+      bronze): Unit                                       // v3
+    graft.CacheScope.withScope(
+      curatedAdvance(spark, bronze, root, 3L, probes)): Unit
+    val replayNoop = graft.CacheScope.withScope(
+      curatedAdvance(spark, bronze, root, 3L, probes)) == 0
     foldCurated(spark, root, replayNoop)
       .withColumn("n_released", lit(released))
       .withColumn("reerase_noop", lit(released2 == 0L))

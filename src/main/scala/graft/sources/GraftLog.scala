@@ -70,16 +70,6 @@ private[graft] object LogCounters {
   */
 object GraftLog {
 
-  /** Env-gated sub-step timer (GRAFT_E23_T, the Pipeline wave-timer
-    * switch): prints write-path stage costs so a slow commit is
-    * attributable to plan execution vs stats vs ledger. Zero cost when
-    * the env is unset. */
-  private def tW[T](l: String)(f: => T): T =
-    if (sys.env.contains("GRAFT_E23_T")) {
-      val t0 = System.nanoTime(); val r = f
-      println(f"    [txn] $l: ${(System.nanoTime() - t0) / 1e9}%.2f s"); r
-    } else f
-
   final class CommitConflictException(version: Long, table: String)
     extends RuntimeException(
       s"concurrent commit: version $version of $table was already written")
@@ -1861,10 +1851,8 @@ object GraftLog {
   }
 
   private def stageWithStats(df: DataFrame, table: String): Staged = {
-    val (added, sizes) = tW("stageData")(stageData(df, table))
-    Staged(added,
-      tW("collectStats")(
-        collectStats(df.sparkSession, table, added, df.schema)),
+    val (added, sizes) = stageData(df, table)
+    Staged(added, collectStats(df.sparkSession, table, added, df.schema),
       sizes)
   }
 
@@ -2113,7 +2101,7 @@ object GraftLog {
       s"partition column $c not in ${df.columns.mkString(",")}"))
     val rel = s"$DataDirName/${UUID.randomUUID()}"
     val dir = s"$table/$rel"
-    tW("stagePartData")(df.write.partitionBy(partCols: _*).parquet(dir))
+    df.write.partitionBy(partCols: _*).parquet(dir)
     val f = fs(df.sparkSession, table)
     def walk(p: HPath): Seq[(String, Long)] =
       f.listStatus(p).toSeq.flatMap { st =>
@@ -2124,14 +2112,12 @@ object GraftLog {
           !n.startsWith(".") && !n.startsWith("_")) Seq((n, st.getLen))
         else Seq.empty
       }
-    val entries = tW("stagePartWalk")(walk(new HPath(dir))).sortBy(_._1)
+    val entries = walk(new HPath(dir)).sortBy(_._1)
       .map { case (s, len) => (s"$rel/$s", len) }
     val added = entries.map(_._1)
     val dataSchema = StructType(df.schema.fields.filterNot(fd =>
       partCols.exists(_.equalsIgnoreCase(fd.name))))
-    Staged(added,
-      tW("stagePartStats")(
-        collectStats(df.sparkSession, table, added, dataSchema)),
+    Staged(added, collectStats(df.sparkSession, table, added, dataSchema),
       entries.toMap)
   }
 
@@ -2998,9 +2984,20 @@ object GraftLog {
   /** numRecords of a staged file, read from its `#nulls` pseudo stats
     * (every column carries one; any is authoritative). */
   private def numRecordsOf(st: Map[String, (Double, Double)]): Long =
+    numRecordsIn(st).getOrElse(0L)
+
+  private def numRecordsIn(st: Map[String, (Double, Double)])
+      : Option[Long] =
     st.collectFirst {
       case (k, (_, n)) if k.endsWith(NullStatsSuffix) => n.toLong
-    }.getOrElse(0L)
+    }
+
+  /** Rows commit `c` added, summed from its files' numRecords stats —
+    * no data read; None when an added file carries no row count. */
+  private[graft] def addedRows(c: Commit): Option[Long] =
+    c.add.foldLeft(Option(0L)) { (acc, f) =>
+      for (a <- acc; n <- c.stats.get(f).flatMap(numRecordsIn)) yield a + n
+    }
 
   /** Allocate contiguous base row ids for freshly staged files when the
     * table tracks rows: returns (stats + `#rowbase` entries, props with
@@ -3920,7 +3917,7 @@ object GraftLog {
       st.exists(_.txns.get(appId).exists(_ >= batchId))
     if (landed(st0)) false
     else {
-      val (aligned, ddl) = tW("txnAlign")(st0 match {
+      val (aligned, ddl) = st0 match {
         case Some(st) => // same gate as append(), incl. column mapping
           val (cur, cmap) = (st.schema, st.colMap)
           requireUnpartitioned(st.files, "streaming append")
@@ -3933,7 +3930,7 @@ object GraftLog {
           enforceChecks(logicalOk, st.checks, "streaming append")
           (toPhysicalDf(logicalOk, cur, cmap), cur.toDDL)
         case None => (df, df.schema.toDDL)
-      })
+      }
       val s = stageWithStats(optimizedWrite(aligned, Nil,
         st0.fold(Map.empty[String, String])(_.props)), table)
       // The ledger check and the version claim are not one atomic step,
@@ -3944,13 +3941,13 @@ object GraftLog {
       // unreferenced orphans; vacuum's needed-set sweep reclaims them),
       // otherwise an unrelated commit moved the table and the claim
       // re-validates + retries one higher.
-      tW("txnCommit")(commitStagedAppend(spark, table, "txnAppend",
+      commitStagedAppend(spark, table, "txnAppend",
         "streamingAppend", s, ddl, st0,
         st => revalidateBlindAppend(table, st, aligned.schema,
           "txnAppend", Seq.empty),
         txn = Some((appId, batchId)),
         abandonIf = landed
-      ) >= 0L)
+      ) >= 0L
     }
   }
 

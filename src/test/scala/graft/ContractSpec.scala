@@ -14,6 +14,21 @@ class ContractSpec extends AnyFunSuite {
         s"oracles without query: ${(o -- q).toSeq.sorted.mkString(", ")}")
   }
 
+  test("a failed bench query is recorded by exception class and first " +
+      "message line, as a valid JSON string") {
+    val rec = Bench.failure(new IllegalStateException(
+      "state \"x\" at C:\\tmp\tis gone\nstack detail"))
+    assert(rec == "java.lang.IllegalStateException: state \"x\" at " +
+      "C:\\tmp\tis gone")
+    assert(Bench.failure(new NullPointerException()) ==
+      "java.lang.NullPointerException: ")
+    val json = s"""{"errors":{"q":${Bench.jsonString(rec)}}}"""
+    assert(json == "{\"errors\":{\"q\":\"java.lang.IllegalStateException: " +
+      "state \\\"x\\\" at C:\\\\tmp\\u0009is gone\"}}", json)
+    assert(new com.fasterxml.jackson.databind.ObjectMapper().readTree(json)
+      .get("errors").get("q").asText() == rec)
+  }
+
   test("flagship entry returns rows (driver smoke gate)") {
     assert(SparkEntry.entry(spark).count() > 0)
   }

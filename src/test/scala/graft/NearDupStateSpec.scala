@@ -30,6 +30,64 @@ class NearDupStateSpec extends AnyFunSuite {
     GraftLog.read(spark, state).select("bk", "doc_id").collect()
       .map(r => (r.getString(0), r.getLong(1))).toSet
 
+  /** `f`'s result with the SQL queries (Spark actions) and Spark jobs
+    * it ran, seen from a QueryExecutionListener and a SparkListener. */
+  private def actions[A](f: => A): (A, Int, Int) = {
+    import java.util.concurrent.atomic.AtomicInteger
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val (queries, jobs) = (new AtomicInteger, new AtomicInteger)
+    val jl = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet(): Unit
+    }
+    val ql = new QueryExecutionListener {
+      def onSuccess(fn: String, qe: QueryExecution, ns: Long): Unit =
+        queries.incrementAndGet(): Unit
+      def onFailure(fn: String, qe: QueryExecution, e: Exception): Unit =
+        queries.incrementAndGet(): Unit
+    }
+    org.apache.spark.ListenerDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(jl)
+    spark.listenerManager.register(ql)
+    try {
+      val r = f
+      org.apache.spark.ListenerDrain(spark.sparkContext)
+      (r, queries.get, jobs.get)
+    } finally {
+      spark.listenerManager.unregister(ql)
+      spark.sparkContext.removeSparkListener(jl)
+    }
+  }
+
+  /** The newest band-Bloom sidecar's (bin, meta) files of `state`. */
+  private def newestSidecar(state: String): (java.io.File, java.io.File) = {
+    val dir = new java.io.File(s"$state/_graft_sidecar")
+    val meta = dir.listFiles.filter(_.getName.endsWith(".meta"))
+      .maxBy(_.getName)
+    (new java.io.File(dir, meta.getName.stripSuffix(".meta") + ".bin"),
+      meta)
+  }
+
+  /** The largest band-key row count in `state`. */
+  private def trueMaxBandRows(state: String): Long =
+    GraftLog.read(spark, state).groupBy(col("bk")).count()
+      .agg(max(col("count"))).head.getLong(0)
+
+  /** The serialized Bloom Spark's own `stat.bloomFilter` builds over
+    * every band key of `state` at the sizing of its newest sidecar. */
+  private def statBloomBytes(state: String): Seq[Byte] = {
+    val meta = new String(java.nio.file.Files.readAllBytes(
+      newestSidecar(state)._2.toPath), "UTF-8").linesIterator
+      .map(_.split('=')).collect { case Array(k, v) => k -> v }.toMap
+    val bloom = GraftLog.read(spark, state).stat.bloomFilter("bk",
+      meta("expected").toLong, meta("fpp").toDouble)
+    val out = new java.io.ByteArrayOutputStream()
+    bloom.writeTo(out)
+    out.toByteArray.toSeq
+  }
+
   test("rolling probe: twins flag, kept-only advance, idempotent replay") {
     val docs = Sources.testTable(spark, TestSpark.sf, "documents")
     val state = Staging.tempDir("graft_ndspec_") + "/bands"
@@ -259,6 +317,9 @@ class NearDupStateSpec extends AnyFunSuite {
     def run(threshold: Int): Map[Long, (Boolean, Long, Any)] = {
       val st = Staging.tempDir("graft_ndskew_") + "/bands"
       NearDupState.init(spark, stateDocs, st)
+      // the hot-band gate opens (the probe runs) only above the bound
+      assert(NearDupState.loadSidecar(spark, st).maxBandRows
+        .exists(_ > threshold) == (threshold < 400))
       NearDupState.probeAndAdvance(spark, st, batch, 0L,
           hotBandThreshold = threshold, saltBuckets = 16)
         .collect().map(r => r.getLong(1) ->
@@ -458,5 +519,191 @@ class NearDupStateSpec extends AnyFunSuite {
         texts = Some(subject)))
     assert(GraftLog.read(spark, state).filter(col("doc_id") === 3L)
       .count() > 0, "a failed erase must not delete")
+  }
+
+  test("a steady-state batch with a verdict table runs at most 5 Spark " +
+      "actions and 18 jobs") {
+    val docs = Sources.testTable(spark, TestSpark.sf, "documents")
+    val root = Staging.tempDir("graft_ndcost_")
+    val (state, verd) = (s"$root/bands", s"$root/verdicts")
+    NearDupState.init(spark, docs.filter(col("doc_id") < 100), state)
+    def batch(lo: Long) = docs
+      .filter(col("doc_id") >= lo && col("doc_id") < lo + 30)
+      .select(col("doc_id"), col("text"))
+      .unionByName(docs.filter(col("doc_id") % 17 === lo % 17 &&
+        col("doc_id") < 100)
+        .select((col("doc_id") + 9000 + lo).as("doc_id"), col("text")))
+    NearDupState.probeAndAdvance(spark, state, batch(100), 0L,
+      verdictTable = Some(verd)).count()
+    val (n, queries, jobs) = actions(
+      NearDupState.probeAndAdvance(spark, state, batch(130), 1L,
+        verdictTable = Some(verd)).count())
+    assert(n > 30)
+    assert(queries <= 5 && jobs <= 18,
+      s"steady-state batch ran $queries actions and $jobs jobs")
+  }
+
+  test("maxBandRows bounds every band key's row count through init, " +
+      "advances, a caught-up commit and erase; the Bloom is Spark's own") {
+    val docs = Sources.testTable(spark, TestSpark.sf, "documents")
+    val state = Staging.tempDir("graft_ndbound_") + "/bands"
+    def check(stage: String, exact: Boolean): Unit = {
+      val sc = NearDupState.loadSidecar(spark, state)
+      val truth = trueMaxBandRows(state)
+      assert(sc.maxBandRows.exists(b => if (exact) b == truth else b >= truth),
+        s"$stage: bound ${sc.maxBandRows}, true maximum $truth")
+      assert(java.nio.file.Files.readAllBytes(newestSidecar(state)._1.toPath)
+        .toSeq == statBloomBytes(state),
+        s"$stage: the sidecar Bloom differs from stat.bloomFilter's")
+    }
+    // twins in the seed: doc 5's band keys hold three rows each
+    NearDupState.init(spark, docs.filter(col("doc_id") < 80)
+      .select(col("doc_id"), col("text"))
+      .unionByName(docs.filter(col("doc_id") === 5L)
+        .select((col("doc_id") + 70000).as("doc_id"), col("text")))
+      .unionByName(docs.filter(col("doc_id") === 5L)
+        .select((col("doc_id") + 71000).as("doc_id"), col("text"))), state)
+    check("init", exact = true)
+    assert(trueMaxBandRows(state) >= 3L)
+    (0 until 2).foreach { b =>
+      NearDupState.probeAndAdvance(spark, state,
+        docs.filter(col("doc_id") >= 80 + b * 20 &&
+          col("doc_id") < 100 + b * 20)
+          .select(col("doc_id"), col("text")), b.toLong).count()
+      check(s"advance $b", exact = false)
+    }
+    // an out-of-band writer lands four more copies of doc 5's rows
+    val oob = NearDupState.bandedForTest(
+      (1 to 4).map(i => docs.filter(col("doc_id") === 5L)
+        .select((col("doc_id") + 80000 + i).as("doc_id"), col("text")))
+        .reduce(_ unionByName _), state)
+    GraftLog.appendPartitioned(oob.repartition(col("bp")), state,
+      Seq("bp"))
+    assert(trueMaxBandRows(state) >= 7L)
+    check("catch-up", exact = false)
+    NearDupState.erase(spark, state,
+      docs.filter(col("doc_id") === 5L).select("doc_id"))
+    check("erase", exact = true)
+  }
+
+  test("the hot-band gate: the viral state takes the salted path, a " +
+      "bound at the threshold skips the probe") {
+    val boiler = "the quick brown fox jumps over the lazy dog " +
+      "click here to subscribe now for free daily updates"
+    val st = Staging.tempDir("graft_ndgate_") + "/bands"
+    NearDupState.init(spark, spark.range(400)
+      .select((col("id") + 50000).as("doc_id"), lit(boiler).as("text"))
+      .unionByName(Sources.testTable(spark, TestSpark.sf, "documents")
+        .filter(col("doc_id") < 50).select(col("doc_id"), col("text"))), st)
+    val sc = NearDupState.loadSidecar(spark, st)
+    assert(sc.maxBandRows.contains(400L), s"bound ${sc.maxBandRows}")
+    val b = NearDupState.bandedForTest(spark.range(3)
+      .select((col("id") + 60000).as("doc_id"), lit(boiler).as("text")), st)
+      .select("bk", "doc_id", "sig")
+    def run(sc: NearDupState.Sidecar, threshold: Int) = actions {
+      val j = NearDupState.prunedBandJoin(spark, st, sc, b, threshold)
+      val salted = j.queryExecution.analyzed.exists(
+        _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Union])
+      (salted, j.count())
+    }
+    val ((salted, pairs), q, _) = run(sc, 100)
+    assert(salted && pairs == 3L * 16 * 400, s"salted=$salted pairs=$pairs")
+    // at the bound the gate stays shut: no probe, one action (the count)
+    val ((saltedAt, pairsAt), qAt, _) = run(sc, 400)
+    assert(!saltedAt && pairsAt == pairs)
+    assert(qAt == 1 && q == 2, s"actions: $q at 100, $qAt at 400")
+    // a bound of unknown size opens it: the probe runs and finds none
+    val ((saltedU, pairsU), qU, _) = run(sc.copy(maxBandRows = None), 400)
+    assert(!saltedU && pairsU == pairs && qU == 2, s"actions: $qU")
+  }
+
+  test("a sidecar meta without maxBandRows runs the probe, gives the " +
+      "same verdicts, and erase restores the bound") {
+    val docs = Sources.testTable(spark, TestSpark.sf, "documents")
+    val b1 = docs.filter(col("doc_id") >= 100 && col("doc_id") < 130)
+      .select(col("doc_id"), col("text"))
+      .unionByName(docs.filter(col("doc_id") % 13 === 0 &&
+        col("doc_id") < 100)
+        .select((col("doc_id") + 9000).as("doc_id"), col("text")))
+    def run(legacy: Boolean) = {
+      val state = Staging.tempDir("graft_ndmeta_") + "/bands"
+      NearDupState.init(spark, docs.filter(col("doc_id") < 100), state)
+      if (legacy) { // the meta as written before the bound existed
+        val meta = newestSidecar(state)._2.toPath
+        java.nio.file.Files.writeString(meta,
+          java.nio.file.Files.readString(meta).linesIterator
+            .filterNot(_.startsWith("maxBandRows=")).map(_ + "\n").mkString)
+        java.nio.file.Files.delete(
+          meta.resolveSibling(s".${meta.getFileName}.crc"))
+      }
+      val before = NearDupState.loadSidecar(spark, state).maxBandRows
+      val (v, q, _) = actions(
+        verdictMap(NearDupState.probeAndAdvance(spark, state, b1, 0L)))
+      val after = NearDupState.loadSidecar(spark, state).maxBandRows
+      NearDupState.erase(spark, state,
+        docs.filter(col("doc_id") === 3L).select("doc_id"))
+      (before, v, q, after,
+        NearDupState.loadSidecar(spark, state).maxBandRows,
+        trueMaxBandRows(state))
+    }
+    val (bNew, vNew, qNew, aNew, eNew, tNew) = run(legacy = false)
+    val (bOld, vOld, qOld, aOld, eOld, tOld) = run(legacy = true)
+    assert(bNew.isDefined && aNew.isDefined && bOld.isEmpty && aOld.isEmpty,
+      s"bounds: $bNew $aNew $bOld $aOld")
+    assert(vOld == vNew && vNew.values.exists(_._1) &&
+      vNew.values.exists(!_._1), s"verdicts differ: $vOld $vNew")
+    assert(qOld == qNew + 1, s"the probe must run once more: $qOld $qNew")
+    assert(eNew.contains(tNew) && eOld.contains(tOld),
+      s"erase must reset the bound exactly: $eNew/$tNew $eOld/$tOld")
+  }
+
+  test("returned verdicts equal the verdict table after the advance") {
+    val docs = Sources.testTable(spark, TestSpark.sf, "documents")
+    val root = Staging.tempDir("graft_ndverd_")
+    val (state, verd) = (s"$root/bands", s"$root/verdicts")
+    NearDupState.init(spark, docs.filter(col("doc_id") < 100), state)
+    val batch = docs.filter(col("doc_id") >= 100 && col("doc_id") < 140)
+      .select(col("doc_id"), col("text"))
+      .unionByName(docs.filter(col("doc_id").isin(3L, 7L))
+        .select((col("doc_id") + 9000).as("doc_id"), col("text")))
+    val v0 = GraftLog.latestVersion(spark, state).get
+    val returned = NearDupState.probeAndAdvance(spark, state, batch, 0L,
+      verdictTable = Some(verd))
+    // the state advanced by the novel docs: recomputed now, they would
+    // flag against their own band rows
+    assert(GraftLog.latestVersion(spark, state).exists(_ > v0))
+    val got = verdictMap(returned)
+    assert(got == verdictMap(GraftLog.read(spark, verd)
+      .filter(col("batch_id") === 0L)
+      .select("batch_id", "doc_id", "n_near_dups", "best_sim",
+        "is_near_dup")))
+    assert(got.size == 42 && got(9003L)._1 && got(9007L)._1 &&
+      got.count(!_._2._1) >= 30, s"verdicts: $got")
+  }
+
+  test("erase and probeAndAdvance release their own cached frames, " +
+      "never the caller's anchored ones") {
+    val docs = Sources.testTable(spark, TestSpark.sf, "documents")
+    val root = Staging.tempDir("graft_ndscope_")
+    val (state, verd) = (s"$root/bands", s"$root/verdicts")
+    NearDupState.init(spark, docs.filter(col("doc_id") < 60), state)
+    def cachedRdds = spark.sparkContext.getPersistentRDDs.size
+    CacheScope.withScope {
+      val batch = docs.filter(col("doc_id") >= 60 && col("doc_id") < 80)
+        .select(col("doc_id"), col("text"))
+        .transform(CacheScope.anchored)
+      val subjects = docs.filter(col("doc_id").isin(3L, 5L))
+        .select(col("doc_id"), col("text"))
+        .transform(CacheScope.anchored)
+      val before = cachedRdds
+      val v = NearDupState.probeAndAdvance(spark, state, batch, 0L,
+        verdictTable = Some(verd))
+      NearDupState.erase(spark, state, subjects.select("doc_id"),
+        texts = Some(subjects))
+      assert(cachedRdds == before, "a batch or an erase left frames cached")
+      // the anchors the caller still reads survive both calls
+      assert(v.count() == 20 && batch.count() == 20 &&
+        subjects.count() == 2)
+    }
   }
 }
