@@ -30,14 +30,17 @@ import org.apache.spark.unsafe.types.UTF8String
   * stats, and non-numeric columns keep the file (correctness never
   * depends on pruning — the residual filter still runs on every row).
   */
-final class GraftFileIndex(spark: SparkSession, table: String,
-    asOf: Option[Long] = None, only: Option[Set[String]] = None,
-    allowDvs: Boolean = false) extends FileIndex {
+final class GraftFileIndex private[sources] (spark: SparkSession,
+    table: String, asOf: Option[Long], only: Option[Set[String]],
+    allowDvs: Boolean, state: GraftLog.TableState) extends FileIndex {
 
   // ONE state read pins the whole index — files, schema, sizes, DVs,
   // column mapping, generated columns and protocol all come from the
   // same version
-  private val state = GraftLog.stateAt(spark, table, asOf)
+  def this(spark: SparkSession, table: String, asOf: Option[Long] = None,
+      only: Option[Set[String]] = None, allowDvs: Boolean = false) =
+    this(spark, table, asOf, only, allowDvs,
+      GraftLog.stateAt(spark, table, asOf))
   // the table-features reader gate applies to EVERY scan path — a
   // format("graft") read must refuse a future-feature table exactly
   // like GraftLog.read does (this constructor is the shared choke:
@@ -693,6 +696,13 @@ object GraftFileIndex {
       asOf: Option[Long] = None): DataFrame =
     spark.baseRelationToDataFrame(relation(spark, table, asOf))
 
+  /** A pruning scan of the table state `st` a write operation read, so
+    * its file probe sees the version it claims on without reading the
+    * log again. */
+  private[sources] def readState(spark: SparkSession, table: String,
+      st: GraftLog.TableState): DataFrame =
+    scan(spark, new GraftFileIndex(spark, table, None, None, false, st))
+
   /** Read ONLY the given snapshot files (table-root-relative paths) with
     * partition columns reconstructed — the scan DML rewrites use to load
     * just the touched files of a hive-partitioned table. */
@@ -702,25 +712,23 @@ object GraftFileIndex {
     * already swapped out (a rewrite commit removes its inputs — without
     * the anchor the old side of the diff would silently read empty). */
   def readSubset(spark: SparkSession, table: String,
-      files: Seq[String], asOf: Option[Long] = None): DataFrame = {
-    val idx = new GraftFileIndex(spark, table, asOf, Some(files.toSet))
-    spark.baseRelationToDataFrame(
-      HadoopFsRelation(idx, idx.partitionSchema, idx.dataSchema, None,
-        new ParquetFileFormat(), Map.empty)(spark))
-  }
+      files: Seq[String], asOf: Option[Long] = None): DataFrame =
+    scan(spark, new GraftFileIndex(spark, table, asOf, Some(files.toSet)))
 
   /** [[readSubset]] with the deletion-vector guard bypassed and no
     * column reordering — the raw scan under [[GraftLog.readWithDvs]]'s
     * position mask and the DV writers' position harvest (both need
     * `_metadata` off the bare relation). Internal to the DV machinery. */
   private[sources] def readSubsetRaw(spark: SparkSession, table: String,
-      files: Seq[String], asOf: Option[Long] = None): DataFrame = {
-    val idx = new GraftFileIndex(spark, table, asOf, Some(files.toSet),
-      allowDvs = true)
+      files: Seq[String], asOf: Option[Long] = None): DataFrame =
+    scan(spark, new GraftFileIndex(spark, table, asOf, Some(files.toSet),
+      allowDvs = true))
+
+  /** The bare (read-only) relation over `idx`. */
+  private def scan(spark: SparkSession, idx: GraftFileIndex): DataFrame =
     spark.baseRelationToDataFrame(
       HadoopFsRelation(idx, idx.partitionSchema, idx.dataSchema, None,
         new ParquetFileFormat(), Map.empty)(spark))
-  }
 }
 
 /** `spark.read.format("graft").load(path)` — the DataSource registration

@@ -618,7 +618,7 @@ object GraftLog {
         case Some(st) => writeCheckpoint(spark, table, st)
         case None => checkpoint(spark, table, Some(withMeta.version)); ()
       } catch { case scala.util.control.NonFatal(_) => () }
-    maybeUpdateManifest(spark, table, withMeta)
+    maybeUpdateManifest(spark, table, withMeta, after)
     // catalog-table freshness: a CATALOG table backed by this path
     // caches its resolved relation in the session's V1 relation cache
     // (keyed by table NAME, which a path-level commit cannot know), so
@@ -1807,8 +1807,9 @@ object GraftLog {
   def overwriteIndexed(df: DataFrame, table: String,
       bloomCols: Seq[String]): Long = {
     val spark = df.sparkSession
-    requireAppendable(spark, table, "overwrite")
-    enforceChecks(df, checkConstraints(spark, table), "overwriteIndexed")
+    val st0 = logState(spark, table)
+    requireAppendable(table, "overwrite", st0)
+    enforceChecks(df, checksOf(st0), "overwriteIndexed")
     val st = stageWithStats(df, table)
     val bl = collectBlooms(spark, table, st.files, df.schema, bloomCols)
     commitOverwrite(spark, table, st, df.schema.toDDL, blooms = bl)
@@ -2028,19 +2029,19 @@ object GraftLog {
   }
 
   def overwrite(df: DataFrame, table: String): Long = {
-    requireAppendable(df.sparkSession, table, "overwrite")
+    val st0 = logState(df.sparkSession, table)
+    requireAppendable(table, "overwrite", st0)
     // overwrite keeps table metadata (constraints, generated-column
     // definitions) — Delta semantics — so the replacement rows must
     // satisfy the current CHECK set and carry computed generated
     // values; identity marks survive the overwrite (Delta: high water
     // never resets, so replaced rows' ids are never reissued)
-    val gens0 = generatedColumns(df.sparkSession, table)
+    val gens0 = st0.fold(Map.empty[String, String])(_.generated)
     val full0 = applyGenerated(df, gens0, "overwrite")
     val (full, gens2) = allocateIdentity(df.sparkSession, full0, gens0)
-    enforceChecks(full, checkConstraints(df.sparkSession, table),
-      "overwrite")
+    enforceChecks(full, checksOf(st0), "overwrite")
     commitOverwrite(df.sparkSession, table,
-      stageWithStats(optimizedWrite(full, table, Nil), table),
+      stageWithStats(optimizedWrite(full, Nil, propsOf(st0)), table),
       full.schema.toDDL,
       generated = if (gens2 != gens0) gens2 else Map.empty)
   }
@@ -2048,40 +2049,18 @@ object GraftLog {
   /** Idempotent transactional overwrite — the Complete-mode streaming
     * sink's commit: the (appId, batchId) ledger makes a replayed batch
     * a no-op (-1), otherwise one whole-table overwrite commit stamped
-    * with the txn lands. Mirrors [[txnMerge]]'s recompute-on-conflict
-    * policy: on a collision the ledger is re-checked and the overwrite
-    * re-claims against the fresh snapshot. */
+    * with the txn lands. The frame stages once; on a collision
+    * [[commitOverwrite]] re-checks the ledger on the fresh state and
+    * re-claims against it. */
   def overwriteTxn(df: DataFrame, table: String, appId: String,
       batchId: Long): Long = {
-    val spark = df.sparkSession
-    requireAppendable(spark, table, "overwrite")
-    enforceChecks(df, checkConstraints(spark, table), "overwriteTxn")
-    var result: Option[Long] = None
-    var attempts = 0
-    while (result.isEmpty) {
-      if (lastCommittedBatch(spark, table, appId).exists(_ >= batchId))
-        result = Some(-1L)
-      else {
-        val s = stageWithStats(df, table)
-        val vRead = latestVersion(spark, table)
-        val prior =
-          if (vRead.isEmpty) Seq.empty[String]
-          else snapshot(spark, table)._1
-        val v = vRead.map(_ + 1).getOrElse(0L)
-        try {
-          writeCommit(spark, table, Commit(v, "overwrite", s.files,
-            prior, df.schema.toDDL, System.currentTimeMillis(),
-            txn = Some((appId, batchId)), stats = s.stats,
-            sizes = s.sizes))
-          result = Some(v)
-        } catch {
-          case _: CommitConflictException =>
-            backoffOrGiveUp(attempts, table, "overwriteTxn")
-        }
-        attempts += 1
-      }
-    }
-    result.get
+    val st0 = logState(df.sparkSession, table)
+    requireAppendable(table, "overwrite", st0)
+    enforceChecks(df, checksOf(st0), "overwriteTxn")
+    val txn = (appId, batchId)
+    if (landed(st0, txn)) -1L
+    else commitOverwrite(df.sparkSession, table, stageWithStats(df, table),
+      df.schema.toDDL, txn = Some(txn))
   }
 
   // --------------------------------------------------- partitioned layout
@@ -2130,13 +2109,14 @@ object GraftLog {
   def overwritePartitioned(df: DataFrame, table: String,
       partCols: Seq[String],
       props: Map[String, String] = Map.empty): Long = {
-    requireAppendable(df.sparkSession, table, "overwrite")
+    val st0 = logState(df.sparkSession, table)
+    requireAppendable(table, "overwrite", st0)
     val full = applyGenerated(df,
-      generatedColumns(df.sparkSession, table), "overwritePartitioned")
-    enforceChecks(full, checkConstraints(df.sparkSession, table),
+      st0.fold(Map.empty[String, String])(_.generated),
       "overwritePartitioned")
+    enforceChecks(full, checksOf(st0), "overwritePartitioned")
     commitOverwrite(df.sparkSession, table,
-      stagePartitionedWithStats(optimizedWrite(full, table, partCols),
+      stagePartitionedWithStats(optimizedWrite(full, partCols, propsOf(st0)),
         table, partCols), full.schema.toDDL, extraProps = props)
   }
 
@@ -2184,16 +2164,17 @@ object GraftLog {
     * where the partition column is a real, visible column). */
   def overwriteBucketTransform(df: DataFrame, table: String,
       srcCol: String, nBuckets: Int): Long = {
-    requireAppendable(df.sparkSession, table, "overwrite")
+    val spark = df.sparkSession
+    val st0 = logState(spark, table)
+    requireAppendable(table, "overwrite", st0)
     require(nBuckets > 0, "nBuckets must be positive")
     require(df.columns.exists(_.equalsIgnoreCase(srcCol)),
       s"bucket column $srcCol not in ${df.columns.mkString(",")}")
-    val spark = df.sparkSession
     val syn = s"gfb${nBuckets}_$srcCol"
     val s = stagePartitionedWithStats(
       optimizedWrite(df.withColumn(syn,
-        pmod(xxhash64(col(srcCol)), lit(nBuckets.toLong))), table, Seq(syn)),
-      table, Seq(syn))
+        pmod(xxhash64(col(srcCol)), lit(nBuckets.toLong))), Seq(syn),
+        propsOf(st0)), table, Seq(syn))
     commitOverwrite(spark, table, s, df.schema.toDDL)
   }
 
@@ -2235,15 +2216,13 @@ object GraftLog {
     * column name). */
   def evolveBucketSpec(spark: SparkSession, table: String,
       srcCol: String, nBuckets: Int): Long =
-      rebaseOnConflict(table, "evolve_partition_spec") { () =>
-    val vRead = latestVersion(spark, table)
-    require(vRead.nonEmpty,
-      s"$table is not a GraftLog table (no $LogDirName)")
+      rebaseOnConflict(spark, table, "evolve_partition_spec") { read =>
+    val st = existing(table, read)
     require(nBuckets > 0, "evolveBucketSpec: nBuckets must be positive")
-    require(columnMapping(spark, table).isEmpty,
+    require(st.colMap.isEmpty,
       "evolveBucketSpec: column mapping is active — hidden bucket dirs " +
         "embed the logical column name; not supported together")
-    val (files, phys) = snapshot(spark, table)
+    val (files, phys) = (st.files, st.schema)
     require(phys.fields.exists(_.name.equalsIgnoreCase(srcCol)),
       s"evolveBucketSpec: no column $srcCol in $table " +
         s"(has ${phys.fieldNames.mkString(",")})")
@@ -2251,12 +2230,11 @@ object GraftLog {
       "evolveBucketSpec: only flat or hidden-bucket layouts can evolve " +
         "in place — a visible hive layout's data files lack the " +
         "partition column; rewrite via overwritePartitioned instead")
-    writeCommit(spark, table, Commit(vRead.get + 1,
+    commitOn(spark, table, read)(v => Commit(v,
       "evolve_partition_spec", Seq.empty, Seq.empty, phys.toDDL,
       System.currentTimeMillis(),
-      props = properties(spark, table) +
+      props = st.props +
         ("graft.partitionSpec" -> s"bucket($nBuckets,$srcCol)")))
-    vRead.get + 1
   }
 
   /** Append into a partitioned table (same enforcement as [[append]]). */
@@ -2264,7 +2242,7 @@ object GraftLog {
       partCols: Seq[String]): Long = {
     val spark = df.sparkSession
     val st0 = logState(spark, table)
-    val props0 = st0.fold(Map.empty[String, String])(_.props)
+    val props0 = propsOf(st0)
     val gens0 = st0.fold(Map.empty[String, String])(_.generated)
     val (aligned, ddl, gens2) = st0 match {
       case Some(st) =>
@@ -2511,7 +2489,7 @@ object GraftLog {
     // ONE state read serves the whole append: gates, staging options,
     // the claim's version and the commit's metadata inheritance
     val st0 = logState(spark, table)
-    val props0 = st0.fold(Map.empty[String, String])(_.props)
+    val props0 = propsOf(st0)
     val gens0 = st0.fold(Map.empty[String, String])(_.generated)
     // partition-spec evolution: a declared current spec re-routes this
     // blind append's STAGING under the spec's hidden dirs — everything
@@ -2660,35 +2638,32 @@ object GraftLog {
     * schema-directed read fills them as typed NULLs (the same
     * merge-on-read contract as [[appendMergeSchema]]). */
   def addColumns(spark: SparkSession, table: String,
-      cols: StructType): Long = rebaseOnConflict(table, "addColumns") {
-    () =>
-    require(versions(spark, table).nonEmpty,
-      s"$table is not a GraftLog table (no $LogDirName)")
+      cols: StructType): Long =
+      rebaseOnConflict(spark, table, "addColumns") { read =>
     // schema commit derived from the current one — commit at
     // readVersion+1 so a concurrent schema change collides and the
     // rebase recomputes the union instead of reverting it
-    val vRead = latestVersion(spark, table)
-    val cur = snapshot(spark, table)._2
-    val cmap = columnMapping(spark, table)
+    val st = existing(table, read)
+    val (cur, cmap) = (st.schema, st.colMap)
     val logicalNames =
       logicalSchema(cur, cmap).fieldNames.map(_.toLowerCase).toSet
     cols.foreach(f => require(!logicalNames(f.name.toLowerCase),
       s"column ${f.name} already exists in $table"))
-    val v = vRead.map(_ + 1).getOrElse(0L)
-    // a new logical name that collides with a physical/retired name
-    // gets a FRESH physical name — otherwise old files holding the
-    // retired column would resurrect its bytes into the new column
-    val taken = (cur.fieldNames ++ cmap.keys).map(_.toLowerCase).toSet
-    val assigned = cols.fields.map { f =>
-      if (taken(f.name.toLowerCase)) (f.copy(name = s"gfc${v}_${f.name}"),
-        Some(s"gfc${v}_${f.name}" -> f.name))
-      else (f, None)
+    commitOn(spark, table, read) { v =>
+      // a new logical name that collides with a physical/retired name
+      // gets a FRESH physical name — otherwise old files holding the
+      // retired column would resurrect its bytes into the new column
+      val taken = (cur.fieldNames ++ cmap.keys).map(_.toLowerCase).toSet
+      val assigned = cols.fields.map { f =>
+        if (taken(f.name.toLowerCase))
+          (f.copy(name = s"gfc${v}_${f.name}"),
+            Some(s"gfc${v}_${f.name}" -> f.name))
+        else (f, None)
+      }
+      val merged = StructType(cur.fields ++ assigned.map(_._1))
+      Commit(v, "addColumns", Seq.empty, Seq.empty, merged.toDDL,
+        System.currentTimeMillis(), colMap = cmap ++ assigned.flatMap(_._2))
     }
-    val merged = StructType(cur.fields ++ assigned.map(_._1))
-    writeCommit(spark, table, Commit(v, "addColumns", Seq.empty, Seq.empty,
-      merged.toDDL, System.currentTimeMillis(),
-      colMap = cmap ++ assigned.flatMap(_._2)))
-    v
   }
 
   /** CHECK constraints in force at `asOf` (or latest): name → SQL
@@ -2698,6 +2673,14 @@ object GraftLog {
   def checkConstraints(spark: SparkSession, table: String,
       asOf: Option[Long] = None): Map[String, String] =
     commitAt(spark, table, asOf).fold(Map.empty[String, String])(_.checks)
+
+  /** The CHECK constraints of a read state (none for an empty log). */
+  private def checksOf(st: Option[TableState]): Map[String, String] =
+    st.fold(Map.empty[String, String])(_.checks)
+
+  /** The table properties of a read state (none for an empty log). */
+  private def propsOf(st: Option[TableState]): Map[String, String] =
+    st.fold(Map.empty[String, String])(_.props)
 
   /** Generated-column definitions in force at `asOf` (or latest):
     * column name → generation expression SQL over the table's other
@@ -2732,15 +2715,12 @@ object GraftLog {
     commitAt(spark, table, asOf).fold(Map.empty[String, String])(_.props)
 
   /** Declared column DEFAULTs (Delta's `defaults` writer feature /
-    * standard SQL `DEFAULT` clauses): LOWERCASE logical column name →
-    * SQL expression, from `graft.default.<col>` properties. A write
-    * that omits a defaulted column gets the expression's value
-    * ([[append]] fills before schema enforcement); omitting a column
-    * with NO default still refuses loudly. */
-  def columnDefaults(spark: SparkSession, table: String,
-      asOf: Option[Long] = None): Map[String, String] =
-    defaultsOf(properties(spark, table, asOf))
-
+    * standard SQL `DEFAULT` clauses) in table properties `props`:
+    * LOWERCASE logical column name → SQL expression, from
+    * `graft.default.<col>` properties. A write that omits a defaulted
+    * column gets the expression's value ([[append]] fills before schema
+    * enforcement); omitting a column with NO default still refuses
+    * loudly. */
   private def defaultsOf(props: Map[String, String]): Map[String, String] =
     props.collect {
       case (k, v) if k.startsWith("graft.default.") =>
@@ -2758,17 +2738,15 @@ object GraftLog {
     * columns refuse. */
   def setColumnDefault(spark: SparkSession, table: String,
       name: String, exprStr: String): Long =
-      rebaseOnConflict(table, "set_default") { () =>
-    val vRead = latestVersion(spark, table)
-    require(vRead.nonEmpty, s"$table is not a graft table")
-    val (files, phys) = snapshot(spark, table)
-    val logical = logicalSchema(phys, columnMapping(spark, table))
+      rebaseOnConflict(spark, table, "set_default") { read =>
+    val st = existing(table, read)
+    val (files, phys) = (st.files, st.schema)
+    val logical = logicalSchema(phys, st.colMap)
     val f = logical.fields.find(_.name.equalsIgnoreCase(name))
       .getOrElse(throw new IllegalArgumentException(
         s"SET DEFAULT: no column $name in $table " +
           s"(has ${logical.fieldNames.mkString(",")})"))
-    require(!generatedColumns(spark, table).keys
-        .exists(_.equalsIgnoreCase(name)),
+    require(!st.generated.keys.exists(_.equalsIgnoreCase(name)),
       s"SET DEFAULT: $name is a generated/identity column")
     require(!layoutPartCols(files).exists(_.equalsIgnoreCase(name)),
       s"SET DEFAULT: $name is a partition column")
@@ -2793,14 +2771,11 @@ object GraftLog {
     require(checked.isNullAt(0) || !checked.isNullAt(1),
       s"SET DEFAULT: '$exprStr' does not cast losslessly to " +
         s"${f.dataType.simpleString} (the cast evaluates to NULL)")
-    val v = vRead.get + 1
-    writeCommit(spark, table, Commit(v, "set_properties",
+    commitOn(spark, table, read)(v => Commit(v, "set_properties",
       Seq.empty, Seq.empty, phys.toDDL, System.currentTimeMillis(),
       props = withFeature(
-        properties(spark, table) +
-          (s"graft.default.${name.toLowerCase}" -> exprStr),
+        st.props + (s"graft.default.${name.toLowerCase}" -> exprStr),
         WriterFeaturesKey, "defaultColumns")))
-    v
   }
 
   /** `ALTER TABLE t ALTER COLUMN c DROP DEFAULT` (missing default =
@@ -2815,16 +2790,14 @@ object GraftLog {
     * case-sensitive, matching Spark's TBLPROPERTIES semantics. */
   def setProperties(spark: SparkSession, table: String,
       kvs: Map[String, String]): Long =
-      rebaseOnConflict(table, "set_properties") { () =>
-    val vRead = latestVersion(spark, table)
-    require(vRead.nonEmpty, s"$table is not a graft table")
+      rebaseOnConflict(spark, table, "set_properties") { read =>
+    val st = existing(table, read)
     require(kvs.nonEmpty, "SET TBLPROPERTIES requires at least one key")
     kvs.get("graft.checkpointInterval").foreach { s =>
       require(scala.util.Try(s.toLong).toOption.exists(_ > 0),
         s"graft.checkpointInterval must be a positive integer, got '$s'")
     }
-    val v = vRead.get + 1
-    val merged = properties(spark, table) ++ kvs
+    val merged = st.props ++ kvs
     // enabling row tracking declares the writer feature atomically: a
     // compactor unaware of it would drop the materialized id column
     val withFeat =
@@ -2835,29 +2808,23 @@ object GraftLog {
         // _graft_row_id, which would silently discard row identity.
         // Refusing here (readWithRowIds already refuses at read time)
         // keeps 'ids survive materialization' a contract, not a hope.
-        requireUnpartitioned(snapshot(spark, table)._1,
-          "graft.enableRowTracking")
+        requireUnpartitioned(st.files, "graft.enableRowTracking")
         withFeature(merged, WriterFeaturesKey, "rowTracking")
       } else merged
-    writeCommit(spark, table, Commit(v, "set_properties",
-      Seq.empty, Seq.empty, snapshot(spark, table)._2.toDDL,
+    commitOn(spark, table, read)(v => Commit(v, "set_properties",
+      Seq.empty, Seq.empty, st.schema.toDDL,
       System.currentTimeMillis(), props = withFeat))
-    v
   }
 
   /** `ALTER TABLE … UNSET TBLPROPERTIES` — drop `keys` (missing keys
     * are a no-op, matching Spark's IF EXISTS-less tolerance on v2). */
   def unsetProperties(spark: SparkSession, table: String,
       keys: Seq[String]): Long =
-      rebaseOnConflict(table, "unset_properties") { () =>
-    val vRead = latestVersion(spark, table)
-    require(vRead.nonEmpty, s"$table is not a graft table")
-    val v = vRead.get + 1
-    writeCommit(spark, table, Commit(v, "unset_properties",
-      Seq.empty, Seq.empty, snapshot(spark, table)._2.toDDL,
-      System.currentTimeMillis(),
-      props = properties(spark, table) -- keys))
-    v
+      rebaseOnConflict(spark, table, "unset_properties") { read =>
+    val st = existing(table, read)
+    commitOn(spark, table, read)(v => Commit(v, "unset_properties",
+      Seq.empty, Seq.empty, st.schema.toDDL, System.currentTimeMillis(),
+      props = st.props -- keys))
   }
 
   // --------------------------------------------------- protocol features
@@ -2906,16 +2873,12 @@ object GraftLog {
   }
 
   /** Fail when the table declares a reader feature this engine does not
-    * implement — called from the read entry points. The protocol is
-    * resolved PER SNAPSHOT (Delta's contract): time travel to a version
-    * before a feature was enabled reads the properties as of that
-    * version, so pre-feature versions stay readable — which is exactly
-    * the escape hatch the error message advises. */
-  private[sources] def checkReaderFeatures(spark: SparkSession,
-      table: String, asOf: Option[Long] = None): Unit =
-    checkReaderFeatures(table, properties(spark, table, asOf))
-
-  /** [[checkReaderFeatures]] against the props of a state already read. */
+    * implement — called from the read entry points with the props of
+    * the state they read. The protocol is resolved PER SNAPSHOT
+    * (Delta's contract): time travel to a version before a feature was
+    * enabled reads the properties as of that version, so pre-feature
+    * versions stay readable — which is exactly the escape hatch the
+    * error message advises. */
   private[sources] def checkReaderFeatures(table: String,
       props: Map[String, String]): Unit = {
     val unknown = parseFeatures(props,
@@ -2975,9 +2938,6 @@ object GraftLog {
   private[sources] val RowIdCol = "_graft_row_id"
   private val RowHwKey = "graft.rowTracking.highWaterMark"
 
-  private def rowTrackingEnabled(spark: SparkSession,
-      table: String): Boolean = tracksRows(properties(spark, table))
-
   private def tracksRows(props: Map[String, String]): Boolean =
     props.get("graft.enableRowTracking").exists(_.equalsIgnoreCase("true"))
 
@@ -3008,7 +2968,7 @@ object GraftLog {
   private def allocRowIds(st: Option[TableState], s: Staged)
       : (Map[String, Map[String, (Double, Double)]],
          Map[String, String]) = {
-    val cur = st.fold(Map.empty[String, String])(_.props)
+    val cur = propsOf(st)
     if (!tracksRows(cur)) return (s.stats, Map.empty)
     var hw = cur.get(RowHwKey).map(_.toLong).getOrElse(0L)
     val augmented = s.files.map { f =>
@@ -3092,17 +3052,15 @@ object GraftLog {
           encodeKmv(row.getAs[scala.collection.Seq[Long]](s"__kmv_$c")))
     }
     val vRead = latestVersion(spark, table)
-    rebaseOnConflict(table, "analyze") { () =>
-      val v = latestVersion(spark, table).get + 1
-      writeCommit(spark, table, Commit(v, "analyze", Seq.empty,
-        Seq.empty, snapshot(spark, table)._2.toDDL,
-        System.currentTimeMillis(),
-        props = properties(spark, table) ++ colProps ++ Map(
+    rebaseOnConflict(spark, table, "analyze") { read =>
+      val st = existing(table, read)
+      commitOn(spark, table, read)(v => Commit(v, "analyze", Seq.empty,
+        Seq.empty, st.schema.toDDL, System.currentTimeMillis(),
+        props = st.props ++ colProps ++ Map(
           "graft.stats.rowCount" -> rows.toString,
           "graft.stats.sizeInBytes" -> bytes.toString,
           "graft.stats.kmvK" -> k.toString,
           "graft.stats.analyzedAtVersion" -> vRead.get.toString)))
-      v
     }
     (rows, bytes, per)
   }
@@ -3258,27 +3216,25 @@ object GraftLog {
           Map(s"graft.stats.col.$c.kmv" -> encodeKmv(merged))
         else Map.empty)
     }
-    rebaseOnConflict(table, "analyze_incremental") { () =>
-      val v = latestVersion(spark, table).get + 1
-      writeCommit(spark, table, Commit(v, "analyze_incremental",
-        Seq.empty, Seq.empty, snapshot(spark, table)._2.toDDL,
-        System.currentTimeMillis(),
-        props = properties(spark, table) ++ colProps ++ Map(
+    rebaseOnConflict(spark, table, "analyze_incremental") { read =>
+      val st = existing(table, read)
+      commitOn(spark, table, read)(v => Commit(v, "analyze_incremental",
+        Seq.empty, Seq.empty, st.schema.toDDL, System.currentTimeMillis(),
+        props = st.props ++ colProps ++ Map(
           "graft.stats.rowCount" -> curRows.toString,
           "graft.stats.sizeInBytes" -> curBytes.toString,
           "graft.stats.kmvK" -> k.toString,
           "graft.stats.analyzedAtVersion" -> latest.toString)))
-      v
     }
     Some((curRows, curBytes, per.map { case (c, (st, _)) => c -> st }))
   }
 
   def backfillRowIds(spark: SparkSession, table: String): Long =
-      rebaseOnConflict(table, "rowid_backfill") { () =>
-    require(rowTrackingEnabled(spark, table),
+      rebaseOnConflict(spark, table, "rowid_backfill",
+        withStats = true) { read =>
+    val st = existing(table, read)
+    require(tracksRows(st.props),
       s"$table does not track rows (set graft.enableRowTracking=true)")
-    val vRead = latestVersion(spark, table)
-    val st = stateAt(spark, table, withStats = true)
     val (live, schema) = (st.liveMap, st.schema)
     val missing = live.toSeq.collect {
       case (f, st) if !st.contains(RowBaseKey) &&
@@ -3302,7 +3258,7 @@ object GraftLog {
           .map(r => (relOf(table, r.getString(0)), r.getLong(1))).toMap
       fromStats ++ probed
     }
-    val props0 = properties(spark, table)
+    val props0 = st.props
     var hw = props0.get(RowHwKey).map(_.toLong).getOrElse(0L)
     val stats2 = missing.map { f =>
       val st = live.getOrElse(f, Map.empty[String, (Double, Double)])
@@ -3311,11 +3267,9 @@ object GraftLog {
       hw += n
       e
     }.toMap
-    val v = vRead.get + 1
-    writeCommit(spark, table, Commit(v, "rowid_backfill", missing,
+    commitOn(spark, table, read)(v => Commit(v, "rowid_backfill", missing,
       Seq.empty, schema.toDDL, System.currentTimeMillis(),
       stats = stats2, props = props0 + (RowHwKey -> hw.toString)))
-    v
   }
 
   /** Table-root-relative form of an absolute scanned path. */
@@ -3332,14 +3286,24 @@ object GraftLog {
     * path; hive dirs would need partition reconstruction first). */
   def readWithRowIds(spark: SparkSession, table: String,
       asOf: Option[Long] = None,
-      only: Option[Set[String]] = None): DataFrame = {
-    require(properties(spark, table, asOf).get("graft.enableRowTracking")
-        .exists(_.equalsIgnoreCase("true")),
+      only: Option[Set[String]] = None): DataFrame =
+    rowIdRead(spark, table, stateAt(spark, table, asOf, withStats = true),
+      only)
+
+  /** [[readWithRowIds]] of the state `st0` (re-read at its version with
+    * stats when it came from a light checkpoint decode: the bases live
+    * in the per-file stats). */
+  private def rowIdRead(spark: SparkSession, table: String,
+      st0: TableState, only: Option[Set[String]]): DataFrame = {
+    val st =
+      if (st0.withStats) st0
+      else stateAt(spark, table, Some(st0.version), withStats = true)
+    require(tracksRows(st.props),
       s"$table does not track rows (set graft.enableRowTracking=true)")
-    val (allFiles, schema) = snapshot(spark, table, asOf)
+    val schema = st.schema
     val files = only match {
-      case Some(subset) => allFiles.filter(subset.contains)
-      case None => allFiles
+      case Some(subset) => st.files.filter(subset.contains)
+      case None => st.files
     }
     requireUnpartitioned(files, "readWithRowIds")
     if (files.isEmpty)
@@ -3348,9 +3312,7 @@ object GraftLog {
         org.apache.spark.sql.types.StructType(schema.fields :+
           org.apache.spark.sql.types.StructField(RowIdCol,
             org.apache.spark.sql.types.LongType)))
-    val stats = fileStats(spark, table, asOf)
-    val cmap = columnMapping(spark, table, asOf)
-    val dvs = deletionVectors(spark, table, asOf)
+    val (stats, cmap, dvs) = (st.stats, st.colMap, st.dvs)
     val extSchema = StructType(schema.fields :+
       org.apache.spark.sql.types.StructField(RowIdCol,
         org.apache.spark.sql.types.LongType, nullable = true))
@@ -3391,16 +3353,12 @@ object GraftLog {
     * DELETES the table location's contents — commit log included — so
     * the SQL statement is intercepted and routed here. */
   def truncate(spark: SparkSession, table: String): Long =
-      rebaseOnConflict(table, "truncate") { () =>
-    requireAppendable(spark, table, "TRUNCATE")
-    val vRead = latestVersion(spark, table)
-    require(vRead.nonEmpty, s"$table is not a GraftLog table")
-    val (files, schema) = snapshot(spark, table)
-    val dvs = deletionVectors(spark, table)
-    val v = vRead.get + 1
-    writeCommit(spark, table, Commit(v, "truncate", Seq.empty, files,
-      schema.toDDL, System.currentTimeMillis(), dvRemove = dvs.toSeq))
-    v
+      rebaseOnConflict(spark, table, "truncate") { read =>
+    requireAppendable(table, "TRUNCATE", read)
+    val st = existing(table, read)
+    commitOn(spark, table, read)(v => Commit(v, "truncate", Seq.empty,
+      st.files, st.schema.toDDL, System.currentTimeMillis(),
+      dvRemove = st.dvs))
   }
 
   /** Current (visible rows, total bytes) folded from commit-log
@@ -3455,33 +3413,31 @@ object GraftLog {
   def analyzeTable(spark: SparkSession, table: String): (Long, Long) = {
     val (rows, bytes) = metadataRowCount(spark, table)
     val vRead = latestVersion(spark, table)
-    rebaseOnConflict(table, "analyze") { () =>
-      val v = latestVersion(spark, table).get + 1
-      writeCommit(spark, table, Commit(v, "analyze", Seq.empty,
-        Seq.empty, snapshot(spark, table)._2.toDDL,
-        System.currentTimeMillis(),
-        props = properties(spark, table) ++ Map(
+    rebaseOnConflict(spark, table, "analyze") { read =>
+      val st = existing(table, read)
+      commitOn(spark, table, read)(v => Commit(v, "analyze", Seq.empty,
+        Seq.empty, st.schema.toDDL, System.currentTimeMillis(),
+        props = st.props ++ Map(
           "graft.stats.rowCount" -> rows.toString,
           "graft.stats.sizeInBytes" -> bytes.toString,
           "graft.stats.analyzedAtVersion" -> vRead.get.toString)))
-      v
     }
     (rows, bytes)
   }
 
-  /** Fail loudly when the table is marked append-only — called by every
-    * row-removing or row-rewriting entry point (Delta's
-    * `delta.appendOnly` contract: appends keep working, anything that
-    * can make data disappear does not). */
-  private def requireAppendable(spark: SparkSession, table: String,
-      op: String): Unit = {
-    if (properties(spark, table).get("graft.appendOnly")
-        .exists(_.equalsIgnoreCase("true")))
+  /** Fail loudly when the state `st` marks the table append-only —
+    * checked by every row-removing or row-rewriting operation on the
+    * state each of its attempts claims on (Delta's `delta.appendOnly`
+    * contract: appends keep working, anything that can make data
+    * disappear does not). */
+  private def requireAppendable(table: String, op: String,
+      st: Option[TableState]): Unit =
+    if (st.exists(_.props.get("graft.appendOnly")
+        .exists(_.equalsIgnoreCase("true"))))
       throw new UnsupportedOperationException(
         s"$op on $table: table is append-only (graft.appendOnly=true); " +
           "ALTER TABLE … UNSET TBLPROPERTIES ('graft.appendOnly') to " +
           "allow destructive operations")
-  }
 
   /** `GENERATED ALWAYS AS IDENTITY (START WITH s INCREMENT BY k)`
     * rides the generated map as `identity(s, k[, hw])`: the first two
@@ -3515,7 +3471,7 @@ object GraftLog {
     * after this), so a batch supplying one is rejected — GENERATED
     * ALWAYS means always. */
   /** Fill columns the batch omits from their declared DEFAULT
-    * expressions (see [[columnDefaults]]); columns present pass through
+    * expressions (see [[defaultsOf]]); columns present pass through
     * untouched — a supplied value always wins over the default. */
   private def fillDefaults(df: DataFrame, logical: StructType,
       defaults: Map[String, String]): DataFrame =
@@ -3667,41 +3623,32 @@ object GraftLog {
     * write. */
   def addConstraint(spark: SparkSession, table: String, name: String,
       exprText: String): Long =
-      rebaseOnConflict(table, "addConstraint") { () =>
-    val vRead = latestVersion(spark, table)
-    require(vRead.nonEmpty,
-      s"$table is not a GraftLog table (no $LogDirName)")
-    val cur = checkConstraints(spark, table)
+      rebaseOnConflict(spark, table, "addConstraint") { st0 =>
+    val st = existing(table, st0)
+    val cur = st.checks
     require(!cur.keys.exists(_.equalsIgnoreCase(name)),
       s"constraint $name already exists on $table")
-    enforceChecks(read(spark, table), Map(name -> exprText),
-      s"ADD CONSTRAINT $name: existing rows of $table")
-    val phys = snapshot(spark, table)._2
-    writeCommit(spark, table, Commit(vRead.get + 1, "add_constraint",
-      Seq.empty, Seq.empty, phys.toDDL, System.currentTimeMillis(),
+    enforceChecks(read(spark, table, Some(st.version)),
+      Map(name -> exprText), s"ADD CONSTRAINT $name: existing rows of $table")
+    commitOn(spark, table, st0)(v => Commit(v, "add_constraint",
+      Seq.empty, Seq.empty, st.schema.toDDL, System.currentTimeMillis(),
       checks = cur + (name -> exprText),
       // a writer unaware of constraints would commit unchecked rows
-      props = withFeature(properties(spark, table), WriterFeaturesKey,
-        "checkConstraints")))
-    vRead.get + 1
+      props = withFeature(st.props, WriterFeaturesKey, "checkConstraints")))
   }
 
   /** `ALTER TABLE … DROP CONSTRAINT name` — metadata-only removal. */
   def dropConstraint(spark: SparkSession, table: String,
       name: String): Long =
-      rebaseOnConflict(table, "dropConstraint") { () =>
-    val vRead = latestVersion(spark, table)
-    require(vRead.nonEmpty,
-      s"$table is not a GraftLog table (no $LogDirName)")
-    val cur = checkConstraints(spark, table)
+      rebaseOnConflict(spark, table, "dropConstraint") { read =>
+    val st = existing(table, read)
+    val cur = st.checks
     require(cur.keys.exists(_.equalsIgnoreCase(name)),
       s"no constraint $name on $table " +
         s"(has ${cur.keys.mkString(",")})")
-    val phys = snapshot(spark, table)._2
-    writeCommit(spark, table, Commit(vRead.get + 1, "drop_constraint",
-      Seq.empty, Seq.empty, phys.toDDL, System.currentTimeMillis(),
+    commitOn(spark, table, read)(v => Commit(v, "drop_constraint",
+      Seq.empty, Seq.empty, st.schema.toDDL, System.currentTimeMillis(),
       checks = cur.filterNot(_._1.equalsIgnoreCase(name))))
-    vRead.get + 1
   }
 
   /** `ALTER TABLE … RENAME COLUMN old TO new` — metadata-only, the
@@ -3717,13 +3664,10 @@ object GraftLog {
     * which a metadata rename cannot re-key. */
   def renameColumn(spark: SparkSession, table: String,
       oldName: String, newName: String): Long =
-      rebaseOnConflict(table, "renameColumn") { () =>
-    val vRead = latestVersion(spark, table)
-    require(vRead.nonEmpty,
-      s"$table is not a GraftLog table (no $LogDirName)")
-    val (files, phys) = snapshot(spark, table)
-    requireUnpartitioned(files, "renameColumn")
-    val cmap = columnMapping(spark, table)
+      rebaseOnConflict(spark, table, "renameColumn") { read =>
+    val st = existing(table, read)
+    val (phys, cmap) = (st.schema, st.colMap)
+    requireUnpartitioned(st.files, "renameColumn")
     val logical = logicalSchema(phys, cmap)
     require(logical.fieldNames.exists(_.equalsIgnoreCase(oldName)),
       s"renameColumn: no column $oldName in $table " +
@@ -3734,12 +3678,10 @@ object GraftLog {
     val next =
       if (p.equalsIgnoreCase(newName)) cmap - p // renamed back
       else cmap + (p -> newName)
-    writeCommit(spark, table, Commit(vRead.get + 1, "rename_column",
+    commitOn(spark, table, read)(v => Commit(v, "rename_column",
       Seq.empty, Seq.empty, phys.toDDL, System.currentTimeMillis(),
       colMap = next,
-      props = withFeature(properties(spark, table), ReaderFeaturesKey,
-        "columnMapping")))
-    vRead.get + 1
+      props = withFeature(st.props, ReaderFeaturesKey, "columnMapping")))
   }
 
   /** Lossless type-widening matrix (Delta's type-widening feature set,
@@ -3788,12 +3730,9 @@ object GraftLog {
     * (loudly, with the matrix). */
   def widenColumn(spark: SparkSession, table: String, name: String,
       newType: org.apache.spark.sql.types.DataType): Long =
-      rebaseOnConflict(table, "widenColumn") { () =>
-    val vRead = latestVersion(spark, table)
-    require(vRead.nonEmpty,
-      s"$table is not a GraftLog table (no $LogDirName)")
-    val (files, phys) = snapshot(spark, table)
-    val cmap = columnMapping(spark, table)
+      rebaseOnConflict(spark, table, "widenColumn") { read =>
+    val st = existing(table, read)
+    val (files, phys, cmap) = (st.files, st.schema, st.colMap)
     val logical = logicalSchema(phys, cmap)
     val f = logical.fields.find(_.name.equalsIgnoreCase(name))
       .getOrElse(throw new IllegalArgumentException(
@@ -3816,15 +3755,14 @@ object GraftLog {
     // and the declared graft.partitionSpec (spec evolution).
     val bucketSrcs = partCols.collect {
       case HiddenBucketDir(_, src) => src
-    } ++ bucketSpecOf(properties(spark, table)).map(_._1)
+    } ++ bucketSpecOf(st.props).map(_._1)
     require(!bucketSrcs.exists(_.equalsIgnoreCase(name)),
       s"widenColumn: $name is a hidden-bucket source column; the " +
         "bucket hash is type-sensitive — rewrite the layout " +
         "(overwriteBucketTransform) under the wide type instead")
     // identifier-boundary match, not substring: a constraint on
     // band_id must not block widening id
-    val refs = checkConstraints(spark, table).values ++
-      generatedColumns(spark, table).values
+    val refs = st.checks.values ++ st.generated.values
     val ident = java.util.regex.Pattern.compile(
       "(?i)(?<![A-Za-z0-9_])" +
         java.util.regex.Pattern.quote(name) + "(?![A-Za-z0-9_])")
@@ -3835,11 +3773,9 @@ object GraftLog {
     val next = StructType(phys.fields.map(fd =>
       if (fd.name.equalsIgnoreCase(p)) fd.copy(dataType = newType)
       else fd))
-    writeCommit(spark, table, Commit(vRead.get + 1, "widen_column",
+    commitOn(spark, table, read)(v => Commit(v, "widen_column",
       Seq.empty, Seq.empty, next.toDDL, System.currentTimeMillis(),
-      props = withFeature(properties(spark, table), ReaderFeaturesKey,
-        "typeWidening")))
-    vRead.get + 1
+      props = withFeature(st.props, ReaderFeaturesKey, "typeWidening")))
   }
 
   /** `ALTER TABLE … DROP COLUMN` — metadata-only like [[renameColumn]]:
@@ -3849,13 +3785,11 @@ object GraftLog {
     * the same logical name gets a fresh physical name instead of
     * resurrecting the dropped column's bytes from old files. */
   def dropColumn(spark: SparkSession, table: String,
-      name: String): Long = rebaseOnConflict(table, "dropColumn") { () =>
-    val vRead = latestVersion(spark, table)
-    require(vRead.nonEmpty,
-      s"$table is not a GraftLog table (no $LogDirName)")
-    val (files, phys) = snapshot(spark, table)
-    requireUnpartitioned(files, "dropColumn")
-    val cmap = columnMapping(spark, table)
+      name: String): Long =
+      rebaseOnConflict(spark, table, "dropColumn") { read =>
+    val st = existing(table, read)
+    val (phys, cmap) = (st.schema, st.colMap)
+    requireUnpartitioned(st.files, "dropColumn")
     val logical = logicalSchema(phys, cmap)
     require(logical.fieldNames.exists(_.equalsIgnoreCase(name)),
       s"dropColumn: no column $name in $table " +
@@ -3865,12 +3799,10 @@ object GraftLog {
     val p = physNameOf(cmap, name)
     val remaining = StructType(phys.fields.filterNot(
       _.name.equalsIgnoreCase(p)))
-    writeCommit(spark, table, Commit(vRead.get + 1, "drop_column",
+    commitOn(spark, table, read)(v => Commit(v, "drop_column",
       Seq.empty, Seq.empty, remaining.toDDL, System.currentTimeMillis(),
       colMap = cmap - p + (p -> ""),
-      props = withFeature(properties(spark, table), ReaderFeaturesKey,
-        "columnMapping")))
-    vRead.get + 1
+      props = withFeature(st.props, ReaderFeaturesKey, "columnMapping")))
   }
 
   /** Highest streaming batch id committed for `appId` — replaying the
@@ -3913,9 +3845,8 @@ object GraftLog {
       batchId: Long): Boolean = {
     val spark = df.sparkSession
     val st0 = logState(spark, table)
-    def landed(st: Option[TableState]): Boolean =
-      st.exists(_.txns.get(appId).exists(_ >= batchId))
-    if (landed(st0)) false
+    val txn = (appId, batchId)
+    if (landed(st0, txn)) false
     else {
       val (aligned, ddl) = st0 match {
         case Some(st) => // same gate as append(), incl. column mapping
@@ -3931,8 +3862,8 @@ object GraftLog {
           (toPhysicalDf(logicalOk, cur, cmap), cur.toDDL)
         case None => (df, df.schema.toDDL)
       }
-      val s = stageWithStats(optimizedWrite(aligned, Nil,
-        st0.fold(Map.empty[String, String])(_.props)), table)
+      val s = stageWithStats(optimizedWrite(aligned, Nil, propsOf(st0)),
+        table)
       // The ledger check and the version claim are not one atomic step,
       // so two concurrent deliveries of the same (appId, batchId) can
       // both pass the check. The claim loop serializes them: `abandonIf`
@@ -3945,8 +3876,8 @@ object GraftLog {
         "streamingAppend", s, ddl, st0,
         st => revalidateBlindAppend(table, st, aligned.schema,
           "txnAppend", Seq.empty),
-        txn = Some((appId, batchId)),
-        abandonIf = landed
+        txn = Some(txn),
+        abandonIf = landed(_, txn)
       ) >= 0L
     }
   }
@@ -3969,9 +3900,8 @@ object GraftLog {
       createProps: Map[String, String] = Map.empty): Boolean = {
     val spark = df.sparkSession
     val st0 = logState(spark, table)
-    def landed(st: Option[TableState]): Boolean =
-      st.exists(_.txns.get(appId).exists(_ >= batchId))
-    if (landed(st0)) false
+    val txn = (appId, batchId)
+    if (landed(st0, txn)) false
     else {
       val (aligned, ddl) = st0 match {
         case Some(st) =>
@@ -3990,13 +3920,13 @@ object GraftLog {
         case None => (df, df.schema.toDDL)
       }
       val s = stagePartitionedWithStats(optimizedWrite(aligned, partCols,
-        st0.fold(Map.empty[String, String])(_.props)), table, partCols)
+        propsOf(st0)), table, partCols)
       commitStagedAppend(spark, table, "txnAppendPartitioned",
         "streamingAppend", s, ddl, st0,
         st => revalidateBlindAppend(table, st, aligned.schema,
           "txnAppendPartitioned", partCols),
-        txn = Some((appId, batchId)),
-        abandonIf = landed,
+        txn = Some(txn),
+        abandonIf = landed(_, txn),
         createProps = createProps
       ) >= 0L
     }
@@ -4033,21 +3963,27 @@ object GraftLog {
   //    MetadataChangedException.
   //
   //  * SNAPSHOT REWRITES (overwrite/delete/update/merge/compact/
-  //    clusterBy/restore/deleteVectors) computed their remove/rewrite
-  //    set against the snapshot they read, so after a lost race that
-  //    set is STALE — the whole operation recomputes from the fresh
-  //    snapshot and retries ([[rebaseOnConflict]]); the attempt that
+  //    clusterBy/restore/deleteVectors and the metadata commits) compute
+  //    their remove/rewrite set, gates and metadata against the state
+  //    they read, so after a lost race all of it is STALE. The loop
+  //    ([[rebaseOnConflict]]) reads the table's state ONCE per attempt
+  //    and hands it to the attempt, which gates, plans and stages on
+  //    that state alone and claims the version after it ([[commitOn]]):
+  //    a commit landing while the attempt works collides, and the next
+  //    attempt starts from a state that has seen it. The attempt that
   //    wins the claim has by construction seen every commit below it.
   //    The orphaned files a losing attempt staged are unreferenced and
   //    reclaimed by [[vacuum]]'s needed-set sweep.
 
-  /** Re-run `attempt` (which must re-read the snapshot itself) until its
-    * commit claim wins, bounded by [[MaxCommitAttempts]]. */
-  private def rebaseOnConflict(table: String, op: String)(
-      attempt: () => Long): Long = {
+  /** Re-run `attempt` on a fresh read of the table's state (None for an
+    * empty log) until its commit claim wins, bounded by
+    * [[MaxCommitAttempts]]. */
+  private def rebaseOnConflict(spark: SparkSession, table: String,
+      op: String, withStats: Boolean = false)(
+      attempt: Option[TableState] => Long): Long = {
     var attempts = 0
     while (true) {
-      try return attempt()
+      try return attempt(logState(spark, table, withStats))
       catch {
         case _: CommitConflictException =>
           backoffOrGiveUp(attempts, table, op)
@@ -4055,6 +3991,23 @@ object GraftLog {
       attempts += 1
     }
     throw new IllegalStateException("unreachable")
+  }
+
+  /** Commit `mk(v)` on the state `st` an attempt read, at `v` = its
+    * version + 1 (Delta's readVersion + 1): any commit landing after
+    * the read collides. Returns `v`. */
+  private def commitOn(spark: SparkSession, table: String,
+      st: Option[TableState])(mk: Long => Commit): Long = {
+    val v = st.fold(0L)(_.version + 1)
+    writeCommit(spark, table, mk(v), st)
+    v
+  }
+
+  /** The state of a table the operation requires to exist. */
+  private def existing(table: String, st: Option[TableState])
+      : TableState = {
+    require(st.nonEmpty, s"$table is not a GraftLog table (no $LogDirName)")
+    st.get
   }
 
   /** The staged batch still fits the (possibly moved) table iff the
@@ -4165,46 +4118,38 @@ object GraftLog {
   /** Claim loop for the overwrite-class writers: the staged ADD set
     * stays valid across a lost race (files are immutable); only the
     * REMOVE set — "whatever is live right now" — is stale, so each
-    * attempt recomputes it from the fresh snapshot. Overwrite is
-    * schema-replacing by definition, so no re-validation applies. */
+    * attempt recomputes it from the fresh state, and re-checks the
+    * append-only gate and, for a `txn` stamp, the ledger (a batch that
+    * landed meanwhile abandons with -1). Overwrite is schema-replacing
+    * by definition, so no re-validation applies. */
   private def commitOverwrite(spark: SparkSession, table: String,
       s: Staged, ddl: String,
       blooms: Map[String, Map[String, String]] = Map.empty,
       generated: Map[String, String] = Map.empty,
-      extraProps: Map[String, String] = Map.empty): Long = {
-    var attempts = 0
-    while (true) {
-      // Claim THE VERSION AFTER THE ONE WE READ (Delta's commit-at-
-      // readVersion+1): a competing commit landing between the snapshot
-      // read and the claim then always collides — claiming "latest + 1
-      // at claim time" instead would let a stale remove set land
-      // cleanly past it.
-      val st = logState(spark, table)
-      val prior = st.fold(Seq.empty[String])(_.files)
-      val v = st.fold(0L)(_.version + 1)
-      try {
+      extraProps: Map[String, String] = Map.empty,
+      txn: Option[(String, Long)] = None): Long =
+    rebaseOnConflict(spark, table, "overwrite") { st =>
+      requireAppendable(table, "overwrite", st)
+      if (txn.exists(landed(st, _))) -1L
+      else {
         val (st2, pr2) = allocRowIds(st, s)
         // extraProps (e.g. a feature declaration) must merge over the
         // FULL current map — a partial props commit would clobber the
         // rest under the "props = latest commit's props" invariant
         val pr =
           if (extraProps.isEmpty) pr2
-          else (if (pr2.nonEmpty) pr2
-                else st.fold(Map.empty[String, String])(_.props)) ++
-            extraProps
-        writeCommit(spark, table, Commit(v, "overwrite", s.files, prior,
-          ddl, System.currentTimeMillis(), stats = st2,
-          sizes = s.sizes, blooms = blooms, generated = generated,
-          props = pr), st)
-        return v
-      } catch {
-        case _: CommitConflictException =>
-          backoffOrGiveUp(attempts, table, "overwrite")
+          else (if (pr2.nonEmpty) pr2 else propsOf(st)) ++ extraProps
+        commitOn(spark, table, st)(v => Commit(v, "overwrite", s.files,
+          st.fold(Seq.empty[String])(_.files), ddl,
+          System.currentTimeMillis(), txn, stats = st2, sizes = s.sizes,
+          blooms = blooms, generated = generated, props = pr))
       }
-      attempts += 1
     }
-    throw new IllegalStateException("unreachable")
-  }
+
+  /** Whether the txn ledger of `st` already holds (appId, batchId). */
+  private def landed(st: Option[TableState],
+      txn: (String, Long)): Boolean =
+    st.exists(_.txns.get(txn._1).exists(_ >= txn._2))
 
   /** Data files of the current snapshot that contain at least one row
     * matching `probe` (a left-semi broadcast — the table side never
@@ -4249,22 +4194,19 @@ object GraftLog {
   def merge(source: DataFrame, table: String, keys: Seq[String],
       updateMatched: Boolean = true, insertUnmatched: Boolean = true,
       deleteUnmatchedBySource: Boolean = false,
-      mergeSchema: Boolean = false): Long = {
-    requireAppendable(source.sparkSession, table, "MERGE")
-    val v = rebaseOnConflict(table, "merge") { () =>
-      mergeImpl(source, table, keys, txn = None, updateMatched,
-        insertUnmatched, deleteUnmatchedBySource, mergeSchema)
-    }
+      mergeSchema: Boolean = false): Long =
     // row tracking: on flat un-mapped layouts mergeImpl PRESERVES ids
     // (matched rows materialize theirs; inserts resolve base +
-    // row_index from the commit's own allocation) and this backfill is
+    // row_index from the commit's own allocation) and the backfill is
     // a no-op. It remains the safety net for the layouts mergeImpl
     // cannot preserve on (partitioned / column-mapped): their rewritten
     // files get fresh ids immediately rather than NULLs until the next
     // manual backfill.
-    maybeBackfillAfterRewrite(source.sparkSession, table)
-    v
-  }
+    rebaseThenBackfill(source.sparkSession, table, "merge") { st =>
+      requireAppendable(table, "MERGE", st)
+      mergeImpl(source, table, keys, txn = None, st, updateMatched,
+        insertUnmatched, deleteUnmatchedBySource, mergeSchema)
+    }
 
   /** One `WHEN …` clause of a conditional / multi-clause MERGE (the
     * full Delta MERGE surface [[mergeClauses]] executes). Conditions
@@ -4321,21 +4263,19 @@ object GraftLog {
       notMatched: Seq[MergeClause.Insert] = Nil,
       notMatchedBySource: Seq[MergeClause] = Nil,
       onExtra: Option[Column] = None,
-      mergeSchema: Boolean = false): Long = {
-    requireAppendable(source.sparkSession, table, "MERGE")
-    val v = rebaseOnConflict(table, "merge") { () =>
+      mergeSchema: Boolean = false): Long =
+    rebaseThenBackfill(source.sparkSession, table, "merge") { st =>
+      requireAppendable(table, "MERGE", st)
       mergeClausesImpl(source, table, keys, matched, notMatched,
-        notMatchedBySource, onExtra, mergeSchema)
+        notMatchedBySource, onExtra, mergeSchema, st)
     }
-    maybeBackfillAfterRewrite(source.sparkSession, table)
-    v
-  }
 
   private def mergeClausesImpl(source: DataFrame, table: String,
       keys: Seq[String], matched: Seq[MergeClause],
       notMatched: Seq[MergeClause.Insert],
       notMatchedBySource: Seq[MergeClause],
-      onExtra: Option[Column], mergeSchema: Boolean): Long = {
+      onExtra: Option[Column], mergeSchema: Boolean,
+      read: Option[TableState]): Long = {
     import MergeClause._
     require(matched.nonEmpty || notMatched.nonEmpty ||
       notMatchedBySource.nonEmpty, "MERGE needs at least one WHEN clause")
@@ -4354,16 +4294,16 @@ object GraftLog {
       case _ => ()
     }
     val spark = source.sparkSession
-    val vRead = latestVersion(spark, table)
-    requireNoDvs(spark, table, "merge")
-    require(columnMapping(spark, table).isEmpty,
+    val st = existing(table, read)
+    requireNoDvs(st, "merge")
+    require(st.colMap.isEmpty,
       s"conditional MERGE into column-mapped $table is not supported; " +
         "compact() to materialize the mapping first")
-    val gens = generatedColumns(spark, table)
+    val gens = st.generated
     require(!gens.values.exists(identityDef(_).isDefined),
       s"MERGE into $table is not supported while it has a GENERATED " +
         "ALWAYS AS IDENTITY column; append new rows instead")
-    val (files, schema0c) = snapshot(spark, table)
+    val (files, schema0c) = (st.files, st.schema)
     // autoMerge widening (star clauses pick the new columns up from
     // the source; carried rows read as typed NULLs)
     val schema = if (!mergeSchema) schema0c
@@ -4488,12 +4428,12 @@ object GraftLog {
     // rewrite, inserts carry NULL and resolve base + row_index from
     // the commit's allocRowIds — the same preservation contract as the
     // two-clause merge
-    val trackedIds = partCols.isEmpty && rowTrackingEnabled(spark, table)
+    val trackedIds = partCols.isEmpty && tracksRows(st.props)
 
     // ---- rewrite of touched files: one left-outer join + CASE cascade
     val rewritten = if (touched.isEmpty) None else {
       val tgt = (if (trackedIds)
-          readWithRowIds(spark, table, only = Some(touched.toSet))
+          rowIdRead(spark, table, st, Some(touched.toSet))
         else readSubset(spark, table, touched, schema))
         .withColumn("__gf_rid", monotonically_increasing_id()).alias("t")
       val rewriteSrc =
@@ -4623,32 +4563,34 @@ object GraftLog {
         gens.filter(g => genCols.exists(_.equalsIgnoreCase(g._1))),
         "merge").select(schema.fieldNames.map(col) ++
           (if (trackedIds) Seq(col(RowIdCol)) else Nil): _*)
-    enforceChecks(regenerated, checkConstraints(spark, table), "merge")
+    enforceChecks(regenerated, st.checks, "merge")
     val s =
       if (touched.isEmpty && insertRows.isEmpty)
         Staged(Seq.empty, Map.empty, Map.empty)
       else if (partCols.nonEmpty) stagePartitionedWithStats(
         withHiddenPartCols(regenerated, partCols), table, partCols)
       else stageWithStats(regenerated, table)
-    val v = vRead.map(_ + 1).getOrElse(0L)
     // bases for inserted rows (NULL physical id → base + row_index);
     // no-op when tracking is off
-    val pre = logState(spark, table)
-    val (st2c, pr2c) = allocRowIds(pre, s)
-    writeCommit(spark, table, Commit(v, "merge", s.files, touched,
+    val (st2c, pr2c) = allocRowIds(read, s)
+    commitOn(spark, table, read)(v => Commit(v, "merge", s.files, touched,
       schema.toDDL, System.currentTimeMillis(), stats = st2c,
-      sizes = s.sizes, props = pr2c), pre)
-    v
+      sizes = s.sizes, props = pr2c))
   }
 
-  /** Post-rewrite id assignment for ops that do not materialize
-    * (replaceWhere; merges on non-preserving layouts): a metadata-only
-    * backfill commit, skipped when the table does not track rows or
-    * nothing needs ids. */
-  private def maybeBackfillAfterRewrite(spark: SparkSession,
-      table: String): Unit =
-    if (rowTrackingEnabled(spark, table))
-      try { backfillRowIds(spark, table); () }
+  /** [[rebaseOnConflict]] for the rewrites that do not materialize row
+    * ids (replaceWhere; merges on non-preserving layouts): when the
+    * winning attempt's state tracks rows, a metadata-only backfill
+    * commit follows (skipped when nothing needs ids). */
+  private def rebaseThenBackfill(spark: SparkSession, table: String,
+      op: String)(attempt: Option[TableState] => Long): Long = {
+    var tracked = false
+    val v = rebaseOnConflict(spark, table, op) { st =>
+      tracked = st.exists(s => tracksRows(s.props))
+      attempt(st)
+    }
+    if (tracked)
+      try backfillRowIds(spark, table)
       catch { case scala.util.control.NonFatal(e) =>
         // The rewrite itself committed; a failed backfill only leaves
         // the rewritten rows with NULL ids (changesByRowId then reports
@@ -4659,6 +4601,8 @@ object GraftLog {
             s"$table — rewritten rows carry NULL row ids until the " +
             s"next successful backfill/compact: ${e.getMessage}")
       }
+    v
+  }
 
   /** Idempotent transactional MERGE for streaming upsert sinks — the
     * [[txnAppend]] ledger contract applied to [[merge]]: a re-delivered
@@ -4666,34 +4610,17 @@ object GraftLog {
     * MERGE INTO a Delta table" shape (foreachBatch + idempotent
     * write). */
   def txnMerge(source: DataFrame, table: String, keys: Seq[String],
-      appId: String, batchId: Long): Long = {
-    val spark = source.sparkSession
-    // txnMerge reaches mergeImpl directly (bypassing merge()'s guard),
-    // so the append-only contract must be re-checked here: a streaming
-    // upsert sink can rewrite rows just like a batch MERGE.
-    requireAppendable(spark, table, "MERGE (streaming txn)")
-    // Check-then-act loop: on a commit conflict the merge's file-pruned
-    // rewrite is stale (it was computed against the pre-conflict
-    // snapshot), so unlike txnAppend the WHOLE merge recomputes from the
-    // fresh snapshot — after re-checking whether the re-delivered batch
-    // landed via the competing commit.
-    var result: Option[Long] = None
-    var attempts = 0
-    while (result.isEmpty) {
-      if (lastCommittedBatch(spark, table, appId).exists(_ >= batchId))
-        result = Some(-1L)
-      else try {
-        result = Some(mergeImpl(source, table, keys, Some((appId, batchId))))
-      } catch {
-        // re-check ledger, then redo the whole file-pruned rewrite from
-        // the fresh snapshot — bounded, since each retry repeats it
-        case _: CommitConflictException =>
-          backoffOrGiveUp(attempts, table, "txnMerge")
-      }
-      attempts += 1
+      appId: String, batchId: Long): Long =
+    // on a commit conflict the merge's file-pruned rewrite is stale, so
+    // unlike txnAppend the WHOLE merge recomputes from the fresh state —
+    // after re-checking, on that state, the append-only gate (a
+    // streaming upsert sink rewrites rows like a batch MERGE) and
+    // whether the re-delivered batch landed via the competing commit
+    rebaseOnConflict(source.sparkSession, table, "txnMerge") { st =>
+      requireAppendable(table, "MERGE (streaming txn)", st)
+      if (landed(st, (appId, batchId))) -1L
+      else mergeImpl(source, table, keys, Some((appId, batchId)), st)
     }
-    result.get
-  }
 
   /** MERGE autoMerge widening (Delta `schema.autoMerge.enabled`):
     * source-only columns extend the commit schema; shared columns
@@ -4717,28 +4644,24 @@ object GraftLog {
   }
 
   private def mergeImpl(source: DataFrame, table: String, keys: Seq[String],
-      txn: Option[(String, Long)], updateMatched: Boolean = true,
-      insertUnmatched: Boolean = true,
+      txn: Option[(String, Long)], read: Option[TableState],
+      updateMatched: Boolean = true, insertUnmatched: Boolean = true,
       deleteUnmatchedBySource: Boolean = false,
       mergeSchema: Boolean = false): Long = {
     require(updateMatched || insertUnmatched || deleteUnmatchedBySource,
       "merge needs at least one clause")
     val spark = source.sparkSession
-    // commit at readVersion+1 (see commitOverwrite): any commit landing
-    // after this read collides and routes through the caller's loop
-    val vRead = latestVersion(spark, table)
-    requireNoDvs(spark, table, "merge")
+    val st = existing(table, read)
+    requireNoDvs(st, "merge")
     // identity allocation inside a MERGE would need per-clause
     // bookkeeping (inserted rows allocate, updated rows keep) — loud
     // beats a half-right id column; route inserts through append
-    require(!generatedColumns(spark, table).values
-        .exists(identityDef(_).isDefined),
+    require(!st.generated.values.exists(identityDef(_).isDefined),
       s"MERGE into $table is not supported while it has a GENERATED " +
         "ALWAYS AS IDENTITY column; append new rows instead (identity " +
         "values are engine-allocated there)")
-    val (files, schema0) = snapshot(spark, table)
+    val (files, schema0, cmap) = (st.files, st.schema, st.colMap)
     val partCols = layoutPartCols(files)
-    val cmap = columnMapping(spark, table)
     // MERGE schema evolution (Delta autoMerge): source columns absent
     // from the target WIDEN the commit schema; untouched files simply
     // lack them and the schema-directed read fills typed NULLs — the
@@ -4752,8 +4675,7 @@ object GraftLog {
     // that omits generated columns gets them computed first (the batch
     // shape Delta's MERGE accepts on generated tables).
     val src = toPhysicalDf(
-      enforceSchema(applyGenerated(source,
-        generatedColumns(spark, table), "merge"),
+      enforceSchema(applyGenerated(source, st.generated, "merge"),
         logicalSchema(schema, cmap), "merge"),
       schema, cmap)
     val keysPhys = keys.map(physNameOf(cmap, _))
@@ -4788,12 +4710,10 @@ object GraftLog {
     // and receive base + row_index from the commit's allocRowIds, so
     // fresh ids are monotone past the high water and can never collide
     // with a preserved one
-    val tracked = partCols.isEmpty && cmap.isEmpty &&
-      rowTrackingEnabled(spark, table)
+    val tracked = partCols.isEmpty && cmap.isEmpty && tracksRows(st.props)
 
     val updated = if (touched.isEmpty) None else {
-      val t = if (tracked)
-        readWithRowIds(spark, table, only = Some(touched.toSet))
+      val t = if (tracked) rowIdRead(spark, table, st, Some(touched.toSet))
       else readSubset(spark, table, touched, schema)
       val joined = t.join(broadcast(marked), keysPhys, "left_outer")
       // NOT MATCHED BY SOURCE DELETE drops the unmatched rows instead of
@@ -4831,8 +4751,7 @@ object GraftLog {
     // carried-through rows of touched files were validated when first
     // written; re-checking them costs only touched-file scans)
     enforceChecks(if (tracked) rewritten
-      else toLogicalDf(rewritten, schema, cmap),
-      checkConstraints(spark, table), "merge")
+      else toLogicalDf(rewritten, schema, cmap), st.checks, "merge")
     // a partitioned target re-stages hive-partitioned, so the rewrite
     // keeps the layout (files land back under their col=val dirs); a
     // no-op merge (nothing touched, no insert clause) stages nothing
@@ -4843,16 +4762,13 @@ object GraftLog {
       else if (partCols.nonEmpty) stagePartitionedWithStats(
         withHiddenPartCols(rewritten, partCols), table, partCols)
       else stageWithStats(rewritten, table)
-    val v = vRead.map(_ + 1).getOrElse(0L)
     // bases for the staged files: inserted rows (NULL physical id)
     // resolve to base + row_index; materialized ids win by coalesce.
     // No-op map when tracking is off (plain props inheritance).
-    val pre = logState(spark, table)
-    val (st2, pr2) = allocRowIds(pre, s)
-    writeCommit(spark, table, Commit(v, "merge", s.files, touched,
+    val (st2, pr2) = allocRowIds(read, s)
+    commitOn(spark, table, read)(v => Commit(v, "merge", s.files, touched,
       schema.toDDL, System.currentTimeMillis(), txn, stats = st2,
-      sizes = s.sizes, props = pr2), pre)
-    v
+      sizes = s.sizes, props = pr2))
   }
 
   /** Predicate DELETE, file-pruned like [[merge]]: files with no matching
@@ -4861,15 +4777,15 @@ object GraftLog {
     * NULL-predicate rows (e.g. `tag = 'x'` on a NULL tag) are KEPT, so
     * the kept-rows filter coalesces NULL to false before negating
     * (a bare `!predicate` filter would drop them). */
-  def delete(spark: SparkSession, table: String, predicate: Column): Long = {
-    requireAppendable(spark, table, "DELETE")
-    rebaseOnConflict(table, "delete") { () =>
-      deleteOnce(spark, table, predicate)
+  def delete(spark: SparkSession, table: String, predicate: Column): Long =
+    rebaseOnConflict(spark, table, "delete") { st =>
+      requireAppendable(table, "DELETE", st)
+      deleteOnce(spark, table, predicate, existing(table, st))
     }
-  }
 
-  /** Probe for files holding rows matching `predicate`, THROUGH the
-    * planner-integrated FileIndex: the pushed-down predicate prunes
+  /** Probe for files of the state `st` holding rows matching
+    * `predicate`, THROUGH the planner-integrated FileIndex (pinned to
+    * `st`): the pushed-down predicate prunes
     * stat-disjoint files, Bloom-negative files, and non-matching
     * partition dirs BEFORE any data is read (the t8/t10/t18 machinery,
     * now applied to DML). On a range-clustered 100 TB table,
@@ -4878,14 +4794,14 @@ object GraftLog {
     * to the subset probe under an active column mapping (the index
     * refuses mapped scans by design). */
   private def probeTouched(spark: SparkSession, table: String,
-      files: Seq[String], schema: StructType, cmap: Map[String, String],
-      predicate: Column): Seq[String] =
+      st: TableState, predicate: Column): Seq[String] = {
+    val (files, schema, cmap) = (st.files, st.schema, st.colMap)
     if (cmap.nonEmpty)
       touchedFiles(spark, table, files, schema,
         df => toLogicalDf(df, schema, cmap, keep = Seq("__gf_file"))
           .filter(predicate))
     else {
-      val rels = GraftFileIndex.read(spark, table)
+      val rels = GraftFileIndex.readState(spark, table, st)
         .filter(predicate)
         .select(input_file_name().as("__gf_file")).distinct()
         .collect()
@@ -4893,31 +4809,26 @@ object GraftLog {
         .toSet
       files.filter(f => relPathOf(absPath(table, f)).exists(rels.contains))
     }
+  }
 
   private def deleteOnce(spark: SparkSession, table: String,
-      predicate: Column): Long = {
-    // commit at readVersion+1 (see commitOverwrite): any commit landing
-    // after this read collides and routes through the rebase loop
-    val vRead = latestVersion(spark, table)
-    requireNoDvs(spark, table, "delete")
-    val (files, schema) = snapshot(spark, table)
+      predicate: Column, st: TableState): Long = {
+    requireNoDvs(st, "delete")
+    val (files, schema, cmap) = (st.files, st.schema, st.colMap)
     val partCols = layoutPartCols(files)
-    val cmap = columnMapping(spark, table)
     // the predicate references LOGICAL names; probe and rewrite expose
     // them over the physical scan (mapping implies a flat layout)
-    val touched = probeTouched(spark, table, files, schema, cmap,
-      predicate)
+    val touched = probeTouched(spark, table, st, predicate)
     val s = if (touched.isEmpty) Staged(Seq.empty, Map.empty, Map.empty)
     else {
       // row tracking: survivors of the rewritten files keep their ids
       // by MATERIALIZATION (the compact mechanism applied to DML —
       // Delta's row-id preservation); flat un-mapped layouts only,
       // like readWithRowIds itself
-      val tracked = partCols.isEmpty && cmap.isEmpty &&
-        rowTrackingEnabled(spark, table)
+      val tracked = partCols.isEmpty && cmap.isEmpty && tracksRows(st.props)
       val kept =
         if (tracked)
-          readWithRowIds(spark, table, only = Some(touched.toSet))
+          rowIdRead(spark, table, st, Some(touched.toSet))
             .filter(!coalesce(predicate, lit(false)))
         else toPhysicalDf(
           toLogicalDf(readSubset(spark, table, touched, schema), schema,
@@ -4926,11 +4837,9 @@ object GraftLog {
         withHiddenPartCols(kept, partCols), table, partCols)
       else stageWithStats(kept, table)
     }
-    val v = vRead.map(_ + 1).getOrElse(0L)
-    writeCommit(spark, table, Commit(v, "delete", s.files, touched,
-      schema.toDDL, System.currentTimeMillis(), stats = s.stats,
+    commitOn(spark, table, Some(st))(v => Commit(v, "delete", s.files,
+      touched, schema.toDDL, System.currentTimeMillis(), stats = s.stats,
       sizes = s.sizes))
-    v
   }
 
   /** DELETE the rows whose key tuple appears in `keys` — the FRAME
@@ -4955,21 +4864,19 @@ object GraftLog {
     * simply never probed). */
   def deleteMatching(spark: SparkSession, table: String,
       keys: DataFrame, keyCols: Seq[String],
-      prune: Option[Column] = None): Long = {
-    requireAppendable(spark, table, "DELETE (keyed)")
-    rebaseOnConflict(table, "deleteMatching") { () =>
-      deleteMatchingOnce(spark, table, keys, keyCols, prune)
+      prune: Option[Column] = None): Long =
+    rebaseOnConflict(spark, table, "deleteMatching") { st =>
+      requireAppendable(table, "DELETE (keyed)", st)
+      deleteMatchingOnce(spark, table, keys, keyCols, prune,
+        existing(table, st))
     }
-  }
 
   private def deleteMatchingOnce(spark: SparkSession, table: String,
-      keys: DataFrame, keyCols: Seq[String],
-      prune: Option[Column] = None): Long = {
-    val vRead = latestVersion(spark, table)
-    requireNoDvs(spark, table, "delete")
-    val (files, schema) = snapshot(spark, table)
+      keys: DataFrame, keyCols: Seq[String], prune: Option[Column],
+      st: TableState): Long = {
+    requireNoDvs(st, "delete")
+    val (files, schema, cmap) = (st.files, st.schema, st.colMap)
     val partCols = layoutPartCols(files)
-    val cmap = columnMapping(spark, table)
     val logicalNames = logicalSchema(schema, cmap).fieldNames
     keyCols.foreach(c => require(
       logicalNames.exists(_.equalsIgnoreCase(c)),
@@ -4983,7 +4890,7 @@ object GraftLog {
               (d, p) => d.filter(p))
             .join(keyset, keyCols, "left_semi"))
       else {
-        val rels = prune.foldLeft(GraftFileIndex.read(spark, table))(
+        val rels = prune.foldLeft(GraftFileIndex.readState(spark, table, st))(
             (d, p) => d.filter(p))
           .withColumn("__gf_file", input_file_name())
           .join(keyset, keyCols, "left_semi")
@@ -4996,14 +4903,13 @@ object GraftLog {
       }
     val s = if (touched.isEmpty) Staged(Seq.empty, Map.empty, Map.empty)
     else {
-      val tracked = partCols.isEmpty && cmap.isEmpty &&
-        rowTrackingEnabled(spark, table)
+      val tracked = partCols.isEmpty && cmap.isEmpty && tracksRows(st.props)
       // anti-join equality: null-keyed rows never match, so they are
       // kept — the same outcome the predicate path's
       // `!coalesce(pred, false)` null discipline produces for isin
       val kept =
         if (tracked)
-          readWithRowIds(spark, table, only = Some(touched.toSet))
+          rowIdRead(spark, table, st, Some(touched.toSet))
             .join(keyset, keyCols, "left_anti")
         else toPhysicalDf(
           toLogicalDf(readSubset(spark, table, touched, schema), schema,
@@ -5012,11 +4918,9 @@ object GraftLog {
         withHiddenPartCols(kept, partCols), table, partCols)
       else stageWithStats(kept, table)
     }
-    val v = vRead.map(_ + 1).getOrElse(0L)
-    writeCommit(spark, table, Commit(v, "delete", s.files, touched,
-      schema.toDDL, System.currentTimeMillis(), stats = s.stats,
+    commitOn(spark, table, Some(st))(v => Commit(v, "delete", s.files,
+      touched, schema.toDDL, System.currentTimeMillis(), stats = s.stats,
       sizes = s.sizes))
-    v
   }
 
   /** Delta `replaceWhere`: atomically replace EXACTLY the rows matching
@@ -5040,21 +4944,16 @@ object GraftLog {
     * DVs must be compacted away first, like every file-rewriting op. */
   def replaceWhere(df: DataFrame, table: String,
       predicate: Column): Long =
-    {
-    // replaceWhere removes every row in the slice — an append-only
-    // table must refuse it like any other overwrite.
-    requireAppendable(df.sparkSession, table, "replaceWhere")
-    val v = rebaseOnConflict(table, "replaceWhere") { () =>
-      replaceWhereOnce(df, table, predicate)
+    rebaseThenBackfill(df.sparkSession, table, "replaceWhere") { st =>
+      // replaceWhere removes every row in the slice — an append-only
+      // table must refuse it like any other overwrite.
+      requireAppendable(table, "replaceWhere", st)
+      replaceWhereOnce(df, table, predicate, st)
     }
-    maybeBackfillAfterRewrite(df.sparkSession, table)
-    v
-  }
 
   private def replaceWhereOnce(df: DataFrame, table: String,
-      predicate: Column): Long = {
+      predicate: Column, read: Option[TableState]): Long = {
     val spark = df.sparkSession
-    val vRead = latestVersion(spark, table)
     def requireInside(batch: DataFrame): Unit =
       require(batch.filter(!coalesce(predicate, lit(false)))
           .limit(1).isEmpty,
@@ -5062,24 +4961,22 @@ object GraftLog {
           "replace predicate — they lie outside the slice being " +
           "replaced and a re-run would duplicate them (Delta's " +
           "replaceWhere constraint)")
-    if (vRead.isEmpty) { requireInside(df); return overwrite(df, table) }
-    requireNoDvs(spark, table, "replaceWhere")
-    val (files, schema) = snapshot(spark, table)
+    if (read.isEmpty) { requireInside(df); return overwrite(df, table) }
+    val st = read.get
+    requireNoDvs(st, "replaceWhere")
+    val (files, schema, cmap) = (st.files, st.schema, st.colMap)
     val partCols = layoutPartCols(files)
-    val cmap = columnMapping(spark, table)
     // batch discipline mirrors [[append]]: generated columns compute
     // (identity values allocated above the current mark), then
     // LOGICAL-schema enforcement, then CHECK constraints
-    val gens0 = generatedColumns(spark, table)
+    val gens0 = st.generated
     val (dfG, gens2) = allocateIdentity(spark,
       applyGenerated(df, gens0, "replaceWhere"), gens0)
     val logicalOk =
       enforceSchema(dfG, logicalSchema(schema, cmap), "replaceWhere")
-    enforceChecks(logicalOk, checkConstraints(spark, table),
-      "replaceWhere")
+    enforceChecks(logicalOk, st.checks, "replaceWhere")
     requireInside(logicalOk)
-    val touched = probeTouched(spark, table, files, schema, cmap,
-      predicate)
+    val touched = probeTouched(spark, table, st, predicate)
     // survivors of partial files (predicate misses) are carried into
     // the replacement stage alongside the new batch; files the probe
     // did not touch are never read or rewritten
@@ -5091,12 +4988,10 @@ object GraftLog {
       if (partCols.nonEmpty) stagePartitionedWithStats(
         withHiddenPartCols(replacement, partCols), table, partCols)
       else stageWithStats(replacement, table)
-    val v = vRead.get + 1
-    writeCommit(spark, table, Commit(v, "replace_where", s.files,
+    commitOn(spark, table, read)(v => Commit(v, "replace_where", s.files,
       touched, schema.toDDL, System.currentTimeMillis(),
       stats = s.stats, sizes = s.sizes,
       generated = if (gens2 != gens0) gens2 else Map.empty))
-    v
   }
 
   private val DvDirName = "_dv"
@@ -5136,15 +5031,13 @@ object GraftLog {
     * 100 TB lake is exactly where a GDPR erasure runs); predicates may
     * reference partition columns, which additionally prune the scan. */
   def deleteVectors(spark: SparkSession, table: String,
-      predicate: Column): Long = {
-    requireAppendable(spark, table, "DELETE (deletion vectors)")
-    rebaseOnConflict(table, "deleteVectors") {
-    () =>
+      predicate: Column): Long =
+    rebaseOnConflict(spark, table, "deleteVectors") { read =>
+    requireAppendable(table, "DELETE (deletion vectors)", read)
     // (file, row_index) positions key on the snapshot's file set, so a
     // lost claim race re-harvests them from the fresh snapshot
-    val vRead = latestVersion(spark, table)
-    val (files, schema) = snapshot(spark, table)
-    val cmap = columnMapping(spark, table)
+    val st = existing(table, read)
+    val (files, schema, cmap) = (st.files, st.schema, st.colMap)
     val rel = s"$DvDirName/${UUID.randomUUID()}"
     // the predicate references LOGICAL names; positions are name-free
     val scan = dvScan(spark, table, files, schema)
@@ -5157,8 +5050,7 @@ object GraftLog {
       .filter(col("__gf_hit"))
       .select(col("file_rel"), col("row_idx"))
       .write.parquet(s"$table/$rel")
-    commitDvDir(spark, table, rel, schema, vRead)
-  }
+    commitDvDir(spark, table, rel, st)
   }
 
   /** [[deleteVectors]] with the match set given as a KEY FRAME instead
@@ -5168,12 +5060,11 @@ object GraftLog {
     * downstream (sidecar, commit, read-time mask, compaction) is
     * identical. */
   def deleteVectorsMatching(spark: SparkSession, table: String,
-      keys: DataFrame, keyCols: Seq[String]): Long = {
-    requireAppendable(spark, table, "DELETE (deletion vectors)")
-    rebaseOnConflict(table, "deleteVectorsMatching") { () =>
-    val vRead = latestVersion(spark, table)
-    val (files, schema) = snapshot(spark, table)
-    val cmap = columnMapping(spark, table)
+      keys: DataFrame, keyCols: Seq[String]): Long =
+    rebaseOnConflict(spark, table, "deleteVectorsMatching") { read =>
+    requireAppendable(table, "DELETE (deletion vectors)", read)
+    val st = existing(table, read)
+    val (files, schema, cmap) = (st.files, st.schema, st.colMap)
     val logicalNames = logicalSchema(schema, cmap).fieldNames
     keyCols.foreach(c => require(
       logicalNames.exists(_.equalsIgnoreCase(c)),
@@ -5189,28 +5080,24 @@ object GraftLog {
         keyCols, "left_semi")
       .select(col("file_rel"), col("row_idx"))
       .write.parquet(s"$table/$rel")
-    commitDvDir(spark, table, rel, schema, vRead)
-  }
+    commitDvDir(spark, table, rel, st)
   }
 
   /** Shared DV-commit tail: list the staged sidecar files, commit them
-    * as dvAdd entries. */
+    * as dvAdd entries on the state `st` the positions came from. */
   private def commitDvDir(spark: SparkSession, table: String, rel: String,
-      schema: StructType, vRead: Option[Long]): Long = {
+      st: TableState): Long = {
     val f = fs(spark, table)
     val dvFiles = f.listStatus(new HPath(s"$table/$rel")).toSeq
       .map(_.getPath.getName)
       .filter(n => n.endsWith(".parquet") && !n.startsWith("."))
       .sorted.map(n => s"$rel/$n")
-    val v = vRead.map(_ + 1).getOrElse(0L)
-    writeCommit(spark, table, Commit(v, "deleteVectors", Seq.empty,
-      Seq.empty, schema.toDDL, System.currentTimeMillis(),
+    commitOn(spark, table, Some(st))(v => Commit(v, "deleteVectors",
+      Seq.empty, Seq.empty, st.schema.toDDL, System.currentTimeMillis(),
       dvAdd = dvFiles,
       // first DV commit declares the reader feature atomically: an
       // engine that would ignore the masks must refuse the table
-      props = withFeature(properties(spark, table), ReaderFeaturesKey,
-        "deletionVectors")))
-    v
+      props = withFeature(st.props, ReaderFeaturesKey, "deletionVectors")))
   }
 
   /** Rows masked by the active deletion vectors removed: base scan with
@@ -5235,9 +5122,8 @@ object GraftLog {
 
   /** Guard for file-rewriting ops: a rewrite computed without DV
     * filtering would resurrect deleted rows — loud beats wrong. */
-  private def requireNoDvs(spark: SparkSession, table: String,
-      op: String): Unit =
-    require(deletionVectors(spark, table).isEmpty,
+  private def requireNoDvs(st: TableState, op: String): Unit =
+    require(st.dvs.isEmpty,
       s"$op on a table with active deletion vectors is not supported; " +
         "run compact() first to materialize them")
 
@@ -5249,20 +5135,18 @@ object GraftLog {
     * flat and hive-partitioned layouts (an update that changes a
     * partition column moves the row's file). */
   def update(spark: SparkSession, table: String, condition: Column,
-      sets: Seq[(String, Column)]): Long = {
-    requireAppendable(spark, table, "UPDATE")
-    rebaseOnConflict(table, "update") { () =>
-      updateOnce(spark, table, condition, sets)
+      sets: Seq[(String, Column)]): Long =
+    rebaseOnConflict(spark, table, "update") { st =>
+      requireAppendable(table, "UPDATE", st)
+      updateOnce(spark, table, condition, sets, existing(table, st))
     }
-  }
 
   private def updateOnce(spark: SparkSession, table: String,
-      condition: Column, sets: Seq[(String, Column)]): Long = {
-    val vRead = latestVersion(spark, table)
-    requireNoDvs(spark, table, "update")
-    val (files, schema) = snapshot(spark, table)
+      condition: Column, sets: Seq[(String, Column)],
+      st: TableState): Long = {
+    requireNoDvs(st, "update")
+    val (files, schema, cmap) = (st.files, st.schema, st.colMap)
     val partCols = layoutPartCols(files)
-    val cmap = columnMapping(spark, table)
     val logical = logicalSchema(schema, cmap)
     sets.foreach { case (c, _) =>
       require(logical.fieldNames.exists(_.equalsIgnoreCase(c)),
@@ -5271,16 +5155,14 @@ object GraftLog {
     }
     // condition and set expressions reference LOGICAL names; the probe
     // goes through the stat/Bloom/partition-pruned FileIndex
-    val touched = probeTouched(spark, table, files, schema, cmap,
-      condition)
+    val touched = probeTouched(spark, table, st, condition)
     val s = if (touched.isEmpty) Staged(Seq.empty, Map.empty, Map.empty)
     else {
       val matched = coalesce(condition, lit(false))
       // row tracking: an UPDATE changes values, not identity — rows of
       // rewritten files keep their ids by materialization (flat
       // un-mapped layouts, like readWithRowIds)
-      val tracked = partCols.isEmpty && cmap.isEmpty &&
-        rowTrackingEnabled(spark, table)
+      val tracked = partCols.isEmpty && cmap.isEmpty && tracksRows(st.props)
       def applySets(in: DataFrame, extra: Seq[Column]): DataFrame =
         in.select(logical.fields.map { f =>
           sets.find(_._1.equalsIgnoreCase(f.name)) match {
@@ -5292,24 +5174,21 @@ object GraftLog {
         }.toSeq ++ extra: _*)
       val rewritten =
         if (tracked)
-          applySets(readWithRowIds(spark, table,
-            only = Some(touched.toSet)), Seq(col(RowIdCol)))
+          applySets(rowIdRead(spark, table, st, Some(touched.toSet)),
+            Seq(col(RowIdCol)))
         else toPhysicalDf(
           applySets(toLogicalDf(
             readSubset(spark, table, touched, schema), schema, cmap),
             Seq.empty), schema, cmap)
       enforceChecks(if (tracked) rewritten
-        else toLogicalDf(rewritten, schema, cmap),
-        checkConstraints(spark, table), "update")
+        else toLogicalDf(rewritten, schema, cmap), st.checks, "update")
       if (partCols.nonEmpty) stagePartitionedWithStats(
         withHiddenPartCols(rewritten, partCols), table, partCols)
       else stageWithStats(rewritten, table)
     }
-    val v = vRead.map(_ + 1).getOrElse(0L)
-    writeCommit(spark, table, Commit(v, "update", s.files, touched,
-      schema.toDDL, System.currentTimeMillis(), stats = s.stats,
+    commitOn(spark, table, Some(st))(v => Commit(v, "update", s.files,
+      touched, schema.toDDL, System.currentTimeMillis(), stats = s.stats,
       sizes = s.sizes))
-    v
   }
 
   /** OPTIMIZE-style compaction: rewrite the CURRENT live file set into
@@ -5324,13 +5203,11 @@ object GraftLog {
     * appends create (each [[txnAppend]] micro-batch lands its own
     * files). */
   def compact(spark: SparkSession, table: String,
-      targetFiles: Int = 1): Long = rebaseOnConflict(table, "compact") {
-    () =>
-    val vRead = latestVersion(spark, table)
-    val (files, schema) = snapshot(spark, table)
+      targetFiles: Int = 1): Long =
+      rebaseOnConflict(spark, table, "compact") { read =>
+    val st = existing(table, read)
+    val (files, schema, dvs, cmap) = (st.files, st.schema, st.dvs, st.colMap)
     val partCols = layoutPartCols(files)
-    val dvs = deletionVectors(spark, table)
-    val cmap = columnMapping(spark, table)
     // "compact" is a mapping-authoritative op whose commit carries an
     // empty colMap: the rewrite below stages files under the LOGICAL
     // names, MATERIALIZING renames/drops (Delta's rewrite-on-OPTIMIZE
@@ -5347,8 +5224,7 @@ object GraftLog {
         // files carry their ids in the data, so the base-per-file
         // mapping the rewrite invalidates is no longer needed
         val current =
-          if (rowTrackingEnabled(spark, table))
-            readWithRowIds(spark, table)
+          if (tracksRows(st.props)) rowIdRead(spark, table, st, None)
           else toLogicalDf(
             if (dvs.nonEmpty) readWithDvs(spark, table, files, schema, dvs)
             else spark.read.schema(schema)
@@ -5372,11 +5248,9 @@ object GraftLog {
         stagePartitionedWithStats(
           current.repartition(partCols.map(col): _*), table, partCols)
       }
-    val v = vRead.map(_ + 1).getOrElse(0L)
-    writeCommit(spark, table, Commit(v, "compact", s.files, files,
+    commitOn(spark, table, read)(v => Commit(v, "compact", s.files, files,
       outSchema.toDDL, System.currentTimeMillis(), stats = s.stats,
       sizes = s.sizes, dvRemove = dvs))
-    v
   }
 
   /** `OPTIMIZE t WHERE <partition predicate>` — partition-SCOPED
@@ -5394,12 +5268,11 @@ object GraftLog {
     * purged first ([[reorgPurge]]) — a scoped rewrite with live masks
     * elsewhere would leave the vector set ambiguous. */
   def compactWhere(spark: SparkSession, table: String,
-      predicate: Column): Long = rebaseOnConflict(table, "compactWhere") {
-    () =>
-    val vRead = latestVersion(spark, table)
-    require(vRead.nonEmpty, s"$table is not a GraftLog table")
-    requireNoDvs(spark, table, "compactWhere")
-    val (files, schema) = snapshot(spark, table)
+      predicate: Column): Long =
+      rebaseOnConflict(spark, table, "compactWhere") { read =>
+    val st = existing(table, read)
+    requireNoDvs(st, "compactWhere")
+    val (files, schema) = (st.files, st.schema)
     val partCols = layoutPartCols(files)
     require(partCols.nonEmpty,
       "OPTIMIZE … WHERE targets a hive-partitioned table; use " +
@@ -5435,17 +5308,15 @@ object GraftLog {
               s"(${partCols.mkString(",")}) only: ${e.getMessage}", e)
       }
     val selected = files.filter(f => matching.contains(tupleOf(f)))
-    if (selected.isEmpty) vRead.get // nothing in scope: no empty commit
+    if (selected.isEmpty) st.version // nothing in scope: no empty commit
     else {
       val base = readSubset(spark, table, selected, schema)
       val current = withHiddenPartCols(base, partCols)
       val s = stagePartitionedWithStats(
         current.repartition(partCols.map(col): _*), table, partCols)
-      val v = vRead.get + 1
-      writeCommit(spark, table, Commit(v, "compact", s.files, selected,
-        schema.toDDL, System.currentTimeMillis(), stats = s.stats,
-        sizes = s.sizes))
-      v
+      commitOn(spark, table, read)(v => Commit(v, "compact", s.files,
+        selected, schema.toDDL, System.currentTimeMillis(),
+        stats = s.stats, sizes = s.sizes))
     }
   }
 
@@ -5495,16 +5366,19 @@ object GraftLog {
     * masks), column mapping (files carry physical names), and hidden
     * bucket dirs (`gfb…=` would masquerade as a partition column).
     * Returns the manifest paths written. */
-  def generateManifest(spark: SparkSession, table: String): Seq[String] = {
-    require(latestVersion(spark, table).nonEmpty,
-      s"$table is not a GraftLog table (no $LogDirName)")
-    require(deletionVectors(spark, table).isEmpty,
+  def generateManifest(spark: SparkSession, table: String): Seq[String] =
+    writeManifest(spark, table, stateAt(spark, table))
+
+  /** [[generateManifest]] of the state `st`. */
+  private def writeManifest(spark: SparkSession, table: String,
+      st: TableState): Seq[String] = {
+    require(st.dvs.isEmpty,
       "generateManifest: table has active deletion vectors — a symlink " +
         "reader cannot apply them; REORG TABLE … APPLY (PURGE) first")
-    require(columnMapping(spark, table).isEmpty,
+    require(st.colMap.isEmpty,
       "generateManifest: table uses column mapping — data files carry " +
         "physical column names external readers would misread")
-    val (files, _) = snapshot(spark, table)
+    val files = st.files
     require(!files.exists(_.split('/').exists(seg =>
         HiddenBucketDir.matches(seg.takeWhile(_ != '=')))),
       "generateManifest: hidden bucket-transform dirs would masquerade " +
@@ -5533,13 +5407,16 @@ object GraftLog {
     * like auto-checkpointing — the commit is already durable; a failed
     * refresh logs a warning and the next data commit (or an explicit
     * GENERATE) repairs it. Metadata-only commits skip (the live set is
-    * unchanged). */
+    * unchanged). `after` is the state commit `c` produced, when known. */
   private def maybeUpdateManifest(spark: SparkSession, table: String,
-      c: Commit): Unit =
+      c: Commit, after: Option[TableState]): Unit =
     if (c.props.get("graft.symlinkManifest.autoUpdate")
         .exists(_.equalsIgnoreCase("true")) &&
         (c.add.nonEmpty || c.remove.nonEmpty))
-      try { generateManifest(spark, table); () }
+      try {
+        writeManifest(spark, table, after.getOrElse(stateAt(spark, table)))
+        ()
+      }
       catch { case scala.util.control.NonFatal(e) =>
         System.err.println(s"[graft] WARN: symlink manifest refresh of " +
           s"$table failed after v${c.version}: ${e.getMessage}") }
@@ -5599,8 +5476,8 @@ object GraftLog {
         // flat + unmapped by the guard above: materialize the stable
         // row ids into the compacted files, compact's OPTIMIZE-
         // preserves-row-ids contract
-        stageWithStats(readWithRowIds(spark, table,
-          only = Some(selected.toSet)).coalesce(1), table)
+        stageWithStats(rowIdRead(spark, table, st, Some(selected.toSet))
+          .coalesce(1), table)
       else if (partCols.isEmpty)
         stageWithStats(
           readSubset(spark, table, selected, schema).coalesce(1), table)
@@ -5612,11 +5489,9 @@ object GraftLog {
         stagePartitionedWithStats(
           base.repartition(partCols.map(col): _*), table, partCols)
       }
-    val v = st.version + 1
-    writeCommit(spark, table, Commit(v, "autocompact", s.files, selected,
-      schema.toDDL, System.currentTimeMillis(), stats = s.stats,
-      sizes = s.sizes), Some(st))
-    Some(v)
+    Some(commitOn(spark, table, Some(st))(v => Commit(v, "autocompact",
+      s.files, selected, schema.toDDL, System.currentTimeMillis(),
+      stats = s.stats, sizes = s.sizes)))
   }
 
   /** `REORG TABLE … APPLY (PURGE)` — Delta's TARGETED deletion-vector
@@ -5637,13 +5512,12 @@ object GraftLog {
     * with no active DVs is left as-is (returns the current version,
     * no empty commit). */
   def reorgPurge(spark: SparkSession, table: String): Long =
-    rebaseOnConflict(table, "reorg") { () =>
-      val vRead = latestVersion(spark, table)
-      require(vRead.nonEmpty, s"$table is not a GraftLog table")
-      val dvs = deletionVectors(spark, table)
-      if (dvs.isEmpty) vRead.get
+    rebaseOnConflict(spark, table, "reorg") { read =>
+      val st = existing(table, read)
+      val dvs = st.dvs
+      if (dvs.isEmpty) st.version
       else {
-        val (files, schema) = snapshot(spark, table)
+        val (files, schema) = (st.files, st.schema)
         val partCols = layoutPartCols(files)
         // files the masks touch — metadata-sized, like touchedFiles
         val masked = spark.read
@@ -5657,11 +5531,9 @@ object GraftLog {
           if (partCols.nonEmpty) stagePartitionedWithStats(
             withHiddenPartCols(purged, partCols), table, partCols)
           else stageWithStats(purged, table)
-        val v = vRead.get + 1
-        writeCommit(spark, table, Commit(v, "reorg", s.files, touched,
-          schema.toDDL, System.currentTimeMillis(), stats = s.stats,
-          sizes = s.sizes, dvRemove = dvs))
-        v
+        commitOn(spark, table, read)(v => Commit(v, "reorg", s.files,
+          touched, schema.toDDL, System.currentTimeMillis(),
+          stats = s.stats, sizes = s.sizes, dvRemove = dvs))
       }
     }
 
@@ -5791,36 +5663,29 @@ object GraftLog {
     * GDPR-erased — rows do not resurrect), and per-file Bloom bitmaps
     * are re-attached so file skipping survives the restore. */
   def restore(spark: SparkSession, table: String, v: Long): Long =
-      rebaseOnConflict(table, "restore") { () =>
+      rebaseOnConflict(spark, table, "restore") { read =>
     // restore can remove rows appended after the target version —
     // covered by the append-only contract like every destructive op.
-    requireAppendable(spark, table, "RESTORE")
+    requireAppendable(table, "RESTORE", read)
     // MV lifecycle: a rewind invalidates any registration this path
     // participates in (as source OR view) — the maintenance ledger and
     // the delta log no longer describe the restored state
     graft.sql.MvRegistry.unregisterMatching(table)
-    val vRead = latestVersion(spark, table)
-    val (cur, _) = snapshot(spark, table)
-    val (files, schema) = snapshot(spark, table, Some(v))
-    val st = fileStats(spark, table, Some(v)).filter(_._2.nonEmpty)
-    val sz = fileSizes(spark, table, Some(v))
-    val targetDvs = deletionVectors(spark, table, Some(v))
-    val curDvs = deletionVectors(spark, table)
-    val bl = fileBlooms(spark, table, Some(v))
-    val nv = vRead.map(_ + 1).getOrElse(0L)
-    writeCommit(spark, table, Commit(nv, "restore", files,
-      cur.filterNot(files.toSet), schema.toDDL,
-      System.currentTimeMillis(), stats = st, sizes = sz,
-      dvAdd = targetDvs.filterNot(curDvs.toSet),
-      dvRemove = curDvs.filterNot(targetDvs.toSet),
-      blooms = bl,
+    val cur = existing(table, read)
+    // the target version, replayed once with its stats and blooms
+    val tgt = stateAt(spark, table, Some(v), withStats = true)
+    commitOn(spark, table, read)(nv => Commit(nv, "restore", tgt.files,
+      cur.files.filterNot(tgt.files.toSet), tgt.schema.toDDL,
+      System.currentTimeMillis(), stats = tgt.stats.filter(_._2.nonEmpty),
+      sizes = tgt.sizes,
+      dvAdd = tgt.dvs.filterNot(cur.dvs.toSet),
+      dvRemove = cur.dvs.filterNot(tgt.dvs.toSet),
+      blooms = tgt.blooms,
       // restore re-points the column mapping and the constraint set at
       // the target version's — a restore across a rename/drop/ADD
       // CONSTRAINT reverts them, like every other piece of snapshot
       // state
-      colMap = columnMapping(spark, table, Some(v)),
-      checks = checkConstraints(spark, table, Some(v))))
-    nv
+      colMap = tgt.colMap, checks = tgt.checks))
   }
 
   /** Files ADDED by commit versions in `(fromExclusive, toInclusive]` —
@@ -5929,19 +5794,18 @@ object GraftLog {
   /** [[clusterBy]] over 2-4 columns (Delta's OPTIMIZE ZORDER arity). */
   def clusterByN(spark: SparkSession, table: String,
       cols0: Seq[String], targetFiles: Int): Long =
-      rebaseOnConflict(table, "clusterByN") { () =>
+      rebaseOnConflict(spark, table, "clusterByN") { read =>
     require(cols0.size >= 2 && cols0.size <= 4,
       s"z-order takes 2-4 columns, got ${cols0.size} " +
         s"(${cols0.mkString(", ")})")
-    val vRead = latestVersion(spark, table)
-    requireNoDvs(spark, table, "clusterBy")
-    val (files, schema) = snapshot(spark, table)
+    val st = existing(table, read)
+    requireNoDvs(st, "clusterBy")
+    val (files, schema) = (st.files, st.schema)
 
     val partCols = layoutPartCols(files)
     // callers name LOGICAL columns; the rewrite is physical throughout
     // (the "cluster" commit inherits the mapping unchanged)
-    val cmapZ = columnMapping(spark, table)
-    val zCols = cols0.map(physNameOf(cmapZ, _))
+    val zCols = cols0.map(physNameOf(st.colMap, _))
     zCols.zip(cols0).foreach { case (p, c) =>
       val f = schema.fields.find(_.name.equalsIgnoreCase(p))
       require(f.exists(fld => numericFields(
@@ -5988,11 +5852,9 @@ object GraftLog {
           .drop("__gf_z")
         stagePartitionedWithStats(rewritten, table, partCols)
       }
-    val v = vRead.map(_ + 1).getOrElse(0L)
-    writeCommit(spark, table, Commit(v, "cluster", s.files, files,
+    commitOn(spark, table, read)(v => Commit(v, "cluster", s.files, files,
       schema.toDDL, System.currentTimeMillis(), stats = s.stats,
       sizes = s.sizes))
-    v
   }
 
   /** Zcube-membership pseudo stats key — the per-file "this file is
@@ -6010,10 +5872,12 @@ object GraftLog {
 
   /** Live files already inside some [[clusterIncremental]] zcube. One
     * metadata replay (checkpoint-bounded), zero commit re-reads. */
-  def clusteredFiles(spark: SparkSession, table: String): Set[String] = {
+  def clusteredFiles(spark: SparkSession, table: String): Set[String] =
     ofState(spark, table, None, withStats = true, Set.empty[String])(
-      _.live.collect { case (f, st) if st.contains(ZcubeKey) => f }.toSet)
-  }
+      zcubeFiles)
+
+  private def zcubeFiles(st: TableState): Set[String] =
+    st.live.collect { case (f, s) if s.contains(ZcubeKey) => f }.toSet
 
   /** INCREMENTAL clustering — the Delta liquid-clustering analog
     * (`CLUSTER BY` + incremental OPTIMIZE), and the maintenance shape
@@ -6062,16 +5926,16 @@ object GraftLog {
       s"graft.clusterBy takes 1-4 columns, got ${clusterCols.size}")
     // rebaseOnConflict is Long-typed; -1 is the "steady state, nothing
     // unclustered" no-op sentinel
-    val committed = rebaseOnConflict(table, "clusterIncremental") { () =>
-      val vRead = latestVersion(spark, table)
-      requireNoDvs(spark, table, "clusterIncremental")
-      val (files, schema) = snapshot(spark, table)
+    val committed = rebaseOnConflict(spark, table, "clusterIncremental",
+        withStats = true) { read =>
+      val st = existing(table, read)
+      requireNoDvs(st, "clusterIncremental")
+      val (files, schema, cmap) = (st.files, st.schema, st.colMap)
       val partCols = layoutPartCols(files)
       require(partCols.isEmpty,
         s"$table is partitioned (${partCols.mkString(",")}): liquid " +
           "clustering replaces partitioning; use OPTIMIZE WHERE / " +
           "ZORDER BY on partitioned layouts")
-      val cmap = columnMapping(spark, table)
       val physCols = clusterCols.map(physNameOf(cmap, _))
       physCols.zip(clusterCols).foreach { case (p, c) =>
         require(schema.fieldNames.exists(_.equalsIgnoreCase(p)),
@@ -6083,16 +5947,15 @@ object GraftLog {
       // revisit a zcube, so a column change alone cannot)
       val candidates =
         if (full) files.sorted
-        else (files.toSet -- clusteredFiles(spark, table)).toSeq.sorted
+        else (files.toSet -- zcubeFiles(st)).toSeq.sorted
       if (candidates.size < minFiles) -1L
       else {
-        val tracked = rowTrackingEnabled(spark, table)
         val cur =
-          if (tracked) {
+          if (tracksRows(st.props)) {
             require(cmap.isEmpty,
               s"$table combines row tracking with column mapping; " +
                 "compact() first")
-            readWithRowIds(spark, table, only = Some(candidates.toSet))
+            rowIdRead(spark, table, st, Some(candidates.toSet))
           } else readSubset(spark, table, candidates, schema)
         val rewritten = cur
           .repartitionByRange(targetFiles, physCols.map(col): _*)
@@ -6103,11 +5966,9 @@ object GraftLog {
           f -> (s.stats.getOrElse(f,
             Map.empty[String, (Double, Double)]) +
             (ZcubeKey -> ((1.0, 1.0)))))
-        val v = vRead.map(_ + 1).getOrElse(0L)
-        writeCommit(spark, table, Commit(v, "cluster", s.files,
+        commitOn(spark, table, read)(v => Commit(v, "cluster", s.files,
           candidates, schema.toDDL, System.currentTimeMillis(),
           stats = stamped, sizes = s.sizes))
-        v
       }
     }
     if (committed < 0L) None else Some(committed)
@@ -6481,9 +6342,8 @@ object GraftLog {
     * retention window — Iceberg's expire_snapshots contract). */
   def createTag(spark: SparkSession, table: String, name: String,
       version: Option[Long] = None): Long =
-      rebaseOnConflict(table, "tag") { () =>
-    val vRead = latestVersion(spark, table)
-    require(vRead.nonEmpty, s"$table is not a graft table")
+      rebaseOnConflict(spark, table, "tag") { read =>
+    val st = existing(table, read)
     val all = versions(spark, table)
     val target = version.getOrElse(all.last)
     require(all.contains(target),
@@ -6496,31 +6356,26 @@ object GraftLog {
     require(!name.forall(_.isDigit),
       s"tag name '$name' is all digits — it would be shadowed by " +
         "numeric version resolution; include at least one non-digit")
-    val cur = tags(spark, table)
+    val cur = st.last.tags
     require(!cur.contains(name) || cur(name) == target,
       s"tag $name already names version ${cur(name)} of $table")
-    val v = vRead.get + 1
-    writeCommit(spark, table, Commit(v, "tag", Seq.empty, Seq.empty,
-      snapshot(spark, table)._2.toDDL, System.currentTimeMillis(),
+    commitOn(spark, table, read)(v => Commit(v, "tag", Seq.empty,
+      Seq.empty, st.schema.toDDL, System.currentTimeMillis(),
       tags = cur + (name -> target)))
-    v
   }
 
   /** Drop a tag — the version it named becomes expirable again. */
   def dropTag(spark: SparkSession, table: String, name: String): Long =
-      rebaseOnConflict(table, "untag") { () =>
-    val vRead = latestVersion(spark, table)
-    val cur = tags(spark, table)
+      rebaseOnConflict(spark, table, "untag") { read =>
+    val cur = read.fold(Map.empty[String, Long])(_.last.tags)
     require(cur.contains(name),
       s"no tag '$name' on $table (have ${cur.keys.toSeq.sorted
         .mkString(",")})")
-    val v = vRead.get + 1
     // authoritative op: an empty map from "untag" means "no tags",
     // never "inherit"
-    writeCommit(spark, table, Commit(v, "untag", Seq.empty, Seq.empty,
-      snapshot(spark, table)._2.toDDL, System.currentTimeMillis(),
+    commitOn(spark, table, read)(v => Commit(v, "untag", Seq.empty,
+      Seq.empty, read.get.schema.toDDL, System.currentTimeMillis(),
       tags = cur - name))
-    v
   }
 
   /** Resolve a tag to its version, failing loudly with the available
@@ -6582,16 +6437,12 @@ object GraftLog {
       files.filterNot(rel => f.exists(new HPath(absPath(table, rel))))
     val missing = missingOf(snapshot(spark, table)._1)
     if (!dryRun && missing.nonEmpty)
-      rebaseOnConflict(table, "fsck") { () =>
-        val vRead = latestVersion(spark, table)
+      rebaseOnConflict(spark, table, "fsck") { read =>
         // recompute inside the retry loop: a racing commit may have
         // already removed (or re-added) some of the entries
-        val (cur, sch) = snapshot(spark, table)
-        val m = missingOf(cur)
-        val v = vRead.map(_ + 1).getOrElse(0L)
-        writeCommit(spark, table, Commit(v, "fsck", Seq.empty, m,
-          sch.toDDL, System.currentTimeMillis()))
-        v
+        val st = existing(table, read)
+        commitOn(spark, table, read)(v => Commit(v, "fsck", Seq.empty,
+          missingOf(st.files), st.schema.toDDL, System.currentTimeMillis()))
       }
     missing.sorted
   }

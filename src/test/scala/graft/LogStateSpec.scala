@@ -177,4 +177,115 @@ class LogStateSpec extends AnyFunSuite {
     assert(GraftLog.read(spark, t).count() == 10 + 5 + 20)
     assert(GraftLog.properties(spark, t).get("graft.note").contains("raced"))
   }
+
+  test("an uncontended rewrite attempt lists the log once") {
+    import org.apache.spark.sql.functions.{col, lit}
+    import GraftLog.MergeClause
+    def listings[A](f: => A): Long = counted(f)._2("listings")
+    val t = table(4) // v0..v3
+    val once = Seq(
+      "merge" -> listings(GraftLog.merge(df(0 until 3, "m"), t, Seq("id"))),
+      "mergeClauses" -> listings(GraftLog.mergeClauses(df(3 until 6, "c"),
+        t, Seq("id"), matched = Seq(MergeClause.Update()),
+        notMatched = Seq(MergeClause.Insert()))),
+      "compact" -> listings(GraftLog.compact(spark, t)),
+      "deleteVectors" ->
+        listings(GraftLog.deleteVectors(spark, t, col("id") === 1)),
+      "reorgPurge" -> listings(GraftLog.reorgPurge(spark, t)),
+      "setProperties" -> listings(GraftLog.setProperties(spark, t,
+        Map("graft.note" -> "n"))),
+      // the file-index probe reads the attempt's state too
+      "delete" -> listings(GraftLog.delete(spark, t, col("id") === 4)),
+      "update" -> listings(GraftLog.update(spark, t, col("id") === 5,
+        Seq("tag" -> lit("u")))),
+      "deleteMatching" -> listings(GraftLog.deleteMatching(spark, t,
+        Seq(6L).toDF("id"), Seq("id"))),
+      "replaceWhere" -> listings(GraftLog.replaceWhere(df(7 until 8, "r"),
+        t, col("id") === 7)))
+    assert(once.forall(_._2 == 1), once.mkString(", "))
+    val rows = GraftLog.read(spark, t).as[(Long, String)].collect().toMap
+    assert(rows.size == 17 && !rows.contains(1L) && !rows.contains(4L) &&
+      !rows.contains(6L))
+    assert(rows(0L) == "m" && rows(3L) == "c" && rows(5L) == "u" &&
+      rows(7L) == "r" && rows(19L) == "v3")
+  }
+
+  test("a SQL MERGE of the upsert shape lists the log at most 4 times") {
+    val t = table(3)
+    spark.sql("DROP TABLE IF EXISTS log_state_upsert")
+    spark.sql(s"CREATE TABLE log_state_upsert USING graft OPTIONS (path '$t')")
+    try {
+      Seq((0L, "x", "D"), (1L, "y", "U"), (100L, "z", "I"), (101L, "w", "D"))
+        .toDF("id", "tag", "op").createOrReplaceTempView("log_state_cdc")
+      val (_, c) = counted(spark.sql(
+        """MERGE INTO log_state_upsert t USING log_state_cdc s
+          |ON t.id = s.id
+          |WHEN MATCHED AND s.op = 'D' THEN DELETE
+          |WHEN MATCHED THEN UPDATE SET tag = s.tag
+          |WHEN NOT MATCHED AND s.op <> 'D' THEN INSERT (id, tag)
+          |  VALUES (s.id, s.tag)""".stripMargin))
+      // the analyzer's relation, the MERGE's state, and the two
+      // relations RefreshAfterDml resolves again for the catalog table
+      assert(c("listings") <= 4, c)
+      val rows = GraftLog.read(spark, t).as[(Long, String)].collect().toMap
+      assert(rows.size == 15 && !rows.contains(0L) && rows(1L) == "y" &&
+        rows(100L) == "z" && !rows.contains(101L))
+    } finally {
+      spark.sql("DROP TABLE IF EXISTS log_state_upsert")
+      // SHOW TABLES IN any database lists the session's temp views
+      spark.catalog.dropTempView("log_state_cdc")
+    }
+  }
+
+  test("restore replays the target version once") {
+    val t = table(6) // v0..v5, no checkpoint
+    val (v, c) = counted(GraftLog.restore(spark, t, 2L))
+    assert(v == 6L)
+    assert(c("commitReads") == 3 && c("checkpointDecodes") == 0, c)
+    assert(GraftLog.read(spark, t).count() == 15)
+  }
+
+  /** A commit made from inside the first attempt of `op` (the hook runs
+    * in the Spark task that first reads `op`'s input) marks the table
+    * append-only; the retry must refuse and land nothing. */
+  private def appendOnlyLandsMidAttempt(op: String => Any): Unit = {
+    val t = table(3)
+    TaskHook.arm(() => {
+      GraftLog.setProperties(spark, t, Map("graft.appendOnly" -> "true"))
+      ()
+    })
+    try intercept[UnsupportedOperationException](op(t))
+    finally TaskHook.arm(null)
+    assert(GraftLog.history(spark, t).select("operation").as[String]
+      .collect().toSeq == Seq("set_properties", "append", "append",
+        "overwrite"))
+    assert(GraftLog.read(spark, t).count() == 15)
+  }
+
+  test("a MERGE retried after the table turned append-only refuses") {
+    appendOnlyLandsMidAttempt { t =>
+      val source = df(0 until 3, "m").as[(Long, String)]
+        .mapPartitions { it => TaskHook.fire(); it }.toDF("id", "tag")
+      GraftLog.merge(source, t, Seq("id"))
+    }
+  }
+
+  test("a keyed DELETE retried after the table turned append-only " +
+      "refuses") {
+    appendOnlyLandsMidAttempt { t =>
+      val keys = Seq(1L, 2L).toDS()
+        .mapPartitions { it => TaskHook.fire(); it }.toDF("id")
+      GraftLog.deleteMatching(spark, t, keys, Seq("id"))
+    }
+  }
+}
+
+/** Runs an armed action once, from whichever thread fires first — here
+  * a Spark task, so a test can land a commit while an operation's
+  * attempt is working, without sleeps. */
+object TaskHook {
+  private val armed =
+    new java.util.concurrent.atomic.AtomicReference[() => Unit]()
+  def arm(f: () => Unit): Unit = armed.set(f)
+  def fire(): Unit = Option(armed.getAndSet(null)).foreach(_())
 }
