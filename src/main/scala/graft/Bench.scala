@@ -1,5 +1,7 @@
 package graft
 import java.nio.file.{Files, Paths}
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 /** Benchmark main: times every SparkEntry query at local[N] and emits ONE
   * JSON metric line. Round-1's driver failed to parse the line out of
   * sbt-wrapped stdout (`BENCH_r01.json parsed: null`), so the JSON now
@@ -21,6 +23,24 @@ object Bench {
     case c if c < ' ' => f"\\u${c.toInt}%04x"
     case c => c.toString
   } + "\""
+
+  /** `f`'s result with the classes Spark compiled while it ran and the
+    * milliseconds the compiles took (JVM-wide codegen counters). */
+  private[graft] def codegenOf[A](f: => A): (A, (Long, Double)) = {
+    def now = (CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
+      CodeGenerator.compileTime)
+    val (n0, ns0) = now
+    val r = f
+    val (n1, ns1) = now
+    (r, (n1 - n0, (ns1 - ns0) / 1e6))
+  }
+
+  /** Per-query codegen record: name → {"compiles", "compile_ms"}. */
+  private[graft] def codegenJson(
+      entries: Iterable[(String, (Long, Double))]): String = entries
+    .map { case (k, (n, ms)) =>
+      jsonString(k) + f""":{"compiles":$n,"compile_ms":$ms%.3f}""" }
+    .mkString("{", ",", "}")
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -77,15 +97,20 @@ object Bench {
     val loadStart = loadavg
     // a failed query's exception class and first message line, by name
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
+    // each query's first (cold) rep: classes compiled and compile ms
+    val codegen =
+      scala.collection.mutable.LinkedHashMap[String, (Long, Double)]()
     def timed(name: String, fn: (org.apache.spark.sql.SparkSession, String)
         => org.apache.spark.sql.DataFrame): Double = {
       val t0 = System.nanoTime()
       // CacheScope releases the operator-persisted frames once the count
       // drains; clearCache stays as the belt for anything untracked
-      val ok = try { CacheScope.withScope { fn(spark, sfDir).count() }; true }
+      val (ok, cg) = codegenOf(
+        try { CacheScope.withScope { fn(spark, sfDir).count() }; true }
         catch {
           case e: Throwable => errors(name) = failure(e); false
-        }
+        })
+      if (!codegen.contains(name)) codegen(name) = cg
       val dt = (System.nanoTime() - t0) / 1e9
       spark.catalog.clearCache()
       // a failed query must not masquerade as a fast one
@@ -186,12 +211,15 @@ object Bench {
       .mkString("[", ",", "]")
     println(line(fmt(slowest),
       s""","failed_queries":$failedNames,"queries_full":"BENCH_LOCAL.json""""))
-    // the full record names each failure beside its -1 entry
+    // the full record names each failure beside its -1 entry, and
+    // carries each query's codegen counters
     val errorsJson = errors
       .map { case (k, v) => "\"" + k + "\":" + jsonString(v) }
       .mkString("{", ",", "}")
     try Files.writeString(Paths.get("BENCH_LOCAL.json"),
-      line(fmt(results), s""","errors":$errorsJson""") + "\n")
+      line(fmt(results),
+        s""","errors":$errorsJson,"codegen":${codegenJson(codegen)}""") +
+        "\n")
     catch { case _: Throwable => () } // stdout line is the primary channel
     spark.stop()
   }

@@ -703,26 +703,28 @@ object GraftFileIndex {
       st: GraftLog.TableState): DataFrame =
     scan(spark, new GraftFileIndex(spark, table, None, None, false, st))
 
-  /** Read ONLY the given snapshot files (table-root-relative paths) with
-    * partition columns reconstructed — the scan DML rewrites use to load
-    * just the touched files of a hive-partitioned table. */
-  /** `asOf` anchors the subset at a HISTORICAL snapshot: the index
-    * intersects the file list with that version's live set, so a
-    * change-feed diff can still open files the CURRENT version has
-    * already swapped out (a rewrite commit removes its inputs — without
-    * the anchor the old side of the diff would silently read empty). */
-  def readSubset(spark: SparkSession, table: String,
-      files: Seq[String], asOf: Option[Long] = None): DataFrame =
-    scan(spark, new GraftFileIndex(spark, table, asOf, Some(files.toSet)))
+  /** Read ONLY the given files of the table state `st`
+    * (table-root-relative paths) with partition columns reconstructed —
+    * the scan DML rewrites use to load just the touched files of a
+    * hive-partitioned table, on the state the operation read. `asOf`
+    * marks `st` as a HISTORICAL snapshot: a change-feed diff opens files
+    * the current version has already swapped out, and planner rules must
+    * not treat that scan as a read of the current table. */
+  private[sources] def readSubset(spark: SparkSession, table: String,
+      st: GraftLog.TableState, files: Seq[String],
+      asOf: Option[Long] = None): DataFrame =
+    scan(spark, new GraftFileIndex(spark, table, asOf, Some(files.toSet),
+      false, st))
 
   /** [[readSubset]] with the deletion-vector guard bypassed and no
     * column reordering — the raw scan under [[GraftLog.readWithDvs]]'s
     * position mask and the DV writers' position harvest (both need
     * `_metadata` off the bare relation). Internal to the DV machinery. */
   private[sources] def readSubsetRaw(spark: SparkSession, table: String,
-      files: Seq[String], asOf: Option[Long] = None): DataFrame =
+      st: GraftLog.TableState, files: Seq[String],
+      asOf: Option[Long] = None): DataFrame =
     scan(spark, new GraftFileIndex(spark, table, asOf, Some(files.toSet),
-      allowDvs = true))
+      true, st))
 
   /** The bare (read-only) relation over `idx`. */
   private def scan(spark: SparkSession, idx: GraftFileIndex): DataFrame =

@@ -1415,7 +1415,7 @@ object GraftLog {
       else if (dvs.nonEmpty)
         // merge-on-read: mask DV-deleted positions (flat layouts only —
         // deleteVectors enforces that at write time)
-        readWithDvs(spark, table, files, schema, dvs)
+        readWithDvs(spark, table, st, files, schema)
       else if (hasPartitionedFiles(files))
         // hive layout: partition columns live in the paths, so the read
         // goes through the FileIndex (which also re-exposes them in the
@@ -2295,18 +2295,19 @@ object GraftLog {
     files.headOption.toSeq.flatMap(_.split('/').dropRight(1)
       .filter(_.contains('=')).map(_.takeWhile(_ != '=')))
 
-  /** Read a SUBSET of a snapshot's files with the table's full schema —
-    * partition columns reconstructed from paths when the layout is
-    * hive-partitioned (via a file-restricted [[GraftFileIndex]]), plain
-    * schema-directed parquet otherwise. */
+  /** Read a SUBSET of the state `st`'s files with the table's full
+    * schema — partition columns reconstructed from paths when the layout
+    * is hive-partitioned (via a file-restricted [[GraftFileIndex]] on
+    * `st`, so the log is not read again), plain schema-directed parquet
+    * otherwise. `asOf` marks `st` as a historical version. */
   private def readSubset(spark: SparkSession, table: String,
-      files: Seq[String], schema: StructType,
+      st: TableState, files: Seq[String], schema: StructType,
       asOf: Option[Long] = None): DataFrame =
     if (files.isEmpty)
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
     else if (hasPartitionedFiles(files))
-      GraftFileIndex.readSubset(spark, table, files, asOf)
+      GraftFileIndex.readSubset(spark, table, st, files, asOf)
         .select(schema.fieldNames.map(col).toSeq: _*)
     else spark.read.schema(schema)
       .parquet(files.map(f => absPath(table, f)): _*)
@@ -4151,7 +4152,7 @@ object GraftLog {
       txn: (String, Long)): Boolean =
     st.exists(_.txns.get(txn._1).exists(_ >= txn._2))
 
-  /** Data files of the current snapshot that contain at least one row
+  /** Data files of the state `st` that contain at least one row
     * matching `probe` (a left-semi broadcast — the table side never
     * shuffles; the collect is file *names*, metadata-sized). Matching
     * scanned URIs back to snapshot entries uses the full
@@ -4159,9 +4160,10 @@ object GraftLog {
     * (a partitioned job repeats the same part-file NAME across `col=val`
     * dirs, so any name-based tail would be ambiguous). */
   private def touchedFiles(spark: SparkSession, table: String,
-      files: Seq[String], schema: StructType,
+      st: TableState, schema: StructType,
       probe: DataFrame => DataFrame): Seq[String] = {
-    val withFile = readSubset(spark, table, files, schema)
+    val files = st.files
+    val withFile = readSubset(spark, table, st, files, schema)
       .withColumn("__gf_file", input_file_name())
     val rels = probe(withFile).select(col("__gf_file")).distinct()
       .collect()
@@ -4355,7 +4357,7 @@ object GraftLog {
     // The same aggregation yields the two multi-match counts: per
     // target row, how many source rows match at all (__nAll) and how
     // many with an applicable clause (__nApp).
-    val withFile = readSubset(spark, table, files, schema)
+    val withFile = readSubset(spark, table, st, files, schema)
       .withColumn("__gf_file", input_file_name())
     val (touchedM, ambiguous, mxAllByRel) =
       if (matchedN.isEmpty)
@@ -4396,7 +4398,7 @@ object GraftLog {
     // conditions (they may reference the target only)
     val touchedB =
       if (bySourceN.isEmpty) Seq.empty[String]
-      else touchedFiles(spark, table, files, schema, df =>
+      else touchedFiles(spark, table, st, schema, df =>
         df.alias("t")
           .join(broadcast(
             if (onExtra.isEmpty)
@@ -4434,7 +4436,7 @@ object GraftLog {
     val rewritten = if (touched.isEmpty) None else {
       val tgt = (if (trackedIds)
           rowIdRead(spark, table, st, Some(touched.toSet))
-        else readSubset(spark, table, touched, schema))
+        else readSubset(spark, table, st, touched, schema))
         .withColumn("__gf_rid", monotonically_increasing_id()).alias("t")
       val rewriteSrc =
         if (keysOnlyRewrite)
@@ -4515,7 +4517,7 @@ object GraftLog {
       // keys-only merge keeps its narrow keys-only scan
       val probeCols =
         if (onExtra.isEmpty) keys else schema.fieldNames.toSeq
-      val targetKeys = readSubset(spark, table, probeFiles, schema)
+      val targetKeys = readSubset(spark, table, st, probeFiles, schema)
         .select(probeCols.map(col): _*).alias("t")
       val unmatched = srcA.join(targetKeys, joinCond, "left_anti")
         .alias("s")
@@ -4549,7 +4551,7 @@ object GraftLog {
       case (Some(u), Some(i)) => u.unionByName(i)
       case (Some(u), None)    => u
       case (None, Some(i))    => i
-      case (None, None)       => readSubset(spark, table, Seq.empty, schema)
+      case (None, None)       => readSubset(spark, table, st, Seq.empty, schema)
     }
     // non-identity generated columns: recompute from the post-cascade
     // row so derived values can never go stale behind an update
@@ -4684,7 +4686,7 @@ object GraftLog {
     // UPDATE → a row matching a source key; DELETE BY SOURCE → a row
     // matching none. The semi/anti probes prune per-clause; both
     // together touch every file holding any row (full-snapshot cost).
-    val touched = touchedFiles(spark, table, files, schema, df => {
+    val touched = touchedFiles(spark, table, st, schema, df => {
       val hit = if (updateMatched)
         Some(df.join(broadcast(srcKeys), keysPhys, "left_semi")) else None
       val miss = if (deleteUnmatchedBySource)
@@ -4714,7 +4716,7 @@ object GraftLog {
 
     val updated = if (touched.isEmpty) None else {
       val t = if (tracked) rowIdRead(spark, table, st, Some(touched.toSet))
-      else readSubset(spark, table, touched, schema)
+      else readSubset(spark, table, st, touched, schema)
       val joined = t.join(broadcast(marked), keysPhys, "left_outer")
       // NOT MATCHED BY SOURCE DELETE drops the unmatched rows instead of
       // carrying them through the rewrite
@@ -4734,7 +4736,7 @@ object GraftLog {
     // keys-only column pruning keeps it a narrow scan.
     val inserts = if (!insertUnmatched) None else {
       val probeFiles = if (updateMatched) touched else files
-      val targetKeys = readSubset(spark, table, probeFiles, schema)
+      val targetKeys = readSubset(spark, table, st, probeFiles, schema)
         .select(keysPhys.map(col): _*)
       Some(src.join(targetKeys, keysPhys, "left_anti")
         .select(schema.fieldNames.map(col) ++
@@ -4745,7 +4747,7 @@ object GraftLog {
       case (Some(u), Some(i)) => u.unionByName(i)
       case (Some(u), None)    => u
       case (None, Some(i))    => i
-      case (None, None) => readSubset(spark, table, Seq.empty, schema)
+      case (None, None) => readSubset(spark, table, st, Seq.empty, schema)
     }
     // constraints hold over the rows this transaction writes (the
     // carried-through rows of touched files were validated when first
@@ -4797,7 +4799,7 @@ object GraftLog {
       st: TableState, predicate: Column): Seq[String] = {
     val (files, schema, cmap) = (st.files, st.schema, st.colMap)
     if (cmap.nonEmpty)
-      touchedFiles(spark, table, files, schema,
+      touchedFiles(spark, table, st, schema,
         df => toLogicalDf(df, schema, cmap, keep = Seq("__gf_file"))
           .filter(predicate))
     else {
@@ -4831,7 +4833,7 @@ object GraftLog {
           rowIdRead(spark, table, st, Some(touched.toSet))
             .filter(!coalesce(predicate, lit(false)))
         else toPhysicalDf(
-          toLogicalDf(readSubset(spark, table, touched, schema), schema,
+          toLogicalDf(readSubset(spark, table, st, touched, schema), schema,
             cmap).filter(!coalesce(predicate, lit(false))), schema, cmap)
       if (partCols.nonEmpty) stagePartitionedWithStats(
         withHiddenPartCols(kept, partCols), table, partCols)
@@ -4884,7 +4886,7 @@ object GraftLog {
     val keyset = keys.select(keyCols.map(col): _*).distinct()
     val touched =
       if (cmap.nonEmpty)
-        touchedFiles(spark, table, files, schema,
+        touchedFiles(spark, table, st, schema,
           df => prune.foldLeft(
             toLogicalDf(df, schema, cmap, keep = Seq("__gf_file")))(
               (d, p) => d.filter(p))
@@ -4912,7 +4914,7 @@ object GraftLog {
           rowIdRead(spark, table, st, Some(touched.toSet))
             .join(keyset, keyCols, "left_anti")
         else toPhysicalDf(
-          toLogicalDf(readSubset(spark, table, touched, schema), schema,
+          toLogicalDf(readSubset(spark, table, st, touched, schema), schema,
             cmap).join(keyset, keyCols, "left_anti"), schema, cmap)
       if (partCols.nonEmpty) stagePartitionedWithStats(
         withHiddenPartCols(kept, partCols), table, partCols)
@@ -4980,7 +4982,7 @@ object GraftLog {
     // survivors of partial files (predicate misses) are carried into
     // the replacement stage alongside the new batch; files the probe
     // did not touch are never read or rewritten
-    val kept = toLogicalDf(readSubset(spark, table, touched, schema),
+    val kept = toLogicalDf(readSubset(spark, table, st, touched, schema),
       schema, cmap).filter(!coalesce(predicate, lit(false)))
     val replacement =
       toPhysicalDf(kept.unionByName(logicalOk), schema, cmap)
@@ -5008,10 +5010,10 @@ object GraftLog {
     * predicates can reference partition columns, and partition-only
     * predicates prune the scan in the planner. */
   private def dvScan(spark: SparkSession, table: String,
-      files: Seq[String], schema: StructType,
+      st: TableState, files: Seq[String], schema: StructType,
       asOf: Option[Long] = None): DataFrame =
     if (hasPartitionedFiles(files))
-      GraftFileIndex.readSubsetRaw(spark, table, files, asOf)
+      GraftFileIndex.readSubsetRaw(spark, table, st, files, asOf)
     else spark.read.schema(schema)
       .parquet(files.map(f => absPath(table, f)): _*)
 
@@ -5040,7 +5042,7 @@ object GraftLog {
     val (files, schema, cmap) = (st.files, st.schema, st.colMap)
     val rel = s"$DvDirName/${UUID.randomUUID()}"
     // the predicate references LOGICAL names; positions are name-free
-    val scan = dvScan(spark, table, files, schema)
+    val scan = dvScan(spark, table, st, files, schema)
       .withColumn("__gf_fr", relPathCol(col("_metadata.file_path")))
       .withColumn("__gf_ri", col("_metadata.row_index"))
     toLogicalDf(scan, schema, cmap, keep = Seq("__gf_fr", "__gf_ri"))
@@ -5070,7 +5072,7 @@ object GraftLog {
       logicalNames.exists(_.equalsIgnoreCase(c)),
       s"delete key column $c not in ${logicalNames.mkString(",")}"))
     val rel = s"$DvDirName/${UUID.randomUUID()}"
-    val scan = dvScan(spark, table, files, schema)
+    val scan = dvScan(spark, table, st, files, schema)
       .withColumn("__gf_fr", relPathCol(col("_metadata.file_path")))
       .withColumn("__gf_ri", col("_metadata.row_index"))
     toLogicalDf(scan, schema, cmap, keep = Seq("__gf_fr", "__gf_ri"))
@@ -5107,10 +5109,10 @@ object GraftLog {
     * layout scans through the FileIndex (partition columns from dirs),
     * then re-projects the table's column order. */
   private def readWithDvs(spark: SparkSession, table: String,
-      files: Seq[String], schema: StructType,
-      dvs: Seq[String]): DataFrame = {
-    val dv = spark.read.parquet(dvs.map(f => absPath(table, f)): _*)
-    val base = dvScan(spark, table, files, schema)
+      st: TableState, files: Seq[String], schema: StructType,
+      asOf: Option[Long] = None): DataFrame = {
+    val dv = spark.read.parquet(st.dvs.map(f => absPath(table, f)): _*)
+    val base = dvScan(spark, table, st, files, schema, asOf)
       .withColumn("__gf_rel", relPathCol(col("_metadata.file_path")))
       .withColumn("__gf_row", col("_metadata.row_index"))
     base.join(dv,
@@ -5178,7 +5180,7 @@ object GraftLog {
             Seq(col(RowIdCol)))
         else toPhysicalDf(
           applySets(toLogicalDf(
-            readSubset(spark, table, touched, schema), schema, cmap),
+            readSubset(spark, table, st, touched, schema), schema, cmap),
             Seq.empty), schema, cmap)
       enforceChecks(if (tracked) rewritten
         else toLogicalDf(rewritten, schema, cmap), st.checks, "update")
@@ -5226,7 +5228,7 @@ object GraftLog {
         val current =
           if (tracksRows(st.props)) rowIdRead(spark, table, st, None)
           else toLogicalDf(
-            if (dvs.nonEmpty) readWithDvs(spark, table, files, schema, dvs)
+            if (dvs.nonEmpty) readWithDvs(spark, table, st, files, schema)
             else spark.read.schema(schema)
               .parquet(files.map(f => absPath(table, f)): _*),
             schema, cmap)
@@ -5242,8 +5244,8 @@ object GraftLog {
         // the masked read re-derives hidden transform columns and
         // re-stages hive-partitioned.
         val base =
-          if (dvs.nonEmpty) readWithDvs(spark, table, files, schema, dvs)
-          else readSubset(spark, table, files, schema)
+          if (dvs.nonEmpty) readWithDvs(spark, table, st, files, schema)
+          else readSubset(spark, table, st, files, schema)
         val current = withHiddenPartCols(base, partCols)
         stagePartitionedWithStats(
           current.repartition(partCols.map(col): _*), table, partCols)
@@ -5310,7 +5312,7 @@ object GraftLog {
     val selected = files.filter(f => matching.contains(tupleOf(f)))
     if (selected.isEmpty) st.version // nothing in scope: no empty commit
     else {
-      val base = readSubset(spark, table, selected, schema)
+      val base = readSubset(spark, table, st, selected, schema)
       val current = withHiddenPartCols(base, partCols)
       val s = stagePartitionedWithStats(
         current.repartition(partCols.map(col): _*), table, partCols)
@@ -5480,12 +5482,12 @@ object GraftLog {
           .coalesce(1), table)
       else if (partCols.isEmpty)
         stageWithStats(
-          readSubset(spark, table, selected, schema).coalesce(1), table)
+          readSubset(spark, table, st, selected, schema).coalesce(1), table)
       else {
         // qualifying partitions only: one task per partition value →
         // one file per col=val dir, the compactWhere write shape
         val base = withHiddenPartCols(
-          readSubset(spark, table, selected, schema), partCols)
+          readSubset(spark, table, st, selected, schema), partCols)
         stagePartitionedWithStats(
           base.repartition(partCols.map(col): _*), table, partCols)
       }
@@ -5526,7 +5528,7 @@ object GraftLog {
           .map(_.getString(0)).toSet
         val touched = files.filter(f =>
           relPathOf(absPath(table, f)).exists(masked.contains))
-        val purged = readWithDvs(spark, table, touched, schema, dvs)
+        val purged = readWithDvs(spark, table, st, touched, schema)
         val s =
           if (partCols.nonEmpty) stagePartitionedWithStats(
             withHiddenPartCols(purged, partCols), table, partCols)
@@ -5814,7 +5816,7 @@ object GraftLog {
           "an ordered range); got " +
           f.map(_.dataType.simpleString).getOrElse("no such column"))
     }
-    val cur = readSubset(spark, table, files, schema)
+    val cur = readSubset(spark, table, st, files, schema)
     // column bounds: one metadata-sized collect. Global bounds stay
     // valid under partitioning (the rank mapping is monotonic within
     // every partition).
@@ -5956,7 +5958,7 @@ object GraftLog {
               s"$table combines row tracking with column mapping; " +
                 "compact() first")
             rowIdRead(spark, table, st, Some(candidates.toSet))
-          } else readSubset(spark, table, candidates, schema)
+          } else readSubset(spark, table, st, candidates, schema)
         val rewritten = cur
           .repartitionByRange(targetFiles, physCols.map(col): _*)
           .sortWithinPartitions(physCols.map(col): _*)
@@ -6032,29 +6034,15 @@ object GraftLog {
     // visible rows of the affected files AT a version = subset scan
     // under that version's deletion-vector masks
     def visible(at: Option[Long]): DataFrame = {
-      val files = at match {
-        case Some(p) => snapshot(spark, table, Some(p))._1
-          .filter(f => affected(relOf(f)))
-        case None => Seq.empty
-      }
+      val st = at.map(p => stateAt(spark, table, Some(p)))
+      val files =
+        st.fold(Seq.empty[String])(_.files.filter(f => affected(relOf(f))))
       if (files.isEmpty)
         spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      else {
-        val dvs = deletionVectors(spark, table, at)
-        if (dvs.isEmpty) readSubset(spark, table, files, schema, at)
-        else {
-          val dv = spark.read.parquet(dvs.map(f => absPath(table, f)): _*)
-          val base = dvScan(spark, table, files, schema, at)
-            .withColumn("__gf_rel", relPathCol(col("_metadata.file_path")))
-            .withColumn("__gf_row", col("_metadata.row_index"))
-          base.join(dv,
-              base("__gf_rel") === dv("file_rel") &&
-                base("__gf_row") === dv("row_idx"), "left_anti")
-            .drop("__gf_rel", "__gf_row")
-            .select(schema.fieldNames.map(col).toSeq: _*)
-        }
-      }
+      else if (st.get.dvs.isEmpty)
+        readSubset(spark, table, st.get, files, schema, at)
+      else readWithDvs(spark, table, st.get, files, schema, at)
     }
     classifyDiff(visible(prevOpt), visible(Some(v)), keys,
       schema.fieldNames.filterNot(keys.contains).toSeq, preimages)

@@ -29,6 +29,24 @@ class ContractSpec extends AnyFunSuite {
       .get("errors").get("q").asText() == rec)
   }
 
+  test("the bench record carries each query's compiles and compile ms") {
+    // a literal no earlier query used: its generated code is new
+    val (_, (n, ms)) = Bench.codegenOf(spark.range(5)
+      .selectExpr(s"id * ${System.nanoTime()} AS x").collect())
+    assert(n >= 1 && ms > 0.0, s"$n compiles in $ms ms")
+    val (_, warm) = Bench.codegenOf(spark.range(5).count())
+    val json = s"""{"codegen":${Bench.codegenJson(Seq("q\"1" -> (n, ms),
+      "q2" -> warm))}}"""
+    val rec = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(json).get("codegen")
+    assert(rec.size == 2, json)
+    val q1 = rec.get("q\"1")
+    assert(q1.size == 2 && q1.get("compiles").isIntegralNumber &&
+      q1.get("compiles").asLong == n && q1.get("compile_ms").isNumber &&
+      math.abs(q1.get("compile_ms").asDouble - ms) < 1e-3, json)
+    assert(rec.get("q2").get("compiles").asLong == warm._1, json)
+  }
+
   test("flagship entry returns rows (driver smoke gate)") {
     assert(SparkEntry.entry(spark).count() > 0)
   }

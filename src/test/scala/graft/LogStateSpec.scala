@@ -210,6 +210,33 @@ class LogStateSpec extends AnyFunSuite {
       rows(7L) == "r" && rows(19L) == "v3")
   }
 
+  test("a rewrite attempt on a hive-partitioned table lists the log " +
+      "once") {
+    import org.apache.spark.sql.functions.{col, lit}
+    def listings[A](f: => A): Long = counted(f)._2("listings")
+    val t = tmp()
+    GraftLog.overwritePartitioned((0 until 20).map(i => (i.toLong,
+      s"t$i", i % 4)).toDF("id", "tag", "p"), t, Seq("p"))
+    // the touched files are re-read through a file index on the
+    // attempt's state, not on a fresh read of the log
+    val once = Seq(
+      "deleteMatching" -> listings(GraftLog.deleteMatching(spark, t,
+        Seq(6L).toDF("id"), Seq("id"), prune = Some(col("p") === 2))),
+      "delete" -> listings(GraftLog.delete(spark, t, col("id") === 4)),
+      "update" -> listings(GraftLog.update(spark, t, col("id") === 5,
+        Seq("tag" -> lit("u")))),
+      "merge" -> listings(GraftLog.merge(
+        Seq((1L, "m", 1), (100L, "n", 0)).toDF("id", "tag", "p"), t,
+        Seq("id"))),
+      "compact" -> listings(GraftLog.compact(spark, t)))
+    assert(once.forall(_._2 == 1), once.mkString(", "))
+    val rows = GraftLog.read(spark, t).select("id", "tag").as[(Long, String)]
+      .collect().toMap
+    assert(rows.size == 19 && !rows.contains(4L) && !rows.contains(6L))
+    assert(rows(1L) == "m" && rows(5L) == "u" && rows(100L) == "n" &&
+      rows(7L) == "t7")
+  }
+
   test("a SQL MERGE of the upsert shape lists the log at most 4 times") {
     val t = table(3)
     spark.sql("DROP TABLE IF EXISTS log_state_upsert")
