@@ -75,6 +75,9 @@ final class GraftFileIndex private[sources] (spark: SparkSession,
     if (state.withStats) state
     else GraftLog.stateAt(spark, table, Some(state.version), withStats = true)
   private lazy val stats = statsState.stats
+  // A subset read's caller chose its files on this state already: on a
+  // light state it keeps them all rather than read the log again.
+  private val pruneByStats = only.isEmpty || state.withStats
   // commit-logged Bloom bitmaps, decoded once per index instance
   private lazy val blooms: Map[String, Map[String, java.util.BitSet]] =
     statsState.blooms.map { case (f, cols) =>
@@ -300,8 +303,8 @@ final class GraftFileIndex private[sources] (spark: SparkSession,
     def keepData(rel: String): Boolean = {
       val hid = hiddenOf(rel)
       dataFilters.forall(f =>
-        GraftFileIndex.mayMatch(f, stats.getOrElse(rel, Map.empty),
-          blooms.getOrElse(rel, Map.empty)) &&
+        (!pruneByStats || GraftFileIndex.mayMatch(f,
+          stats.getOrElse(rel, Map.empty), blooms.getOrElse(rel, Map.empty))) &&
         (hid.isEmpty || mayMatchBucket(f, hid)))
     }
     if (allPartCols.isEmpty) {

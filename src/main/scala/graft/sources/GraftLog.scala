@@ -8,7 +8,8 @@ import scala.collection.mutable
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StringType, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType, MapType,
+  StringType, StructField, StructType}
 
 /** Process-wide counters of the log layer's own reads: listings of
   * `_graft_log`, commit files read, checkpoints decoded (a parquet or
@@ -2295,22 +2296,29 @@ object GraftLog {
     files.headOption.toSeq.flatMap(_.split('/').dropRight(1)
       .filter(_.contains('=')).map(_.takeWhile(_ != '=')))
 
-  /** Read a SUBSET of the state `st`'s files with the table's full
-    * schema — partition columns reconstructed from paths when the layout
-    * is hive-partitioned (via a file-restricted [[GraftFileIndex]] on
-    * `st`, so the log is not read again), plain schema-directed parquet
-    * otherwise. `asOf` marks `st` as a historical version. */
+  /** Read a SUBSET of the state `st`'s files with the schema `schema`
+    * through a file-restricted [[GraftFileIndex]] on `st`: the files
+    * and their sizes come from the state, so the log is not read again
+    * and no data file is listed; partition columns are reconstructed
+    * from paths on a hive-partitioned layout. `asOf` marks `st` as a
+    * historical version. */
   private def readSubset(spark: SparkSession, table: String,
       st: TableState, files: Seq[String], schema: StructType,
       asOf: Option[Long] = None): DataFrame =
     if (files.isEmpty)
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else if (hasPartitionedFiles(files))
-      GraftFileIndex.readSubset(spark, table, st, files, asOf)
-        .select(schema.fieldNames.map(col).toSeq: _*)
-    else spark.read.schema(schema)
-      .parquet(files.map(f => absPath(table, f)): _*)
+    // on a flat layout only what the index refuses stays plain
+    // schema-directed parquet: a column-mapped state's PHYSICAL read,
+    // and a `schema` other than the state's own (autoMerge widening, or
+    // a newer version's in a change-feed diff), whose absent columns
+    // the plain read fills with typed NULLs
+    else if (!hasPartitionedFiles(files) &&
+        (st.colMap.nonEmpty || schema != st.schema))
+      spark.read.schema(schema)
+        .parquet(files.map(f => absPath(table, f)): _*)
+    else GraftFileIndex.readSubset(spark, table, st, files, asOf)
+      .select(schema.fieldNames.map(col).toSeq: _*)
 
   /** Schema enforcement shared by [[append]] and [[txnAppend]]: the batch
     * must carry exactly the table's columns WITH the table's types — a
@@ -4153,25 +4161,107 @@ object GraftLog {
     st.exists(_.txns.get(txn._1).exists(_ >= txn._2))
 
   /** Data files of the state `st` that contain at least one row
-    * matching `probe` (a left-semi broadcast — the table side never
-    * shuffles; the collect is file *names*, metadata-sized). Matching
-    * scanned URIs back to snapshot entries uses the full
-    * table-root-relative path, exact for flat AND partitioned layouts
-    * (a partitioned job repeats the same part-file NAME across `col=val`
-    * dirs, so any name-based tail would be ambiguous). */
+    * matching `probe` (a broadcast join — the table side never
+    * shuffles), and the distinct matched keys when the probe carries a
+    * `__gf_key` column; see [[probedFiles]]. */
   private def touchedFiles(spark: SparkSession, table: String,
       st: TableState, schema: StructType,
-      probe: DataFrame => DataFrame): Seq[String] = {
-    val files = st.files
-    val withFile = readSubset(spark, table, st, files, schema)
-      .withColumn("__gf_file", input_file_name())
-    val rels = probe(withFile).select(col("__gf_file")).distinct()
-      .collect()
-      .flatMap(r => relPathOf(new java.net.URI(r.getString(0)).getPath))
+      probe: DataFrame => DataFrame): (Seq[String], Option[DataFrame]) =
+    probedFiles(table, st, probe(
+      readSubset(spark, table, st, st.files, schema)
+        .withColumn("__gf_file", input_file_name())))
+
+  /** The entries of the state `st` whose data files hold a row of
+    * `probed` (a scan of `st` carrying each row's file URI as
+    * `__gf_file`), and, when it has a struct column `__gf_key`, a frame
+    * of that column's distinct non-null values. Each scan partition
+    * collects its own distinct file names and keys, so there is no
+    * shuffle, and the collect is metadata-sized. */
+  private def probedFiles(table: String, st: TableState,
+      probed: DataFrame): (Seq[String], Option[DataFrame]) = {
+    val keyed = probed.columns.contains("__gf_key")
+    val out = probed.select(col("__gf_file") +:
+      (if (keyed) Seq(col("__gf_key")) else Nil): _*)
+    val rows = out.mapPartitions { it =>
+      val (files, keys) = (mutable.LinkedHashSet.empty[String],
+        mutable.LinkedHashSet.empty[Row])
+      it.foreach { r =>
+        files += r.getString(0)
+        if (keyed && !r.isNullAt(1)) keys += r.getStruct(1)
+      }
+      files.iterator.map(f => if (keyed) Row(f, null) else Row(f)) ++
+        keys.iterator.map(k => Row(null, k))
+    }(org.apache.spark.sql.Encoders.row(StructType(
+      out.schema.fields.map(_.copy(nullable = true))))).collect()
+    val (fileRows, keyRows) = rows.partition(!_.isNullAt(0))
+    (filesAt(table, st, fileRows.map(_.getString(0))),
+      if (keyed) Some(keyFrame(probed, keyRows.map(_.getStruct(1))))
+      else None)
+  }
+
+  /** The entries of the state `st` whose data files the scanned URIs
+    * `uris` name. Matching uses the full table-root-relative path,
+    * exact for flat AND partitioned layouts (a partitioned job repeats
+    * the same part-file NAME across `col=val` dirs, so any name-based
+    * tail would be ambiguous); entries match by their `_data/` suffix,
+    * so absolute references (SHALLOW CLONE commits) resolve the same as
+    * relative ones. */
+  private def filesAt(table: String, st: TableState,
+      uris: Iterable[String]): Seq[String] = {
+    val rels = uris.flatMap(u => relPathOf(new java.net.URI(u).getPath))
       .toSet
-    // entries match by their `_data/` suffix, so absolute references
-    // (SHALLOW CLONE commits) resolve the same as relative ones
-    files.filter(f => relPathOf(absPath(table, f)).exists(rels.contains))
+    st.files.filter(f => relPathOf(absPath(table, f)).exists(rels.contains))
+  }
+
+  /** The clause engine's matched probe over `pairs` (columns
+    * `__gf_rid`, `__gf_file`, `__gf_app` and optionally `__gf_key`: one
+    * row per target-row × source-row match). All pairs of a target row
+    * fall in that row's scan partition — the broadcast join keeps the
+    * stream side's partitioning — so each partition folds its own
+    * counts with no shuffle: per target row the matches (`__nAll`) and
+    * the applicable ones (`__nApp`), then per file the maxima of both.
+    * Returns file URI → (max `__nApp`, max `__nAll`) and, with a
+    * `__gf_key`, a frame of the distinct matched keys. */
+  private def foldMatches(pairs: DataFrame)
+      : (Map[String, (Long, Long)], Option[DataFrame]) = {
+    val keyed = pairs.columns.contains("__gf_key")
+    val out = StructType(Seq(
+        StructField("file", StringType), StructField("mxApp", LongType),
+        StructField("mxAll", LongType)) ++
+      (if (keyed) Seq(StructField("key", pairs.schema("__gf_key").dataType))
+       else Nil))
+    val rows = pairs.mapPartitions { it =>
+      // rid → (file, __nAll, __nApp)
+      val perRow = mutable.HashMap.empty[Long, (String, Long, Long)]
+      val keys = mutable.LinkedHashSet.empty[Row]
+      it.foreach { r =>
+        val (f, n, a) = perRow.getOrElse(r.getLong(0), (r.getString(1), 0L, 0L))
+        perRow(r.getLong(0)) = (f, n + 1L, a + r.getLong(2))
+        if (keyed) keys += r.getStruct(3)
+      }
+      val perFile = mutable.HashMap.empty[String, (Long, Long)]
+      perRow.valuesIterator.foreach { case (f, n, a) =>
+        val (mxA, mxN) = perFile.getOrElse(f, (0L, 0L))
+        perFile(f) = (math.max(mxA, a), math.max(mxN, n))
+      }
+      perFile.iterator.map { case (f, (mxA, mxN)) =>
+          if (keyed) Row(f, mxA, mxN, null) else Row(f, mxA, mxN) } ++
+        keys.iterator.map(k => Row(null, null, null, k))
+    }(org.apache.spark.sql.Encoders.row(out)).collect()
+    val (fileRows, keyRows) = rows.partition(!_.isNullAt(0))
+    (fileRows.groupMapReduce(_.getString(0))(r =>
+        (r.getLong(1), r.getLong(2))) {
+        case ((a1, n1), (a2, n2)) => (math.max(a1, a2), math.max(n1, n2)) },
+      if (keyed) Some(keyFrame(pairs, keyRows.map(_.getStruct(3))))
+      else None)
+  }
+
+  /** A frame of the distinct values `keys` of `probed`'s struct column
+    * `__gf_key`, one column per struct field. */
+  private def keyFrame(probed: DataFrame, keys: Seq[Row]): DataFrame = {
+    import scala.jdk.CollectionConverters._
+    probed.sparkSession.createDataFrame(keys.distinct.asJava,
+      probed.schema("__gf_key").dataType.asInstanceOf[StructType])
   }
 
   /** MERGE INTO-equivalent with Delta's three clause families, each
@@ -4241,13 +4331,19 @@ object GraftLog {
     * `keys` is the equi-join ON condition (same-named columns), the
     * only ON shape whose file pruning this engine implements.
     *
-    * Scale shape: the source is broadcast once; candidate target rows
-    * arrive via one inner/anti probe over column-pruned touched files;
-    * the clause cascade is a single codegen'd CASE projection (one
-    * `when` chain per output column), so N clauses cost zero extra
-    * joins or passes. Matched-clause CONDITIONS join the touched-file
-    * probe: a key-matching row satisfying no clause condition does not
-    * rewrite its file.
+    * Scale shape: two scans of the target, one per query. The probe
+    * joins every live file's column-pruned rows with the broadcast
+    * source and folds the matches inside each scan partition (no
+    * shuffle): the touched files, the ambiguity counts and, with a
+    * keys-only ON, the distinct matched source keys. The write query
+    * rewrites only the touched files through one left-outer join with
+    * the broadcast source, and takes the NOT MATCHED rows as the
+    * source anti-joined with those matched keys, so it reads no
+    * untouched file. The clause cascade is a single codegen'd CASE
+    * projection (one `when` chain per output column), so N clauses
+    * cost zero extra joins or passes. Matched-clause CONDITIONS join
+    * the touched-file probe: a key-matching row satisfying no clause
+    * condition does not rewrite its file.
     *
     * Ambiguity contract (Delta's `MULTIPLE_SOURCE_ROW_MATCHING`): when
     * matched clauses exist and ANY target row has >1 source row
@@ -4352,42 +4448,40 @@ object GraftLog {
       cs.map(_.condition.getOrElse(lit(true))).reduce(_ || _)
 
     // ---- touched-file probe (+ the ambiguity counts, ONE job) ----
-    // matched side: inner join on keys; a file is touched iff it holds
-    // a row some clause CONDITION applies to (clause-driven pruning).
-    // The same aggregation yields the two multi-match counts: per
-    // target row, how many source rows match at all (__nAll) and how
-    // many with an applicable clause (__nApp).
-    val withFile = readSubset(spark, table, st, files, schema)
-      .withColumn("__gf_file", input_file_name())
-    val (touchedM, ambiguous, mxAllByRel) =
+    // matched side: every live row joins the broadcast source; a file
+    // is touched iff it holds a row some clause CONDITION applies to
+    // (clause-driven pruning). The same probe yields the two
+    // multi-match counts — per target row, how many source rows match
+    // at all (__nAll) and how many with an applicable clause (__nApp) —
+    // and, with a keys-only ON, the distinct matched source keys that
+    // answer the NOT MATCHED side below.
+    val (touchedM, ambiguous, mxAllByRel, matchedKeys) =
       if (matchedN.isEmpty)
-        (Seq.empty[String], false, Map.empty[String, Long])
+        (Seq.empty[String], false, Map.empty[String, Long], None)
       else {
-        val pairs = withFile
+        val pairs = readSubset(spark, table, st, files, schema)
+          .withColumn("__gf_file", input_file_name())
           .withColumn("__gf_rid", monotonically_increasing_id())
           .alias("t")
           .join(broadcast(srcA), joinCond, "inner")
-          .withColumn("__gf_app",
-            when(orConds(matchedN), lit(1)).otherwise(lit(0)))
-        val perFile = pairs
-          .groupBy(col("__gf_rid"), col("__gf_file"))
-          .agg(count(lit(1)).as("__nAll"), sum(col("__gf_app")).as("__nApp"))
-          .groupBy(col("__gf_file"))
-          .agg(max(col("__nApp")).as("__mxApp"),
-            max(col("__nAll")).as("__mxAll"))
-          .collect()
-        val touchedRels = perFile.filter(_.getLong(1) > 0L).flatMap(r =>
-          relPathOf(new java.net.URI(r.getString(0)).getPath)).toSet
-        (files.filter(f =>
-            relPathOf(absPath(table, f)).exists(touchedRels.contains)),
-         perFile.exists(_.getLong(1) > 1L),
+          .select(Seq(col("__gf_rid"), col("__gf_file"),
+            when(orConds(matchedN), lit(1L)).otherwise(lit(0L))
+              .as("__gf_app")) ++
+            (if (onExtra.isEmpty) Seq(struct(keys.zipWithIndex.map {
+                case (k, i) => col(s"s.$k").as(s"__gf_k$i") }: _*)
+              .as("__gf_key"))
+            else Nil): _*)
+        val (perFile, keySet) = foldMatches(pairs)
+        (filesAt(table, st, perFile.collect {
+            case (uri, (mxApp, _)) if mxApp > 0L => uri }),
+         perFile.valuesIterator.exists(_._1 > 1L),
          // per-file max key-match fan-out — consulted AFTER the full
          // touched set (matched ++ by-source) is known, because a file
          // touched ONLY by a by-source clause still fans its matched-
          // but-inapplicable rows out through the rewrite join
-         perFile.flatMap(r => relPathOf(
-           new java.net.URI(r.getString(0)).getPath)
-           .map(_ -> r.getLong(2))).toMap)
+         perFile.flatMap { case (uri, (_, mxAll)) =>
+           relPathOf(new java.net.URI(uri).getPath).map(_ -> mxAll) },
+         keySet)
       }
     if (ambiguous) throw new IllegalStateException(
       s"MERGE into $table: a target row matches multiple source rows " +
@@ -4405,7 +4499,7 @@ object GraftLog {
               source.select(keys.map(col): _*).distinct().alias("s")
             else srcA),
             joinCond, "left_anti")
-          .filter(orConds(bySourceN)))
+          .filter(orConds(bySourceN)))._1
     val touched = (touchedM ++ touchedB).distinct
     // Multi-match dedup signal over ALL files the rewrite touches (the
     // round-10 advisor's high finding: gating on matched-touched files
@@ -4501,26 +4595,34 @@ object GraftLog {
         (if (trackedIds) Seq(col(s"t.$RowIdCol")) else Nil): _*))
     }
 
-    // ---- inserts: anti join against target keys. With UNCONDITIONAL
-    // matched clauses every key-matching file is touched, so the probe
-    // narrows to touched files (the legacy invariant); a CONDITIONAL
-    // matched clause can leave a key-matching file untouched, so the
-    // probe widens to all files — keys-only column pruning keeps it a
-    // narrow scan either way
+    // ---- inserts: the source rows no live row matches. The matched
+    // probe read every live file, so with a keys-only ON its distinct
+    // matched keys answer this exactly: an anti join against that set,
+    // no larger than the source (a NULL key matches nothing and
+    // inserts). An extra ON conjunct may reference any column of
+    // either side, and with no matched clause no probe ran: there the
+    // source anti-joins the target rows. With UNCONDITIONAL matched
+    // clauses every key-matching file is touched, so that scan narrows
+    // to the touched files; otherwise it covers all files.
     val insertRows = if (insertsN.isEmpty) None else {
-      val probeFiles =
-        if (matchedN.nonEmpty && matchedN.forall(_.condition.isEmpty))
-          touched
-        else files
-      // extra ON conjuncts may reference any target column, so the
-      // anti-join probe widens to the full row there; the common
-      // keys-only merge keeps its narrow keys-only scan
-      val probeCols =
-        if (onExtra.isEmpty) keys else schema.fieldNames.toSeq
-      val targetKeys = readSubset(spark, table, st, probeFiles, schema)
-        .select(probeCols.map(col): _*).alias("t")
-      val unmatched = srcA.join(targetKeys, joinCond, "left_anti")
-        .alias("s")
+      val unmatched = (matchedKeys match {
+        case Some(mk) =>
+          srcA.join(mk, keys.indices.map(i =>
+            col(s"s.${keys(i)}") === mk(s"__gf_k$i")).reduce(_ && _),
+            "left_anti")
+        case None =>
+          val probeFiles =
+            if (matchedN.nonEmpty && matchedN.forall(_.condition.isEmpty))
+              touched
+            else files
+          // extra ON conjuncts may reference any target column, so the
+          // anti join reads the full row there
+          val probeCols =
+            if (onExtra.isEmpty) keys else schema.fieldNames.toSeq
+          val targetKeys = readSubset(spark, table, st, probeFiles, schema)
+            .select(probeCols.map(col): _*).alias("t")
+          srcA.join(targetKeys, joinCond, "left_anti")
+      }).alias("s")
       val iIdx = insertsN.zipWithIndex.foldRight(lit(0): Column) {
         case ((cl, i), acc) =>
           when(cl.condition.getOrElse(lit(true)), lit(i + 1))
@@ -4686,13 +4788,19 @@ object GraftLog {
     // UPDATE → a row matching a source key; DELETE BY SOURCE → a row
     // matching none. The semi/anti probes prune per-clause; both
     // together touch every file holding any row (full-snapshot cost).
-    val touched = touchedFiles(spark, table, st, schema, df => {
+    // The hit rows also carry their key, so with an update clause the
+    // probe yields the distinct matched keys the insert side needs.
+    val (touched, matchedKeys) = touchedFiles(spark, table, st, schema,
+        df => {
       val hit = if (updateMatched)
-        Some(df.join(broadcast(srcKeys), keysPhys, "left_semi")) else None
+        Some(df.join(broadcast(srcKeys), keysPhys, "left_semi")
+          .withColumn("__gf_key", struct(keysPhys.map(col): _*)))
+        else None
       val miss = if (deleteUnmatchedBySource)
         Some(df.join(broadcast(srcKeys), keysPhys, "left_anti")) else None
       (hit, miss) match {
-        case (Some(h), Some(m)) => h.unionByName(m)
+        case (Some(h), Some(m)) => h.unionByName(m.withColumn("__gf_key",
+          lit(null).cast(h.schema("__gf_key").dataType)))
         case (Some(h), None)    => h
         case (None, Some(m))    => m
         case (None, None)       => df.limit(0)
@@ -4728,16 +4836,15 @@ object GraftLog {
           .as(c)
       } ++ (if (tracked) Seq(col(RowIdCol)) else Nil): _*))
     }
-    // insert probe: with updateMatched, a source key matching ANY target
-    // row makes its file touched, so "not matched in the touched files"
-    // == "not matched in the table" and the anti-join scans only touched
-    // files. WITHOUT an update clause that invariant breaks (a matched
-    // key's file may be untouched), so the probe widens to all files —
-    // keys-only column pruning keeps it a narrow scan.
+    // insert probe: with updateMatched, the probe above read every live
+    // row against the source keys, so its distinct matched keys are the
+    // keys the table holds among the source's, and the anti join runs
+    // against that small set. WITHOUT an update clause no hit probe ran,
+    // so the anti join reads the key column of all files.
     val inserts = if (!insertUnmatched) None else {
-      val probeFiles = if (updateMatched) touched else files
-      val targetKeys = readSubset(spark, table, st, probeFiles, schema)
-        .select(keysPhys.map(col): _*)
+      val targetKeys = matchedKeys.getOrElse(
+        readSubset(spark, table, st, files, schema)
+          .select(keysPhys.map(col): _*))
       Some(src.join(targetKeys, keysPhys, "left_anti")
         .select(schema.fieldNames.map(col) ++
           (if (tracked)
@@ -4797,20 +4904,13 @@ object GraftLog {
     * refuses mapped scans by design). */
   private def probeTouched(spark: SparkSession, table: String,
       st: TableState, predicate: Column): Seq[String] = {
-    val (files, schema, cmap) = (st.files, st.schema, st.colMap)
+    val (schema, cmap) = (st.schema, st.colMap)
     if (cmap.nonEmpty)
       touchedFiles(spark, table, st, schema,
         df => toLogicalDf(df, schema, cmap, keep = Seq("__gf_file"))
-          .filter(predicate))
-    else {
-      val rels = GraftFileIndex.readState(spark, table, st)
-        .filter(predicate)
-        .select(input_file_name().as("__gf_file")).distinct()
-        .collect()
-        .flatMap(r => relPathOf(new java.net.URI(r.getString(0)).getPath))
-        .toSet
-      files.filter(f => relPathOf(absPath(table, f)).exists(rels.contains))
-    }
+          .filter(predicate))._1
+    else probedFiles(table, st, GraftFileIndex.readState(spark, table, st)
+      .filter(predicate).select(input_file_name().as("__gf_file")))._1
   }
 
   private def deleteOnce(spark: SparkSession, table: String,
@@ -4890,19 +4990,12 @@ object GraftLog {
           df => prune.foldLeft(
             toLogicalDf(df, schema, cmap, keep = Seq("__gf_file")))(
               (d, p) => d.filter(p))
-            .join(keyset, keyCols, "left_semi"))
-      else {
-        val rels = prune.foldLeft(GraftFileIndex.readState(spark, table, st))(
+            .join(keyset, keyCols, "left_semi"))._1
+      else probedFiles(table, st,
+        prune.foldLeft(GraftFileIndex.readState(spark, table, st))(
             (d, p) => d.filter(p))
           .withColumn("__gf_file", input_file_name())
-          .join(keyset, keyCols, "left_semi")
-          .select("__gf_file").distinct().collect()
-          .flatMap(r =>
-            relPathOf(new java.net.URI(r.getString(0)).getPath))
-          .toSet
-        files.filter(f =>
-          relPathOf(absPath(table, f)).exists(rels.contains))
-      }
+          .join(keyset, keyCols, "left_semi"))._1
     val s = if (touched.isEmpty) Staged(Seq.empty, Map.empty, Map.empty)
     else {
       val tracked = partCols.isEmpty && cmap.isEmpty && tracksRows(st.props)
@@ -5229,8 +5322,7 @@ object GraftLog {
           if (tracksRows(st.props)) rowIdRead(spark, table, st, None)
           else toLogicalDf(
             if (dvs.nonEmpty) readWithDvs(spark, table, st, files, schema)
-            else spark.read.schema(schema)
-              .parquet(files.map(f => absPath(table, f)): _*),
+            else readSubset(spark, table, st, files, schema),
             schema, cmap)
         stageWithStats(current.coalesce(targetFiles), table)
       } else {

@@ -264,6 +264,42 @@ class LogStateSpec extends AnyFunSuite {
     }
   }
 
+  test("a flat rewrite from a light checkpoint state reads the log " +
+      "for stats at most once") {
+    val t = table(13) // v0..v12, the auto-checkpoint at v10 among them
+    // as in a fresh JVM: the state starts from a light checkpoint
+    // decode, which carries no per-file stats; the delete's file probe
+    // reads them once, and its rewrite of the touched files needs none
+    GraftLog.resetStateMemo()
+    GraftLog.snapshot(spark, t)
+    val (_, c) = counted(GraftLog.delete(spark, t,
+      org.apache.spark.sql.functions.col("id") === 3L))
+    assert(c("listings") == 2, c)
+    assert(GraftLog.read(spark, t).count() == 64)
+  }
+
+  test("a flat delete and compact list no data file") {
+    val t = table(4) // v0..v3: four flat files
+    val hc = spark.sparkContext.hadoopConfiguration
+    val keys = Seq("fs.file.impl", "fs.file.impl.disable.cache")
+    val saved = keys.map(k => k -> Option(hc.get(k)))
+    hc.set("fs.file.impl", classOf[DataListingFs].getName)
+    hc.setBoolean("fs.file.impl.disable.cache", true)
+    val before = DataListingFs.dataListings.get
+    try {
+      GraftLog.delete(spark, t, org.apache.spark.sql.functions.col("id")
+        .isin(1L, 7L))
+      GraftLog.compact(spark, t)
+    } finally saved.foreach {
+      case (k, Some(v)) => hc.set(k, v)
+      case (k, None) => hc.unset(k)
+    }
+    // the rewrite reads the touched files through the attempt's state:
+    // their sizes come from the log, so no data file is listed
+    assert(DataListingFs.dataListings.get - before == 0L)
+    assert(GraftLog.read(spark, t).count() == 18)
+  }
+
   test("restore replays the target version once") {
     val t = table(6) // v0..v5, no checkpoint
     val (v, c) = counted(GraftLog.restore(spark, t, 2L))
@@ -315,4 +351,20 @@ object TaskHook {
     new java.util.concurrent.atomic.AtomicReference[() => Unit]()
   def arm(f: () => Unit): Unit = armed.set(f)
   def fire(): Unit = Option(armed.getAndSet(null)).foreach(_())
+}
+
+/** A local filesystem that counts listings of data files (a parquet
+  * file listed as a leaf: what a plain `spark.read.parquet(paths)`
+  * does to each path it resolves). */
+class DataListingFs extends org.apache.hadoop.fs.LocalFileSystem {
+  override def listStatus(f: org.apache.hadoop.fs.Path)
+      : Array[org.apache.hadoop.fs.FileStatus] = {
+    if (f.getName.endsWith(".parquet"))
+      DataListingFs.dataListings.incrementAndGet()
+    super.listStatus(f)
+  }
+}
+
+object DataListingFs {
+  val dataListings = new java.util.concurrent.atomic.AtomicLong
 }

@@ -475,4 +475,177 @@ class MergeClausesSpec extends AnyFunSuite {
       s"derived column must recompute from the updated base: $m")
     assert(m(2L) == 40.0)
   }
+
+  // ---- the NOT MATCHED side answered by the matched probe's keys ----
+
+  private def nullableIds(rows: (Option[Long], String)*) =
+    rows.toDF("id", "tag")
+
+  private def tagRows(t: String): Seq[(Option[Long], String)] =
+    GraftLog.read(spark, t).select("id", "tag").collect().toSeq
+      .map(r => (if (r.isNullAt(0)) None else Some(r.getLong(0)),
+        r.getString(1)))
+      .sortBy(r => (r._1.getOrElse(Long.MinValue), r._2))
+
+  private val upsertShape = Seq(
+    Delete(Some(expr("s.tag = 'del'"))),
+    Update(None, Seq("tag" -> col("s.tag"))))
+
+  test("NOT MATCHED: source rows with NULL keys are inserted") {
+    val t = tmp()
+    GraftLog.overwrite(nullableIds(Some(1L) -> "a", Some(2L) -> "b"), t)
+    GraftLog.mergeClauses(
+      nullableIds(None -> "n1", None -> "n2", Some(1L) -> "u",
+        Some(3L) -> "i"),
+      t, Seq("id"), matched = upsertShape, notMatched = Seq(Insert()))
+    assert(tagRows(t) == Seq(None -> "n1", None -> "n2", Some(1L) -> "u",
+      Some(2L) -> "b", Some(3L) -> "i"))
+  }
+
+  test("NOT MATCHED: unmatched source rows sharing a key all insert") {
+    val t = tmp()
+    GraftLog.overwrite(nullableIds(Some(1L) -> "a"), t)
+    GraftLog.mergeClauses(
+      nullableIds(Some(7L) -> "x", Some(7L) -> "y", Some(1L) -> "u"),
+      t, Seq("id"), matched = upsertShape, notMatched = Seq(Insert()))
+    assert(tagRows(t) == Seq(Some(1L) -> "u", Some(7L) -> "x",
+      Some(7L) -> "y"))
+  }
+
+  test("NOT MATCHED: a key matching only an untouched file is not " +
+      "inserted under conditional-only matched clauses") {
+    val t = tmp()
+    GraftLog.overwrite(nullableIds(Some(1L) -> "a"), t)
+    GraftLog.append(nullableIds(Some(2L) -> "b"), t)
+    val before = GraftLog.snapshot(spark, t)._1.toSet
+    // id=2 key-matches, but no matched clause applies to it: its file
+    // is not touched, and it must not insert a second id=2 row
+    GraftLog.mergeClauses(
+      nullableIds(Some(1L) -> "del", Some(2L) -> "keep", Some(3L) -> "i"),
+      t, Seq("id"), matched = Seq(Delete(Some(expr("s.tag = 'del'")))),
+      notMatched = Seq(Insert()))
+    assert(tagRows(t) == Seq(Some(2L) -> "b", Some(3L) -> "i"))
+    val after = GraftLog.snapshot(spark, t)._1.toSet
+    assert((before & after).size == 1,
+      s"id=2's file stays live untouched: $before -> $after")
+  }
+
+  test("NOT MATCHED: an extra ON conjunct takes the anti-join fallback") {
+    val t = tmp()
+    GraftLog.overwrite(nullableIds(Some(1L) -> "a", Some(2L) -> "frozen"),
+      t)
+    GraftLog.append(nullableIds(Some(3L) -> "c"), t)
+    // id=1: full ON match, no clause applies → neither changed nor
+    // inserted; id=2: key match, extra conjunct fails → NOT MATCHED,
+    // inserted beside the target row; id=3: updated; id=4: inserted
+    GraftLog.mergeClauses(
+      nullableIds(Some(1L) -> "a", Some(2L) -> "new", Some(3L) -> "u",
+        Some(4L) -> "i"),
+      t, Seq("id"),
+      matched = Seq(Update(Some(expr("s.tag <> t.tag")),
+        Seq("tag" -> col("s.tag")))),
+      notMatched = Seq(Insert()),
+      onExtra = Some(expr("t.tag <> 'frozen'")))
+    assert(tagRows(t) == Seq(Some(1L) -> "a", Some(2L) -> "frozen",
+      Some(2L) -> "new", Some(3L) -> "u", Some(4L) -> "i"))
+  }
+
+  test("the ambiguity throw is unchanged on a multi-file table") {
+    val t = tmp()
+    GraftLog.overwrite(people((1L, "ann", 100.0, "active")), t)
+    GraftLog.append(people((2L, "bob", 200.0, "active")), t)
+    val before = readMap(t)
+    // id=2 (second file) meets two source rows with an applicable clause
+    val e = intercept[IllegalStateException] {
+      GraftLog.mergeClauses(
+        people((1L, "x", 1.0, "a"), (2L, "y", 2.0, "b"),
+          (2L, "z", 3.0, "c")),
+        t, Seq("id"),
+        matched = Seq(Update(Some(expr("s.salary < 10")),
+          Seq("salary" -> col("s.salary")))),
+        notMatched = Seq(Insert()))
+    }
+    assert(e.getMessage == s"MERGE into $t: a target row matches " +
+      "multiple source rows with an applicable WHEN MATCHED clause — " +
+      "the result would be nondeterministic (first-match-wins orders " +
+      "clauses, not source rows); de-duplicate the source on the merge " +
+      "keys first")
+    assert(readMap(t) == before, "nothing committed")
+  }
+
+  test("autoMerge-widened MERGE reads typed NULLs for files without the " +
+      "column") {
+    val t = tmp()
+    GraftLog.overwrite(people((1L, "ann", 100.0, "active")), t)
+    GraftLog.append(people((2L, "bob", 200.0, "active")), t)
+    val src = Seq((1L, "ann", 150.0, "active", "eng"),
+      (2L, "bob", 200.0, "active", "ops"))
+      .toDF("id", "name", "salary", "status", "dept")
+    // widens the schema; only id=1's file rewrites (the condition
+    // misses id=2), so id=2's file lacks `dept`
+    GraftLog.mergeClauses(src, t, Seq("id"),
+      matched = Seq(Update(Some(expr("s.salary <> t.salary")), Nil)),
+      mergeSchema = true)
+    // rewrites id=2's file under the widened state schema: the carried
+    // column reads as a typed NULL, the rewritten file keeps its value
+    GraftLog.mergeClauses(
+      Seq((2L, "bob", 250.0, "active", "x")).toDF("id", "name", "salary",
+        "status", "dept"),
+      t, Seq("id"),
+      matched = Seq(Update(Some(expr("s.salary <> t.salary")),
+        Seq("salary" -> col("s.salary")))))
+    val out = GraftLog.read(spark, t).collect().map(r =>
+      r.getLong(0) -> ((r.getDouble(2), Option(r.getAs[String]("dept")))))
+      .toMap
+    assert(out == Map(1L -> ((150.0, Some("eng"))), 2L -> ((250.0, None))))
+  }
+
+  test("a SQL MERGE of the upsert shape runs at most 5 Spark jobs and " +
+      "shuffles nothing") {
+    import java.util.concurrent.atomic.AtomicLong
+    import org.apache.spark.scheduler.{SparkListener,
+      SparkListenerJobStart, SparkListenerTaskEnd}
+    val t = tmp()
+    GraftLog.overwrite((0 until 400).map(i => (i.toLong, s"t$i"))
+      .toDF("id", "tag").repartitionByRange(4, col("id"))
+      .sortWithinPartitions("id"), t)
+    val cdc = graft.sources.Staging.tempDir("graft_mclause_cdc_") + "/cdc"
+    (Seq((3L, "x", "D"), (5L, "y", "U"), (390L, "z", "U"),
+      (1000L, "w", "I"), (1001L, "v", "D")))
+      .toDF("id", "tag", "op").write.parquet(cdc)
+    spark.sql("DROP TABLE IF EXISTS mclause_jobs_t")
+    spark.sql(s"CREATE TABLE mclause_jobs_t USING graft OPTIONS (path '$t')")
+    spark.read.parquet(cdc).createOrReplaceTempView("mclause_jobs_src")
+    val (jobs, shuffled) = (new AtomicLong, new AtomicLong)
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet(): Unit
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach(m =>
+          shuffled.addAndGet(m.shuffleWriteMetrics.bytesWritten))
+    }
+    try {
+      org.apache.spark.ListenerDrain(spark.sparkContext)
+      spark.sparkContext.addSparkListener(l)
+      spark.sql(
+        """MERGE INTO mclause_jobs_t t USING mclause_jobs_src s
+          |ON t.id = s.id
+          |WHEN MATCHED AND s.op = 'D' THEN DELETE
+          |WHEN MATCHED THEN UPDATE SET tag = s.tag
+          |WHEN NOT MATCHED AND s.op <> 'D' THEN INSERT (id, tag)
+          |  VALUES (s.id, s.tag)""".stripMargin)
+      org.apache.spark.ListenerDrain(spark.sparkContext)
+      // the probe's source broadcast and scan; the write's source and
+      // matched-key broadcasts and the write itself
+      assert(jobs.get <= 5, s"jobs ${jobs.get}")
+      assert(shuffled.get == 0L, s"shuffle bytes ${shuffled.get}")
+    } finally {
+      spark.sparkContext.removeSparkListener(l)
+      spark.sql("DROP TABLE IF EXISTS mclause_jobs_t")
+      spark.catalog.dropTempView("mclause_jobs_src")
+    }
+    val rows = GraftLog.read(spark, t).as[(Long, String)].collect().toMap
+    assert(rows.size == 400 && !rows.contains(3L) && rows(5L) == "y" &&
+      rows(390L) == "z" && rows(1000L) == "w" && !rows.contains(1001L))
+  }
 }
