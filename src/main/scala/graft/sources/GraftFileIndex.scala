@@ -669,15 +669,8 @@ object GraftFileIndex {
         // column names so the append-path schema enforcement sees them
         val aligned = data.toDF(schema.fieldNames.toSeq: _*)
         val partCols = idx.partitionSchema.fieldNames.toSeq
-        if (overwrite) {
-          if (partCols.nonEmpty)
-            GraftLog.overwritePartitioned(aligned, table, partCols)
-          else GraftLog.overwrite(aligned, table)
-        } else {
-          if (partCols.nonEmpty)
-            GraftLog.appendPartitioned(aligned, table, partCols)
-          else GraftLog.append(aligned, table)
-        }
+        if (overwrite) GraftLog.overwritePartitioned(aligned, table, partCols)
+        else GraftLog.appendPartitioned(aligned, table, partCols)
         // CRITICAL: drop the catalog's cached relation. Spark serves
         // the NEXT statement's resolution from the relation cache, and
         // a stale entry routes a later INSERT down the raw
@@ -866,11 +859,8 @@ final class GraftDataSource extends RelationProvider with DataSourceRegister
     def write(f: => Long): Unit = { f; () }
     mode match {
       case Append =>
-        write(if (partCols.nonEmpty)
-          GraftLog.appendPartitioned(data.toDF(), path, partCols)
-        else if (mergeSchema)
-          GraftLog.appendMergeSchema(data.toDF(), path)
-        else GraftLog.append(data.toDF(), path))
+        write(if (mergeSchema) GraftLog.appendMergeSchema(data.toDF(), path)
+        else GraftLog.appendPartitioned(data.toDF(), path, partCols))
       case Overwrite =>
         // Delta's selective-overwrite option: replace only the rows
         // matching the predicate, in one commit. The table's own layout
@@ -881,21 +871,16 @@ final class GraftDataSource extends RelationProvider with DataSourceRegister
             write(GraftLog.replaceWhere(data.toDF(), path,
               org.apache.spark.sql.functions.expr(p)))
           case None =>
-            write(if (partCols.nonEmpty)
-              GraftLog.overwritePartitioned(data.toDF(), path, partCols)
-            else GraftLog.overwrite(data.toDF(), path))
+            write(GraftLog.overwritePartitioned(data.toDF(), path, partCols))
         }
       case ErrorIfExists if exists =>
         throw new IllegalStateException(
           s"GraftLog table already exists at $path (SaveMode.ErrorIfExists)")
       case ErrorIfExists =>
-        write(if (partCols.nonEmpty)
-          GraftLog.overwritePartitioned(data.toDF(), path, partCols)
-        else GraftLog.overwrite(data.toDF(), path))
+        write(GraftLog.overwritePartitioned(data.toDF(), path, partCols))
       case Ignore =>
-        if (!exists) write(if (partCols.nonEmpty)
-          GraftLog.overwritePartitioned(data.toDF(), path, partCols)
-        else GraftLog.overwrite(data.toDF(), path))
+        if (!exists)
+          write(GraftLog.overwritePartitioned(data.toDF(), path, partCols))
     }
     GraftFileIndex.relation(spark, path, None)
   }
@@ -1020,21 +1005,12 @@ final class GraftStreamSink(path: String, appId: String,
       data: org.apache.spark.sql.DataFrame): Unit = {
     val batch = org.apache.spark.sql.graftbridge.StreamBatch
       .materialize(data)
-    if (partCols.nonEmpty) {
-      GraftLog.txnAppendPartitioned(batch, path, appId, batchId,
-        partCols); ()
-    } else if (complete) {
-      // Complete output replaces the table every batch; idempotence
-      // still matters (a replayed overwrite must not double-commit), so
-      // route through the ledger check then overwrite
-      val spark = batch.sparkSession
-      if (!GraftLog.lastCommittedBatch(spark, path, appId)
-          .exists(_ >= batchId)) {
-        GraftLog.overwriteTxn(batch, path, appId, batchId); ()
-      }
-    } else {
-      GraftLog.txnAppend(batch, path, appId, batchId); ()
-    }
+    // Complete output replaces the table every batch; idempotence
+    // still matters (a replayed overwrite must not double-commit), and
+    // overwriteTxn checks the ledger on the state it overwrites
+    if (complete) GraftLog.overwriteTxn(batch, path, appId, batchId)
+    else GraftLog.txnAppendPartitioned(batch, path, appId, batchId, partCols)
+    ()
   }
   override def toString: String = s"GraftStreamSink[$path]"
 }

@@ -1807,13 +1807,11 @@ object GraftLog {
     * ([[GraftFileIndex]]), where min/max stats keep everything. */
   def overwriteIndexed(df: DataFrame, table: String,
       bloomCols: Seq[String]): Long = {
-    val spark = df.sparkSession
-    val st0 = logState(spark, table)
-    requireAppendable(table, "overwrite", st0)
-    enforceChecks(df, checksOf(st0), "overwriteIndexed")
-    val st = stageWithStats(df, table)
-    val bl = collectBlooms(spark, table, st.files, df.schema, bloomCols)
-    commitOverwrite(spark, table, st, df.schema.toDDL, blooms = bl)
+    val c = conform(table, logState(df.sparkSession, table), df,
+      "overwriteIndexed", Replace)
+    val s = stage(table, c)
+    claim(table, c, s, "overwrite", blooms = collectBlooms(df.sparkSession,
+      table, s.files, c.df.schema, bloomCols))
   }
 
   /** Delta's `optimizeWrite` analog — the WRITE-SIDE half of the
@@ -1917,10 +1915,6 @@ object GraftLog {
     }
   }
 
-  /** Atomic overwrite: readers see the old snapshot until the single
-    * commit-file link flips them to the new one — no window where the
-    * table is empty or mixed (the failure mode of a recursive
-    * delete-then-write on plain parquet dirs). */
   /** CONVERT a plain-parquet directory into a graft table WITHOUT
     * rewriting data — the Delta `CONVERT TO DELTA` / Iceberg
     * `add_files` migration path. The existing part files become commit
@@ -1966,15 +1960,6 @@ object GraftLog {
         s"directories; $dir mixes other subdirectories")
     require(!(partitioned && parquets.nonEmpty),
       s"$dir mixes top-level parquet files with col=val dirs")
-    def walk(p: HPath): Seq[(String, Long)] =
-      f.listStatus(p).toSeq.flatMap { st =>
-        val n = st.getPath.getName
-        if (st.isDirectory && !n.startsWith("_") && !n.startsWith("."))
-          walk(st.getPath).map { case (s, len) => (s"$n/$s", len) }
-        else if (!st.isDirectory && n.endsWith(".parquet") &&
-          !n.startsWith(".") && !n.startsWith("_")) Seq((n, st.getLen))
-        else Seq.empty
-      }
     // Crash safety: a prior convert that died after some renames into
     // _data/convert-<uuid>/ but before writeCommit leaves a log-less
     // dir whose already-moved rows hide under the underscore-prefixed
@@ -1989,7 +1974,7 @@ object GraftLog {
         .filter(st => st.isDirectory &&
           st.getPath.getName.startsWith("convert-"))
         .flatMap { st =>
-          walk(st.getPath).map { case (s, len) =>
+          parquetLeaves(f, st.getPath).map { case (s, len) =>
             (s"$DataDirName/${st.getPath.getName}/$s", len)
           }
         }.sortBy(_._1)
@@ -2013,7 +1998,7 @@ object GraftLog {
             new HPath(s"$dir/$rel/${st.getPath.getName}")),
             s"rename failed for ${st.getPath.getName}")
         }
-        walk(new HPath(s"$dir/$rel")).sortBy(_._1)
+        parquetLeaves(f, new HPath(s"$dir/$rel")).sortBy(_._1)
           .map { case (s, len) => (s"$rel/$s", len) }
       } else parquets.map { st =>
         val name = st.getPath.getName
@@ -2029,40 +2014,20 @@ object GraftLog {
     0L
   }
 
-  def overwrite(df: DataFrame, table: String): Long = {
-    val st0 = logState(df.sparkSession, table)
-    requireAppendable(table, "overwrite", st0)
-    // overwrite keeps table metadata (constraints, generated-column
-    // definitions) — Delta semantics — so the replacement rows must
-    // satisfy the current CHECK set and carry computed generated
-    // values; identity marks survive the overwrite (Delta: high water
-    // never resets, so replaced rows' ids are never reissued)
-    val gens0 = st0.fold(Map.empty[String, String])(_.generated)
-    val full0 = applyGenerated(df, gens0, "overwrite")
-    val (full, gens2) = allocateIdentity(df.sparkSession, full0, gens0)
-    enforceChecks(full, checksOf(st0), "overwrite")
-    commitOverwrite(df.sparkSession, table,
-      stageWithStats(optimizedWrite(full, Nil, propsOf(st0)), table),
-      full.schema.toDDL,
-      generated = if (gens2 != gens0) gens2 else Map.empty)
-  }
+  /** Atomic overwrite of `table` by `df` (see [[Replace]]). */
+  def overwrite(df: DataFrame, table: String): Long =
+    write(df, table, "overwrite", Replace, "overwrite")
 
   /** Idempotent transactional overwrite — the Complete-mode streaming
     * sink's commit: the (appId, batchId) ledger makes a replayed batch
     * a no-op (-1), otherwise one whole-table overwrite commit stamped
     * with the txn lands. The frame stages once; on a collision
-    * [[commitOverwrite]] re-checks the ledger on the fresh state and
-    * re-claims against it. */
+    * [[claim]] re-checks the ledger on the fresh state and re-claims
+    * against it. */
   def overwriteTxn(df: DataFrame, table: String, appId: String,
-      batchId: Long): Long = {
-    val st0 = logState(df.sparkSession, table)
-    requireAppendable(table, "overwrite", st0)
-    enforceChecks(df, checksOf(st0), "overwriteTxn")
-    val txn = (appId, batchId)
-    if (landed(st0, txn)) -1L
-    else commitOverwrite(df.sparkSession, table, stageWithStats(df, table),
-      df.schema.toDDL, txn = Some(txn))
-  }
+      batchId: Long): Long =
+    write(df, table, "overwriteTxn", Replace, "overwrite",
+      txn = Some((appId, batchId)))
 
   // --------------------------------------------------- partitioned layout
 
@@ -2073,6 +2038,19 @@ object GraftLog {
   private[sources] def hasPartitionedFiles(files: Seq[String]): Boolean =
     files.exists(isPartitionedPath)
 
+  /** `(path, bytes)` of the visible parquet files under `p`, paths
+    * relative to `p`, recursing into visible subdirectories (`_`- and
+    * `.`-prefixed names are hidden, the Hadoop convention). */
+  private def parquetLeaves(f: FileSystem, p: HPath): Seq[(String, Long)] =
+    f.listStatus(p).toSeq.flatMap { st =>
+      val n = st.getPath.getName
+      if (st.isDirectory && !n.startsWith("_") && !n.startsWith("."))
+        parquetLeaves(f, st.getPath).map { case (s, len) => (s"$n/$s", len) }
+      else if (!st.isDirectory && n.endsWith(".parquet") &&
+        !n.startsWith(".") && !n.startsWith("_")) Seq((n, st.getLen))
+      else Seq.empty
+    }
+
   /** Stage `df` hive-partitioned (`col=val` dirs, partition columns NOT
     * in the data files) + per-file stats over the data columns. */
   private def stagePartitionedWithStats(df: DataFrame, table: String,
@@ -2082,17 +2060,8 @@ object GraftLog {
     val rel = s"$DataDirName/${UUID.randomUUID()}"
     val dir = s"$table/$rel"
     df.write.partitionBy(partCols: _*).parquet(dir)
-    val f = fs(df.sparkSession, table)
-    def walk(p: HPath): Seq[(String, Long)] =
-      f.listStatus(p).toSeq.flatMap { st =>
-        val n = st.getPath.getName
-        if (st.isDirectory && !n.startsWith("_") && !n.startsWith("."))
-          walk(st.getPath).map { case (s, len) => (s"$n/$s", len) }
-        else if (!st.isDirectory && n.endsWith(".parquet") &&
-          !n.startsWith(".") && !n.startsWith("_")) Seq((n, st.getLen))
-        else Seq.empty
-      }
-    val entries = walk(new HPath(dir)).sortBy(_._1)
+    val entries = parquetLeaves(fs(df.sparkSession, table), new HPath(dir))
+      .sortBy(_._1)
       .map { case (s, len) => (s"$rel/$s", len) }
     val added = entries.map(_._1)
     val dataSchema = StructType(df.schema.fields.filterNot(fd =>
@@ -2100,6 +2069,15 @@ object GraftLog {
     Staged(added, collectStats(df.sparkSession, table, added, dataSchema),
       entries.toMap)
   }
+
+  /** Stage `df` with stats under `layout`: flat (no columns), hive
+    * `col=val` dirs, or hidden `gfb<n>_<col>` bucket dirs whose column
+    * is derived here ([[withHiddenPartCols]]). */
+  private def stageUnder(df: DataFrame, table: String,
+      layout: Seq[String]): Staged =
+    if (layout.isEmpty) stageWithStats(df, table)
+    else stagePartitionedWithStats(withHiddenPartCols(df, layout), table,
+      layout)
 
   /** Atomic overwrite with hive partitioning (`PARTITIONED BY` analog,
     * ref `financial_dl_bronze.py:26`): files land under `col=val` dirs,
@@ -2109,17 +2087,9 @@ object GraftLog {
     * `props` are set in the same commit. */
   def overwritePartitioned(df: DataFrame, table: String,
       partCols: Seq[String],
-      props: Map[String, String] = Map.empty): Long = {
-    val st0 = logState(df.sparkSession, table)
-    requireAppendable(table, "overwrite", st0)
-    val full = applyGenerated(df,
-      st0.fold(Map.empty[String, String])(_.generated),
-      "overwritePartitioned")
-    enforceChecks(full, checksOf(st0), "overwritePartitioned")
-    commitOverwrite(df.sparkSession, table,
-      stagePartitionedWithStats(optimizedWrite(full, partCols, propsOf(st0)),
-        table, partCols), full.schema.toDDL, extraProps = props)
-  }
+      props: Map[String, String] = Map.empty): Long =
+    write(df, table, "overwritePartitioned", Replace, "overwrite",
+      partCols, extraProps = props)
 
   /** Hidden bucket-transform dir name: `gfb<n>_<col>` (Iceberg's
     * `bucket(n, col)` partition transform; no leading underscore — the
@@ -2165,18 +2135,11 @@ object GraftLog {
     * where the partition column is a real, visible column). */
   def overwriteBucketTransform(df: DataFrame, table: String,
       srcCol: String, nBuckets: Int): Long = {
-    val spark = df.sparkSession
-    val st0 = logState(spark, table)
-    requireAppendable(table, "overwrite", st0)
     require(nBuckets > 0, "nBuckets must be positive")
     require(df.columns.exists(_.equalsIgnoreCase(srcCol)),
       s"bucket column $srcCol not in ${df.columns.mkString(",")}")
-    val syn = s"gfb${nBuckets}_$srcCol"
-    val s = stagePartitionedWithStats(
-      optimizedWrite(df.withColumn(syn,
-        pmod(xxhash64(col(srcCol)), lit(nBuckets.toLong))), Seq(syn),
-        propsOf(st0)), table, Seq(syn))
-    commitOverwrite(spark, table, s, df.schema.toDDL)
+    write(df, table, "overwriteBucketTransform", Replace, "overwrite",
+      Seq(s"gfb${nBuckets}_$srcCol"))
   }
 
   /** The declared CURRENT partition spec (`graft.partitionSpec` =
@@ -2238,51 +2201,19 @@ object GraftLog {
         ("graft.partitionSpec" -> s"bucket($nBuckets,$srcCol)")))
   }
 
-  /** Append into a partitioned table (same enforcement as [[append]]). */
+  /** Append into a hive-partitioned table: files land under the
+    * `partCols` dirs, which must be the table's layout (see [[Enforce]];
+    * an empty list is [[append]]). */
   def appendPartitioned(df: DataFrame, table: String,
-      partCols: Seq[String]): Long = {
-    val spark = df.sparkSession
-    val st0 = logState(spark, table)
-    val props0 = propsOf(st0)
-    val gens0 = st0.fold(Map.empty[String, String])(_.generated)
-    val (aligned, ddl, gens2) = st0 match {
-      case Some(st) =>
-        val (files, cur) = (st.files, st.schema)
-        val existing = layoutPartCols(files)
-        require(files.isEmpty ||
-          existing.map(_.toLowerCase) == partCols.map(_.toLowerCase),
-          s"appendPartitioned(${partCols.mkString(",")}) does not match " +
-            s"the table's layout (${existing.mkString(",")}) — mixed " +
-            "layouts would break path-derived partition reconstruction")
-        // generated columns compute BEFORE schema enforcement: the
-        // table schema carries them, the batch usually does not
-        val dfG0 = applyGenerated(df, gens0, "appendPartitioned")
-        val (dfG, g2) = allocateIdentity(spark, dfG0, gens0)
-        val ok = enforceSchema(dfG, cur, "appendPartitioned")
-        enforceChecks(ok, st.checks, "appendPartitioned")
-        (ok, cur.toDDL, g2)
-      case None => (df, df.schema.toDDL, Map.empty[String, String])
-    }
-    val s = stagePartitionedWithStats(
-      optimizedWrite(aligned, partCols, props0), table, partCols)
-    val hasId = gens0.values.exists(identityDef(_).isDefined)
-    commitStagedAppend(spark, table, "appendPartitioned", "append", s,
-      ddl, st0,
-      st => {
-        if (hasId) requireIdentityUnmoved(table, st, gens0,
-          "appendPartitioned")
-        revalidateBlindAppend(table, st, aligned.schema,
-          "appendPartitioned", partCols)
-      },
-      generated = if (hasId) gens2 else Map.empty)
-  }
+      partCols: Seq[String]): Long =
+    write(df, table, "appendPartitioned", Enforce, "append", partCols)
 
   /** Flat-file writers (append/streaming append) and the deletion-vector
     * machinery refuse hive-partitioned layouts: a flat-staged file would
     * silently MISS the partition columns, and DV masks key on flat scan
     * positions. Loud beats wrong. (merge/delete/update/compact/clusterBy
     * handle partitioned layouts natively — they re-stage through
-    * [[stagePartitionedWithStats]].) */
+    * [[stageUnder]].) */
   private def requireUnpartitioned(files: Seq[String], op: String): Unit =
     require(!hasPartitionedFiles(files),
       s"$op on a hive-partitioned GraftLog table is not supported " +
@@ -2320,7 +2251,7 @@ object GraftLog {
     else GraftFileIndex.readSubset(spark, table, st, files, asOf)
       .select(schema.fieldNames.map(col).toSeq: _*)
 
-  /** Schema enforcement shared by [[append]] and [[txnAppend]]: the batch
+  /** Schema enforcement of the [[Enforce]] policy in [[conform]]: the batch
     * must carry exactly the table's columns WITH the table's types — a
     * name-only check would let `tag INT` slip past a `tag STRING` table
     * and re-point the schema at the batch's types, after which the
@@ -2367,12 +2298,6 @@ object GraftLog {
       case _ => a == b
     }
 
-  /** Append: adds files, removes none. Delta's schema enforcement: the
-    * batch must carry exactly the table's columns and types (first append
-    * on an empty log sets the schema) — a mismatched batch is REJECTED
-    * rather than silently re-pointing the table schema at the batch's,
-    * and the commit re-asserts the existing table schema. Widening
-    * appends go through [[appendMergeSchema]]. */
   /** Source-file URIs ever ingested by [[copyInto]]: the newest
     * checkpoint's carried set plus the commit tail after it — the same
     * fold shape as the txn ledger, and like it metadata-sized (one URI
@@ -2399,7 +2324,8 @@ object GraftLog {
       format: String = "parquet",
       options: Map[String, String] = Map.empty,
       force: Boolean = false): (Long, Long, Long) = {
-    require(latestVersion(spark, table).nonEmpty,
+    var read0 = logState(spark, table)
+    require(read0.nonEmpty,
       s"COPY INTO target $table is not a graft table (create it first)")
     val fmt = format.toLowerCase(java.util.Locale.ROOT)
     require(Set("parquet", "csv", "json").contains(fmt),
@@ -2422,7 +2348,7 @@ object GraftLog {
           "point COPY INTO at each leaf directory instead")
       val listed = entries.filter(_.isFile)
         .map(st => srcFs.makeQualified(st.getPath).toString).sorted
-      val state = stateAt(spark, table)
+      val state = existing(table, read0)
       val ledgerBefore = state.copied.toSet
       val already = if (force) Set.empty[String] else ledgerBefore
       val fresh = listed.filterNot(already)
@@ -2475,171 +2401,35 @@ object GraftLog {
       // the abandon baseline is the PRE-STAGING ledger regardless of
       // force: only entries a COMPETING commit added since count as
       // overlap — a forced re-ingest must not abort on its own history
-      val v = append(df, table, copied = fresh,
+      val c = conform(table, read0, df, "append", Enforce)
+      val s = stage(table, c)
+      val v = claim(table, c, s, "append", copied = fresh,
         copiedBaseline = ledgerBefore)
-      if (v >= 0) {
-        val c = readCommit(spark, table, v)
-        val rows = c.add
-          .map(f => numRecordsOf(c.stats.getOrElse(f, Map.empty))).sum
-        return (v, fresh.size.toLong, rows)
-      }
+      if (v >= 0) return (v, fresh.size.toLong,
+        s.files.map(f => numRecordsOf(s.stats.getOrElse(f, Map.empty))).sum)
       // abandoned: a competing COPY INTO recorded overlapping files —
       // recompute the fresh set from the advanced ledger and retry
       backoffOrGiveUp(attempts, table, "COPY INTO")
       attempts += 1
+      read0 = logState(spark, table)
     }
     throw new IllegalStateException("unreachable")
   }
 
+  /** Append `df` to `table` (see [[Enforce]]): flat, or under the
+    * hidden bucket dirs of a declared `graft.partitionSpec`. `copied`
+    * records the batch's source files in the COPY INTO ledger; the
+    * claim abandons (-1) when a competing writer recorded one of them
+    * since `copiedBaseline` (see [[copyInto]]). */
   def append(df: DataFrame, table: String,
       copied: Seq[String] = Seq.empty,
-      copiedBaseline: Set[String] = Set.empty): Long = {
-    val spark = df.sparkSession
-    // ONE state read serves the whole append: gates, staging options,
-    // the claim's version and the commit's metadata inheritance
-    val st0 = logState(spark, table)
-    val props0 = propsOf(st0)
-    val gens0 = st0.fold(Map.empty[String, String])(_.generated)
-    // partition-spec evolution: a declared current spec re-routes this
-    // blind append's STAGING under the spec's hidden dirs — everything
-    // else (schema gate, OCC, ledger) is the flat path verbatim
-    val spec0 = bucketSpecOf(props0)
-    val (aligned, ddl, gens2) = st0 match {
-      case Some(st) =>
-        val (files, cur, cmap) = (st.files, st.schema, st.colMap)
-        if (spec0.isEmpty) requireUnpartitioned(files, "append")
-        else {
-          require(hiddenOnlyLayout(files),
-            "append under a declared partition spec: the table carries " +
-              "a VISIBLE hive layout; use appendPartitioned")
-          require(cmap.isEmpty,
-            "append under a declared partition spec: column mapping is " +
-              "active; unsupported together")
-        }
-        // the batch carries LOGICAL names; enforce against the logical
-        // schema, then stage under the table's PHYSICAL names so every
-        // data file stays uniformly physical under column mapping
-        // declared DEFAULTs fill omitted columns BEFORE enforcement
-        // (standard SQL / Delta `defaults`); a missing column with no
-        // default still refuses in enforceSchema below
-        val dfD = fillDefaults(df,
-          logicalSchema(cur, cmap), defaultsOf(props0))
-        val dfG0 = applyGenerated(dfD, gens0, "append")
-        val (dfG, g2) = allocateIdentity(spark, dfG0, gens0)
-        val logicalOk =
-          enforceSchema(dfG, logicalSchema(cur, cmap), "append")
-        enforceChecks(logicalOk, st.checks, "append")
-        (toPhysicalDf(logicalOk, cur, cmap), cur.toDDL, g2)
-      case None => (df, df.schema.toDDL, Map.empty[String, String])
-    }
-    val s = spec0 match {
-      case Some((sc, n)) =>
-        val syn = s"gfb${n}_$sc"
-        stagePartitionedWithStats(optimizedWrite(aligned.withColumn(syn,
-          pmod(xxhash64(col(sc)), lit(n.toLong))), Seq(syn), props0),
-          table, Seq(syn))
-      case None =>
-        stageWithStats(optimizedWrite(aligned, Nil, props0), table)
-    }
-    val hasId = gens0.values.exists(identityDef(_).isDefined)
-    commitStagedAppend(spark, table, "append", "append", s, ddl, st0,
-      st => {
-        if (hasId) requireIdentityUnmoved(table, st, gens0, "append")
-        revalidateBlindAppend(table, st, aligned.schema, "append",
-          spec0.map { case (sc, n) => s"gfb${n}_$sc" }.toSeq)
-      },
-      // COPY INTO idempotence: when a competing commit lands between
-      // read and claim, re-check the ingest ledger — if a COMPETING
-      // writer recorded any of this batch's source files since the
-      // caller's baseline read, abandon (-1) so the caller recomputes
-      // the fresh set instead of double-loading (baseline-relative, so
-      // FORCE re-ingest never aborts on its own prior history)
-      abandonIf = st => copied.nonEmpty && st.exists(s =>
-        (s.copied.toSet -- copiedBaseline).exists(copied.contains)),
-      generated = if (hasId) gens2 else Map.empty,
-      copied = copied)
-  }
+      copiedBaseline: Set[String] = Set.empty): Long =
+    write(df, table, "append", Enforce, "append", copied = copied,
+      copiedBaseline = copiedBaseline)
 
-  /** Identity appends are NOT blind: the staged files embed the
-    * allocated values, so a concurrent commit that moved any identity
-    * high-water mark invalidates them (re-claiming would duplicate the
-    * winner's ids). Loud conflict; the caller re-runs and re-allocates
-    * above the new mark — Delta's identity writes conflict the same
-    * way. Non-identity concurrent commits leave the marks unchanged
-    * and the staged batch stays valid (the blind-append fast path). */
-  private def requireIdentityUnmoved(table: String,
-      st: Option[TableState], gens0: Map[String, String],
-      op: String): Unit = {
-    val now = st.fold(Map.empty[String, String])(_.generated)
-    val moved = gens0.exists { case (c, ex) =>
-      identityDef(ex).isDefined && !now.get(c).contains(ex) }
-    if (moved) throw new java.util.ConcurrentModificationException(
-      s"$op on $table: a concurrent commit advanced an identity " +
-        "high-water mark; re-run to allocate above it")
-  }
-
-  /** Schema-evolving append (Delta `mergeSchema`): commit schema = union
-    * of the table's and the batch's columns (table order first, new
-    * batch columns appended). Data files are immutable — older files
-    * simply lack the new columns, and the schema-directed parquet read
-    * fills them as typed NULLs; batch files lacking legacy columns read
-    * the same way. Type CHANGES on a shared column are rejected. */
-  def appendMergeSchema(df: DataFrame, table: String): Long = {
-    val spark = df.sparkSession
-    val st0 = logState(spark, table)
-    // Under column mapping the batch's LOGICAL names re-key to physical
-    // ones for shared columns; genuinely new columns keep their names
-    // (logical == physical for them) but must not collide with any
-    // physical or retired name, or old files would leak foreign bytes
-    // into them.
-    val cmap0 = st0.fold(Map.empty[String, String])(_.colMap)
-    val dfPhys =
-      if (cmap0.isEmpty) df
-      else {
-        df.columns.foreach { c =>
-          val isShared = cmap0.values.exists(_.equalsIgnoreCase(c))
-          require(isShared || !cmap0.keys.exists(_.equalsIgnoreCase(c)),
-            s"appendMergeSchema: new column $c collides with a " +
-              s"physical/retired column name of $table")
-        }
-        df.select(df.columns.map(c =>
-          col(c).as(physNameOf(cmap0, c))).toSeq: _*)
-      }
-    // CHECK validation sees the batch as the table will read it back:
-    // legacy columns the batch lacks become typed NULLs (which pass a
-    // CHECK per SQL unless it explicitly tests IS NOT NULL)
-    st0.foreach { st =>
-      val logical = logicalSchema(st.schema, cmap0)
-      val withMissing = logical.fields
-        .filterNot(f => df.columns.exists(_.equalsIgnoreCase(f.name)))
-        .foldLeft(df)((d, f) =>
-          d.withColumn(f.name, lit(null).cast(f.dataType)))
-      enforceChecks(withMissing, st.checks, "appendMergeSchema")
-    }
-    // The union schema is a function of the table state the claim sits
-    // on, so the claim loop recomputes it whenever the table moves — a
-    // widening that raced another widening asserts the union of both.
-    def merged(st: Option[TableState]): String = (st match {
-      case None => dfPhys.schema
-      case Some(s) =>
-        val cur = s.schema
-        val byName = dfPhys.schema.map(f => f.name.toLowerCase -> f).toMap
-        cur.foreach { f =>
-          byName.get(f.name.toLowerCase).foreach { g =>
-            require(sameTypeModuloNull(g.dataType, f.dataType),
-              s"column ${f.name}: type change ${f.dataType.sql} -> " +
-                s"${g.dataType.sql} is not supported")
-          }
-        }
-        val curNames = cur.fieldNames.map(_.toLowerCase).toSet
-        StructType(cur.fields ++
-          dfPhys.schema.fields.filterNot(f => curNames(f.name.toLowerCase)))
-    }).toDDL
-    val ddl0 = merged(st0)
-    val s = stageWithStats(dfPhys, table)
-    commitStagedAppend(spark, table, "appendMergeSchema",
-      "appendMergeSchema", s, ddl0, st0, merged)
-  }
+  /** Schema-evolving append of `df` to `table` (see [[Union]]). */
+  def appendMergeSchema(df: DataFrame, table: String): Long =
+    write(df, table, "appendMergeSchema", Union, "appendMergeSchema")
 
   /** `ALTER TABLE … ADD COLUMNS` — metadata-only schema widening: one
     * commit that adds no files and re-points the schema at table ∪ new
@@ -2690,6 +2480,10 @@ object GraftLog {
   /** The table properties of a read state (none for an empty log). */
   private def propsOf(st: Option[TableState]): Map[String, String] =
     st.fold(Map.empty[String, String])(_.props)
+
+  /** The generated-column map of a read state (none for an empty log). */
+  private def generatedOf(st: Option[TableState]): Map[String, String] =
+    st.fold(Map.empty[String, String])(_.generated)
 
   /** Generated-column definitions in force at `asOf` (or latest):
     * column name → generation expression SQL over the table's other
@@ -3468,17 +3262,6 @@ object GraftLog {
     case _ => None
   }
 
-  /** Write-time generated-column contract (Delta semantics): a batch
-    * that OMITS a generated column gets it computed from its generation
-    * expression; a batch that SUPPLIES one must satisfy
-    * `col <=> (expr)` on every row (validated in the same single
-    * aggregation pass as CHECK constraints) — silently accepting a
-    * divergent explicit value would break the derived partition
-    * pruning [[GraftFileIndex]] performs from base-column filters.
-    * IDENTITY entries are the exception on both sides: their values are
-    * ALWAYS engine-allocated ([[allocateIdentity]], run by the caller
-    * after this), so a batch supplying one is rejected — GENERATED
-    * ALWAYS means always. */
   /** Fill columns the batch omits from their declared DEFAULT
     * expressions (see [[defaultsOf]]); columns present pass through
     * untouched — a supplied value always wins over the default. */
@@ -3493,6 +3276,17 @@ object GraftLog {
       }
     }
 
+  /** Write-time generated-column contract (Delta semantics): a batch
+    * that OMITS a generated column gets it computed from its generation
+    * expression; a batch that SUPPLIES one must satisfy
+    * `col <=> (expr)` on every row (validated like a CHECK constraint,
+    * in one aggregation pass) — silently accepting a
+    * divergent explicit value would break the derived partition
+    * pruning [[GraftFileIndex]] performs from base-column filters.
+    * IDENTITY entries are the exception on both sides: their values are
+    * ALWAYS engine-allocated ([[allocateIdentity]], run by the caller
+    * after this), so a batch supplying one is rejected — GENERATED
+    * ALWAYS means always. */
   private def applyGenerated(df: DataFrame, gens: Map[String, String],
       ctx: String): DataFrame =
     if (gens.isEmpty) df
@@ -3575,9 +3369,8 @@ object GraftLog {
     * defined, not supplied, at creation). */
   def createGenerated(df: DataFrame, table: String,
       generated: Map[String, String], partCols: Seq[String]): Long = {
-    val spark = df.sparkSession
-    require(latestVersion(spark, table).isEmpty,
-      s"$table is already a GraftLog table")
+    val st0 = logState(df.sparkSession, table)
+    require(st0.isEmpty, s"$table is already a GraftLog table")
     require(generated.nonEmpty, "no generated columns given")
     generated.keys.foreach(c =>
       require(!df.columns.exists(_.equalsIgnoreCase(c)),
@@ -3588,13 +3381,9 @@ object GraftLog {
       generated.keys.exists(_.equalsIgnoreCase(pc)) ||
         df.columns.exists(_.equalsIgnoreCase(pc)),
       s"partition column $pc is neither a batch nor a generated column"))
-    val full0 = applyGenerated(df, generated, "createGenerated")
-    val (full, gens2) = allocateIdentity(spark, full0, generated)
-    val staged =
-      if (partCols.nonEmpty) stagePartitionedWithStats(full, table, partCols)
-      else stageWithStats(full, table)
-    commitOverwrite(spark, table, staged, full.schema.toDDL,
-      generated = gens2,
+    val c = conform(table, st0, df, "createGenerated", Replace, partCols,
+      Some(generated))
+    claim(table, c, stage(table, c), "overwrite",
       // a writer unaware of generation expressions would append rows
       // without computing them (or with stale identity marks)
       extraProps = withFeature(Map.empty, WriterFeaturesKey,
@@ -3849,47 +3638,12 @@ object GraftLog {
     * a crash between sink commit and checkpoint write, the restarted
     * query re-delivers the last batch, and the ledger rejects the
     * duplicate. Same contract as Delta's `txn` action + idempotent
-    * writes. */
+    * writes. The batch meets the same gates, and lands under the same
+    * layout, as an [[append]]. */
   def txnAppend(df: DataFrame, table: String, appId: String,
-      batchId: Long): Boolean = {
-    val spark = df.sparkSession
-    val st0 = logState(spark, table)
-    val txn = (appId, batchId)
-    if (landed(st0, txn)) false
-    else {
-      val (aligned, ddl) = st0 match {
-        case Some(st) => // same gate as append(), incl. column mapping
-          val (cur, cmap) = (st.schema, st.colMap)
-          requireUnpartitioned(st.files, "streaming append")
-          // declared DEFAULTs fill omitted columns on EVERY insert
-          // surface (Delta semantics), not only plain append
-          val dfD = fillDefaults(df, logicalSchema(cur, cmap),
-            defaultsOf(st.props))
-          val logicalOk = enforceSchema(dfD, logicalSchema(cur, cmap),
-            "streaming append")
-          enforceChecks(logicalOk, st.checks, "streaming append")
-          (toPhysicalDf(logicalOk, cur, cmap), cur.toDDL)
-        case None => (df, df.schema.toDDL)
-      }
-      val s = stageWithStats(optimizedWrite(aligned, Nil, propsOf(st0)),
-        table)
-      // The ledger check and the version claim are not one atomic step,
-      // so two concurrent deliveries of the same (appId, batchId) can
-      // both pass the check. The claim loop serializes them: `abandonIf`
-      // re-reads the ledger on EVERY table movement — if the batch
-      // landed meanwhile this is a no-op (the just-staged files are
-      // unreferenced orphans; vacuum's needed-set sweep reclaims them),
-      // otherwise an unrelated commit moved the table and the claim
-      // re-validates + retries one higher.
-      commitStagedAppend(spark, table, "txnAppend",
-        "streamingAppend", s, ddl, st0,
-        st => revalidateBlindAppend(table, st, aligned.schema,
-          "txnAppend", Seq.empty),
-        txn = Some(txn),
-        abandonIf = landed(_, txn)
-      ) >= 0L
-    }
-  }
+      batchId: Long): Boolean =
+    write(df, table, "streaming append", Enforce, "streamingAppend",
+      txn = Some((appId, batchId))) >= 0L
 
   /** [[txnAppend]] for HIVE-PARTITIONED layouts — the streaming sink
     * path for the canonical 100 TB shape (a date-partitioned events
@@ -3906,40 +3660,10 @@ object GraftLog {
     * layout). */
   def txnAppendPartitioned(df: DataFrame, table: String, appId: String,
       batchId: Long, partCols: Seq[String],
-      createProps: Map[String, String] = Map.empty): Boolean = {
-    val spark = df.sparkSession
-    val st0 = logState(spark, table)
-    val txn = (appId, batchId)
-    if (landed(st0, txn)) false
-    else {
-      val (aligned, ddl) = st0 match {
-        case Some(st) =>
-          val (files, cur) = (st.files, st.schema)
-          val existing = layoutPartCols(files)
-          require(files.isEmpty ||
-            existing.map(_.toLowerCase) == partCols.map(_.toLowerCase),
-            s"streaming appendPartitioned(${partCols.mkString(",")}) " +
-              s"does not match the table's layout " +
-              s"(${existing.mkString(",")})")
-          val ok = enforceSchema(
-            fillDefaults(df, cur, defaultsOf(st.props)), cur,
-            "streaming append (partitioned)")
-          enforceChecks(ok, st.checks, "streaming append (partitioned)")
-          (ok, cur.toDDL)
-        case None => (df, df.schema.toDDL)
-      }
-      val s = stagePartitionedWithStats(optimizedWrite(aligned, partCols,
-        propsOf(st0)), table, partCols)
-      commitStagedAppend(spark, table, "txnAppendPartitioned",
-        "streamingAppend", s, ddl, st0,
-        st => revalidateBlindAppend(table, st, aligned.schema,
-          "txnAppendPartitioned", partCols),
-        txn = Some(txn),
-        abandonIf = landed(_, txn),
-        createProps = createProps
-      ) >= 0L
-    }
-  }
+      createProps: Map[String, String] = Map.empty): Boolean =
+    write(df, table, "streaming appendPartitioned", Enforce,
+      "streamingAppend", partCols, txn = Some((appId, batchId)),
+      createProps = createProps) >= 0L
 
   /** Bounded contention policy shared by the transactional writers: a
     * conflict loop may not spin forever under sustained contention
@@ -3958,20 +3682,21 @@ object GraftLog {
   // ------------------------------------------- conflict resolution (OCC)
   // The Delta ConflictChecker contract on this log. Two writer classes:
   //
-  //  * BLIND APPENDS (append/appendMergeSchema/appendPartitioned/
-  //    txnAppend) read no data, so they commute with ANY concurrent
-  //    commit except a metadata change — a lost version race just
-  //    retries the claim with the already-staged files. But the commit
-  //    re-asserts the table schema, so the claim must first RE-VALIDATE
-  //    whenever the table moved since the batch was validated — with or
-  //    WITHOUT a version collision (a winner landing between our entry
-  //    snapshot and our claim never collides, and re-asserting the
-  //    entry-time ddl would silently revert its schema change). An
-  //    incompatible move (schema change the staged batch no longer
-  //    fits, a re-layout) fails loudly — Delta's
-  //    MetadataChangedException.
+  //  * INGEST WRITES (every append and overwrite entry point, through
+  //    the write pipeline's [[claim]]) stage their files once and keep
+  //    them across a lost race: the files never depend on the table's
+  //    rows. An append removes nothing, so it commutes with ANY
+  //    concurrent commit except a metadata change; an overwrite
+  //    recomputes its remove set (the files live on the claim's state).
+  //    But the batch was conformed to the metadata of the state it
+  //    read, so a claim on a moved table first RE-VALIDATES — the
+  //    claim takes the version after that read, so any move collides.
+  //    A concurrent change of the CHECK constraints, generated columns
+  //    (an identity high-water mark included) or DEFAULTs, a schema
+  //    change an appended batch no longer fits, or a re-layout, fails
+  //    loudly — Delta's MetadataChangedException.
   //
-  //  * SNAPSHOT REWRITES (overwrite/delete/update/merge/compact/
+  //  * SNAPSHOT REWRITES (delete/update/merge/compact/
   //    clusterBy/restore/deleteVectors and the metadata commits) compute
   //    their remove/rewrite set, gates and metadata against the state
   //    they read, so after a lost race all of it is STALE. The loop
@@ -4055,42 +3780,266 @@ object GraftLog {
         cur.toDDL
     }
 
-  /** Claim loop shared by the blind-append writers: files are staged
-    * exactly once (by the caller), and each claim takes the version
-    * after the state `st0` the operation read, so any commit that
-    * landed since collides. After a lost race the loop re-reads the
-    * state: `abandonIf` (the txn-ledger duplicate check) short-circuits
-    * to -1, and `reval` recomputes the ddl to assert against it (see
-    * the OCC note above). `createProps` are set only by a claim that
-    * creates the table; a claim onto an existing table requires them
-    * there ([[requireCreateProps]]). */
-  private def commitStagedAppend(spark: SparkSession, table: String,
-      op: String, commitOp: String, s: Staged, ddl0: String,
-      st0: Option[TableState], reval: Option[TableState] => String,
-      txn: Option[(String, Long)] = None,
-      abandonIf: Option[TableState] => Boolean = _ => false,
-      generated: Map[String, String] = Map.empty,
+  // ------------------------------------------------------- write pipeline
+  // Every ingest entry point — append, appendPartitioned,
+  // appendMergeSchema, txnAppend, txnAppendPartitioned, copyInto,
+  // overwrite, overwriteTxn, overwritePartitioned,
+  // overwriteBucketTransform, overwriteIndexed, createGenerated — is a
+  // delegate of the same three steps on ONE read of the table's state:
+  // [[conform]] meets the batch with that state's metadata, [[stage]]
+  // writes its files, and [[claim]] commits them, starting on that
+  // same state. The entry points differ only in their schema policy,
+  // layout and the commit's extras (txn stamp, ingest ledger, props,
+  // Bloom indexes).
+
+  /** How a written batch's schema meets the table's. */
+  private sealed trait SchemaPolicy
+
+  /** Append: adds files, removes none. Delta's schema enforcement: the
+    * batch must carry exactly the table's columns and types (the first
+    * append on an empty log sets the schema) — a mismatched batch is
+    * REJECTED rather than silently re-pointing the table schema at the
+    * batch's, and the commit re-asserts the existing table schema.
+    * Widening appends go through [[Union]]. */
+  private case object Enforce extends SchemaPolicy
+
+  /** Schema-evolving append (Delta `mergeSchema`): commit schema =
+    * union of the table's and the batch's columns (table order first,
+    * new batch columns appended). Data files are immutable — older
+    * files simply lack the new columns, and the schema-directed parquet
+    * read fills them as typed NULLs; batch files lacking legacy columns
+    * read the same way. Type CHANGES on a shared column are rejected.
+    * The union is a function of the state the claim sits on, so it is
+    * recomputed whenever the table moves: a widening that raced
+    * another widening asserts the union of both. */
+  private case object Union extends SchemaPolicy
+
+  /** Atomic overwrite: the batch's schema replaces the table's, and its
+    * files replace the live ones. Readers see the old snapshot until
+    * the single commit-file link flips them to the new one — no window
+    * where the table is empty or mixed (the failure mode of a recursive
+    * delete-then-write on plain parquet dirs). Table metadata survives
+    * (Delta semantics): the rows must satisfy the current CHECKs and
+    * carry the generated columns, and identity marks never reset, so
+    * replaced rows' ids are never reissued. Append-only tables refuse. */
+  private case object Replace extends SchemaPolicy
+
+  /** A batch conformed to the state `st0` it was checked against: `df`
+    * carries the columns the files store (physical names under column
+    * mapping), `layout` the dirs it stages under (see [[layoutOf]]),
+    * `generated` the map the commit sets (empty: inherit), and `ddlOn`
+    * the schema the commit asserts on a claim state — the policy's
+    * retry check, throwing when the batch no longer fits. */
+  private final case class Conformed(st0: Option[TableState], op: String,
+      policy: SchemaPolicy, df: DataFrame, layout: Seq[String],
+      generated: Map[String, String], ddlOn: Option[TableState] => String)
+
+  /** The write pipeline of the entry points that need no extras beyond
+    * the claim's: one state read, and a batch whose (appId, batchId)
+    * the ledger already holds stages nothing (-1). */
+  private def write(df: DataFrame, table: String, op: String,
+      policy: SchemaPolicy, commitOp: String, partCols: Seq[String] = Nil,
+      txn: Option[(String, Long)] = None, copied: Seq[String] = Seq.empty,
+      copiedBaseline: Set[String] = Set.empty,
+      createProps: Map[String, String] = Map.empty,
+      extraProps: Map[String, String] = Map.empty): Long = {
+    val st0 = logState(df.sparkSession, table)
+    if (txn.exists(landed(st0, _))) -1L
+    else {
+      val c = conform(table, st0, df, op, policy, partCols)
+      claim(table, c, stage(table, c), commitOp, txn, copied,
+        copiedBaseline, createProps, extraProps)
+    }
+  }
+
+  /** Step 1: meet `df` with the metadata of `st0`, in one fixed order:
+    * declared DEFAULTs fill the table columns the batch omits (not
+    * under [[Replace]], where the batch defines the schema), generated
+    * columns compute ([[applyGenerated]]; `gens` overrides the state's
+    * map for a table being created), identity values allocate, the
+    * schema policy applies, the CHECKs validate — all over LOGICAL
+    * column names — and an appended batch re-keys to physical names.
+    * Everything that refuses does so here, before a file is staged. */
+  private def conform(table: String, st0: Option[TableState],
+      df: DataFrame, op: String, policy: SchemaPolicy,
+      partCols: Seq[String] = Nil,
+      gens: Option[Map[String, String]] = None): Conformed = {
+    if (policy == Replace) requireAppendable(table, op, st0)
+    val layout = layoutOf(table, st0, op, policy, partCols)
+    val cmap = st0.fold(Map.empty[String, String])(_.colMap)
+    val target = st0.filter(_ => policy != Replace)
+      .map(s => logicalSchema(s.schema, cmap))
+    val gens0 = gens.getOrElse(generatedOf(st0))
+    val filled =
+      target.fold(df)(fillDefaults(df, _, defaultsOf(propsOf(st0))))
+    val (full, gens2) = allocateIdentity(df.sparkSession,
+      applyGenerated(filled, gens0, op), gens0)
+    // (the frame CHECKs see, the frame staged, the retry check)
+    val (checked, staged, ddlOn) = policy match {
+      case Enforce =>
+        val ok = target.fold(full)(enforceSchema(full, _, op))
+        val phys = st0.fold(ok)(s => toPhysicalDf(ok, s.schema, cmap))
+        (ok, phys, (st: Option[TableState]) =>
+          revalidateBlindAppend(table, st, phys.schema, op, layout))
+      case Union =>
+        val phys = unionPhysical(table, full, cmap)
+        // CHECKs see the batch as the table will read it back: columns
+        // it lacks are typed NULLs (which pass a CHECK per SQL unless it
+        // explicitly tests IS NOT NULL)
+        val withMissing = target.fold(Seq.empty[StructField])(_.fields
+            .filterNot(f => full.columns.exists(_.equalsIgnoreCase(f.name))))
+          .foldLeft(full)((d, f) =>
+            d.withColumn(f.name, lit(null).cast(f.dataType)))
+        (withMissing, phys,
+          (st: Option[TableState]) => unionDdl(st, phys.schema))
+      case Replace =>
+        (full, full, (st: Option[TableState]) => {
+          requireAppendable(table, op, st)
+          full.schema.toDDL
+        })
+    }
+    enforceChecks(checked, checksOf(st0), op)
+    ddlOn(st0) // a type change refuses before anything is staged
+    Conformed(st0, op, policy, staged, layout,
+      if (gens2 != generatedOf(st0)) gens2 else Map.empty, ddlOn)
+  }
+
+  /** The dirs a write stages under: its hive columns, else (an append
+    * onto a table declaring `graft.partitionSpec`) the spec's hidden
+    * `gfb<n>_<col>` bucket dir, else none (flat). An append's layout
+    * must be the table's: mixed layouts would break path-derived
+    * partition reconstruction. */
+  private def layoutOf(table: String, st0: Option[TableState], op: String,
+      policy: SchemaPolicy, partCols: Seq[String]): Seq[String] =
+    st0 match {
+      case Some(st) if policy != Replace =>
+        val files = st.files
+        if (partCols.nonEmpty) {
+          val existing = layoutPartCols(files)
+          require(files.isEmpty ||
+            existing.map(_.toLowerCase) == partCols.map(_.toLowerCase),
+            s"$op(${partCols.mkString(",")}) does not match the table's " +
+              s"layout (${existing.mkString(",")}) — mixed layouts would " +
+              "break path-derived partition reconstruction")
+          partCols
+        } else bucketSpecOf(st.props) match {
+          case Some((sc, n)) =>
+            require(hiddenOnlyLayout(files),
+              s"$op under a declared partition spec: the table carries " +
+                "a VISIBLE hive layout; use appendPartitioned")
+            require(st.colMap.isEmpty,
+              s"$op under a declared partition spec: column mapping is " +
+                "active; unsupported together")
+            Seq(s"gfb${n}_$sc")
+          case None =>
+            requireUnpartitioned(files, op)
+            Nil
+        }
+      case _ => partCols
+    }
+
+  /** A [[Union]] batch re-keyed to physical names: under column mapping
+    * the batch's LOGICAL names re-key to physical ones for shared
+    * columns; genuinely new columns keep their names (logical ==
+    * physical for them) but must not collide with any physical or
+    * retired name, or old files would leak foreign bytes into them. */
+  private def unionPhysical(table: String, df: DataFrame,
+      cmap: Map[String, String]): DataFrame =
+    if (cmap.isEmpty) df
+    else {
+      df.columns.foreach { c =>
+        val isShared = cmap.values.exists(_.equalsIgnoreCase(c))
+        require(isShared || !cmap.keys.exists(_.equalsIgnoreCase(c)),
+          s"appendMergeSchema: new column $c collides with a " +
+            s"physical/retired column name of $table")
+      }
+      df.select(df.columns.map(c =>
+        col(c).as(physNameOf(cmap, c))).toSeq: _*)
+    }
+
+  /** The [[Union]] schema of the state `st` and a physical batch schema. */
+  private def unionDdl(st: Option[TableState], batch: StructType): String =
+    (st match {
+      case None => batch
+      case Some(s) =>
+        val cur = s.schema
+        val byName = batch.map(f => f.name.toLowerCase -> f).toMap
+        cur.foreach { f =>
+          byName.get(f.name.toLowerCase).foreach { g =>
+            require(sameTypeModuloNull(g.dataType, f.dataType),
+              s"column ${f.name}: type change ${f.dataType.sql} -> " +
+                s"${g.dataType.sql} is not supported")
+          }
+        }
+        val curNames = cur.fieldNames.map(_.toLowerCase).toSet
+        StructType(cur.fields ++
+          batch.fields.filterNot(f => curNames(f.name.toLowerCase)))
+    }).toDDL
+
+  /** Step 2: stage a conformed batch — [[optimizedWrite]] under the
+    * table's properties, then its files under its layout
+    * ([[stageUnder]]). */
+  private def stage(table: String, c: Conformed): Staged =
+    stageUnder(optimizedWrite(withHiddenPartCols(c.df, c.layout), c.layout,
+      propsOf(c.st0)), table, c.layout)
+
+  /** Step 3: the claim loop. Files are staged exactly once; each claim
+    * takes the version after the state it sits on, starting on the
+    * state [[conform]] read, so any commit that landed since collides.
+    * After a lost race the loop re-reads the state and abandons (-1)
+    * when the batch landed meanwhile: the ledger holds `txn` (the
+    * ledger check and the version claim are not one atomic step, so
+    * two deliveries of one batch can both pass the entry check), or a
+    * competing COPY INTO recorded one of the `copied` source files
+    * since `copiedBaseline` (baseline-relative, so a forced re-ingest
+    * never aborts on its own history); the staged files are then
+    * unreferenced orphans that [[vacuum]]'s needed-set sweep reclaims.
+    * Otherwise the claim re-validates: the metadata the batch was
+    * conformed to must be unchanged ([[requireMetadataUnmoved]]), and
+    * the policy's check recomputes the schema to assert. An overwrite
+    * removes the claim state's files. Row ids allocate per claim, on
+    * the high water of the state it sits on; `createProps` are set only
+    * by a claim that creates the table, and one onto an existing table
+    * requires them there ([[requireCreateProps]]); `extraProps` merge
+    * over the table's. A landed commit runs the auto-compact hook. */
+  private def claim(table: String, c: Conformed, s: Staged,
+      commitOp: String, txn: Option[(String, Long)] = None,
       copied: Seq[String] = Seq.empty,
-      createProps: Map[String, String] = Map.empty): Long = {
-    var ddl = ddl0
-    var st = st0
+      copiedBaseline: Set[String] = Set.empty,
+      createProps: Map[String, String] = Map.empty,
+      extraProps: Map[String, String] = Map.empty,
+      blooms: Map[String, Map[String, String]] = Map.empty): Long = {
+    val spark = c.df.sparkSession
+    var st = c.st0
     var attempts = 0
     while (true) {
-      st.foreach(requireCreateProps(table, op, _, createProps))
+      if (txn.exists(landed(st, _)) || copied.nonEmpty && st.exists(x =>
+          (x.copied.toSet -- copiedBaseline).exists(copied.contains)))
+        return -1L
+      requireMetadataUnmoved(table, c, st)
+      val ddl = c.ddlOn(st)
+      st.foreach(requireCreateProps(table, c.op, _, createProps))
       val v = st.fold(0L)(_.version + 1)
-      // row tracking: allocate bases inside the claim loop so a lost
-      // race re-reads the advanced high water before retrying
-      val (st2, pr2) = allocRowIds(st, s)
+      val (stats, rowProps) = allocRowIds(st, s)
+      // extra props merge over the FULL current map — a partial props
+      // commit would clobber the rest under the "props = latest
+      // commit's props" invariant
+      val extra = extraProps ++ (if (st.isEmpty) createProps else Map.empty)
+      val props =
+        if (extra.isEmpty) rowProps
+        else (if (rowProps.nonEmpty) rowProps else propsOf(st)) ++ extra
+      val remove =
+        if (c.policy == Replace) st.fold(Seq.empty[String])(_.files)
+        else Seq.empty
       val won =
         try Some(writeCommit(spark, table, Commit(v, commitOp, s.files,
-          Seq.empty, ddl, System.currentTimeMillis(), txn, stats = st2,
-          sizes = s.sizes, generated = generated,
-          props = if (st.isEmpty) pr2 ++ createProps else pr2,
-          copied = copied), st))
+          remove, ddl, System.currentTimeMillis(), txn, stats = stats,
+          sizes = s.sizes, blooms = blooms, generated = c.generated,
+          props = props, copied = copied), st))
         catch { case _: CommitConflictException => None }
       won match {
         case Some(after) =>
-          // post-commit hook: the landed append may have tipped a
+          // post-commit hook: the landed write may have tipped a
           // partition over the small-file threshold — one best-effort
           // extra commit ([[maybeAutoCompact]] gates on the table
           // property of the state this commit produced; its own commit
@@ -4100,14 +4049,32 @@ object GraftLog {
             if (after.isDefined) after else logState(spark, table))
           return v
         case None =>
-          st = logState(spark, table)
-          if (abandonIf(st)) return -1L
-          backoffOrGiveUp(attempts, table, op)
-          ddl = reval(st)
+          backoffOrGiveUp(attempts, table, c.op)
           attempts += 1
+          st = logState(spark, table)
       }
     }
     throw new IllegalStateException("unreachable")
+  }
+
+  /** A batch [[conform]] validated against the CHECKs, generated
+    * columns and DEFAULTs of its state may land only while they are
+    * unchanged: a constraint added meanwhile was never checked, a moved
+    * identity high-water mark makes the staged ids collide with the
+    * winner's, and a changed definition or default was never applied.
+    * Loud conflict; the caller re-runs against the new metadata. */
+  private def requireMetadataUnmoved(table: String, c: Conformed,
+      st: Option[TableState]): Unit = {
+    val moved =
+      if (generatedOf(st) != generatedOf(c.st0))
+        Some("generated columns or an identity high-water mark")
+      else if (checksOf(st) != checksOf(c.st0)) Some("CHECK constraints")
+      else if (defaultsOf(propsOf(st)) != defaultsOf(propsOf(c.st0)))
+        Some("column DEFAULTs")
+      else None
+    moved.foreach(m => throw new java.util.ConcurrentModificationException(
+      s"${c.op} on $table: a concurrent commit changed the table's $m " +
+        "after this write was validated; re-run it against the new state"))
   }
 
   /** An append staged for a table created with `createProps` (a layout
@@ -4122,37 +4089,6 @@ object GraftLog {
           s"$op on $table: the table exists with $k = " +
             s"${st.props.getOrElse(k, "<unset>")}, but this append was " +
             s"staged for a new table with $k = $v")
-    }
-
-  /** Claim loop for the overwrite-class writers: the staged ADD set
-    * stays valid across a lost race (files are immutable); only the
-    * REMOVE set — "whatever is live right now" — is stale, so each
-    * attempt recomputes it from the fresh state, and re-checks the
-    * append-only gate and, for a `txn` stamp, the ledger (a batch that
-    * landed meanwhile abandons with -1). Overwrite is schema-replacing
-    * by definition, so no re-validation applies. */
-  private def commitOverwrite(spark: SparkSession, table: String,
-      s: Staged, ddl: String,
-      blooms: Map[String, Map[String, String]] = Map.empty,
-      generated: Map[String, String] = Map.empty,
-      extraProps: Map[String, String] = Map.empty,
-      txn: Option[(String, Long)] = None): Long =
-    rebaseOnConflict(spark, table, "overwrite") { st =>
-      requireAppendable(table, "overwrite", st)
-      if (txn.exists(landed(st, _))) -1L
-      else {
-        val (st2, pr2) = allocRowIds(st, s)
-        // extraProps (e.g. a feature declaration) must merge over the
-        // FULL current map — a partial props commit would clobber the
-        // rest under the "props = latest commit's props" invariant
-        val pr =
-          if (extraProps.isEmpty) pr2
-          else (if (pr2.nonEmpty) pr2 else propsOf(st)) ++ extraProps
-        commitOn(spark, table, st)(v => Commit(v, "overwrite", s.files,
-          st.fold(Seq.empty[String])(_.files), ddl,
-          System.currentTimeMillis(), txn, stats = st2, sizes = s.sizes,
-          blooms = blooms, generated = generated, props = pr))
-      }
     }
 
   /** Whether the txn ledger of `st` already holds (appId, batchId). */
@@ -4671,9 +4607,7 @@ object GraftLog {
     val s =
       if (touched.isEmpty && insertRows.isEmpty)
         Staged(Seq.empty, Map.empty, Map.empty)
-      else if (partCols.nonEmpty) stagePartitionedWithStats(
-        withHiddenPartCols(regenerated, partCols), table, partCols)
-      else stageWithStats(regenerated, table)
+      else stageUnder(regenerated, table, partCols)
     // bases for inserted rows (NULL physical id → base + row_index);
     // no-op when tracking is off
     val (st2c, pr2c) = allocRowIds(read, s)
@@ -4868,9 +4802,7 @@ object GraftLog {
     val s =
       if (touched.isEmpty && inserts.isEmpty)
         Staged(Seq.empty, Map.empty, Map.empty)
-      else if (partCols.nonEmpty) stagePartitionedWithStats(
-        withHiddenPartCols(rewritten, partCols), table, partCols)
-      else stageWithStats(rewritten, table)
+      else stageUnder(rewritten, table, partCols)
     // bases for the staged files: inserted rows (NULL physical id)
     // resolve to base + row_index; materialized ids win by coalesce.
     // No-op map when tracking is off (plain props inheritance).
@@ -4935,9 +4867,7 @@ object GraftLog {
         else toPhysicalDf(
           toLogicalDf(readSubset(spark, table, st, touched, schema), schema,
             cmap).filter(!coalesce(predicate, lit(false))), schema, cmap)
-      if (partCols.nonEmpty) stagePartitionedWithStats(
-        withHiddenPartCols(kept, partCols), table, partCols)
-      else stageWithStats(kept, table)
+      stageUnder(kept, table, partCols)
     }
     commitOn(spark, table, Some(st))(v => Commit(v, "delete", s.files,
       touched, schema.toDDL, System.currentTimeMillis(), stats = s.stats,
@@ -5009,9 +4939,7 @@ object GraftLog {
         else toPhysicalDf(
           toLogicalDf(readSubset(spark, table, st, touched, schema), schema,
             cmap).join(keyset, keyCols, "left_anti"), schema, cmap)
-      if (partCols.nonEmpty) stagePartitionedWithStats(
-        withHiddenPartCols(kept, partCols), table, partCols)
-      else stageWithStats(kept, table)
+      stageUnder(kept, table, partCols)
     }
     commitOn(spark, table, Some(st))(v => Commit(v, "delete", s.files,
       touched, schema.toDDL, System.currentTimeMillis(), stats = s.stats,
@@ -5079,10 +5007,7 @@ object GraftLog {
       schema, cmap).filter(!coalesce(predicate, lit(false)))
     val replacement =
       toPhysicalDf(kept.unionByName(logicalOk), schema, cmap)
-    val s =
-      if (partCols.nonEmpty) stagePartitionedWithStats(
-        withHiddenPartCols(replacement, partCols), table, partCols)
-      else stageWithStats(replacement, table)
+    val s = stageUnder(replacement, table, partCols)
     commitOn(spark, table, read)(v => Commit(v, "replace_where", s.files,
       touched, schema.toDDL, System.currentTimeMillis(),
       stats = s.stats, sizes = s.sizes,
@@ -5277,9 +5202,7 @@ object GraftLog {
             Seq.empty), schema, cmap)
       enforceChecks(if (tracked) rewritten
         else toLogicalDf(rewritten, schema, cmap), st.checks, "update")
-      if (partCols.nonEmpty) stagePartitionedWithStats(
-        withHiddenPartCols(rewritten, partCols), table, partCols)
-      else stageWithStats(rewritten, table)
+      stageUnder(rewritten, table, partCols)
     }
     commitOn(spark, table, Some(st))(v => Commit(v, "update", s.files,
       touched, schema.toDDL, System.currentTimeMillis(), stats = s.stats,
@@ -5621,10 +5544,7 @@ object GraftLog {
         val touched = files.filter(f =>
           relPathOf(absPath(table, f)).exists(masked.contains))
         val purged = readWithDvs(spark, table, st, touched, schema)
-        val s =
-          if (partCols.nonEmpty) stagePartitionedWithStats(
-            withHiddenPartCols(purged, partCols), table, partCols)
-          else stageWithStats(purged, table)
+        val s = stageUnder(purged, table, partCols)
         commitOn(spark, table, read)(v => Commit(v, "reorg", s.files,
           touched, schema.toDDL, System.currentTimeMillis(),
           stats = s.stats, sizes = s.sizes, dvRemove = dvs))

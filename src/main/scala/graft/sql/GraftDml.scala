@@ -2090,13 +2090,8 @@ case class GraftInsertPartitionedCommand(path: String,
       .filterNot(n => partCols.exists(_.equalsIgnoreCase(n)))
     val names = dataNames ++ partCols
     val df = StreamBatch.ofPlan(session, query).toDF(names: _*)
-    // a flat table (no partition columns) must route through the flat
-    // append/overwrite path — the partitioned writers would otherwise
-    // receive an empty partition list and stage a wrong layout
-    if (partCols.isEmpty) {
-      if (overwrite) GraftLog.overwrite(df, path)
-      else GraftLog.append(df, path)
-    } else if (overwrite) GraftLog.overwritePartitioned(df, path, partCols)
+    // an empty partition list stages flat
+    if (overwrite) GraftLog.overwritePartitioned(df, path, partCols)
     else GraftLog.appendPartitioned(df, path, partCols)
     session.sessionState.catalog.invalidateAllCachedTables()
     session.catalog.refreshByPath(path)

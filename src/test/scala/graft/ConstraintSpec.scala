@@ -114,4 +114,13 @@ class ConstraintSpec extends AnyFunSuite {
     assertThrows[IllegalArgumentException](GraftLog.txnAppend(
       Seq((51L, "s", -5L)).toDF("id", "tag", "score"), t, "app", 1L))
   }
+
+  test("overwriteBucketTransform validates the rows it writes") {
+    val r = root(); val t = s"$r/t"
+    GraftLog.overwrite(df(0 until 10, "a"), t)
+    GraftLog.addConstraint(spark, t, "score_nonneg", "score >= 0")
+    assertThrows[IllegalArgumentException](GraftLog.overwriteBucketTransform(
+      Seq((1L, "x", -5L)).toDF("id", "tag", "score"), t, "id", 4))
+    assert(GraftLog.read(spark, t).count() == 10)
+  }
 }

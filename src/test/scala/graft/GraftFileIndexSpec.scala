@@ -1040,4 +1040,16 @@ class GraftFileIndexSpec extends AnyFunSuite {
       assert(nDist < total, s"bucket pruning must drop files for $p")
     }
   }
+
+  test("a streaming append stages under the declared partition spec") {
+    val d = Staging.tempDir("graft_fidx_") + "/spec_txn"
+    val base = Sources.testTable(spark, TestSpark.sf, "customer")
+    GraftLog.overwrite(base.filter(col("c_custkey") % 2 === 0), d)
+    GraftLog.evolveBucketSpec(spark, d, "c_custkey", 4)
+    assert(GraftLog.txnAppend(base.filter(col("c_custkey") % 2 === 1), d,
+      "spec", 0L))
+    val (files, _) = GraftLog.snapshot(spark, d)
+    assert(files.exists(_.contains("gfb4_c_custkey=")), files.mkString(","))
+    assert(GraftLog.read(spark, d).count() == base.count())
+  }
 }

@@ -1775,4 +1775,15 @@ class GraftLogSpec extends AnyFunSuite {
     assert(back.count() == (if (tags.head == "A") 20 else 30))
     assert(GraftLog.versions(spark, t) == Seq(0L, 1L, 2L))
   }
+
+  test("appendPartitioned fills declared DEFAULTs") {
+    val t = tmp()
+    GraftLog.overwritePartitioned(
+      Seq((1L, "a", "A")).toDF("id", "nm", "seg"), t, Seq("seg"))
+    GraftLog.setColumnDefault(spark, t, "nm", "'dflt'")
+    GraftLog.appendPartitioned(Seq((2L, "B")).toDF("id", "seg"), t,
+      Seq("seg"))
+    val r = GraftLog.read(spark, t).filter($"id" === 2L).head()
+    assert(r.getAs[String]("nm") == "dflt" && r.getAs[String]("seg") == "B")
+  }
 }

@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.{AttributeReference, EqualTo, Literal}
 import org.apache.spark.sql.types.LongType
 import org.scalatest.funsuite.AnyFunSuite
@@ -54,6 +55,84 @@ class LogStateSpec extends AnyFunSuite {
     assert(c("checkpointDecodes") == 0, c)
     assert(c("memoHits") == 1, c)
     assert(GraftLog.read(spark, t).count() == 70)
+  }
+
+  test("every write entry point lists the log once and reads no commit " +
+      "file") {
+    import org.apache.spark.sql.functions.lit
+    def pin[A](f: => A): (Long, Long) = {
+      val c = counted(f)._2
+      (c("listings"), c("commitReads"))
+    }
+    def hive(): String = {
+      val t = tmp()
+      GraftLog.overwritePartitioned(df(0 until 5, "a"), t, Seq("tag"))
+      GraftLog.appendPartitioned(df(5 until 10, "b"), t, Seq("tag"))
+      t
+    }
+    val src = graft.sources.Staging.tempDir("graft_state_copy_") + "/in"
+    df(200 until 205, "c").write.parquet(src)
+    val batch = df(100 until 105, "s")
+    // the tables are built before the counted writes
+    val (flats, hives) = (Seq.fill(9)(table(2)), Seq.fill(2)(hive()))
+    val pins = Seq[(String, String => Any)](
+      "append" -> (GraftLog.append(batch, _)),
+      "appendPartitioned" -> (GraftLog.appendPartitioned(batch, _, Seq("tag"))),
+      "appendMergeSchema" ->
+        (GraftLog.appendMergeSchema(batch.withColumn("x", lit(1L)), _)),
+      "txnAppend" -> (GraftLog.txnAppend(batch, _, "pin", 0L)),
+      "txnAppendPartitioned" ->
+        (GraftLog.txnAppendPartitioned(batch, _, "pin", 0L, Seq("tag"))),
+      "copyInto" -> (GraftLog.copyInto(spark, _, src)),
+      "overwrite" -> (GraftLog.overwrite(batch, _)),
+      "overwriteTxn" -> (GraftLog.overwriteTxn(batch, _, "pin", 0L)),
+      "overwritePartitioned" ->
+        (GraftLog.overwritePartitioned(batch, _, Seq("tag"))),
+      "overwriteBucketTransform" ->
+        (GraftLog.overwriteBucketTransform(batch, _, "id", 4)),
+      "overwriteIndexed" -> (GraftLog.overwriteIndexed(batch, _, Seq("tag"))),
+      "createGenerated" ->
+        (GraftLog.createGenerated(batch, _, Map("id2" -> "id * 2"), Nil)))
+    val targets = Seq(flats(0), hives(0), flats(1), flats(2), hives(1)) ++
+      flats.drop(3) :+ tmp()
+    val counts = pins.zip(targets).map { case ((name, write), t) =>
+      name -> pin(write(t)) }
+    assert(counts.forall(_._2 == ((1L, 0L))), counts.mkString(", "))
+  }
+
+  /** A metadata commit (`change`) made while the write `op` runs — the
+    * hook fires in the Spark task that first reads the batch, after the
+    * write read its state — must fail the write loudly and land none of
+    * its rows. `change` runs Spark jobs of its own, so the task hands it
+    * to a thread of the driver's session and waits for it. */
+  private def metadataLandsMidWrite(change: String => Any)(
+      op: (DataFrame, String) => Any): Unit = {
+    val t = table(3)
+    val batch = df(100 until 103, "w").as[(Long, String)]
+      .mapPartitions { it => TaskHook.fire(); it }.toDF("id", "tag")
+    TaskHook.arm(() => {
+      val failed = new java.util.concurrent.atomic.AtomicReference[Throwable]
+      val th = new Thread(() =>
+        try {
+          org.apache.spark.sql.SparkSession.setActiveSession(spark)
+          change(t); ()
+        } catch { case e: Throwable => failed.set(e) })
+      th.start(); th.join()
+      Option(failed.get).foreach(e => throw e)
+    })
+    try intercept[java.util.ConcurrentModificationException](op(batch, t))
+    finally TaskHook.arm(null)
+    assert(GraftLog.read(spark, t).count() == 15)
+  }
+
+  test("a CHECK or DEFAULT change landing while a write stages fails it") {
+    val changes = Seq[String => Any](
+      GraftLog.addConstraint(spark, _, "pos", "id >= 0"),
+      GraftLog.setColumnDefault(spark, _, "tag", "'d'"))
+    val writes = Seq[(DataFrame, String) => Any](
+      GraftLog.append(_, _), GraftLog.overwrite(_, _))
+    for (change <- changes; write <- writes)
+      metadataLandsMidWrite(change)(write)
   }
 
   test("a checkpoint commit writes from the folded state") {
