@@ -49,7 +49,7 @@ object CacheScope {
     * the LOGICAL tree doubles per stage — by the pack commit the plan
     * held >300k operator nodes and every action paid 15-50 s of pure
     * driver-side analysis/canonicalization on a plan whose data was
-    * already cached (round-17 profile: `stageData` of a 150-row frame =
+    * already cached (round-17 profile: staging a 150-row frame =
     * 35 s). Guide §3.3: materialize an intermediate to truncate the
     * plan. Downstream plans see a leaf scan of the materialized
     * partitions — same rows, same partitioning as the cache, O(stage)

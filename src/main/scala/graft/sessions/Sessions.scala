@@ -89,13 +89,16 @@ object Sessions {
       // — read as raw nanos longs; graft.streaming converts to μs timestamps
       // (same truncation DuckDB applies reading TIMESTAMP_NS).
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Output committer v2 + no _SUCCESS marker: graft stages every
-      // write into a fresh UUID dir no reader references until the
-      // ledger commit lands, so v1's atomic job-commit rename pass buys
-      // nothing — it only adds a sequential driver-side rename per
-      // file/dir (~1 s per 64-dir hive-partitioned commit measured in
-      // the sandbox, and strictly worse on object stores, where the
-      // reference applied the same setting — `delta_datalake.py:25`).
+      // Output committer v2 + no _SUCCESS marker for the session's
+      // non-graft writes (a plain `df.write`, such as the bench's
+      // landing write): v1's atomic job-commit rename pass adds a
+      // sequential driver-side rename per file/dir (~1 s per 64-dir
+      // hive-partitioned commit measured in the sandbox, and strictly
+      // worse on object stores, where the reference applied the same
+      // setting — `delta_datalake.py:25`). graft's own staging no
+      // longer relies on either: `StagedWrite` writes each file in
+      // place into a fresh UUID dir no reader references until the
+      // ledger commit lands, with no committer, rename or marker.
       .config(
         "spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
       .config(

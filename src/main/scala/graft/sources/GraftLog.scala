@@ -107,9 +107,12 @@ object GraftLog {
     * (an empty map from one of these means "mapping cleared/none");
     * every other commit inherits the current mapping in [[writeCommit]],
     * so the invariant "mapping = latest commit's colMap" always holds
-    * and replay can fold it by plain replacement. */
-  private val ColMapAuthoritative =
-    Set("rename_column", "drop_column", "compact", "restore", "clone")
+    * and replay can fold it by plain replacement. An overwrite replaces
+    * every file and stages the batch's names as physical names, so it
+    * clears the mapping: inherited, a batch column that reuses a
+    * renamed-away physical name would read back under the new name. */
+  private val ColMapAuthoritative = Set("rename_column", "drop_column",
+    "compact", "restore", "clone", "overwrite")
 
   /** Same contract for CHECK constraints: "constraints = latest
     * commit's checks". Note compact is NOT here — constraints survive
@@ -813,8 +816,8 @@ object GraftLog {
     import scala.jdk.CollectionConverters._
     val frame = spark.createDataFrame(rows.asJava, CkptSchema)
     // one part needs no shuffle: a local frame coalesces into it
-    (if (parts == 1) frame.coalesce(1) else frame.repartition(parts))
-      .write.mode("overwrite").parquet(tmp.toString)
+    StagedWrite(if (parts == 1) frame.coalesce(1) else frame.repartition(parts),
+      tmp.toString, Nil, withStats = false)
     val target = new HPath(logDir, ckptParquetName(c.version))
     // rename-if-absent: a concurrent checkpointer of the same version
     // wrote identical state — losing the rename is a harmless no-op
@@ -1473,36 +1476,7 @@ object GraftLog {
         "timestamp")
   }
 
-  // ------------------------------------------------------------ mutations
-
-  /** Write `df`'s rows into a fresh immutable data dir, return the
-    * relative paths of the files produced with their byte sizes (logged
-    * in the commit so readers never pay per-file status RPCs). */
-  private def stageData(df: DataFrame, table: String)
-      : (Seq[String], Map[String, Long]) = {
-    val rel = s"$DataDirName/${UUID.randomUUID()}"
-    val dir = s"$table/$rel"
-    df.write.parquet(dir)
-    val f = fs(df.sparkSession, table)
-    val entries = f.listStatus(new HPath(dir)).toSeq
-      .filter(st => st.getPath.getName.endsWith(".parquet") &&
-        !st.getPath.getName.startsWith("."))
-      .map(st => s"$rel/${st.getPath.getName}" -> st.getLen)
-      .sortBy(_._1)
-    (entries.map(_._1), entries.toMap)
-  }
-
   // -------------------------------------------------------- data skipping
-
-  private def numericFields(schema: StructType) =
-    schema.fields.filter(f => f.dataType match {
-      case org.apache.spark.sql.types.LongType |
-           org.apache.spark.sql.types.IntegerType |
-           org.apache.spark.sql.types.ShortType |
-           org.apache.spark.sql.types.FloatType |
-           org.apache.spark.sql.types.DoubleType => true
-      case _ => false
-    })
 
   /** Suffix of the PSEUDO stats key carrying a column's null counts:
     * `<col>#nulls -> (nullCount, numRecords)` rides the same per-file
@@ -1518,29 +1492,18 @@ object GraftLog {
     * numeric column, plus `(nullCount, numRecords)` for EVERY column
     * under the `#nulls` pseudo key (doubles; exact to 2^53, far beyond
     * any file's row count). IS NULL / IS NOT NULL predicates prune on
-    * the null counts where min/max can say nothing. One grouped pass
-    * over the just-written files; a production writer would fold this
-    * into the write itself, the protocol is identical. */
-  private def collectStats(spark: SparkSession, table: String,
+    * the null counts where min/max can say nothing. The writing task
+    * takes them from the footers it just wrote
+    * ([[StagedWrite.footerStats]]), so a commit normally reads none of
+    * its staged bytes back. This is the fallback for the files whose
+    * footer cannot prove them (a nested column with leaf-level nulls):
+    * one grouped pass over `files` alone, computing the same keys and
+    * doubles the footer path would. */
+  private def scanStats(spark: SparkSession, table: String,
       files: Seq[String], schema: StructType)
       : Map[String, Map[String, (Double, Double)]] = {
-    val nf = numericFields(schema)
+    val nf = StagedWrite.numericFields(schema)
     if (files.isEmpty || schema.isEmpty) return Map.empty
-    // Fast path: derive the per-file stats from the parquet FOOTERS the
-    // write already produced — metadata-priced, no second read of the
-    // staged bytes (the scan below reads every written byte back, a 2x
-    // write amplification every commit pays). min/max commute with the
-    // long→double cast (monotone non-decreasing), so footer extrema
-    // equal the scan's min(cast(c as double)) exactly; null counts and
-    // row counts are exact footer fields. Nested types (array/map/
-    // struct) have leaf-level footer stats that do NOT equal row-level
-    // column null counts, and files written without statistics carry
-    // none — any such surprise falls back to the one grouped scan, so
-    // the stats a commit records are identical either way.
-    footerStats(spark, table, files, schema) match {
-      case Some(st) => return st
-      case None => ()
-    }
     val aggs = nf.flatMap(f => Seq(
       min(col(f.name).cast("double")).as(s"mn_${f.name}"),
       max(col(f.name).cast("double")).as(s"mx_${f.name}"))) ++
@@ -1579,143 +1542,6 @@ object GraftLog {
     }.toMap
   }
 
-  /** Footer-derived per-file stats (the [[collectStats]] fast path).
-    * Returns None — caller falls back to the scan — when any file's
-    * footer lacks the needed statistics. FLAT columns are one parquet
-    * leaf whose Statistics carry exact numNulls (+ typed min/max for
-    * the numeric families). NESTED columns (array/struct/map) have
-    * leaf-level null counts that in general differ from the row-level
-    * column null count — but one implication is exact: a row-level
-    * NULL forces a definition level below max at EVERY leaf beneath
-    * the field, so if every leaf chunk under the field reports
-    * numNulls == 0 there are zero null rows and the recorded
-    * `<col>#nulls` is exactly (0, rows), bit-identical to the scan's.
-    * Any leaf null (which may be an empty array, a null element, or a
-    * genuine null row — indistinguishable from the footer) falls back
-    * to the scan. MinHash signature / embedding state tables write
-    * dense never-null arrays, so their commits take the fast path. */
-  private def footerStats(spark: SparkSession, table: String,
-      files: Seq[String], schema: StructType)
-      : Option[Map[String, Map[String, (Double, Double)]]] = {
-    import org.apache.spark.sql.types._
-    val nested = schema.fields.filter(_.dataType match {
-      case _: StructType | _: ArrayType | _: MapType => true
-      case _ => false
-    }).map(_.name).toSet
-    val numeric = numericFields(schema).map(_.name).toSet
-    val conf = spark.sessionState.newHadoopConf()
-    try {
-      // one footer read per staged file, driver-side. Each read is
-      // metadata-priced but latency-bound (~5-15 ms of local-FS stat +
-      // open), and a hive-partitioned commit stages 64 files — read
-      // them on a bounded pool instead of sequentially (pure IO fan-
-      // out; per-file results are independent and order-preserved).
-      def statsOf(f: String): Option[(String,
-          Map[String, (Double, Double)])] = {
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile
-          .fromPath(new HPath(absPath(table, f)), conf)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        val blocks =
-          try {
-            import scala.jdk.CollectionConverters._
-            r.getFooter.getBlocks.asScala.toSeq
-          } finally r.close()
-        import scala.jdk.CollectionConverters._
-        val rows = blocks.map(_.getRowCount).sum
-        // fold each column's chunks across row groups; bail (None) on
-        // any chunk without exact null counts, or any non-empty numeric
-        // chunk without min/max
-        val perCol: Seq[Option[(String, Seq[(String, (Double, Double))])]] =
-          schema.fields.toSeq.map { fd =>
-            if (nested(fd.name)) {
-              // every leaf under the field, in every row group, must
-              // carry exact stats with ZERO nulls for the row-level
-              // null count to be provably 0 (scaladoc above)
-              val leafChunks = blocks.map(_.getColumns.asScala.filter(
-                _.getPath.toDotString.startsWith(fd.name + ".")))
-              if (leafChunks.exists(_.isEmpty)) None
-              else {
-                val sts = leafChunks.flatten.map(_.getStatistics)
-                if (sts.exists(s => s == null || !s.isNumNullsSet) ||
-                    sts.exists(_.getNumNulls != 0L)) None
-                else Some(fd.name -> Seq(
-                  s"${fd.name}$NullStatsSuffix" -> ((0.0, rows.toDouble))))
-              }
-            } else {
-            val chunks = blocks.flatMap(_.getColumns.asScala.find(
-              _.getPath.toDotString == fd.name))
-            if (chunks.size != blocks.size) None
-            else {
-              val stats = chunks.map(_.getStatistics)
-              if (stats.exists(s => s == null || !s.isNumNullsSet)) None
-              else {
-                val nulls = stats.map(_.getNumNulls).sum
-                val nullsKv = s"${fd.name}$NullStatsSuffix" ->
-                  ((nulls.toDouble, rows.toDouble))
-                if (!numeric(fd.name)) Some(fd.name -> Seq(nullsKv))
-                else {
-                  val nonEmpty = stats.filter(_.hasNonNullValue)
-                  if (nonEmpty.isEmpty && nulls < rows) None // no stats
-                  else if (nonEmpty.isEmpty) // all-null column
-                    Some(fd.name -> Seq(nullsKv))
-                  else {
-                    val mns = nonEmpty.map(s =>
-                      numberOf(s.genericGetMin))
-                    val mxs = nonEmpty.map(s =>
-                      numberOf(s.genericGetMax))
-                    if (mns.contains(None) || mxs.contains(None)) None
-                    else Some(fd.name -> Seq(
-                      fd.name -> ((mns.flatten.min, mxs.flatten.max)),
-                      nullsKv))
-                  }
-                }
-              }
-            }
-            }
-          }
-        if (perCol.contains(None)) None
-        else Some(f -> perCol.flatten.flatMap(_._2).toMap)
-      }
-      val perFile: Seq[Option[(String, Map[String, (Double, Double)])]] =
-        if (files.size <= 2) files.map(statsOf)
-        else {
-          val pool = java.util.concurrent.Executors.newFixedThreadPool(
-            math.min(files.size, 16))
-          try {
-            import scala.jdk.CollectionConverters._
-            pool.invokeAll(files.map(f =>
-                new java.util.concurrent.Callable[
-                  Option[(String, Map[String, (Double, Double)])]] {
-                  def call() = statsOf(f)
-                }).asJava)
-              .asScala.toSeq.map(_.get())
-          } finally pool.shutdown()
-        }
-      if (perFile.contains(None)) None
-      else Some(perFile.flatten.toMap)
-    } catch {
-      // unwrap pool-worker failures first (ExecutionException is itself
-      // non-fatal, but its CAUSE may not be — re-throw fatal causes)
-      case e: java.util.concurrent.ExecutionException =>
-        e.getCause match {
-          case scala.util.control.NonFatal(_) => None
-          case t => throw t
-        }
-      case scala.util.control.NonFatal(_) => None
-    }
-  }
-
-  /** Typed footer min/max → the double the scan's `cast(c as double)`
-    * yields (exact for int/short; the long/float→double conversions are
-    * monotone, so extrema commute with the cast). */
-  private def numberOf(v: Any): Option[Double] = v match {
-    case i: java.lang.Integer => Some(i.intValue.toDouble)
-    case l: java.lang.Long    => Some(l.longValue.toDouble)
-    case f: java.lang.Float   => Some(f.floatValue.toDouble)
-    case d: java.lang.Double  => Some(d.doubleValue)
-    case _ => None
-  }
-
   /** Table-root-relative path of an absolute scanned path: the suffix
     * from the staging dir marker on. Every data file lives under
     * `<table>/_data/...`, and partition VALUES cannot smuggle a
@@ -1744,7 +1570,7 @@ object GraftLog {
   private[sources] val BloomHashes = 4
 
   /** Per-file Bloom bitmaps over `cols` for freshly staged files — the
-    * string-column complement of [[collectStats]] (min/max cannot prune
+    * string-column complement of the commit stats (min/max cannot prune
     * point lookups on hash-distributed strings). k seeded xxhash64
     * probes per value; the per-file position sets come back in one
     * grouped pass and fold into base64 bitsets driver-side (staged
@@ -1848,12 +1674,6 @@ object GraftLog {
     if (!on) df
     else if (partCols.isEmpty) df.hint("rebalance")
     else df.hint("rebalance", partCols.map(col): _*)
-  }
-
-  private def stageWithStats(df: DataFrame, table: String): Staged = {
-    val (added, sizes) = stageData(df, table)
-    Staged(added, collectStats(df.sparkSession, table, added, df.schema),
-      sizes)
   }
 
   /** Stats of the LIVE file set (same replay as [[snapshot]]). */
@@ -2051,33 +1871,28 @@ object GraftLog {
       else Seq.empty
     }
 
-  /** Stage `df` hive-partitioned (`col=val` dirs, partition columns NOT
-    * in the data files) + per-file stats over the data columns. */
-  private def stagePartitionedWithStats(df: DataFrame, table: String,
-      partCols: Seq[String]): Staged = {
-    partCols.foreach(c => require(df.columns.exists(_.equalsIgnoreCase(c)),
-      s"partition column $c not in ${df.columns.mkString(",")}"))
-    val rel = s"$DataDirName/${UUID.randomUUID()}"
-    val dir = s"$table/$rel"
-    df.write.partitionBy(partCols: _*).parquet(dir)
-    val entries = parquetLeaves(fs(df.sparkSession, table), new HPath(dir))
-      .sortBy(_._1)
-      .map { case (s, len) => (s"$rel/$s", len) }
-    val added = entries.map(_._1)
-    val dataSchema = StructType(df.schema.fields.filterNot(fd =>
-      partCols.exists(_.equalsIgnoreCase(fd.name))))
-    Staged(added, collectStats(df.sparkSession, table, added, dataSchema),
-      entries.toMap)
-  }
-
   /** Stage `df` with stats under `layout`: flat (no columns), hive
     * `col=val` dirs, or hidden `gfb<n>_<col>` bucket dirs whose column
-    * is derived here ([[withHiddenPartCols]]). */
+    * is derived here ([[withHiddenPartCols]]); partition columns live in
+    * the dirs, not in the data files. One [[StagedWrite]] into a fresh
+    * `_data/<uuid>` dir returns every file with its byte size and, from
+    * its footer, its stats over the data columns; the files whose footer
+    * cannot prove them get them from one [[scanStats]] pass. */
   private def stageUnder(df: DataFrame, table: String,
-      layout: Seq[String]): Staged =
-    if (layout.isEmpty) stageWithStats(df, table)
-    else stagePartitionedWithStats(withHiddenPartCols(df, layout), table,
-      layout)
+      layout: Seq[String]): Staged = {
+    val rel = s"$DataDirName/${UUID.randomUUID()}"
+    val framed = withHiddenPartCols(df, layout)
+    val written = StagedWrite(framed, s"$table/$rel", layout,
+      withStats = true).map(w => w.copy(path = s"$rel/${w.path}"))
+    val dataSchema = StructType(framed.schema.fields.filterNot(fd =>
+      layout.exists(_.equalsIgnoreCase(fd.name))))
+    val scanned = scanStats(df.sparkSession, table,
+      written.filter(_.stats.isEmpty).map(_.path), dataSchema)
+    Staged(written.map(_.path),
+      written.flatMap(w => w.stats.orElse(scanned.get(w.path))
+        .map(w.path -> _)).toMap,
+      written.map(w => w.path -> w.size).toMap)
+  }
 
   /** Atomic overwrite with hive partitioning (`PARTITIONED BY` analog,
     * ref `financial_dl_bronze.py:26`): files land under `col=val` dirs,
@@ -2948,7 +2763,7 @@ object GraftLog {
     // the only data the ndv merge needs to read
     val newFiles = sinceAnalyze.flatMap(_.add)
       .distinct.filter(live.contains)
-    val numericNames = numericFields(schema).map(_.name).toSet
+    val numericNames = StagedWrite.numericFields(schema).map(_.name).toSet
     // hive-partition columns live in DIR names, not the data files: a
     // raw-file read yields NULLs for them, so their sketches never
     // merge (recorded ndv kept) and the read schema excludes them
@@ -3279,17 +3094,19 @@ object GraftLog {
   /** Write-time generated-column contract (Delta semantics): a batch
     * that OMITS a generated column gets it computed from its generation
     * expression; a batch that SUPPLIES one must satisfy
-    * `col <=> (expr)` on every row (validated like a CHECK constraint,
-    * in one aggregation pass) — silently accepting a
+    * `col <=> (expr)` on every row — silently accepting a
     * divergent explicit value would break the derived partition
     * pruning [[GraftFileIndex]] performs from base-column filters.
-    * IDENTITY entries are the exception on both sides: their values are
-    * ALWAYS engine-allocated ([[allocateIdentity]], run by the caller
-    * after this), so a batch supplying one is rejected — GENERATED
-    * ALWAYS means always. */
+    * Those equalities come back as checks (named `generated value of
+    * <col>`) for the caller's [[enforceChecks]], which folds them into
+    * the same aggregation as the table's CHECKs. IDENTITY entries are
+    * the exception on both sides: their values are ALWAYS
+    * engine-allocated ([[allocateIdentity]], run by the caller after
+    * this), so a batch supplying one is rejected — GENERATED ALWAYS
+    * means always. */
   private def applyGenerated(df: DataFrame, gens: Map[String, String],
-      ctx: String): DataFrame =
-    if (gens.isEmpty) df
+      ctx: String): (DataFrame, Map[String, String]) =
+    if (gens.isEmpty) (df, Map.empty)
     else {
       val present = df.columns.map(_.toLowerCase).toSet
       val (idGens, exprGens) =
@@ -3304,9 +3121,8 @@ object GraftLog {
       }
       val supplied = exprGens.filter { case (c, _) =>
         present.contains(c.toLowerCase) }
-      enforceChecks(out, supplied.map { case (c, ex) =>
-        s"generated value of $c" -> s"$c <=> ($ex)" }, ctx)
-      out
+      (out, supplied.map { case (c, ex) =>
+        s"generated value of $c" -> s"$c <=> ($ex)" })
     }
 
   /** Allocate identity values for every `identity(…)` generated column
@@ -3393,25 +3209,30 @@ object GraftLog {
   /** Write-time CHECK enforcement (Delta's constraint semantics): a row
     * violates a constraint when its expression is FALSE — NULL passes,
     * per SQL. ONE aggregation pass over the rows being written (batch/
-    * rewrite-sized, never table-sized), all constraints folded into a
-    * single job; a violation rejects the whole transaction loudly
-    * before any commit is attempted. */
-  private def enforceChecks(df: DataFrame, checks: Map[String, String],
-      ctx: String): Unit =
-    if (checks.nonEmpty) {
-      val named = checks.toSeq.sortBy(_._1)
-      val aggs = named.map { case (nm, ex) =>
+    * rewrite-sized, never table-sized), every constraint of every group
+    * (say, a batch's generated-value checks and the table's CHECKs)
+    * folded into a single job; the first group with a violation rejects
+    * the whole transaction loudly before any commit is attempted. */
+  private def enforceChecks(df: DataFrame, ctx: String,
+      groups: Map[String, String]*): Unit = {
+    val named = groups.map(_.toSeq.sortBy(_._1))
+    val all = named.flatten
+    if (all.nonEmpty) {
+      val aggs = all.zipWithIndex.map { case ((_, ex), i) =>
         coalesce(sum(when(!coalesce(expr(ex), lit(true)), 1L)
-          .otherwise(0L)), lit(0L)).as(s"__ck_$nm")
+          .otherwise(0L)), lit(0L)).as(s"__ck_$i")
       }
       val row = df.agg(aggs.head, aggs.tail: _*).collect().head
-      val bad = named.zipWithIndex.collect {
-        case ((nm, ex), i) if row.getLong(i) > 0 =>
-          s"$nm CHECK ($ex): ${row.getLong(i)} row(s)"
+      named.scanLeft(0)(_ + _.size).zip(named).foreach { case (at, group) =>
+        val bad = group.zipWithIndex.collect {
+          case ((nm, ex), i) if row.getLong(at + i) > 0 =>
+            s"$nm CHECK ($ex): ${row.getLong(at + i)} row(s)"
+        }
+        require(bad.isEmpty,
+          s"$ctx violates CHECK constraint(s): ${bad.mkString("; ")}")
       }
-      require(bad.isEmpty,
-        s"$ctx violates CHECK constraint(s): ${bad.mkString("; ")}")
     }
+  }
 
   /** `ALTER TABLE … ADD CONSTRAINT name CHECK (expr)` — the constraint
     * lands in the commit log (every subsequent commit carries it via
@@ -3427,7 +3248,7 @@ object GraftLog {
     require(!cur.keys.exists(_.equalsIgnoreCase(name)),
       s"constraint $name already exists on $table")
     enforceChecks(read(spark, table, Some(st.version)),
-      Map(name -> exprText), s"ADD CONSTRAINT $name: existing rows of $table")
+      s"ADD CONSTRAINT $name: existing rows of $table", Map(name -> exprText))
     commitOn(spark, table, st0)(v => Commit(v, "add_constraint",
       Seq.empty, Seq.empty, st.schema.toDDL, System.currentTimeMillis(),
       checks = cur + (name -> exprText),
@@ -3857,7 +3678,8 @@ object GraftLog {
     * under [[Replace]], where the batch defines the schema), generated
     * columns compute ([[applyGenerated]]; `gens` overrides the state's
     * map for a table being created), identity values allocate, the
-    * schema policy applies, the CHECKs validate — all over LOGICAL
+    * schema policy applies, the CHECKs and any supplied generated
+    * values validate in one aggregation — all over LOGICAL
     * column names — and an appended batch re-keys to physical names.
     * Everything that refuses does so here, before a file is staged. */
   private def conform(table: String, st0: Option[TableState],
@@ -3872,8 +3694,8 @@ object GraftLog {
     val gens0 = gens.getOrElse(generatedOf(st0))
     val filled =
       target.fold(df)(fillDefaults(df, _, defaultsOf(propsOf(st0))))
-    val (full, gens2) = allocateIdentity(df.sparkSession,
-      applyGenerated(filled, gens0, op), gens0)
+    val (generated, genChecks) = applyGenerated(filled, gens0, op)
+    val (full, gens2) = allocateIdentity(df.sparkSession, generated, gens0)
     // (the frame CHECKs see, the frame staged, the retry check)
     val (checked, staged, ddlOn) = policy match {
       case Enforce =>
@@ -3898,7 +3720,9 @@ object GraftLog {
           full.schema.toDDL
         })
     }
-    enforceChecks(checked, checksOf(st0), op)
+    // one aggregation validates the batch's supplied generated values
+    // and the table's CHECKs
+    enforceChecks(checked, op, genChecks, checksOf(st0))
     ddlOn(st0) // a type change refuses before anything is staged
     Conformed(st0, op, policy, staged, layout,
       if (gens2 != generatedOf(st0)) gens2 else Map.empty, ddlOn)
@@ -4601,9 +4425,9 @@ object GraftLog {
       else applyGenerated(combined.drop(
           genCols.map(c => fieldByName(c.toLowerCase).name): _*),
         gens.filter(g => genCols.exists(_.equalsIgnoreCase(g._1))),
-        "merge").select(schema.fieldNames.map(col) ++
+        "merge")._1.select(schema.fieldNames.map(col) ++
           (if (trackedIds) Seq(col(RowIdCol)) else Nil): _*)
-    enforceChecks(regenerated, st.checks, "merge")
+    enforceChecks(regenerated, "merge", st.checks)
     val s =
       if (touched.isEmpty && insertRows.isEmpty)
         Staged(Seq.empty, Map.empty, Map.empty)
@@ -4712,9 +4536,10 @@ object GraftLog {
     // runs physically (mapping implies a flat layout). A merge source
     // that omits generated columns gets them computed first (the batch
     // shape Delta's MERGE accepts on generated tables).
+    val (generated, genChecks) = applyGenerated(source, st.generated, "merge")
+    enforceChecks(generated, "merge", genChecks)
     val src = toPhysicalDf(
-      enforceSchema(applyGenerated(source, st.generated, "merge"),
-        logicalSchema(schema, cmap), "merge"),
+      enforceSchema(generated, logicalSchema(schema, cmap), "merge"),
       schema, cmap)
     val keysPhys = keys.map(physNameOf(cmap, _))
     val srcKeys = src.select(keysPhys.map(col): _*).distinct()
@@ -4794,7 +4619,7 @@ object GraftLog {
     // carried-through rows of touched files were validated when first
     // written; re-checking them costs only touched-file scans)
     enforceChecks(if (tracked) rewritten
-      else toLogicalDf(rewritten, schema, cmap), st.checks, "merge")
+      else toLogicalDf(rewritten, schema, cmap), "merge", st.checks)
     // a partitioned target re-stages hive-partitioned, so the rewrite
     // keeps the layout (files land back under their col=val dirs); a
     // no-op merge (nothing touched, no insert clause) stages nothing
@@ -4993,11 +4818,11 @@ object GraftLog {
     // (identity values allocated above the current mark), then
     // LOGICAL-schema enforcement, then CHECK constraints
     val gens0 = st.generated
-    val (dfG, gens2) = allocateIdentity(spark,
-      applyGenerated(df, gens0, "replaceWhere"), gens0)
+    val (generated, genChecks) = applyGenerated(df, gens0, "replaceWhere")
+    val (dfG, gens2) = allocateIdentity(spark, generated, gens0)
     val logicalOk =
       enforceSchema(dfG, logicalSchema(schema, cmap), "replaceWhere")
-    enforceChecks(logicalOk, st.checks, "replaceWhere")
+    enforceChecks(logicalOk, "replaceWhere", genChecks, st.checks)
     requireInside(logicalOk)
     val touched = probeTouched(spark, table, st, predicate)
     // survivors of partial files (predicate misses) are carried into
@@ -5058,19 +4883,18 @@ object GraftLog {
     // lost claim race re-harvests them from the fresh snapshot
     val st = existing(table, read)
     val (files, schema, cmap) = (st.files, st.schema, st.colMap)
-    val rel = s"$DvDirName/${UUID.randomUUID()}"
     // the predicate references LOGICAL names; positions are name-free
     val scan = dvScan(spark, table, st, files, schema)
       .withColumn("__gf_fr", relPathCol(col("_metadata.file_path")))
       .withColumn("__gf_ri", col("_metadata.row_index"))
-    toLogicalDf(scan, schema, cmap, keep = Seq("__gf_fr", "__gf_ri"))
+    val positions =
+      toLogicalDf(scan, schema, cmap, keep = Seq("__gf_fr", "__gf_ri"))
       .select(col("__gf_fr").as("file_rel"),
         col("__gf_ri").as("row_idx"),
         coalesce(predicate, lit(false)).as("__gf_hit"))
       .filter(col("__gf_hit"))
       .select(col("file_rel"), col("row_idx"))
-      .write.parquet(s"$table/$rel")
-    commitDvDir(spark, table, rel, st)
+    commitDvs(spark, table, positions, st)
   }
 
   /** [[deleteVectors]] with the match set given as a KEY FRAME instead
@@ -5089,29 +4913,27 @@ object GraftLog {
     keyCols.foreach(c => require(
       logicalNames.exists(_.equalsIgnoreCase(c)),
       s"delete key column $c not in ${logicalNames.mkString(",")}"))
-    val rel = s"$DvDirName/${UUID.randomUUID()}"
     val scan = dvScan(spark, table, st, files, schema)
       .withColumn("__gf_fr", relPathCol(col("_metadata.file_path")))
       .withColumn("__gf_ri", col("_metadata.row_index"))
-    toLogicalDf(scan, schema, cmap, keep = Seq("__gf_fr", "__gf_ri"))
+    val positions =
+      toLogicalDf(scan, schema, cmap, keep = Seq("__gf_fr", "__gf_ri"))
       .select(Seq(col("__gf_fr").as("file_rel"),
         col("__gf_ri").as("row_idx")) ++ keyCols.map(col): _*)
       .join(broadcast(keys.select(keyCols.map(col): _*).distinct()),
         keyCols, "left_semi")
       .select(col("file_rel"), col("row_idx"))
-      .write.parquet(s"$table/$rel")
-    commitDvDir(spark, table, rel, st)
+    commitDvs(spark, table, positions, st)
   }
 
-  /** Shared DV-commit tail: list the staged sidecar files, commit them
-    * as dvAdd entries on the state `st` the positions came from. */
-  private def commitDvDir(spark: SparkSession, table: String, rel: String,
-      st: TableState): Long = {
-    val f = fs(spark, table)
-    val dvFiles = f.listStatus(new HPath(s"$table/$rel")).toSeq
-      .map(_.getPath.getName)
-      .filter(n => n.endsWith(".parquet") && !n.startsWith("."))
-      .sorted.map(n => s"$rel/$n")
+  /** Shared DV-commit tail: stage the `(file_rel, row_idx)` positions as
+    * a sidecar under a fresh `_dv/<uuid>` dir and commit its files as
+    * dvAdd entries on the state `st` the positions came from. */
+  private def commitDvs(spark: SparkSession, table: String,
+      positions: DataFrame, st: TableState): Long = {
+    val rel = s"$DvDirName/${UUID.randomUUID()}"
+    val dvFiles = StagedWrite(positions, s"$table/$rel", Nil,
+      withStats = false).map(w => s"$rel/${w.path}")
     commitOn(spark, table, Some(st))(v => Commit(v, "deleteVectors",
       Seq.empty, Seq.empty, st.schema.toDDL, System.currentTimeMillis(),
       dvAdd = dvFiles,
@@ -5201,7 +5023,7 @@ object GraftLog {
             readSubset(spark, table, st, touched, schema), schema, cmap),
             Seq.empty), schema, cmap)
       enforceChecks(if (tracked) rewritten
-        else toLogicalDf(rewritten, schema, cmap), st.checks, "update")
+        else toLogicalDf(rewritten, schema, cmap), "update", st.checks)
       stageUnder(rewritten, table, partCols)
     }
     commitOn(spark, table, Some(st))(v => Commit(v, "update", s.files,
@@ -5247,7 +5069,7 @@ object GraftLog {
             if (dvs.nonEmpty) readWithDvs(spark, table, st, files, schema)
             else readSubset(spark, table, st, files, schema),
             schema, cmap)
-        stageWithStats(current.coalesce(targetFiles), table)
+        stageUnder(current.coalesce(targetFiles), table, Nil)
       } else {
         // per-partition compaction: hash-repartition by the partition
         // columns so every partition value's rows land in ONE task, and
@@ -5262,7 +5084,7 @@ object GraftLog {
           if (dvs.nonEmpty) readWithDvs(spark, table, st, files, schema)
           else readSubset(spark, table, st, files, schema)
         val current = withHiddenPartCols(base, partCols)
-        stagePartitionedWithStats(
+        stageUnder(
           current.repartition(partCols.map(col): _*), table, partCols)
       }
     commitOn(spark, table, read)(v => Commit(v, "compact", s.files, files,
@@ -5329,7 +5151,7 @@ object GraftLog {
     else {
       val base = readSubset(spark, table, st, selected, schema)
       val current = withHiddenPartCols(base, partCols)
-      val s = stagePartitionedWithStats(
+      val s = stageUnder(
         current.repartition(partCols.map(col): _*), table, partCols)
       commitOn(spark, table, read)(v => Commit(v, "compact", s.files,
         selected, schema.toDDL, System.currentTimeMillis(),
@@ -5493,17 +5315,18 @@ object GraftLog {
         // flat + unmapped by the guard above: materialize the stable
         // row ids into the compacted files, compact's OPTIMIZE-
         // preserves-row-ids contract
-        stageWithStats(rowIdRead(spark, table, st, Some(selected.toSet))
-          .coalesce(1), table)
+        stageUnder(rowIdRead(spark, table, st, Some(selected.toSet))
+          .coalesce(1), table, Nil)
       else if (partCols.isEmpty)
-        stageWithStats(
-          readSubset(spark, table, st, selected, schema).coalesce(1), table)
+        stageUnder(
+          readSubset(spark, table, st, selected, schema).coalesce(1), table,
+          Nil)
       else {
         // qualifying partitions only: one task per partition value →
         // one file per col=val dir, the compactWhere write shape
         val base = withHiddenPartCols(
           readSubset(spark, table, st, selected, schema), partCols)
-        stagePartitionedWithStats(
+        stageUnder(
           base.repartition(partCols.map(col): _*), table, partCols)
       }
     Some(commitOn(spark, table, Some(st))(v => Commit(v, "autocompact",
@@ -5822,7 +5645,7 @@ object GraftLog {
     val zCols = cols0.map(physNameOf(st.colMap, _))
     zCols.zip(cols0).foreach { case (p, c) =>
       val f = schema.fields.find(_.name.equalsIgnoreCase(p))
-      require(f.exists(fld => numericFields(
+      require(f.exists(fld => StagedWrite.numericFields(
           org.apache.spark.sql.types.StructType(Seq(fld))).nonEmpty),
         s"z-order column $c must be numeric (rank normalization needs " +
           "an ordered range); got " +
@@ -5851,7 +5674,7 @@ object GraftLog {
           .repartitionByRange(targetFiles, col("__gf_z"))
           .sortWithinPartitions(col("__gf_z"))
           .drop("__gf_z")
-        stageWithStats(rewritten, table)
+        stageUnder(rewritten, table, Nil)
       } else {
         // per-partition z-order: range-partition by (partition cols, z)
         // so each col=val dir's rows split into contiguous z-ranges —
@@ -5864,7 +5687,7 @@ object GraftLog {
             partCols.map(col) :+ col("__gf_z"): _*)
           .sortWithinPartitions(col("__gf_z"))
           .drop("__gf_z")
-        stagePartitionedWithStats(rewritten, table, partCols)
+        stageUnder(rewritten, table, partCols)
       }
     commitOn(spark, table, read)(v => Commit(v, "cluster", s.files, files,
       schema.toDDL, System.currentTimeMillis(), stats = s.stats,
@@ -5974,7 +5797,7 @@ object GraftLog {
         val rewritten = cur
           .repartitionByRange(targetFiles, physCols.map(col): _*)
           .sortWithinPartitions(physCols.map(col): _*)
-        val s = stageWithStats(rewritten, table)
+        val s = stageUnder(rewritten, table, Nil)
         // stamp zcube membership into the per-file stats (see ZcubeKey)
         val stamped = s.stats ++ s.files.map(f =>
           f -> (s.stats.getOrElse(f,

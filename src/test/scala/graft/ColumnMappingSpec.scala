@@ -38,6 +38,22 @@ class ColumnMappingSpec extends AnyFunSuite {
     assert(GraftLog.read(spark, t, Some(0L)).columns.contains("tag"))
   }
 
+  test("an overwrite after a rename reads back the batch's own names") {
+    val r = root(); val t = s"$r/t"
+    GraftLog.overwrite(df(0 until 10, "a"), t)          // v0
+    GraftLog.renameColumn(spark, t, "tag", "label")     // v1
+    // the batch carries the renamed-away physical name `tag`
+    GraftLog.overwrite(df(0 until 5, "b"), t)           // v2
+    val back = GraftLog.read(spark, t)
+    assert(back.columns.toSeq == Seq("id", "tag", "score"))
+    assert(back.filter($"tag" === "b").count() == 5)
+    GraftLog.append(df(5 until 8, "c"), t)              // v3
+    assert(GraftLog.read(spark, t).filter($"tag".isNotNull).count() == 8)
+    // time travel still reads each version under its own mapping
+    assert(GraftLog.read(spark, t, Some(1L)).columns.toSeq ==
+      Seq("id", "label", "score"))
+  }
+
   test("drop is metadata-only; re-added name does not resurrect bytes") {
     val r = root(); val t = s"$r/t"
     GraftLog.overwrite(df(0 until 50, "x"), t)

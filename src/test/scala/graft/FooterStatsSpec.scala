@@ -124,6 +124,27 @@ class FooterStatsSpec extends AnyFunSuite {
     }
   }
 
+  test("staged files carry the sizes and stats the DataFrameWriter " +
+      "path recorded, for every float, null, nested and layout case") {
+    // the fixture was written by the DataFrameWriter + driver-side
+    // footer/scan stats path this staging replaced; a case's files pair
+    // up in path order (part-<split> first), so equal sizes mean equal
+    // bytes, and the stats compare bit for bit (NaN and -0.0 included)
+    val in = getClass.getResourceAsStream("/staged_stats_fixture.tsv")
+    assert(in != null, "fixture missing")
+    val fixture =
+      try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toSeq
+      finally in.close()
+    val root = graft.sources.Staging.tempDir("graft_fstats_fixture_")
+    val got = StagedStatsCases.all.flatMap { case (name, write) =>
+      val t = s"$root/$name"
+      write(spark, t)
+      StagedStatsCases.render(spark, name, t)
+    }
+    assert(got.size == fixture.size, got.mkString("\n"))
+    got.zip(fixture).foreach { case (g, f) => assert(g == f) }
+  }
+
   test("pruning behavior is unchanged: range read opens only " +
       "stat-intersecting files") {
     val t = tmp()
@@ -138,5 +159,84 @@ class FooterStatsSpec extends AnyFunSuite {
       .filter(col("id") >= 30 && col("id") <= 40)
       .collect().map(_.toSeq).toSet
     assert(pruned == full)
+  }
+}
+
+/** Tables whose per-file sizes and commit stats `FooterStatsSpec` pins
+  * against a fixture: NaN, ±0.0 and infinities, all-null columns,
+  * arrays, structs and maps with null elements, and the hive and
+  * hidden-bucket layouts. Every frame is range-partitioned at its
+  * source (no shuffle), so each file's rows are fixed. */
+object StagedStatsCases {
+  import org.apache.spark.sql.{Column, SparkSession}
+
+  private def rows(spark: SparkSession, n: Long, parts: Int) =
+    spark.range(0L, n, 1L, parts)
+
+  private def every(k: Int, v: Column, other: Column): Column =
+    when(col("id") % k === 0, v).otherwise(other)
+
+  val all: Seq[(String, (SparkSession, String) => Unit)] = Seq(
+    "floats" -> { (spark, t) =>
+      GraftLog.overwrite(rows(spark, 300, 3).select(col("id"),
+        every(7, lit(Float.NaN), (col("id") * 0.5).cast("float")).as("f"),
+        every(5, lit(-0.0), every(3, lit(0.0), col("id") * -1.25)).as("d"),
+        every(11, lit(Double.PositiveInfinity),
+          every(13, lit(Double.NegativeInfinity), col("id").cast("double")))
+          .as("inf"),
+        when(col("id") < 100, lit(Double.NaN)).otherwise(lit(0.0))
+          .as("nan_first"),
+        lit(-0.0).as("neg_zero")), t)
+    },
+    "all_null" -> { (spark, t) =>
+      GraftLog.overwrite(rows(spark, 200, 2).select(col("id"),
+        lit(null).cast("long").as("l"),
+        lit(null).cast("double").as("d"),
+        lit(null).cast("string").as("s"),
+        when(col("id") >= 100, col("id")).as("null_in_first"),
+        lit(null).cast("array<int>").as("arr")), t)
+    },
+    "nested_nulls" -> { (spark, t) =>
+      GraftLog.overwrite(rows(spark, 200, 2).select(col("id"),
+        // null elements in the second file only: the first file's
+        // footer proves its stats, the second's falls back to the scan
+        when(col("id") < 100, array(col("id"), col("id") + 1))
+          .otherwise(array(col("id"), lit(null).cast("long"))).as("arr"),
+        struct(col("id").as("a"),
+          every(4, lit(null).cast("string"), concat(lit("s"), col("id")))
+            .as("b")).as("st"),
+        map(lit("k"), every(3, lit(null).cast("double"),
+          col("id").cast("double"))).as("m"),
+        every(9, lit(null).cast("array<long>"), array(col("id")))
+          .as("arr_null_rows")), t)
+    },
+    "hive" -> { (spark, t) =>
+      GraftLog.overwritePartitioned(rows(spark, 300, 3).select(col("id"),
+        (col("id") % 3).as("p"),
+        every(10, lit(Double.NaN), col("id") * 0.1).as("d"),
+        every(4, lit(null).cast("string"), concat(lit("v"), col("id")))
+          .as("s")), t, Seq("p"))
+    },
+    "bucket" -> { (spark, t) =>
+      GraftLog.overwriteBucketTransform(rows(spark, 300, 3).select(
+        col("id"), (col("id") * -0.5).as("d"),
+        every(6, lit(null).cast("int"), col("id").cast("int")).as("i")),
+        t, "id", 4)
+    })
+
+  /** One line per live file of `t`, in path order: case, index, byte
+    * size, and the stats with each double as its raw bits. */
+  def render(spark: SparkSession, name: String, t: String): Seq[String] = {
+    val sizes = GraftLog.fileSizes(spark, t)
+    val stats = GraftLog.fileStats(spark, t)
+    def bits(d: Double) = java.lang.Long.toHexString(
+      java.lang.Double.doubleToRawLongBits(d))
+    GraftLog.snapshot(spark, t)._1.sorted.zipWithIndex.map { case (f, i) =>
+      // partition dirs stay; the part-file name is write-specific
+      val dir = f.split('/').drop(2).dropRight(1).mkString("/")
+      val st = stats.getOrElse(f, Map.empty).toSeq.sortBy(_._1)
+        .map { case (c, (lo, hi)) => s"$c=${bits(lo)}:${bits(hi)}" }
+      s"$name\t$i\t$dir\t${sizes(f)}\t${st.mkString(";")}"
+    }
   }
 }

@@ -75,6 +75,48 @@ class GeneratedColumnsSpec extends AnyFunSuite {
     }
   }
 
+  test("supplied generated values and CHECKs validate in one Spark job") {
+    val d = Staging.tempDir("graft_gen_") + "/gen_checks"
+    val rows = events.select("event_id", "ts")
+    val n0 = rows.filter(col("event_id") < 10).count()
+    GraftLog.createGenerated(rows.filter(col("event_id") < 10), d,
+      Map("event_date" -> "to_date(ts)"), Nil)
+    GraftLog.addConstraint(spark, d, "pos_id", "event_id >= 0")
+    val batch = rows.filter(col("event_id") >= 10 && col("event_id") < 20)
+      .withColumn("event_date", to_date(col("ts")))
+    val n = batch.count()
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val counter = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet(): Unit
+    }
+    org.apache.spark.ListenerDrain(sc)
+    sc.addSparkListener(counter)
+    try {
+      GraftLog.append(batch, d)
+      org.apache.spark.ListenerDrain(sc)
+    } finally sc.removeSparkListener(counter)
+    // one validation aggregate (its shuffle stage and result: 2 jobs
+    // under AQE) and the write; validating the generated values in a
+    // pass of their own made it 5
+    assert(jobs.get == 3, s"${jobs.get} jobs")
+    assert(GraftLog.read(spark, d).count() == n0 + n)
+    // each kind of violation still reports on its own, as before
+    val badGen = intercept[IllegalArgumentException](GraftLog.append(
+      batch.withColumn("event_date", to_date(lit("1999-01-01"))), d))
+    assert(badGen.getMessage.endsWith("append violates CHECK " +
+      "constraint(s): generated value of event_date CHECK " +
+      s"(event_date <=> (to_date(ts))): $n row(s)"), badGen.getMessage)
+    val badCheck = intercept[IllegalArgumentException](GraftLog.append(
+      batch.withColumn("event_id", -col("event_id")), d))
+    assert(badCheck.getMessage.endsWith("append violates CHECK " +
+      s"constraint(s): pos_id CHECK (event_id >= 0): $n row(s)"),
+      badCheck.getMessage)
+    assert(GraftLog.read(spark, d).count() == n0 + n)
+  }
+
   test("base-column range filter prunes partition DIRS (derived, monotone)") {
     val idx = new GraftFileIndex(spark, gdir)
     val totalDirs = idx.countDirsAfterPruning(Nil)
